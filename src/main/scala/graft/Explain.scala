@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality inspector: prints `explain("formatted")` for the
   * headline queries so scan pruning (`ReadSchema`), pushed filters
   * (`PushedFilters`), broadcast joins and WholeStageCodegen spans can
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session("4")
     val names =
       if (args.nonEmpty) args.toSeq
       else Seq("q7_scrub", "q5_minlen_filter", "q2_join_topk", "q12_knn",

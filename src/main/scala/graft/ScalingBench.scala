@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.Curate
 import graft.synth.Transcripts
 import graft.tableio.TableIO
@@ -23,15 +21,7 @@ object ScalingBench {
     * over repetitions approximates the un-stolen cost at each level.
     */
   def runAt(cpus: Int, inputPath: String, reps: Int = 5): (Long, Seq[(Double, Double, Double, Double)]) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(cpus.toString)
     // warmup (codegen + model broadcast)
     Bench.forceMaterialize(
       Curate.curateDf(spark, Transcripts.dataset(spark, 30).toDF()))
@@ -61,12 +51,7 @@ object ScalingBench {
     // materialize the input once (outside all timed regions), with
     // enough file splits for the high-parallelism run
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(input))) {
-      val s = SparkSession.builder().master(s"local[$highCpus]")
-        .config("spark.sql.shuffle.partitions", highCpus.toString)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
+      val s = Bench.session(highCpus.toString)
       Transcripts.dataset(s, nConvs).toDF()
         .repartition(highCpus * 4)
         .write.mode("overwrite").parquet(input)

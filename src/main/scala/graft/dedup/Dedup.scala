@@ -1,7 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 
 import graft.util.Hash.mix
 
@@ -51,21 +51,31 @@ object Dedup extends Serializable {
   def hasTokensCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c.isNotNull && c.rlike("[\\p{L}\\p{N}_]")
 
+  /** First occurrence per `keys` — the repo-wide shape for "keep the
+    * minimum of each group": a map-side-partial `groupBy(keys).agg(aggs)`
+    * (at most one row per distinct key and map task crosses the
+    * exchange) joined back to `rows` with a shuffle-hash hint. Never a
+    * window over the key: `row_number()` or `min() over (partition by
+    * key)` sorts every member of a hot group (a boilerplate doc, line,
+    * span or LSH bucket repeated 10^7 times at corpus scale) on ONE
+    * task. The join-back still keys a hot group to one partition, but
+    * its build side is one row per key (no sort, no group-sized state)
+    * and AQE's skew-join split applies. `rows` feeds both sides, so a
+    * caller whose rows are costly to recompute pins them first.
+    */
+  private def firstOccurrence(rows: DataFrame, keys: Seq[String], aggs: Column*): DataFrame =
+    rows.join(rows.groupBy(keys.map(F.col): _*).agg(aggs.head, aggs.tail: _*)
+      .hint("shuffle_hash"), keys)
+
   /** Exact dedup, deterministic first-wins (SURVEY.md §2.2 P9): the
     * reference keeps the FIRST doc per content hash (order-dependent
     * set check, web_scraper.py:186-196); Spark's dropDuplicates keeps
     * an arbitrary row, so we keep the row with the minimum `orderCol`
-    * per content hash. `orderCol` must be unique per row (a doc id) —
-    * that is also what makes "first" well-defined at all.
-    *
-    * r6: two-phase min + join-back (the repo-wide first-occurrence
-    * shape) instead of `row_number() over (partition by md5(text))` —
-    * the window sorted every member of a hot content group (one
-    * boilerplate doc repeated 10^7 times at corpus scale) on ONE task,
-    * the exact hazard the line/span/minhash paths already engineered
-    * out. The map-side partial min ships one row per distinct hash;
-    * the join-back build side is one row per hash (shuffle_hash, no
-    * sort) and AQE skew-split applies.
+    * per content hash via [[firstOccurrence]]. `orderCol` must be
+    * unique per row (a doc id) — that is also what makes "first"
+    * well-defined at all. A NULL `orderCol` fails the query: `min()`
+    * skips NULLs, so such a row could never be recognised as first and
+    * would otherwise vanish silently.
     */
   def exactDedup(df: DataFrame, textCol: String, orderCol: String): DataFrame = {
     // NULL text hashes to a sentinel (not valid hex, so it cannot
@@ -74,10 +84,9 @@ object Dedup extends Serializable {
     // would silently drop ALL such rows instead.
     val withH = df.withColumn(
       "__h", F.coalesce(F.md5(F.col(textCol)), F.lit("__null_text__")))
-    val firsts = withH.groupBy("__h")
-      .agg(F.min(F.col(orderCol)).as("__first"))
-    withH.join(firsts.hint("shuffle_hash"), Seq("__h"))
-      .filter(F.col(orderCol) === F.col("__first"))
+    firstOccurrence(withH, Seq("__h"), F.min(F.col(orderCol)).as("__first"))
+      .filter(F.coalesce(F.col(orderCol) === F.col("__first"),
+        F.raise_error(F.lit(s"exactDedup: NULL $orderCol (the order column must be non-NULL)"))))
       .drop("__h", "__first")
   }
 
@@ -166,16 +175,49 @@ object Dedup extends Serializable {
       (b, h)
     }
 
+  /** Candidate pairs from an equi-join of `keyed` (columns `id`, `keys`
+    * and `carry`) with itself on `keys` — an LSH band bucket or a
+    * prefix gram, never an O(n²) cross product: ids a < b sharing a
+    * key and passing `prune` (which sees the carry columns suffixed
+    * _a/_b), as bare deduped (id_a, id_b). Only ids, keys and the
+    * scalar carry columns reach the join exchange and the pair dedup —
+    * never a sketch, signature or vector — so a hot bucket of size g
+    * shuffles O(g²) id pairs, not O(g²) payloads, and bare pairs dedup
+    * as a pure HashAggregate (an array payload would need first(), a
+    * non-hashable buffer that forces a SortAggregate over every
+    * candidate). Payloads re-attach afterwards in [[verifyPairs]].
+    * Guarded by PlanShapeSpec ("no array column in any pair exchange").
+    */
+  private def keyedPairs(keyed: DataFrame, keys: Seq[String], carry: Seq[String] = Nil,
+      prune: Column = F.lit(true)): DataFrame = {
+    def side(s: String) = keyed.select(keys.map(F.col) ++
+      (F.col("id").as(s"id_$s") +: carry.map(c => F.col(c).as(s"${c}_$s"))): _*)
+    side("a").join(side("b"), keys)
+      .filter(F.col("id_a") < F.col("id_b"))
+      .filter(prune)
+      .select("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
+  }
+
+  /** Verifies candidate pairs: re-attaches column `p` of `payload`
+    * (keyed by `id`) to both sides BY ID as p_a/p_b and keeps
+    * (id_a, id_b, `name` = score(p_a, p_b)) where the score reaches
+    * `threshold`. Each payload crosses exactly one exchange per side —
+    * O(n), not O(candidates) — and only surviving pairs are scored.
+    */
+  private def verifyPairs(pairs: DataFrame, payload: DataFrame, p: String,
+      score: UserDefinedFunction, name: String, threshold: Double): DataFrame =
+    pairs
+      .join(payload.select(F.col("id").as("id_a"), F.col(p).as(s"${p}_a")), Seq("id_a"))
+      .join(payload.select(F.col("id").as("id_b"), F.col(p).as(s"${p}_b")), Seq("id_b"))
+      .withColumn(name, score(F.col(s"${p}_a"), F.col(s"${p}_b")))
+      .filter(F.col(name) >= threshold)
+      .select("id_a", "id_b", name)
+
   /** MinHash + LSH near-duplicate pairs (ids a < b, verified Jaccard ≥
     * threshold). Plan shape: per-row sketch (map-only) → explode into
-    * `bands` ID-ONLY rows → shuffle on (band, band_hash) equi-join →
-    * candidate-pair dedup on bare (id_a, id_b) → re-join the two
-    * sketch columns BY ID → exact-Jaccard verify. The shingle arrays
-    * never ride a per-candidate exchange: the band join and the pair
-    * dedup shuffle only ids (a hot LSH bucket of size g otherwise
-    * shuffles O(g²) full sketches), and each sketch crosses exactly one
-    * exchange per side for the verify join — O(n), not O(candidates).
-    * Guarded by PlanShapeSpec ("no array column in any pair exchange").
+    * `bands` ID-ONLY rows → [[keyedPairs]] on (band, band_hash) →
+    * [[verifyPairs]] with the exact Jaccard of the two sketches.
     * Token-less rows are excluded (no sketch → no candidates).
     *
     * The lazy DAG references `sketched` from four branches (band
@@ -224,18 +266,7 @@ object Dedup extends Serializable {
     val banded = sketched
       .select(F.col("id"), F.explode(bandU(F.col("sh"))).as("b"))
       .select(F.col("id"), F.col("b._1").as("band"), F.col("b._2").as("bh"))
-    val pairs = banded.select(F.col("band"), F.col("bh"), F.col("id").as("id_a"))
-      .join(banded.select(F.col("band"), F.col("bh"), F.col("id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    pairs
-      .join(sketched.select(F.col("id").as("id_a"), F.col("sh").as("sh_a")), Seq("id_a"))
-      .join(sketched.select(F.col("id").as("id_b"), F.col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard", jacU(F.col("sh_a"), F.col("sh_b")))
-      .filter(F.col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifyPairs(keyedPairs(banded, Seq("band", "bh")), sketched, "sh", jacU, "jaccard", threshold)
   }
 
   /** Scalable MinHash dedup: instead of emitting all O(group²)
@@ -277,27 +308,17 @@ object Dedup extends Serializable {
       .select(F.col("id"), F.explode_outer(F.col("bs")).as("b"))
       .select(F.col("id"), F.col("b._1").as("band"), F.col("b._2").as("bh"))
       .localCheckpoint(true)
-    // TWO-PHASE bucket min (not a window): map-side partial min bounds
-    // per-task state to #distinct buckets per map task, and the reduce
-    // side of the aggregate sees at most one row per (bucket, map
-    // task) — no task ever materializes O(group) rows, where the
-    // previous `min(id) over (partition by band, bh)` sorted every
-    // member of a hot bucket (boilerplate repeated 10^7 times at
-    // 100 TB) on ONE task. The join-back keys a hot bucket to one
-    // partition too, but its build side is exactly one row per bucket
-    // (shuffle_hash, no sort) and AQE's skew-join split applies —
-    // neither holds group-sized state. Bucket-min VALUES are unchanged,
-    // so the bit-exact DuckDB oracle (OracleSql.minhashClustersSql)
-    // is unaffected. Token-less rows (null band from explode_outer)
-    // fall into per-id singleton buckets.
+    // bucket min via [[firstOccurrence]], value-identical to the
+    // bit-exact DuckDB oracle (OracleSql.minhashClustersSql). Token-less
+    // rows (null band from explode_outer) fall into per-id singleton
+    // buckets.
     val keyed = banded
       .withColumn("gband", F.coalesce(F.col("band"), F.lit(-1)))
       .withColumn("gkey",
         F.when(F.col("band").isNull, F.col("id").cast("string"))
           .otherwise(F.col("bh").cast("string")))
       .select("id", "gband", "gkey")
-    val mins = keyed.groupBy("gband", "gkey").agg(F.min("id").as("bucket_rep"))
-    keyed.join(mins.hint("shuffle_hash"), Seq("gband", "gkey"))
+    firstOccurrence(keyed, Seq("gband", "gkey"), F.min("id").as("bucket_rep"))
       .groupBy("id").agg(F.min("bucket_rep").as("rep_id"))
   }
 
@@ -307,7 +328,8 @@ object Dedup extends Serializable {
     * [[graft.functions.MinHashAgg]] TypedImperativeAggregate
     * (element-wise min across turns = MinHash of the union shingle
     * set), so the whole operator is: one hash aggregate on conv_id →
-    * band equi-join → signature-agreement Jaccard estimate. No
+    * [[keyedPairs]] on the bands → [[verifyPairs]] with the
+    * signature-agreement Jaccard estimate. No
     * conversation text is ever collected into one place. Conversations
     * with no sketchable turns are excluded.
     */
@@ -337,29 +359,10 @@ object Dedup extends Serializable {
       while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
       eq.toDouble / a.length
     }
-    // de-payloaded band join (r6, the minhashNearDups/embeddingNearDups
-    // shape): only (band, bh, id) scalars reach the band exchange and
-    // the pair dedup — previously each banded row carried its 64-long
-    // signature through both (≈1 KB/row), and the pair dedup had to
-    // first() those arrays, a non-hashable buffer type that forced a
-    // SortAggregate over all candidate pairs. Bare (id_a, id_b) pairs
-    // dedup as a pure HashAggregate; signatures re-attach by id
-    // afterwards, touching only surviving pairs.
     val banded = sigs
       .select(F.col("id"), F.explode(bandU(F.col("sig"))).as("b"))
       .select(F.col("id"), F.col("b._1").as("band"), F.col("b._2").as("bh"))
-    val pairs = banded.select(F.col("band"), F.col("bh"), F.col("id").as("id_a"))
-      .join(banded.select(F.col("band"), F.col("bh"), F.col("id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    pairs
-      .join(sigs.select(F.col("id").as("id_a"), F.col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(F.col("id").as("id_b"), F.col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard", estU(F.col("sig_a"), F.col("sig_b")))
-      .filter(F.col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
+    verifyPairs(keyedPairs(banded, Seq("band", "bh")), sigs, "sig", estU, "est_jaccard", threshold)
   }
 
   /** 64-bit SimHash over word unigrams (Unicode tokens). */
@@ -398,17 +401,10 @@ object Dedup extends Serializable {
   ): DataFrame = {
     val shU = F.udf((t: String) => simhash(t))
     val hamU = F.udf((a: Long, b: Long) => java.lang.Long.bitCount(a ^ b))
-    // sketch-once discipline (the minhashClusters r5 lesson, applied to
-    // the LAST window-over-a-hot-key on a dedup path): the rep collapse
-    // was `min(id) OVER (PARTITION BY sig)` — identical boilerplate
-    // repeated 10^7 times shares ONE sig and sorts on ONE task. Now a
-    // map-side-partial groupBy(sig).min(id) (one row per distinct sig
-    // crosses the exchange) + a shuffle_hash join-back over the eagerly
-    // pinned (id, sig) scalars — the UDF still runs exactly once per
-    // row (the pin, not Exchange reuse, guarantees it), no sort
-    // anywhere before the output ORDER BY, and AQE skew-split applies
-    // to the join. Bucket-min VALUES are unchanged, so the bit-exact
-    // DuckDB oracle (OracleSql.simhashSql) is unaffected.
+    // rep collapse: the [[firstOccurrence]] shape written out, because
+    // `reps` also feeds the banding below. The eager pin of the (id,
+    // sig) scalars runs the UDF exactly once per row for all consumers.
+    // Rep VALUES match the bit-exact DuckDB oracle (OracleSql.simhashSql).
     val sigs = df
       .filter(hasTokensCol(F.col(textCol)))
       .select(F.col(idCol).as("id"), shU(F.col(textCol)).as("sig"))
@@ -513,9 +509,9 @@ object Dedup extends Serializable {
     * can rebalance a hot gram — a window count could do neither: it
     * forces every occurrence of a gram to ONE task and sorts there),
     * per-doc rank window (one shuffle by id — bounded by doc size),
-    * prefix self-join on gram (ids+sizes only — no arrays through the
-    * hot join), length filter t·max ≤ min before the pair dedup, then
-    * verify exact Jaccard by re-joining the sorted sketch arrays BY ID.
+    * [[keyedPairs]] on the prefix gram carrying the set sizes, whose
+    * length filter t·max ≤ min prunes before the pair dedup, then
+    * [[verifyPairs]] with the exact Jaccard of the sorted sketches.
     * The 1e-9 slacks on the float ceil/length tests only ever widen
     * the candidate set (exactness is decided by the final verify).
     */
@@ -575,22 +571,12 @@ object Dedup extends Serializable {
       .filter(F.col("rn") <=
         F.col("sz") - F.ceil(F.col("sz") * threshold - 1e-9) + 1)
       .select("g", "id", "sz")
-    val cand = prefix.select(F.col("g"), F.col("id").as("id_a"), F.col("sz").as("sz_a"))
-      .join(prefix.select(F.col("g"), F.col("id").as("id_b"), F.col("sz").as("sz_b")),
-        Seq("g"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      // length filter: J ≥ t forces t·max(|x|,|y|) ≤ min(|x|,|y|)
-      .filter(F.least(F.col("sz_a"), F.col("sz_b")) >=
+    // length filter: J ≥ t forces t·max(|x|,|y|) ≤ min(|x|,|y|)
+    val cand = keyedPairs(prefix, Seq("g"), carry = Seq("sz"),
+      prune = F.least(F.col("sz_a"), F.col("sz_b")) >=
         F.greatest(F.col("sz_a"), F.col("sz_b")) * threshold - 1e-9)
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
     val jacU = F.udf((a: Array[Long], b: Array[Long]) => jaccard(a, b))
-    cand
-      .join(sketched.select(F.col("id").as("id_a"), F.col("sh").as("sh_a")), Seq("id_a"))
-      .join(sketched.select(F.col("id").as("id_b"), F.col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard", jacU(F.col("sh_a"), F.col("sh_b")))
-      .filter(F.col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifyPairs(cand, sketched, "sh", jacU, "jaccard", threshold)
   }
 
   /** Side output for [[ngramJaccardPairs]]'s silent-coverage tradeoff:
@@ -613,10 +599,8 @@ object Dedup extends Serializable {
   }
 
   /** Embedding cosine near-dup pairs via random-hyperplane LSH (bit
-    * signature → ID-ONLY band equi-join → pair dedup → re-join the
-    * embeddings by id → exact cosine verify). Same de-payloaded shape
-    * as [[minhashNearDups]]: a hot bucket shuffles O(g²) bare id
-    * pairs, never O(g²) embedding vectors.
+    * signature → ID-ONLY bands → [[keyedPairs]] → [[verifyPairs]] with
+    * the exact cosine of the two embeddings).
     */
   def embeddingNearDups(
       df: DataFrame,
@@ -632,18 +616,7 @@ object Dedup extends Serializable {
     val banded = Similarity.hyperplaneBanded(
       vecs, "id", "emb", "id", None, nBits, nBands)
     val cosU = F.udf((a: Array[Float], b: Array[Float]) => Similarity.cosine(a, b))
-    val pairs = banded.select(F.col("band"), F.col("bh"), F.col("id").as("id_a"))
-      .join(banded.select(F.col("band"), F.col("bh"), F.col("id").as("id_b")),
-        Seq("band", "bh"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    pairs
-      .join(vecs.select(F.col("id").as("id_a"), F.col("emb").as("emb_a")), Seq("id_a"))
-      .join(vecs.select(F.col("id").as("id_b"), F.col("emb").as("emb_b")), Seq("id_b"))
-      .withColumn("sim", cosU(F.col("emb_a"), F.col("emb_b")))
-      .filter(F.col("sim") >= simThreshold)
-      .select("id_a", "id_b", "sim")
+    verifyPairs(keyedPairs(banded, Seq("band", "bh")), vecs, "emb", cosU, "sim", simThreshold)
   }
 
   /** Connected components over an undirected near-dup pair list —
@@ -868,13 +841,12 @@ object Dedup extends Serializable {
     * original string. Output (id, text, n_tokens, n_kept).
     *
     * Plan shape at 10^12 rows: the window exchange ships (hash, id,
-    * start) scalars only; first-occurrence is the two-phase
-    * groupBy-min(struct) (no window over a hot span hash — a license
-    * paragraph shared by 10^7 docs aggregates map-side); only the
-    * DROPPED starts (the duplicate instances — the small set in a
-    * mostly-unique corpus) are collected per doc, and the rebuild is a
-    * map-only kernel whose state is one document's tokens, the same
-    * bound as reassembly.
+    * start) scalars only; first-occurrence is [[firstOccurrence]] over
+    * the span hash (a license paragraph shared by 10^7 docs aggregates
+    * map-side); only the DROPPED starts (the duplicate instances — the
+    * small set in a mostly-unique corpus) are collected per doc, and
+    * the rebuild is a map-only kernel whose state is one document's
+    * tokens, the same bound as reassembly.
     */
   def spanDedup(
       docs: DataFrame,
@@ -897,11 +869,8 @@ object Dedup extends Serializable {
     // pair_min ≡ min(struct(id, s)) but hash-aggregable (r6): the
     // built-in struct min forces SortAggregate — a per-partition sort
     // of every window occurrence before the partial aggregate
-    val firsts = wins.groupBy("h")
-      .agg(graft.functions.PairMinAgg
-        .pair_min(F.col("id"), F.col("s"), "id", "s").as("first"))
-    val dropped = wins
-      .join(firsts.hint("shuffle_hash"), Seq("h"))
+    val dropped = firstOccurrence(wins, Seq("h"),
+        graft.functions.PairMinAgg.pair_min(F.col("id"), F.col("s"), "id", "s").as("first"))
       .filter(!(F.col("first.id") === F.col("id") && F.col("first.s") === F.col("s")))
       .groupBy("id")
       .agg(F.sort_array(F.collect_list(F.col("s"))).as("drops"))
@@ -941,12 +910,10 @@ object Dedup extends Serializable {
     * Survivors reassemble in original order; a doc whose every content
     * line was removed survives with the blank skeleton (possibly "").
     *
-    * Plan shape at 10^12 rows: NO window over the line key — a hot
-    * boilerplate line ("subscribe to our newsletter") can occur 10^8
-    * times and a `row_number() over (partition by line)` would sort all
-    * of them on one task. Instead per-line stats are a map-side-partial
-    * `groupBy(h).agg(min(struct(id, pos)), count)` — one row per
-    * DISTINCT line survives the exchange — joined back shuffle-hash.
+    * Plan shape at 10^12 rows: per-line stats (first (id, pos) and
+    * count) come from [[firstOccurrence]] over the line hash — a hot
+    * boilerplate line ("subscribe to our newsletter") occurring 10^8
+    * times aggregates map-side instead of sorting on one task.
     * Only (md5, id, pos) scalars reach the stats exchange; the line
     * text itself shuffles once into the per-doc reassembly (unavoidable
     * — it IS the output). Reassembly state is one document's lines
@@ -967,16 +934,12 @@ object Dedup extends Serializable {
       .withColumn("norm", F.lower(F.trim(F.col("line"))))
     val content = lines.filter(F.col("norm") =!= "")
       .withColumn("h", F.md5(F.col("norm")))
-    // two-phase first-occurrence + df: one row per distinct line.
     // pair_min ≡ min(struct(id, pos)) but hash-aggregable (r6): with
     // the struct min this stage was a SortAggregate, sorting every
     // line occurrence per partition before the partial aggregate
-    val stats = content.groupBy("h")
-      .agg(graft.functions.PairMinAgg
-        .pair_min(F.col("id"), F.col("pos"), "id", "pos").as("first"),
+    val keptContent = firstOccurrence(content, Seq("h"),
+        graft.functions.PairMinAgg.pair_min(F.col("id"), F.col("pos"), "id", "pos").as("first"),
         F.count(F.lit(1)).as("df"))
-    val keptContent = content
-      .join(stats.hint("shuffle_hash"), Seq("h"))
       .filter(F.col("df") < boilerplateMinDf &&
         (F.col("df") === 1 ||
           (F.col("first.id") === F.col("id") && F.col("first.pos") === F.col("pos"))))

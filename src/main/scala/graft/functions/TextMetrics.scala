@@ -84,7 +84,7 @@ object TextMetricsUtil {
 
 /** Custom Catalyst expressions (SURVEY.md §2.13 "Catalyst Expression
   * (optional)"): codegen'd scalar text metrics. Measured rationale:
-  * StageBench showed the generic built-in chain for these metrics
+  * per-stage timing showed the generic built-in chain for these metrics
   * (`size(split(...))`, `length(regexp_replace(...))`) allocating
   * arrays / running regexes per row; these single-pass expressions
   * compute the same values with zero allocation beyond the String and

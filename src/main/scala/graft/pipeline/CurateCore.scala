@@ -9,7 +9,7 @@ import graft.scrub.Scrubber
   * grammar hits, (gated) perplexity, decision, and scrub in ONE pass
   * per row. Semantically IDENTICAL to the unfused column pipeline
   * (the independent golden oracle in GoldenPipelineSpec asserts exact
-  * agreement); it exists because StageBench showed the generic
+  * agreement); it exists because per-stage timing showed the generic
   * column-expression chain (split + array_distinct + regexp_replace
   * per rule) and four separate UDF string conversions dominating the
   * per-turn cost — one UTF8String→String conversion and a single

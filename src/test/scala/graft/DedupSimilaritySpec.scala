@@ -31,9 +31,25 @@ class DedupSimilaritySpec extends SparkTestBase {
       (10000L, "one unique doc")).toDF("id", "text")
     val res = Dedup.exactDedup(docs, "text", "id")
     assert(res.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 10000L))
-    val p = res.queryExecution.executedPlan.toString
-    assert(!p.contains("Window"), p)
-    assert(p.contains("ShuffledHashJoin") || p.contains("BroadcastHashJoin"), p)
+    // the same hot group through every other first-occurrence join-back
+    Seq(res, Dedup.minhashClusters(docs, "id", "text"),
+      Dedup.spanDedup(docs, "id", "text", w = 2), Dedup.lineDedup(docs, "id", "text")
+    ).foreach { df =>
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Window"), p)
+      assert(p.contains("ShuffledHashJoin") || p.contains("BroadcastHashJoin"), p)
+      assert(!p.contains("SortMergeJoin"), p)
+    }
+  }
+
+  test("exact dedup fails on a NULL order column instead of silently dropping the row") {
+    // min() skips NULL, so a NULL-ordered row can never equal its
+    // group's first: the query must fail rather than drop it
+    import spark.implicits._
+    val docs = Seq((Some(1L), "a"), (None: Option[Long], "a"), (Some(3L), "b"))
+      .toDF("id", "text")
+    val e = intercept[Exception](Dedup.exactDedup(docs, "text", "id").collect())
+    assert(e.getMessage.contains("NULL id"), e.getMessage)
   }
 
   test("exact dedup keeps one representative of the NULL-text group (r5 window semantics)") {
