@@ -12,12 +12,6 @@ import graft.util.PyStr.{pyLen, pySplit, pyStrip}
   */
 object Chunker extends Serializable {
 
-  /** Sentence split with the regex strategy (cfg_generator.py:332):
-    * split on [.!?]+ keeping ≥1-word pieces, delimiters dropped.
-    */
-  def splitSentences(text: String): Array[String] =
-    text.split("[.!?]+").map(_.trim).filter(_.nonEmpty)
-
   // Python-`re` semantics: \s in Python str patterns is Unicode-aware,
   // Java's is ASCII-only without UNICODE_CHARACTER_CLASS (text with
   // non-breaking spaces after sentence punctuation split in the
@@ -102,10 +96,6 @@ object Chunker extends Serializable {
       if (pyWords.length > 1) pyWords.drop(1).mkString(" ") else tail
     }
   }
-
-  /** Non-overlapping simple chunker (C3, cfg_checker.py:390-410). */
-  def simpleChunks(text: String, chunkSize: Int = 500): Seq[String] =
-    chunkText(text, chunkSize, overlap = 0)
 
   /** Recursive character splitter (C4) — deterministic port of the
     * LangChain splitter the reference uses for RAG chunks

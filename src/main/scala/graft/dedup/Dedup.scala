@@ -436,55 +436,13 @@ object Dedup extends Serializable {
     intra.unionByName(inter)
   }
 
-  /** Exact n-gram Jaccard similarity for all pairs sharing ≥1 n-gram:
-    * fully relational (explode → equi-join on gram → group) — the
-    * shape that survives scale because the join key is the gram, with
-    * a frequency cap to drop degenerate stop-grams. Set sizes are
-    * computed over the SAME capped gram universe as the intersection,
-    * so identical documents always score 1.0 even when they contain
-    * capped grams.
-    *
-    * COVERAGE CAVEAT (not just a cost tradeoff): a pair whose ONLY
-    * shared grams all exceed `maxGramFreq` is LOST, not merely
-    * expensive — and a gram at the cap still emits O(cap²) candidate
-    * rows. Use [[ngramDroppedGrams]] to quantify the loss on a corpus
-    * before trusting the recall; prefer [[minhashClusters]] at scale.
-    */
-  def ngramJaccardPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      threshold: Double = 0.5,
-      maxGramFreq: Int = 1000
-  ): DataFrame = {
-    val shU = F.udf((t: String) => shingles(t, n))
-    val grams = df
-      .select(F.col(idCol).as("id"), F.explode(shU(F.col(textCol))).as("g"))
-    val filtered = grams.join(
-      grams.groupBy("g").agg(F.count(F.lit(1)).as("gf")).filter(F.col("gf") <= maxGramFreq),
-      Seq("g"))
-    val sizes = filtered.groupBy("id").agg(F.count(F.lit(1)).as("sz"))
-    val pairs = filtered.select(F.col("g"), F.col("id").as("id_a"))
-      .join(filtered.select(F.col("g"), F.col("id").as("id_b")), Seq("g"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).as("inter"))
-    pairs
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), Seq("id_a"))
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), Seq("id_b"))
-      .withColumn("jaccard",
-        F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-      .filter(F.col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
   /** Exact n-gram Jaccard pairs via PREFIX FILTERING — the published
-    * scale-safe alternative to [[ngramJaccardPairs]]'s frequency cap
+    * scale-safe answer to stop-gram blowup, with no frequency cap
     * (Bayardo et al., "Scaling Up All Pairs Similarity Search", WWW
     * 2007; the prefix+length filters of PPJoin, Xiao et al. 2008).
     * EXACT: no silent pair loss — every pair with Jaccard ≥ t is
     * found, including pairs whose only shared grams are corpus-wide
-    * stop-grams (the case the capped path drops).
+    * stop-grams (the pairs a df cap on the gram join would drop).
     *
     * Theorem (canonical prefix): order the gram universe by a global
     * total order (here: ascending document frequency, rarest first,
@@ -579,11 +537,11 @@ object Dedup extends Serializable {
     verifyPairs(cand, sketched, "sh", jacU, "jaccard", threshold)
   }
 
-  /** Side output for [[ngramJaccardPairs]]'s silent-coverage tradeoff:
-    * the grams DROPPED by the `maxGramFreq` cut, with their document
-    * frequency. `count(*)` of this is the dropped-gram tally a run
-    * should log next to the pair output; any pair sharing ONLY these
-    * grams is invisible to the pair path.
+  /** Stop-gram tally: every n-gram whose document frequency exceeds
+    * `maxGramFreq`, with that frequency (`gf`). `count(*)` of this is
+    * the number of corpus-wide stop-grams at the given cap — the grams
+    * a capped gram join would skip and that [[ngramJaccardPrefix]]
+    * keeps (they enter a prefix only when a document has nothing rarer).
     */
   def ngramDroppedGrams(
       df: DataFrame,
@@ -626,72 +584,12 @@ object Dedup extends Serializable {
     * a dedup policy: A~B and B~C must collapse to one cluster even
     * when A~C was never emitted.
     *
-    * Algorithm: minimum-label propagation — comp(v) starts at v, each
-    * round takes min(comp(v), min over neighbors' comps), until a
-    * round changes nothing. Deterministic (min is order-insensitive)
-    * and exact; rounds = graph diameter. Near-dup graphs are unions of
-    * near-cliques, so the fixpoint lands in a handful of rounds; for
-    * adversarially chained graphs at 10^12 scale the O(log n)-round
-    * large-star/small-star scheme (Kiveris et al., SoCC 2014) is the
-    * drop-in upgrade behind this same signature. Each round is two
-    * shuffles (join by vertex, min-agg by vertex); `localCheckpoint`
-    * truncates the growing lineage per round (a production cluster
-    * job would use a reliable checkpoint dir instead — same plan).
-    *
-    * Returns (id, component) for every vertex appearing in any edge,
-    * component = smallest reachable id.
-    */
-  /** @param algo "label" (default) = min-label propagation, rounds =
-    *   graph diameter — right for near-dup graphs (unions of
-    *   near-cliques, diameter a handful). "star" = alternating
-    *   large-star/small-star contraction (Kiveris et al., SoCC 2014),
-    *   O(log n) rounds on ANY shape — the 10^12-row safety for
-    *   adversarially chained graphs (a path of near-dup pairs), at the
-    *   cost of a distinct + two grouped joins per round. Identical
-    *   output (spec-asserted on chains, cliques, random graphs).
-    */
-  def connectedComponents(
-      edges: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIter: Int = 25,
-      algo: String = "label"
-  ): DataFrame = {
-    if (algo == "star") return connectedComponentsStar(edges, aCol, bCol, maxIter)
-    val e = edges.select(F.col(aCol).as("u"), F.col(bCol).as("v"))
-      .filter(F.col("u").isNotNull && F.col("v").isNotNull)
-    // symmetric closure, deduped once up front (every round reuses it)
-    val sym = e.unionByName(e.select(F.col("v").as("u"), F.col("u").as("v")))
-      .distinct().localCheckpoint()
-    var labels = sym.select(F.col("u").as("id")).distinct()
-      .withColumn("comp", F.col("id")).localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym
-        .join(labels.withColumnRenamed("id", "u"), Seq("u"))
-        .groupBy(F.col("v").as("id")).agg(F.min("comp").as("nbr_comp"))
-      val next = labels.join(nbrMin, Seq("id"), "left")
-        .select(F.col("id"),
-          F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp")))
-            .as("comp"))
-        .localCheckpoint()
-      val changed = next.join(labels.withColumnRenamed("comp", "old_comp"), Seq("id"))
-        .filter(F.col("comp") < F.col("old_comp")).limit(1).count()
-      labels.unpersist()
-      labels = next
-      converged = changed == 0L
-      iter += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    labels
-  }
-
-  /** Alternating large-star / small-star connected components
+    * Algorithm: alternating large-star / small-star contraction
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014): each round contracts toward the component minimum in
-    * O(log n) rounds regardless of diameter — the upgrade min-label
-    * propagation needs on chain-shaped graphs (r3 verdict #5).
+    * SoCC 2014): each round contracts toward the component minimum, so
+    * the fixpoint lands in O(log n) rounds on ANY graph shape — a path
+    * of near-dup pairs converges as fast as a clique. Deterministic
+    * (min is order-insensitive) and exact.
     *
     * Both stars are expressed as grouped MIN + join-back (map-side
     * partial aggregation; no neighbor-list collect anywhere, so a
@@ -703,8 +601,14 @@ object Dedup extends Serializable {
     * Edges stay canonical (big, small); fixpoint = edge set unchanged
     * (two anti-join probes). The converged set is a star forest:
     * (child, root-min) pairs, from which labels read off directly.
+    * `localCheckpoint` truncates the growing lineage per round (a
+    * production cluster job would use a reliable checkpoint dir
+    * instead — same plan).
+    *
+    * Returns (id, component) for every vertex appearing in a non-loop
+    * edge, component = smallest reachable id.
     */
-  def connectedComponentsStar(
+  def connectedComponents(
       edges: DataFrame,
       aCol: String,
       bCol: String,
@@ -746,7 +650,7 @@ object Dedup extends Serializable {
       cur = next
       iter += 1
     }
-    require(converged, s"connectedComponentsStar did not converge in $maxIter rounds")
+    require(converged, s"connectedComponents did not converge in $maxIter rounds")
     // star forest → labels; roots label themselves
     cur.select(F.col("u").as("id"), F.col("v").as("comp"))
       .unionByName(cur.select(F.col("v").as("id"), F.col("v").as("comp")))
@@ -763,9 +667,7 @@ object Dedup extends Serializable {
     * to a 10^12-row corpus, so it BROADCASTS and the whole operator is
     * a map-side semi-join + one partial-aggregating groupBy on doc id
     * — the corpus text is sketched once and never shuffled (only
-    * (id, gram) longs reach the exchange). Set `broadcastBench =
-    * false` for a pathological benchmark too large to broadcast
-    * (falls back to a shuffle hash join on the gram hash).
+    * (id, gram) longs reach the exchange).
     */
   def decontaminate(
       corpus: DataFrame,
@@ -774,14 +676,11 @@ object Dedup extends Serializable {
       bench: DataFrame,
       benchTextCol: String,
       shingleSize: Int = 8,
-      minHits: Int = 1,
-      broadcastBench: Boolean = true
+      minHits: Int = 1
   ): DataFrame = {
     val gramU = F.udf((t: String) => shingles(t, shingleSize))
-    val benchGrams = {
-      val g = bench.select(F.explode(gramU(F.col(benchTextCol))).as("g")).distinct()
-      if (broadcastBench) F.broadcast(g) else g
-    }
+    val benchGrams =
+      F.broadcast(bench.select(F.explode(gramU(F.col(benchTextCol))).as("g")).distinct())
     // shingles() returns the DISTINCT gram set per doc, so the join
     // count is the distinct-contaminated-gram count directly
     val hits = corpus

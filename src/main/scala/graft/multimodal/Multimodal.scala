@@ -171,11 +171,6 @@ object Multimodal {
       }
     }
 
-    /** Deterministic frame sampling positions for video. */
-    def sampleFrameOffsets(durationMs: Long, everyMs: Long): Seq[Long] =
-      if (durationMs <= 0 || everyMs <= 0) Nil
-      else 0L.until(durationMs, everyMs)
-
     /** Any decodable image container → RGB pixels (PNG zlib, BMP raw,
       * JPEG baseline, GIF LZW).
       */

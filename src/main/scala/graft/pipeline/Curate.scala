@@ -1,13 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
 
 import graft.langid.{LangId, LangIdModel}
 import graft.lm.NGramLM
 import graft.model.Turn
-import graft.rules.{GrammarRules, QualityRules}
-import graft.scrub.Scrubber
+import graft.rules.QualityRules
 import graft.synth.Transcripts
 
 /** The curation DAG (SURVEY.md §3 "Spark rebuild of this lifecycle"):
@@ -49,9 +48,10 @@ object Curate {
     * preserves partitioning, no shuffle; schema =
     * [[graft.model.CuratedTurn]]. Uses the fused [[CurateCore]] kernel
     * (one string conversion + one scan per row — see CurateCore doc for
-    * why this beats the unfused column chain, which remains available
-    * as [[curateDfUnfused]] and is asserted semantically identical by
-    * GoldenPipelineSpec).
+    * why this beats an unfused column chain). The unfused column
+    * pipeline lives in test scope as the reference implementation and
+    * is asserted semantically identical by GoldenPipelineSpec and
+    * ReviewRegressionSpec.
     */
   def curateDf(
       spark: SparkSession,
@@ -72,111 +72,6 @@ object Curate {
         F.col("__c.keep").as("keep"), F.col("__c.drop_reason").as("drop_reason"),
         F.col("__c.scrubbed_text").as("scrubbed_text"),
         F.col("__c.scrub_hits").as("scrub_hits"))
-  }
-
-  /** The original unfused column pipeline — kept as the reference
-    * implementation (declarative column expressions, per-stage UDFs,
-    * structural gating) and for plan-shape demonstrations; semantics
-    * identical to [[curateDf]].
-    */
-  def curateDfUnfused(
-      spark: SparkSession,
-      turns: DataFrame,
-      cfg: QualityRules.Config = QualityRules.defaultConfig,
-      models: Models = defaultModels
-  ): DataFrame = {
-    val bModels: Broadcast[Models] = spark.sparkContext.broadcast(models)
-
-    val langU = F.udf((t: String) => bModels.value.langId.predict(t))
-    val pplU = F.udf((t: String) => bModels.value.lm.perplexity(t))
-    val hitsU = F.udf((t: String) =>
-      GrammarRules.ruleHits(t, withContext = false).map(_.rule_id))
-    val cykU = F.udf((t: String) => GrammarRules.cykInvalidCount(t, cfg.cykMaxWords))
-    val scrubU = Scrubber.scrubUdf
-
-    val text = F.col("text")
-    // custom codegen expressions whose whitespace/symbol semantics are
-    // bit-identical to CurateCore's (Character.isWhitespace /
-    // isLetterOrDigit) — the generic built-ins (trim strips only
-    // spaces, \s is ASCII-only) diverge on tab/newline-only and
-    // unicode-whitespace rows
-    val wc = graft.functions.TextMetrics.word_count(text)
-
-    // cheap scalar rules — pure codegen'd column expressions, evaluated
-    // in the fixed QualityRules.ruleOrder (drop_reason = FIRST failure)
-    val cheapDrop: Column =
-      F.when(text.isNull || wc === 0, "empty")
-        .when(wc < cfg.minWords, "too_short")
-        .when(wc > cfg.maxWords || F.length(text) > cfg.maxChars, "too_long")
-        .when(wc >= cfg.repMinWords &&
-          QualityRules.distinctRatioCol(text) < cfg.minDistinctRatio, "repetition")
-        .when(graft.functions.TextMetrics.symbol_ratio(text) > cfg.maxSymbolRatio, "symbol_ratio")
-        .when(QualityRules.boilerplateCol(text), "boilerplate")
-
-    val withCheap = turns.withColumn("__cheap", cheapDrop)
-
-    // gated grammar hits (empty for already-dropped rows)
-    val withHits = withCheap.withColumn(
-      "rule_hits",
-      if (!cfg.grammarEnabled) F.typedlit(Seq.empty[String])
-      else F.when(F.col("__cheap").isNotNull, F.typedlit(Seq.empty[String]))
-        .otherwise(hitsU(text)))
-
-    val afterGrammar =
-      if (!cfg.grammarEnabled) F.col("__cheap")
-      else F.coalesce(
-        F.col("__cheap"),
-        F.when(F.size(F.col("rule_hits")) >= cfg.maxRuleHits, "grammar"))
-
-    val afterCyk =
-      if (cfg.cykEnabled)
-        F.coalesce(afterGrammar,
-          F.when(cykU(text) >= cfg.cykMaxInvalid, "cyk"))
-      else afterGrammar
-
-    // langid gated behind the cheap/grammar/cyk rules (verdict #6):
-    // already-dropped rows carry the ("und", 0.0) sentinel
-    val withLang = withHits
-      .withColumn("__pre_lang", afterCyk)
-      .withColumn("__lang",
-        if (!cfg.langIdEnabled)
-          F.struct(F.lit("und").as("_1"), F.lit(0.0).as("_2"))
-        else F.when(F.col("__pre_lang").isNotNull,
-          F.struct(F.lit("und").as("_1"), F.lit(0.0).as("_2")))
-          .otherwise(langU(text)))
-      .withColumn("lang", F.col("__lang._1"))
-      .withColumn("lang_conf", F.col("__lang._2"))
-
-    val langOk = F.col("lang").isInCollection(cfg.allowedLangs) &&
-      F.col("lang_conf") >= cfg.minLangConf
-    val afterLang =
-      if (!cfg.langIdEnabled) F.col("__pre_lang")
-      else F.coalesce(F.col("__pre_lang"), F.when(!langOk, "lang"))
-
-    val withPpl = withLang
-      .withColumn("__pre_ppl", afterLang)
-      .withColumn(
-        "ppl",
-        if (cfg.pplEnabled)
-          F.when(F.col("__pre_ppl").isNotNull, F.lit(dropWhenPplMissing))
-            .otherwise(pplU(text))
-        else F.lit(dropWhenPplMissing))
-
-    val dropReason =
-      if (cfg.pplEnabled)
-        F.coalesce(F.col("__pre_ppl"), F.when(F.col("ppl") > cfg.maxPpl, "ppl"))
-      else F.col("__pre_ppl")
-
-    withPpl
-      .withColumn("drop_reason", dropReason)
-      .withColumn("keep", F.col("drop_reason").isNull)
-      .withColumn("__scrub", scrubU(text))
-      .withColumn("scrubbed_text", F.col("__scrub.scrubbed"))
-      .withColumn("scrub_hits", F.col("__scrub.hits"))
-      .select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts",
-        "lang", "lang_conf", "ppl", "rule_hits", "keep", "drop_reason",
-        "scrubbed_text", "scrub_hits")
   }
 
   def curate(

@@ -146,13 +146,6 @@ object QualityRules extends Serializable {
 
   // ---- Column forms (built-ins only; oracle-checkable in DuckDB) ----
 
-  /** `size(split(..))`-based word count; matches `wordCount` on
-    * whitespace-normalized text.
-    */
-  def wordCountCol(c: Column): Column =
-    F.when(F.length(F.trim(c)) === 0, F.lit(0))
-      .otherwise(F.size(F.split(F.trim(c), "\\s+")))
-
   /** Custom codegen expression (single pass, no array allocation) —
     * value-identical to the built-in chain it replaced, which stays
     * available as [[distinctRatioColBuiltins]] and is asserted equal

@@ -103,24 +103,6 @@ object StreamingCurate {
       }
   }
 
-  /** Drive a bounded streaming pass to a memory sink (test/dev helper;
-    * memory sink is not checkpoint-recoverable — one-shot only).
-    */
-  def runAvailableNowToMemory(
-      spark: SparkSession,
-      inputDir: String,
-      queryName: String
-  ): Unit = {
-    val q = curateStream(spark, inputDir)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   /** Production shape: bounded incremental pass to a parquet sink with
     * a recoverable checkpoint — re-invoking processes ONLY files that
     * arrived since the last run (the streaming twin of

@@ -7,17 +7,11 @@ import org.apache.spark.sql.{Column, functions => F}
   * possible (codegen'd, DuckDB-expressible), Scala only for the
   * rolling-hash fingerprint.
   *
-  * Reference seeds: word-count projection (web_scraper.py:159),
-  * min-length gate (web_scraper.py:191-194), punctuation-noise
-  * handling (web_scraper.py:95-98), content-hash fingerprint
-  * (web_scraper.py:154).
+  * Reference seeds: min-length gate (web_scraper.py:191-194),
+  * punctuation-noise handling (web_scraper.py:95-98), content-hash
+  * fingerprint (web_scraper.py:154).
   */
 object TextStats extends Serializable {
-
-  /** Whitespace token count (reference word_count, web_scraper.py:159). */
-  def wsTokenCount(c: Column): Column =
-    F.when(F.length(F.trim(c)) === 0, F.lit(0))
-      .otherwise(F.size(F.split(F.trim(c), "\\s+")))
 
   /** BPE-ish token count: word pieces + standalone punctuation —
     * `\w+` runs and single non-space symbols each count as one token

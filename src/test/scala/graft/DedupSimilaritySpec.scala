@@ -122,7 +122,7 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("ngram jaccard pairs relational path matches scala jaccard") {
-    val out = Dedup.ngramJaccardPairs(docs, "id", "text", n = 3, threshold = 0.5)
+    val out = Dedup.ngramJaccardPrefix(docs, "id", "text", n = 3, threshold = 0.5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val expected = Dedup.jaccard(Dedup.shingles(
       "the quick brown fox jumps over the lazy dog near the river bank today", 3),
@@ -263,16 +263,12 @@ class DedupSimilaritySpec extends SparkTestBase {
     ).toDF("id", "text")
     val dropped = Dedup.ngramDroppedGrams(hot, "id", "text", n = 3, maxGramFreq = 2).collect()
     assert(dropped.length == 1 && dropped.head.getAs[Long]("gf") == 3L)
-    // the pair path silently loses all 1-2/1-3/2-3 pairs under the cap...
-    val capped = Dedup.ngramJaccardPairs(hot, "id", "text", n = 3,
-      threshold = 0.01, maxGramFreq = 2).count()
-    assert(capped == 0L)
-    // ...and finds them without it
-    val uncapped = Dedup.ngramJaccardPairs(hot, "id", "text", n = 3,
-      threshold = 0.01, maxGramFreq = 1000)
+    // a cap of 2 would lose all 1-2/1-3/2-3 pairs; the exact path has
+    // no cap and finds them
+    val exact = Dedup.ngramJaccardPrefix(hot, "id", "text", n = 3, threshold = 0.01)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(uncapped == Set((1L, 2L), (1L, 3L), (2L, 3L)))
+    assert(exact == Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
   test("ngramJaccardPrefix == exhaustive brute-force enumeration (exact, no cap)") {
@@ -287,7 +283,7 @@ class DedupSimilaritySpec extends SparkTestBase {
         Seq(base(i % base.length), base((i * 3) % base.length))
       (i.toLong, words.mkString(" "))
     }
-    for (t <- Seq(0.3, 0.5, 0.8)) {
+    for (t <- Seq(0.2, 0.3, 0.5, 0.8)) {
       val got = Dedup.ngramJaccardPrefix(corpus.toDF("id", "text"), "id", "text",
           n = 3, threshold = t)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -339,27 +335,32 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(acc.value == n, s"sketch UDF ran ${acc.value} times for $n rows")
   }
 
+  /** Union-find oracle: vertex → smallest id in its component. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  private def components(edges: Seq[(Long, Long)], maxIter: Int = 50): Map[Long, Long] = {
+    import spark.implicits._
+    Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b", maxIter)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
   test("connectedComponents == union-find oracle (random graph, chain, cliques)") {
     import spark.implicits._
-    def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      parent.keys.map(v => v -> find(v)).toMap
-    }
-    def check(edges: Seq[(Long, Long)]): Unit = {
-      val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == unionFind(edges), s"mismatch for $edges")
-    }
-    // chain of 12: min label needs 11 propagation rounds (exercises
-    // the iteration, not just one-hop min)
+    def check(edges: Seq[(Long, Long)]): Unit =
+      assert(components(edges) == unionFind(edges), s"mismatch for $edges")
+    // chain of 12: needs several contraction rounds (exercises the
+    // iteration, not just one-hop min)
     check((0L until 11L).map(i => (i, i + 1)))
     // two cliques bridged by one edge + an isolated pair
     check(Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L),
@@ -374,7 +375,6 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("connectedComponents star == label on every fixture; O(log n) rounds on a long chain") {
-    import spark.implicits._
     val fixtures = Seq(
       (0L until 11L).map(i => (i, i + 1)),
       Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L),
@@ -385,23 +385,15 @@ class DedupSimilaritySpec extends SparkTestBase {
           .filter { case (a, b) => a != b }
       })
     fixtures.foreach { edges =>
-      val label = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b",
-          algo = "star")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == label, s"star != label for $edges")
+      assert(components(edges) == unionFind(edges), s"mismatch for $edges")
     }
     // adversarial diameter: a 4096-node path. Label propagation would
     // need 4095 rounds; the star contraction must land within
     // ~2·log2(n) + slack (the maxIter below IS the assertion — the
     // require() inside fails the test if rounds exceed it).
     val n = 4096L
-    val chain = (0L until n - 1).map(i => (i, i + 1))
-    val got = Dedup.connectedComponentsStar(chain.toDF("a", "b"), "a", "b",
-        maxIter = 2 * 12 + 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(got.length == n && got.forall(_._2 == 0L))
+    val got = components((0L until n - 1).map(i => (i, i + 1)), maxIter = 2 * 12 + 4)
+    assert(got.size == n && got.values.forall(_ == 0L))
   }
 
   test("MinHashAgg: group signature == signature of concatenated text; conv near-dups found") {

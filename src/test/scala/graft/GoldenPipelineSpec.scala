@@ -198,7 +198,7 @@ class GoldenPipelineSpec extends SparkTestBase {
         "keep", "drop_reason", "scrubbed_text", "scrub_hits")
       .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.toString)
     assert(norm(Curate.curateDf(spark, ds)).toSeq ==
-      norm(Curate.curateDfUnfused(spark, ds)).toSeq)
+      norm(CurateUnfused.curateDfUnfused(spark, ds)).toSeq)
   }
 
   test("fused == unfused under the cheap-rules-only config (grammar/cyk/langid/ppl toggles)") {
@@ -211,7 +211,7 @@ class GoldenPipelineSpec extends SparkTestBase {
         "keep", "drop_reason", "scrubbed_text", "scrub_hits")
       .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.toString)
     val fused = norm(Curate.curateDf(spark, ds, cfg))
-    assert(fused.toSeq == norm(Curate.curateDfUnfused(spark, ds, cfg)).toSeq)
+    assert(fused.toSeq == norm(CurateUnfused.curateDfUnfused(spark, ds, cfg)).toSeq)
     // disabled stages really are disabled: sentinel lang, NaN ppl (→ -1
     // after norm), no grammar hits anywhere
     assert(fused.forall(r => r(2) == "und" && r(4) == "-1.0"))
@@ -238,7 +238,7 @@ class GoldenPipelineSpec extends SparkTestBase {
       .select("turn_idx", "lang", "keep", "drop_reason", "scrubbed_text")
       .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.toString)
     val fused = norm(Curate.curateDf(spark, rows))
-    val unfused = norm(Curate.curateDfUnfused(spark, rows))
+    val unfused = norm(CurateUnfused.curateDfUnfused(spark, rows))
     assert(fused.toSeq == unfused.toSeq)
     // and the code-point gate actually distinguishes the two emoji rows
     val byIdx = Curate.curateDf(spark, rows).collect()
@@ -271,7 +271,7 @@ class GoldenPipelineSpec extends SparkTestBase {
         "scrubbed_text", "scrub_hits", "rule_hits")
       .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.toString)
     assert(norm(Curate.curateDf(spark, rows)).toSeq ==
-      norm(Curate.curateDfUnfused(spark, rows)).toSeq)
+      norm(CurateUnfused.curateDfUnfused(spark, rows)).toSeq)
   }
 
   test("order invariance: decisions identical under repartition + shuffled input (SURVEY.md §5 property)") {

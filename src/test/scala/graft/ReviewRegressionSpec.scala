@@ -51,12 +51,12 @@ class ReviewRegressionSpec extends SparkTestBase {
 
   test("ngram jaccard: identical docs score 1.0 even with a frequency-capped shared gram") {
     import spark.implicits._
-    // gram 'x y z' appears in > maxGramFreq docs → capped out; the two
-    // identical docs must still score 1.0 over the surviving grams
+    // gram 'x y z' is a stop-gram shared by every doc (the gram a df
+    // cap would drop); the two identical docs must still score 1.0
     val common = (10L to 20L).map(i => (i, s"x y z unique$i filler words"))
     val dups = Seq((1L, "x y z alpha beta gamma delta"), (2L, "x y z alpha beta gamma delta"))
     val df = (dups ++ common).toDF("id", "text")
-    val out = Dedup.ngramJaccardPairs(df, "id", "text", n = 3, threshold = 0.99, maxGramFreq = 5)
+    val out = Dedup.ngramJaccardPrefix(df, "id", "text", n = 3, threshold = 0.99)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(out.get((1L, 2L)).contains(1.0), s"got $out")
   }
@@ -84,7 +84,7 @@ class ReviewRegressionSpec extends SparkTestBase {
       .select("conv_id", "keep", "drop_reason")
       .collect().map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2))).toMap
     val fused = decisions(Curate.curateDf(spark, weird))
-    val unfused = decisions(Curate.curateDfUnfused(spark, weird))
+    val unfused = decisions(CurateUnfused.curateDfUnfused(spark, weird))
     assert(fused == unfused, s"fused=$fused unfused=$unfused")
     // and all whitespace-only rows are 'empty', not 'too_short'
     Seq("w0", "w1", "w2", "w3", "w5").foreach { c =>
@@ -115,7 +115,7 @@ class ReviewRegressionSpec extends SparkTestBase {
       .select("conv_id", "lang", "lang_conf", "ppl", "rule_hits", "keep",
         "drop_reason", "scrubbed_text", "scrub_hits")
       .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.toString).toSeq
-    assert(norm(Curate.curateDf(spark, df)) == norm(Curate.curateDfUnfused(spark, df)))
+    assert(norm(Curate.curateDf(spark, df)) == norm(CurateUnfused.curateDfUnfused(spark, df)))
   }
 
   test("labels() honors skew parameters (sidecar row count matches dataset)") {
