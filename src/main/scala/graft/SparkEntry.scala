@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.expressions.Window
 
 import graft.chunk.Chunker
@@ -15,27 +15,68 @@ import graft.synth.Transcripts
 import graft.textstats.TextStats
 
 /** Driver contract (SURVEY.md §7) — one query per implemented operator
-  * family from SURVEY.md §2; `oracleSql` carries the DuckDB-equivalent
-  * ANSI SQL for every SQL-expressible query (same column names, same
-  * deterministic ORDER BY). See COVERAGE.md for the §2 operator-id →
-  * query/file map.
+  * family from SURVEY.md §2, each declared once in [[declared]] with its
+  * build function and EITHER its DuckDB-equivalent ANSI SQL oracle (same
+  * column names, same deterministic ORDER BY) OR a written reason it has
+  * none. `queries` and `oracleSql` are views of that one table. See
+  * COVERAGE.md for the §2 operator-id → query/file map.
   */
 object SparkEntry {
 
+  /** One declared query: its name, its build function, and either its
+    * oracle SQL (`Right`, a thunk: some oracles dump trained models, and
+    * looking up a query must never build them) or the written reason it
+    * is exempt from the DuckDB compare (`Left`).
+    */
+  private[graft] final case class Declared(
+      name: String,
+      build: (SparkSession, String) => DataFrame,
+      oracle: Either[String, () => String])
+
+  private def oracle(sql: => String): Either[String, () => String] = Right(() => sql)
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.iterator.map(d => d.name -> d.build).toMap
+
+  /** DuckDB-runnable oracle SQL of every non-exempt query — MUST produce
+    * identical column names, values, and (sorted) rows as the Spark query
+    * on the same parquet dir. DuckDB regexp_replace needs the 'g' flag
+    * (Spark replaces all matches by default); both engines compute
+    * doubles in 64-bit and we round AFTER aggregation on both sides.
+    * Builds every oracle string, model dumps included, on each call.
+    */
+  def oracleSql: Map[String, String] =
+    declared.iterator.collect { case Declared(n, _, Right(sql)) => n -> sql() }.toMap
+
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** documents as the (id, text) frame the dedup operators take. */
+  private def idText(s: SparkSession, dir: String): DataFrame =
+    tbl(s, dir, "documents").select(F.col("doc_id").as("id"), F.col("text"))
+
+  /** Documents as transcript turns — conv = source, turn order = doc_id
+    * — plus `cols` over the documents row; mirrored in oracle SQL by
+    * [[docTurnsSql]].
+    */
+  private def docTurns(s: SparkSession, dir: String, cols: Column*): DataFrame =
+    tbl(s, dir, "documents").select(Seq(F.col("source").as("conv_id"),
+      F.row_number().over(Window.partitionBy("source").orderBy("doc_id"))
+        .as("turn_idx")) ++ cols: _*)
+
+  private val docTurnsSql =
+    "source AS conv_id, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS turn_idx"
+
+  /** [[docTurns]] in the transcript schema Curate.curateDf reads. */
+  private def transcriptTurns(s: SparkSession, dir: String, text: Column): DataFrame =
+    docTurns(s, dir, F.lit("user").as("role"), text.as("text"),
+      F.lit("").as("tool"), F.lit(null).cast("timestamp").as("ts"))
 
   /** Synth transcript scale per test tier (driver sf dirs). */
   private def nConvsFor(dir: String): Long =
     if (dir.contains("sf0.1")) 4000L
     else if (dir.contains("sf0.01")) 400L
     else 80L
-
-  private def synthTurns(s: SparkSession, dir: String) =
-    Transcripts.dataset(s, nConvsFor(dir)).toDF()
-
-  private def curated(s: SparkSession, dir: String): DataFrame =
-    Curate.curateDf(s, synthTurns(s, dir))
 
   /** Flagship: the full curation pipeline end-to-end on a small synth
     * corpus (driver smoke-checks rows > 0).
@@ -45,25 +86,32 @@ object SparkEntry {
 
   // round for cross-engine double parity (both engines round AFTER
   // computing in double precision; 1e-12-scale engine noise only)
-  private def r6(c: org.apache.spark.sql.Column) = F.round(c, 6)
+  private def r6(c: Column) = F.round(c, 6)
 
-  /** Doc-derived turns with a PLANTED 20k-turn hot conversation (the
-    * first doc exploded), SQL-expressible keep/scrub — shared by the
-    * two skew-variant queries and mirrored in their oracle SQL.
+  /** Curate.metrics with its map columns serialized to JSON (keys
+    * pre-sorted via map_from_entries(sort_array(..)) so the string is
+    * canonical) — the pandas-side oracle compare cannot sort raw map cells.
     */
-  private def skewTurns(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
-    val docs = tbl(s, dir, "documents")
-    val base = docs.select(F.col("source").as("conv_id"),
-      F.row_number().over(w).as("turn_idx"), F.col("text"))
-    val hot = docs.orderBy("doc_id").limit(1)
-      .select(F.lit("hot").as("conv_id"),
-        F.explode(F.sequence(F.lit(1), F.lit(20000))).as("turn_idx"),
-        F.col("text"))
-    base.unionByName(hot)
-      .select(F.col("conv_id"), F.col("turn_idx"),
-        Scrubber.scrubColReference(F.col("text")).as("scrubbed_text"),
-        (F.size(F.split(F.col("text"), " ", -1)) >= 50).as("keep"))
+  private def metricsJson(curated: DataFrame): DataFrame =
+    Curate.metrics(curated)
+      .withColumn("dropped_by_rule", F.to_json(F.col("dropped_by_rule")))
+      .withColumn("scrub_hit_counts", F.to_json(F.col("scrub_hit_counts")))
+
+  /** Doc-derived turns with the SQL-expressible reference scrub and a
+    * ≥50-word keep rule; `hot` adds a PLANTED 20k-turn hot conversation
+    * (the first doc exploded) for the skew variants. Mirrored in their
+    * oracle SQL by [[keptTurnsCte]].
+    */
+  private def keptTurns(s: SparkSession, dir: String, hot: Boolean): DataFrame = {
+    val base = docTurns(s, dir, F.col("text"))
+    val turns = if (!hot) base else base.unionByName(
+      tbl(s, dir, "documents").orderBy("doc_id").limit(1)
+        .select(F.lit("hot").as("conv_id"),
+          F.explode(F.sequence(F.lit(1), F.lit(20000))).as("turn_idx"),
+          F.col("text")))
+    turns.select(F.col("conv_id"), F.col("turn_idx"),
+      Scrubber.scrubColReference(F.col("text")).as("scrubbed_text"),
+      (F.size(F.split(F.col("text"), " ", -1)) >= 50).as("keep"))
   }
 
   /** sample_fraction per-source keep fractions — ONE definition for
@@ -140,12 +188,12 @@ object SparkEntry {
       "rows pipeline fast sample rows tokens cluster. Question checks careful " +
       "model scale with. Text and result text table large scale."
 
-  /** Doc-derived transcript turns for the ORACLED flagship decision
-    * (`curate_cheap` / `curate_metrics_cheap` / full-model
-    * `curate_transcripts`): conv = source, turn order = doc_id.
+  /** Curate.curateDf under `cfg` over doc-derived transcript turns for
+    * the ORACLED flagship decision (`curate_cheap` /
+    * `curate_metrics_cheap` / full-model `curate_transcripts`).
     * Deterministic planted rows make every cheap-rule branch, the
     * scrub, AND the product-config model gates non-vacuous (mirrored
-    * verbatim in the oracle SQL):
+    * verbatim in [[cheapCte]]):
     *   doc_id % 13 == 2 → pure repetition text ("spam" × 60)
     *   doc_id % 13 == 3 → high-symbol text ("wN###" × 60)
     *   doc_id % 13 == 4 → 60 distinct words + a boilerplate tail
@@ -154,8 +202,7 @@ object SparkEntry {
     *                      langid "und" → 'lang' drop, model-independent
     *   doc_id % 5  == 0 → PII tail appended (url + email + "!!")
     */
-  private def cheapTurns(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
+  private def cheapCurated(s: SparkSession, dir: String, cfg: QualityRules.Config): DataFrame = {
     val d = F.col("doc_id")
     val nums = F.sequence(F.lit(1), F.lit(60))
     val repText = F.concat_ws(" ", F.transform(nums, _ => F.lit("spam")))
@@ -174,27 +221,22 @@ object SparkEntry {
       .when(d % 13 === 6, numText)
       .otherwise(F.col("text"))
     val planted = F.when(d % 5 === 0, F.concat(base, F.lit(plantedPii))).otherwise(base)
-    tbl(s, dir, "documents")
-      .select(F.col("source").as("conv_id"),
-        F.row_number().over(w).as("turn_idx"),
-        F.lit("user").as("role"), planted.as("text"),
-        F.lit("").as("tool"), F.lit(null).cast("timestamp").as("ts"))
+    Curate.curateDf(s, transcriptTurns(s, dir, planted), cfg)
   }
 
-  /** Turns for the GRAMMAR-gated decision query (curate_grammar): text
-    * is WHOLLY synthetic from doc_id so grammar hits come ONLY from
-    * planted fragments whose deduped hit count is SQL-countable —
-    * corpus text could fire the POS-bigram or the anchored
-    * incomplete-sentence rule, which no regexp-count oracle can
-    * replicate. Variants (doc_id % 5):
+  /** Curate.curateDf with the GRAMMAR gate on (curate_grammar and its
+    * metrics twin) over turns whose text is WHOLLY synthetic from doc_id,
+    * so grammar hits come ONLY from planted fragments whose deduped hit
+    * count is SQL-countable — corpus text could fire the POS-bigram or
+    * the anchored incomplete-sentence rule, which no regexp-count oracle
+    * can replicate. Variants (doc_id % 5):
     *   0 → plantedKeep + plantedErrors  (3 deduped hits → 'grammar')
     *   1 → plantedKeep + plantedErrors2 (2 hits → keep, hits recorded)
     *   2 → 3-word text WITH a hit       ('too_short': cheap precedes grammar)
     *   3 → spam×60 + plantedErrors      ('repetition': grammar never runs)
     *   else → plantedKeep               (clean keep, 0 hits)
     */
-  private def grammarTurns(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
+  private def grammarCurated(s: SparkSession, dir: String): DataFrame = {
     val d = F.col("doc_id")
     val repText = F.concat_ws(" ",
       F.transform(F.sequence(F.lit(1), F.lit(60)), _ => F.lit("spam")))
@@ -203,16 +245,209 @@ object SparkEntry {
       .when(d % 5 === 2, F.lit("he are short."))
       .when(d % 5 === 3, F.concat(repText, F.lit(plantedErrors)))
       .otherwise(F.lit(plantedKeep))
-    tbl(s, dir, "documents")
-      .select(F.col("source").as("conv_id"),
-        F.row_number().over(w).as("turn_idx"),
-        F.lit("user").as("role"), text.as("text"),
-        F.lit("").as("tool"), F.lit(null).cast("timestamp").as("ts"))
+    Curate.curateDf(s, transcriptTurns(s, dir, text),
+      QualityRules.cheapConfig.copy(grammarEnabled = true))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational core over driver tables (DuckDB-oracled) ----
-    "q1_agg" -> ((s, dir) => {
+  // ---- oracle SQL scaffolding shared by several declared queries ----
+
+  private def stopIn = TextStats.enStopwords.map(w => s"'$w'").mkString("(", ", ", ")")
+
+  /** The ordered first-failure cheap-rule decision over
+    * `src(conv_id, turn_idx, text)` as CTEs m → r → d, ending in
+    * `d(conv_id, turn_idx, text, drop_reason)` — MUST mirror
+    * CurateCore.process under QualityRules.cheapConfig: empty →
+    * too_short(50) → too_long(2000w/8000cp) → repetition(≥20w, <0.3) →
+    * symbol_ratio(>0.3) → boilerplate.
+    */
+  private def cheapRuleCtes(src: String): String =
+    "m AS (SELECT conv_id, turn_idx, text, " +
+      "len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS wc, " +
+      s"list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS lw FROM $src), " +
+    "r AS (SELECT conv_id, turn_idx, text, wc, " +
+      "CASE WHEN len(lw) = 0 THEN 1.0 ELSE len(list_distinct(lw)) * 1.0 / len(lw) END AS dr, " +
+      "CASE WHEN length(text) = 0 THEN 0.0 ELSE length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / length(text) END AS sr FROM m), " +
+    "d AS (SELECT conv_id, turn_idx, text, " +
+      "CASE WHEN wc = 0 THEN 'empty' WHEN wc < 50 THEN 'too_short' " +
+      "WHEN wc > 2000 OR length(text) > 8000 THEN 'too_long' " +
+      "WHEN wc >= 20 AND dr < 0.3 THEN 'repetition' " +
+      "WHEN sr > 0.3 THEN 'symbol_ratio' " +
+      s"WHEN regexp_matches(text, '${QualityRules.boilerplateRegexRe2}') THEN 'boilerplate' " +
+      "ELSE 'none' END AS drop_reason FROM r)"
+
+  /** cheapCurated's turns mirrored verbatim (the deterministic planted
+    * rows), then the cheap-rule chain: ends in `d`.
+    */
+  private def cheapCte: String =
+    "p AS (SELECT source, doc_id, " +
+      "CASE WHEN doc_id % 13 = 2 THEN array_to_string(list_transform(range(1, 61), i -> 'spam'), ' ') " +
+      "WHEN doc_id % 13 = 3 THEN array_to_string(list_transform(range(1, 61), i -> 'w' || i || '###'), ' ') " +
+      "WHEN doc_id % 13 = 4 THEN array_to_string(list_transform(range(1, 61), i -> 'word' || i), ' ') || ' Subscribe to our newsletter' " +
+      s"WHEN doc_id % 13 = 5 THEN '$plantedKeep' " +
+      "WHEN doc_id % 13 = 6 THEN array_to_string(list_transform(range(1, 61), i -> (i * 101)::VARCHAR), ' ') " +
+      "ELSE text END AS base FROM documents), " +
+    s"p2 AS (SELECT source, doc_id, CASE WHEN doc_id % 5 = 0 THEN base || '$plantedPii' ELSE base END AS text FROM p), " +
+    s"t AS (SELECT $docTurnsSql, text FROM p2), ${cheapRuleCtes("t")}"
+
+  /** The composed real-model decision inputs: cheap chain → langid
+    * argmax/softmax → stupid-backoff ppl, joined per turn in `fin`.
+    */
+  private def productCte: String = {
+    val keys = Seq("conv_id", "turn_idx")
+    val (lBlock, lR) = OracleSql.langidCtes("d", keys, "L")
+    val (pBlock, pR) = OracleSql.pplCtes("d", keys, "P")
+    s"$cheapCte, $lBlock, $pBlock, " +
+      "fin AS (SELECT d.conv_id, d.turn_idx, d.text, d.drop_reason AS cheap, " +
+      "lr.lang AS plang, lr.conf AS pconf, pp.ppl AS pppl " +
+      s"FROM d LEFT JOIN $lR lr ON lr.conv_id = d.conv_id AND lr.turn_idx = d.turn_idx " +
+      s"LEFT JOIN $pR pp ON pp.conv_id = d.conv_id AND pp.turn_idx = d.turn_idx)"
+  }
+
+  /** curate_transcripts' oracle: the REAL-model composed decision (cheap
+    * chain → lang gate → ppl gate → full scrub), all value-compared.
+    */
+  private def productTurnsSql: String =
+    s"WITH $productCte " +
+      "SELECT conv_id, turn_idx, " +
+      "CASE WHEN cheap <> 'none' THEN 'und' ELSE coalesce(plang, 'und') END AS lang, " +
+      s"${OracleSql.productDecision()} AS drop_reason, " +
+      "drop_reason = 'none' AS keep, " +
+      s"${Scrubber.scrubSqlFull("text")} AS scrubbed_text " +
+      "FROM fin ORDER BY conv_id, turn_idx"
+
+  // grammarCurated's turns mirrored verbatim (shared by curate_grammar
+  // and its metrics twin): the planted-fragment hit count is recomputed
+  // with regexp_extract_all ("he are" fires BASIC_SUBJ_VERB and
+  // BASIC_001 on the SAME span — the engine's overlap-dedup collapses
+  // them to one, counted once here); the gate ordering replays as a
+  // CASE chain (grammarDec)
+  private val grammarDec = "CASE WHEN cheap <> 'none' THEN cheap " +
+    "WHEN n_rule_hits >= 3 THEN 'grammar' ELSE 'none' END"
+  private def grammarCte: String =
+    s"g0 AS (SELECT source, doc_id, CASE " +
+      s"WHEN doc_id % 5 = 0 THEN '$plantedKeep$plantedErrors' " +
+      s"WHEN doc_id % 5 = 1 THEN '$plantedKeep$plantedErrors2' " +
+      "WHEN doc_id % 5 = 2 THEN 'he are short.' " +
+      "WHEN doc_id % 5 = 3 THEN array_to_string(list_transform(range(1, 61), i -> 'spam'), ' ') " +
+      s"|| '$plantedErrors' ELSE '$plantedKeep' END AS text FROM documents), " +
+    s"gt AS (SELECT $docTurnsSql, text FROM g0), ${cheapRuleCtes("gt")}, " +
+    "gh AS (SELECT conv_id, turn_idx, text, drop_reason AS cheap, CASE WHEN drop_reason <> 'none' THEN 0 ELSE " +
+      "len(regexp_extract_all(text, '(?i)\\bhe\\s+are\\b')) + " +
+      "len(regexp_extract_all(text, '(?i)\\b(they|we|you)\\s+is\\b')) + " +
+      "len(regexp_extract_all(text, '(?i)\\bfocus\\s+on\\b')) END AS n_rule_hits FROM d)"
+
+  /** Curate.metrics replayed over `src(drop_reason, text)`: staged
+    * per-pattern scrub hit counts (each count taken on the text AS IT
+    * STANDS when that pattern runs — Scrubber.scrub's sequential
+    * semantics, generated from the one patternSpecs definition), then
+    * the base/br/sc aggregation tail with sorted-key JSON maps.
+    */
+  private def metricsFrom(src: String): String = {
+    val specs = Scrubber.patternSpecs
+    val sb = new StringBuilder(
+      s"s0 AS (SELECT drop_reason, trim(regexp_replace(text, '\\s+', ' ', 'g')) AS t0 FROM $src)")
+    specs.indices.foreach { i =>
+      val (name, pat) = specs(i)
+      val carried = ("drop_reason" +: specs.take(i).map(s => s"n_${s._1}")).mkString(", ")
+      val tOut =
+        if (i == specs.length - 1) ""
+        else s", regexp_replace(t$i, '$pat', '', 'g') AS t${i + 1}"
+      sb ++= s", s${i + 1} AS (SELECT $carried, len(regexp_extract_all(t$i, '$pat')) AS n_$name$tOut FROM s$i)"
+    }
+    val last = s"s${specs.length}"
+    val hitBranches = specs.map { case (name, _) =>
+      s"SELECT '$name' AS k, CAST(sum(n_$name) AS BIGINT) AS n FROM $last HAVING sum(n_$name) > 0"
+    }.mkString(" UNION ALL ")
+    s"$sb, base AS (SELECT count(*) AS turns_seen, " +
+      "CAST(sum(CASE WHEN drop_reason = 'none' THEN 1 ELSE 0 END) AS BIGINT) AS turns_kept, " +
+      s"CAST(sum(CASE WHEN drop_reason = 'none' THEN 0 ELSE 1 END) AS BIGINT) AS turns_dropped FROM $last), " +
+      "br AS (SELECT coalesce('{' || string_agg('\"' || drop_reason || '\":' || n, ',' ORDER BY drop_reason) || '}', '{}') AS dropped_by_rule " +
+      s"FROM (SELECT drop_reason, count(*) AS n FROM $last WHERE drop_reason <> 'none' GROUP BY 1) x), " +
+      "sc AS (SELECT coalesce('{' || string_agg('\"' || k || '\":' || n, ',' ORDER BY k) || '}', '{}') AS scrub_hit_counts " +
+      s"FROM ($hitBranches) y) " +
+      "SELECT 0 AS part_id, turns_seen, turns_kept, turns_dropped, dropped_by_rule, scrub_hit_counts FROM base, br, sc"
+  }
+
+  /** keptTurns mirrored verbatim: ends in
+    * `skt(conv_id, turn_idx, scrubbed, keep)`.
+    */
+  private def keptTurnsCte(hot: Boolean): String =
+    s"sk0 AS (SELECT $docTurnsSql, text FROM documents" +
+      (if (!hot) "" else " UNION ALL SELECT 'hot', unnest(range(1, 20001)), text " +
+        "FROM (SELECT text FROM documents ORDER BY doc_id LIMIT 1)") + "), " +
+      s"skt AS (SELECT conv_id, turn_idx, ${Scrubber.scrubSqlReference("text")} AS scrubbed, " +
+      "len(string_split(text, ' ')) >= 50 AS keep FROM sk0)"
+
+  /** The salted/blocked two-phase per-conv aggregates must equal these
+    * DIRECT single-phase aggregates over the same turns.
+    */
+  private def convStatsSql(hot: Boolean): String =
+    s"WITH ${keptTurnsCte(hot)} " +
+      "SELECT conv_id, count(*) AS n_turns, " +
+      "CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept, " +
+      "round(sum(length(scrubbed)) * 1.0 / count(*), 6) AS avg_chars " +
+      "FROM skt GROUP BY conv_id ORDER BY conv_id"
+
+  /** Distinct word trigrams per document (Dedup.shingles semantics: a
+    * doc under 3 tokens shingles as its distinct tokens) as CTEs ending
+    * in `g(id, g)`.
+    */
+  private val trigramCtes =
+    "toks AS (SELECT doc_id AS id, " +
+      "list_filter(regexp_split_to_array(lower(text), '[^\\pL\\pN_]+'), x -> x <> '') AS w FROM documents), " +
+    "sh AS (SELECT id, CASE WHEN len(w) < 3 THEN list_distinct(w) " +
+      "ELSE list_distinct(list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) END AS grams FROM toks), " +
+    "g AS (SELECT id, unnest(grams) AS g FROM sh)"
+
+  /** EVERY pair (id_a < id_b) with exact string-trigram jaccard ≥ `t`
+    * (the exhaustive enumeration the dedup paths must match) as CTEs
+    * ending in `pairs(id_a, id_b, j)`. Hashed-gram jaccard equals
+    * string-gram jaccard here (collision-free 64-bit hashes).
+    */
+  private def trigramPairCtes(t: Double): String =
+    s"$trigramCtes, sizes AS (SELECT id, count(*) AS sz FROM g GROUP BY id), " +
+      "p AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS inter " +
+      "FROM g a JOIN g b ON a.g = b.g AND a.id < b.id GROUP BY 1, 2), " +
+      "pairs AS (SELECT id_a, id_b, inter * 1.0 / (sa.sz + sb.sz - inter) AS j " +
+      "FROM p JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b " +
+      s"WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= $t)"
+
+  private def trigramPairSql(t: Double): String =
+    s"WITH ${trigramPairCtes(t)} SELECT id_a, id_b, round(j, 6) AS jaccard FROM pairs ORDER BY id_a, id_b"
+
+  // ---- the declared queries ----
+
+  // dedup_components_star and ann_ivf_indexed reuse these two entries
+  private val components = Declared("dedup_components", (s, dir) => {
+      // DuckDB-oracled via a RECURSIVE CTE computing the transitive
+      // closure over the SAME pair set dedup_minhash proves exhaustive
+      // (jaccard >= 0.8): component = min reachable id
+      val pairs = Dedup.minhashNearDups(idText(s, dir), "id", "text", threshold = 0.8)
+      Dedup.connectedComponents(pairs, "id_a", "id_b").orderBy("id")
+    },
+    oracle(s"WITH RECURSIVE ${trigramPairCtes(0.8)}, " +
+      "edges AS (SELECT id_a AS u, id_b AS v FROM pairs " +
+      "UNION SELECT id_b, id_a FROM pairs), " +
+      "reach AS (SELECT u, v FROM edges " +
+      "UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u) " +
+      "SELECT u AS id, least(u, min(v)) AS comp FROM reach GROUP BY u ORDER BY id"))
+
+  private val batchTopk = Declared("ann_batch_topk", (s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val qs = emb.filter(F.col("vec_id") < 4)
+      Similarity.topKBatch(emb, "vec_id", "embedding", qs, "vec_id", "embedding", k = 3)
+        .withColumn("sim", r6(F.col("sim")))
+        .orderBy("qid", "rank")
+    },
+    oracle("WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qemb FROM embeddings WHERE vec_id < 4), " +
+      "scored AS (SELECT q.qid, e.vec_id AS cid, " +
+      "list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qemb) AS s FROM embeddings e, q), " +
+      "ranked AS (SELECT qid, cid, s, row_number() OVER (PARTITION BY qid ORDER BY s DESC, cid) AS rank FROM scored) " +
+      "SELECT qid, cid, round(s, 6) AS sim, rank FROM ranked WHERE rank <= 3 ORDER BY qid, rank"))
+
+  private[graft] lazy val declared: Seq[Declared] = Seq(
+    // ---- relational core over the TPC-H-style and events tables ----
+    Declared("q1_agg", (s, dir) =>
       tbl(s, dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -220,9 +455,11 @@ object SparkEntry {
           F.round(F.sum("l_extendedprice"), 4).as("sum_price"),
           F.round(F.avg("l_discount"), 6).as("avg_disc"),
           F.count(F.lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-    "q2_join_topk" -> ((s, dir) => {
+        .orderBy("l_returnflag", "l_linestatus"),
+      oracle("SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 4) AS sum_qty, " +
+        "round(sum(l_extendedprice), 4) AS sum_price, round(avg(l_discount), 6) AS avg_disc, " +
+        "count(*) AS n FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2")),
+    Declared("q2_join_topk", (s, dir) => {
       val o = tbl(s, dir, "orders")
       val c = tbl(s, dir, "customer")
       val n = tbl(s, dir, "nation")
@@ -233,27 +470,36 @@ object SparkEntry {
           F.count(F.lit(1)).as("n_orders"))
         .orderBy(F.desc("revenue"), F.col("n_name"))
         .limit(5)
-    }),
-    "q3_window" -> ((s, dir) => {
+    },
+      oracle("SELECT n_name, round(sum(o_totalprice), 2) AS revenue, count(*) AS n_orders " +
+        "FROM orders JOIN customer ON o_custkey = c_custkey " +
+        "JOIN nation ON c_nationkey = n_nationkey " +
+        "GROUP BY n_name ORDER BY revenue DESC, n_name LIMIT 5")),
+    Declared("q3_window", (s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       tbl(s, dir, "events")
         .select(F.col("user_id"), F.col("event_id"),
           F.row_number().over(w).as("rn"))
         .orderBy("user_id", "rn")
-    }),
-    "q17_running_window" -> ((s, dir) => {
+    },
+      oracle("SELECT user_id, event_id, row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn " +
+        "FROM events ORDER BY user_id, rn")),
+    Declared("q17_running_window", (s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       tbl(s, dir, "events")
         .select(F.col("user_id"), F.col("event_id"),
           F.round(F.sum("value").over(w), 4).as("running_value"))
         .orderBy("user_id", "event_id")
-    }),
-    "q18_sessionize" -> ((s, dir) => {
+    },
+      oracle("SELECT user_id, event_id, round(sum(value) OVER (PARTITION BY user_id " +
+        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) " +
+        "AS running_value FROM events ORDER BY user_id, event_id")),
+    Declared("q18_sessionize", (s, dir) => {
       // lag-based session assignment: new session after a >30min gap
       val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
       // ts is TIMESTAMP_NTZ; NTZ→LTZ under the UTC session then epoch
-      val epoch = (c: org.apache.spark.sql.Column) => c.cast("timestamp").cast("long")
+      val epoch = (c: Column) => c.cast("timestamp").cast("long")
       val gap = (epoch(F.col("ts")) -
         epoch(F.lag(F.col("ts"), 1).over(byUser))) > 1800L
       tbl(s, dir, "events")
@@ -263,22 +509,30 @@ object SparkEntry {
             .over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow))
             .as("session_id"))
         .orderBy("user_id", "event_id")
-    }),
-    "q19_distinct_agg" -> ((s, dir) => {
+    },
+      oracle("WITH gaps AS (SELECT user_id, event_id, ts, CASE WHEN ts - lag(ts) OVER " +
+        "(PARTITION BY user_id ORDER BY ts, event_id) > INTERVAL 30 MINUTE THEN 1 ELSE 0 END " +
+        "AS new_session FROM events) SELECT user_id, event_id, CAST(sum(new_session) OVER " +
+        "(PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
+        "CURRENT ROW) AS BIGINT) AS session_id FROM gaps ORDER BY user_id, event_id")),
+    Declared("q19_distinct_agg", (s, dir) =>
       tbl(s, dir, "orders")
         .groupBy("o_orderpriority")
         .agg(F.countDistinct("o_custkey").as("n_custs"), F.count(F.lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    }),
-    "q20_anti_join" -> ((s, dir) => {
+        .orderBy("o_orderpriority"),
+      oracle("SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_custs, count(*) AS n " +
+        "FROM orders GROUP BY 1 ORDER BY 1")),
+    Declared("q20_anti_join", (s, dir) => {
       val c = tbl(s, dir, "customer")
       val urgent = tbl(s, dir, "orders")
         .filter(F.col("o_orderpriority") === "1-URGENT")
       c.join(urgent, c("c_custkey") === urgent("o_custkey"), "left_anti")
         .select("c_custkey")
         .orderBy("c_custkey")
-    }),
-    "q21_join_agg_topk" -> ((s, dir) => {
+    },
+      oracle("SELECT c_custkey FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders " +
+        "WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT') ORDER BY c_custkey")),
+    Declared("q21_join_agg_topk", (s, dir) => {
       val li = tbl(s, dir, "lineitem")
       val p = tbl(s, dir, "part")
       li.join(F.broadcast(p), li("l_partkey") === p("p_partkey"))
@@ -287,48 +541,58 @@ object SparkEntry {
           .as("revenue"), F.count(F.lit(1)).as("n"))
         .orderBy(F.desc("revenue"), F.col("p_brand"))
         .limit(10)
-    }),
-    "q11_events_hourly" -> ((s, dir) => {
+    },
+      oracle("SELECT p_brand, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue, " +
+        "count(*) AS n FROM lineitem JOIN part ON l_partkey = p_partkey " +
+        "GROUP BY 1 ORDER BY revenue DESC, p_brand LIMIT 10")),
+    Declared("q11_events_hourly", (s, dir) =>
       tbl(s, dir, "events")
         .groupBy(F.col("event_type"), F.date_trunc("hour", F.col("ts")).as("hour"))
         .agg(F.count(F.lit(1)).as("n"), F.round(F.sum("value"), 4).as("sum_value"))
-        .orderBy("event_type", "hour")
-    }),
+        .orderBy("event_type", "hour"),
+      oracle("SELECT event_type, date_trunc('hour', ts) AS hour, count(*) AS n, " +
+        "round(sum(value), 4) AS sum_value FROM events GROUP BY 1, 2 ORDER BY 1, 2")),
 
-    // ---- text/projection operators over documents (DuckDB-oracled) ----
-    "q4_hash_project" -> ((s, dir) => {
+    // ---- text/projection operators over documents ----
+    Declared("q4_hash_project", (s, dir) =>
       tbl(s, dir, "documents")
         .select(F.col("doc_id"), F.md5(F.col("text")).as("content_hash"),
           F.size(F.split(F.col("text"), " ", -1)).as("word_count"))
-        .orderBy("doc_id")
-    }),
-    "q5_minlen_filter" -> ((s, dir) => {
+        .orderBy("doc_id"),
+      oracle("SELECT doc_id, md5(text) AS content_hash, " +
+        "len(string_split(text, ' ')) AS word_count FROM documents ORDER BY doc_id")),
+    Declared("q5_minlen_filter", (s, dir) =>
       tbl(s, dir, "documents")
         .filter(F.size(F.split(F.col("text"), " ", -1)) >= 50)
         .select("doc_id", "n_chars")
-        .orderBy("doc_id")
-    }),
-    "q6_dedup_exact" -> ((s, dir) => {
+        .orderBy("doc_id"),
+      oracle("SELECT doc_id, n_chars FROM documents " +
+        "WHERE len(string_split(text, ' ')) >= 50 ORDER BY doc_id")),
+    Declared("q6_dedup_exact", (s, dir) =>
       tbl(s, dir, "documents")
         .groupBy(F.md5(F.col("text")).as("content_hash"))
         .agg(F.min("doc_id").as("doc_id"), F.count(F.lit(1)).as("n"))
-        .orderBy("doc_id")
-    }),
-    "q7_scrub" -> ((s, dir) => {
+        .orderBy("doc_id"),
+      oracle("SELECT md5(text) AS content_hash, min(doc_id) AS doc_id, count(*) AS n " +
+        "FROM documents GROUP BY 1 ORDER BY 2")),
+    Declared("q7_scrub", (s, dir) =>
       tbl(s, dir, "documents")
         .select(F.col("doc_id"),
           Scrubber.scrubColReference(F.col("text")).as("scrubbed"))
-        .orderBy("doc_id")
-    }),
-    "q8_rule_match_counts" -> ((s, dir) => {
+        .orderBy("doc_id"),
+      oracle(s"SELECT doc_id, ${Scrubber.scrubSqlReference("text")} AS scrubbed " +
+        "FROM documents ORDER BY doc_id")),
+    Declared("q8_rule_match_counts", (s, dir) =>
       tbl(s, dir, "documents")
         .select(F.col("doc_id"),
           F.size(F.regexp_extract_all(F.col("text"), F.lit("\\bthe\\b"), F.lit(0))).as("n_the"),
           F.size(F.regexp_extract_all(F.col("text"),
             F.lit("\\b(he|she|it) are\\b"), F.lit(0))).as("n_sv"))
-        .orderBy("doc_id")
-    }),
-    "q9_quality" -> ((s, dir) => {
+        .orderBy("doc_id"),
+      oracle("SELECT doc_id, len(regexp_extract_all(text, '\\bthe\\b')) AS n_the, " +
+        "len(regexp_extract_all(text, '\\b(he|she|it) are\\b')) AS n_sv " +
+        "FROM documents ORDER BY doc_id")),
+    Declared("q9_quality", (s, dir) => {
       val t = F.col("text")
       tbl(s, dir, "documents")
         .select(F.col("doc_id"),
@@ -337,14 +601,19 @@ object SparkEntry {
           r6(QualityRules.symbolRatioCol(t)).as("symbol_ratio"),
           QualityRules.boilerplateCol(t).as("boilerplate"))
         .orderBy("doc_id")
-    }),
-    "q10_topk_sources" -> ((s, dir) => {
+    },
+      oracle("SELECT doc_id, len(string_split(text, ' ')) AS word_count, " +
+        "round(len(list_distinct(string_split(lower(text), ' '))) * 1.0 / len(string_split(text, ' ')), 6) AS distinct_ratio, " +
+        "round(length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / length(text), 6) AS symbol_ratio, " +
+        "regexp_matches(text, '(?i)(Cookie\\s+Policy|Privacy\\s+Policy|Terms\\s+of\\s+Service|Subscribe\\s+to.*newsletter|Follow\\s+us\\s+on|Share\\s+this)') AS boilerplate " +
+        "FROM documents ORDER BY doc_id")),
+    Declared("q10_topk_sources", (s, dir) =>
       tbl(s, dir, "documents")
         .groupBy("source").agg(F.count(F.lit(1)).as("n"))
         .orderBy(F.desc("n"), F.col("source"))
-        .limit(5)
-    }),
-    "q13_token_stats" -> ((s, dir) => {
+        .limit(5),
+      oracle("SELECT source, count(*) AS n FROM documents GROUP BY source ORDER BY n DESC, source LIMIT 5")),
+    Declared("q13_token_stats", (s, dir) => {
       val words = F.split(F.lower(F.col("text")), " ", -1)
       tbl(s, dir, "documents")
         .select(F.col("doc_id"),
@@ -352,21 +621,29 @@ object SparkEntry {
           F.size(F.filter(words, w => w.isInCollection(TextStats.enStopwords)))
             .as("n_stop"))
         .orderBy("doc_id")
-    }),
-    "q14_new_words" -> ((s, dir) => {
+    },
+      oracle(s"SELECT doc_id, len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS n_tokens, " +
+        s"len(list_filter(string_split(lower(text), ' '), x -> x IN $stopIn)) AS n_stop " +
+        "FROM documents ORDER BY doc_id")),
+    Declared("q14_new_words", (s, dir) =>
       tbl(s, dir, "documents")
         .select(F.explode(F.split(F.lower(F.col("text")), " ", -1)).as("w"))
         .filter(!F.col("w").isInCollection(Cyk.lexicon.keySet) && F.col("w") =!= "")
         .distinct()
-        .orderBy("w")
-    }),
-    "q15_lang_summary" -> ((s, dir) => {
+        .orderBy("w"),
+      oracle {
+        val lexIn = Cyk.lexicon.keySet.toSeq.sorted.map(w => s"'$w'").mkString("(", ", ", ")")
+        s"SELECT DISTINCT w FROM (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents) " +
+          s"WHERE w NOT IN $lexIn AND w <> '' ORDER BY w"
+      }),
+    Declared("q15_lang_summary", (s, dir) =>
       tbl(s, dir, "documents")
         .groupBy("lang")
         .agg(F.count(F.lit(1)).as("n"), F.round(F.avg("n_chars"), 4).as("avg_chars"))
-        .orderBy("lang")
-    }),
-    "q16_custom_expr" -> ((s, dir) => {
+        .orderBy("lang"),
+      oracle("SELECT lang, count(*) AS n, round(avg(n_chars), 4) AS avg_chars " +
+        "FROM documents GROUP BY lang ORDER BY lang")),
+    Declared("q16_custom_expr", (s, dir) => {
       // custom codegen'd Catalyst expressions (graft.functions) — same
       // values as the built-in chains, single-pass, whole-stage-codegen
       import graft.functions.TextMetrics
@@ -375,8 +652,11 @@ object SparkEntry {
           TextMetrics.word_count(F.col("text")).as("word_count"),
           r6(TextMetrics.symbol_ratio(F.col("text"))).as("symbol_ratio"))
         .orderBy("doc_id")
-    }),
-    "q12_knn" -> ((s, dir) => {
+    },
+      oracle("SELECT doc_id, len(regexp_extract_all(text, '\\S+')) AS word_count, " +
+        "round(length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / length(text), 6) AS symbol_ratio " +
+        "FROM documents ORDER BY doc_id")),
+    Declared("q12_knn", (s, dir) => {
       val emb = tbl(s, dir, "embeddings")
       val q = emb.filter(F.col("vec_id") === 0)
         .select(F.col("embedding").cast("array<double>"))
@@ -386,10 +666,13 @@ object SparkEntry {
           r6(Similarity.cosineCol(F.col("embedding").cast("array<double>"), q)).as("sim"))
         .orderBy(F.desc("sim"), F.col("vec_id"))
         .limit(5)
-    }),
+    },
+      oracle("WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0) " +
+        "SELECT e.vec_id, round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qe), 6) AS sim " +
+        "FROM embeddings e, q WHERE e.vec_id <> 0 ORDER BY sim DESC, e.vec_id LIMIT 5")),
 
     // ---- curation pipeline + metrics ----
-    "curate_transcripts" -> ((s, dir) => {
+    Declared("curate_transcripts", (s, dir) =>
       // The REAL-MODEL keep/drop decision under the DuckDB oracle
       // (r4, closing r3 verdict #1): the fused CurateCore kernel with
       // langid + perplexity ENABLED (QualityRules.productConfig) over
@@ -397,21 +680,19 @@ object SparkEntry {
       // in SQL (OracleSql) and composes cheap chain → lang gate → ppl
       // gate → scrub. The full synth-corpus default-config run stays
       // covered by entry()/curate_metrics/GoldenPipelineSpec.
-      Curate.curateDf(s, cheapTurns(s, dir), QualityRules.productConfig)
+      cheapCurated(s, dir, QualityRules.productConfig)
         .select(F.col("conv_id"), F.col("turn_idx"), F.col("lang"),
           F.col("keep"),
           F.coalesce(F.col("drop_reason"), F.lit("none")).as("drop_reason"),
           F.col("scrubbed_text"))
-        .orderBy("conv_id", "turn_idx")
-    }),
-    "curate_metrics" -> ((s, dir) =>
-      // map columns serialized to JSON (keys pre-sorted via
-      // map_from_entries(sort_array(..)) so the string is canonical) —
-      // the driver's pandas compare cannot sort raw map/array cells
-      Curate.metrics(curated(s, dir))
-        .withColumn("dropped_by_rule", F.to_json(F.col("dropped_by_rule")))
-        .withColumn("scrub_hit_counts", F.to_json(F.col("scrub_hit_counts")))),
-    "curate_cheap" -> ((s, dir) =>
+        .orderBy("conv_id", "turn_idx"),
+      oracle(productTurnsSql)),
+    Declared("curate_metrics", (s, dir) =>
+      metricsJson(Curate.curateDf(s, Transcripts.dataset(s, nConvsFor(dir)).toDF())),
+      Left("full default-config run over the synth corpus Transcripts.dataset " +
+        "generates in Spark, which no DuckDB table holds; the same metrics are " +
+        "value-checked over doc-derived turns for the cheap, grammar and product configs")),
+    Declared("curate_cheap", (s, dir) =>
       // THE flagship keep/drop decision under the DuckDB oracle: the
       // REAL pipeline (fused CurateCore kernel, full scrub bank) with
       // the cheap-rules-only config — every remaining rule and the
@@ -420,60 +701,61 @@ object SparkEntry {
       // not just its q5/q7/q9 components, is value-compared against an
       // independent SQL CASE chain. Reference: the gate rebuilt from
       // smart_corrector.py:114-128.
-      Curate.curateDf(s, cheapTurns(s, dir), QualityRules.cheapConfig)
+      cheapCurated(s, dir, QualityRules.cheapConfig)
         .select(F.col("conv_id"), F.col("turn_idx"), F.col("keep"),
           F.coalesce(F.col("drop_reason"), F.lit("none")).as("drop_reason"),
           F.col("scrubbed_text"))
-        .orderBy("conv_id", "turn_idx")),
-    "curate_grammar" -> ((s, dir) => {
+        .orderBy("conv_id", "turn_idx"),
+      oracle(s"WITH $cheapCte " +
+        "SELECT conv_id, turn_idx, drop_reason = 'none' AS keep, drop_reason, " +
+        s"${Scrubber.scrubSqlFull("text")} AS scrubbed_text " +
+        "FROM d ORDER BY conv_id, turn_idx")),
+    Declared("curate_grammar", (s, dir) =>
       // the GRAMMAR gate's composed decision under the DuckDB oracle
       // (r4 verdict "What's missing" #4): cheap chain → ruleHits count
-      // vs maxRuleHits — over grammarTurns' planted deterministic-hit
+      // vs maxRuleHits — over grammarCurated's planted deterministic-hit
       // rows, so the oracle can recount the deduped hits with
       // regexp_extract_all and replay the gate ordering
-      Curate.curateDf(s, grammarTurns(s, dir),
-          QualityRules.cheapConfig.copy(grammarEnabled = true))
+      grammarCurated(s, dir)
         .select(F.col("conv_id"), F.col("turn_idx"),
           F.size(F.col("rule_hits")).cast("long").as("n_rule_hits"),
           F.col("keep"),
           F.coalesce(F.col("drop_reason"), F.lit("none")).as("drop_reason"),
           F.col("scrubbed_text"))
-        .orderBy("conv_id", "turn_idx")
-    }),
-    "curate_metrics_grammar" -> ((s, dir) =>
+        .orderBy("conv_id", "turn_idx"),
+      oracle(s"WITH $grammarCte " +
+        "SELECT conv_id, turn_idx, CAST(n_rule_hits AS BIGINT) AS n_rule_hits, " +
+        s"$grammarDec = 'none' AS keep, $grammarDec AS drop_reason, " +
+        s"${Scrubber.scrubSqlFull("text")} AS scrubbed_text " +
+        "FROM gh ORDER BY conv_id, turn_idx")),
+    Declared("curate_metrics_grammar", (s, dir) =>
       // A2 metrics over the grammar-config run — dropped_by_rule now
       // counts 'grammar' too, value-compared via the same staged
-      // per-pattern scrub counts (the full-default-config synth-corpus
-      // metrics stay rows-only as curate_metrics)
-      Curate.metrics(Curate.curateDf(s, grammarTurns(s, dir),
-          QualityRules.cheapConfig.copy(grammarEnabled = true)))
-        .withColumn("dropped_by_rule", F.to_json(F.col("dropped_by_rule")))
-        .withColumn("scrub_hit_counts", F.to_json(F.col("scrub_hit_counts")))),
-    "curate_metrics_cheap" -> ((s, dir) =>
+      // per-pattern scrub counts
+      metricsJson(grammarCurated(s, dir)),
+      oracle(s"WITH $grammarCte, " +
+        s"gd AS (SELECT $grammarDec AS drop_reason, text FROM gh), ${metricsFrom("gd")}")),
+    Declared("curate_metrics_cheap", (s, dir) =>
       // A2 metrics over the same cheap-config run — dropped_by_rule and
       // scrub_hit_counts maps (canonical sorted-key JSON) vs SQL-built
       // strings with staged per-pattern scrub counts
-      Curate.metrics(Curate.curateDf(s, cheapTurns(s, dir), QualityRules.cheapConfig))
-        .withColumn("dropped_by_rule", F.to_json(F.col("dropped_by_rule")))
-        .withColumn("scrub_hit_counts", F.to_json(F.col("scrub_hit_counts")))),
-    "curate_metrics_product" -> ((s, dir) =>
+      metricsJson(cheapCurated(s, dir, QualityRules.cheapConfig)),
+      oracle(s"WITH $cheapCte, ${metricsFrom("d")}")),
+    Declared("curate_metrics_product", (s, dir) =>
       // A2 metrics over the REAL-MODEL product-config run (langid +
       // ppl enabled) — dropped_by_rule now counts 'lang'/'ppl' too,
       // value-compared against the composed SQL decision + staged
       // per-pattern scrub counts
-      Curate.metrics(Curate.curateDf(s, cheapTurns(s, dir), QualityRules.productConfig))
-        .withColumn("dropped_by_rule", F.to_json(F.col("dropped_by_rule")))
-        .withColumn("scrub_hit_counts", F.to_json(F.col("scrub_hit_counts")))),
-    "conv_last3" -> ((s, dir) => {
+      metricsJson(cheapCurated(s, dir, QualityRules.productConfig)),
+      oracle(s"WITH $productCte, " +
+        s"fin2 AS (SELECT text, ${OracleSql.productDecision()} AS drop_reason FROM fin), " +
+        metricsFrom("fin2"))),
+    Declared("conv_last3", (s, dir) =>
       // A8 conversation summary (rag_chatbot.py:264-285) over
       // doc-derived turns: the Python list[-3:] slice semantics under
       // the DuckDB oracle (list[-3:] is native there) — the oracled
       // twin of conv_reassemble_curated's last_3_roles
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      tbl(s, dir, "documents")
-        .select(F.col("source").as("conv_id"),
-          F.row_number().over(w).as("turn_idx"),
-          F.concat(F.lit("role"), (F.col("doc_id") % 4).cast("string")).as("role"))
+      docTurns(s, dir, F.concat(F.lit("role"), (F.col("doc_id") % 4).cast("string")).as("role"))
         .groupBy("conv_id")
         .agg(F.count(F.lit(1)).as("n_turns"),
           F.array_join({
@@ -482,9 +764,12 @@ object SparkEntry {
               x => x.getField("role"))
             F.when(F.size(roles) < 3, roles).otherwise(F.slice(roles, -3, 3))
           }, "|").as("last_3_roles"))
-        .orderBy("conv_id")
-    }),
-    "grammar_context" -> ((s, dir) => {
+        .orderBy("conv_id"),
+      oracle(s"WITH t AS (SELECT $docTurnsSql, 'role' || (doc_id % 4) AS role FROM documents) " +
+        "SELECT conv_id, count(*) AS n_turns, " +
+        "array_to_string((list(role ORDER BY turn_idx))[-3:], '|') AS last_3_roles " +
+        "FROM t GROUP BY conv_id ORDER BY conv_id")),
+    Declared("grammar_context", (s, dir) => {
       // G4 ±100-char **-highlighted context in a driver row: a known
       // error at the head of a text derived WHOLLY from doc_id (r3
       // verdict #6 — the r3 version prepended to the natural text, so
@@ -508,37 +793,47 @@ object SparkEntry {
         .select(F.col("doc_id"), F.col("h._1").as("rule_id"),
           F.col("h._2").as("snippet"), F.col("h._3").as("context"))
         .orderBy("doc_id")
-    }),
-    "dedup_ngram_dropped" -> ((s, dir) => {
+    },
+      // independent reconstruction of the G4 window over the SAME
+      // doc_id-derived text (corpus-free): prefix is whole (start <
+      // 100 cp), suffix is the 100 code points after the match end,
+      // final Python-strip = rtrim
+      oracle("WITH t AS (SELECT doc_id, array_to_string(list_transform(range(1, 31), " +
+        "i -> 'w' || (doc_id % 7) || 'x' || i), ' ') AS filler FROM documents) " +
+        "SELECT doc_id, 'BASIC_001' AS rule_id, 'he are' AS snippet, " +
+        "rtrim('Doc ' || doc_id || '. **he are**' || substr(' happy. ' || filler, 1, 100), ' ') AS context " +
+        "FROM t ORDER BY doc_id")),
+    Declared("dedup_ngram_dropped", (s, dir) =>
       // stop-gram tally (grams with df above the cap) at a deliberately
       // low cap, DuckDB-oracled (hashed grams are collision-free at this
       // scale, so hashed-gram counts == string-gram counts)
-      val t = tbl(s, dir, "documents").select(F.col("doc_id").as("id"), F.col("text"))
-      Dedup.ngramDroppedGrams(t, "id", "text", n = 3, maxGramFreq = 1)
+      Dedup.ngramDroppedGrams(idText(s, dir), "id", "text", n = 3, maxGramFreq = 1)
         .agg(F.count(F.lit(1)).as("n_dropped_grams"),
-          F.coalesce(F.sum("gf"), F.lit(0L)).as("dropped_occurrences"))
-    }),
-    "conv_reassemble" -> ((s, dir) => {
+          F.coalesce(F.sum("gf"), F.lit(0L)).as("dropped_occurrences")),
+      oracle(s"WITH $trigramCtes, " +
+        "f AS (SELECT g, count(*) AS gf FROM g GROUP BY g HAVING count(*) > 1) " +
+        "SELECT count(*) AS n_dropped_grams, coalesce(CAST(sum(gf) AS BIGINT), 0) AS dropped_occurrences FROM f")),
+    Declared("conv_reassemble", (s, dir) =>
       // R3: ordered per-conv reassembly (two-phase safe: collect_list
       // then array_sort by turn_idx — order-insensitive upstream).
       // Driver-oracled form: turns derived deterministically from the
       // documents table (conv = source, turn order = doc_id), scrub =
       // the SQL-expressible reference subset. The synth/skew variant is
       // conv_reassemble_twophase.
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      tbl(s, dir, "documents")
-        .select(F.col("source").as("conv_id"),
-          F.row_number().over(w).as("turn_idx"),
-          Scrubber.scrubColReference(F.col("text")).as("scrubbed"))
+      docTurns(s, dir, Scrubber.scrubColReference(F.col("text")).as("scrubbed"))
         .groupBy("conv_id")
         .agg(F.count(F.lit(1)).as("n_turns"),
           F.concat_ws(" ",
             F.transform(
               F.array_sort(F.collect_list(F.struct(F.col("turn_idx"), F.col("scrubbed")))),
               x => x.getField("scrubbed"))).as("reassembled"))
-        .orderBy("conv_id")
-    }),
-    "conv_reassemble_curated" -> ((s, dir) => {
+        .orderBy("conv_id"),
+      oracle(s"WITH turns AS (SELECT $docTurnsSql, " +
+        s"${Scrubber.scrubSqlReference("text")} AS scrubbed FROM documents) " +
+        "SELECT conv_id, count(*) AS n_turns, " +
+        "string_agg(scrubbed, ' ' ORDER BY turn_idx) AS reassembled " +
+        "FROM turns GROUP BY conv_id ORDER BY conv_id")),
+    Declared("conv_reassemble_curated", (s, dir) =>
       // R3 over the REAL product-config curated output — DuckDB-
       // oracled since r4 (was rows-only "langid/ppl not SQL-
       // expressible"): only turns the langid+ppl gate KEEPS are
@@ -546,7 +841,7 @@ object SparkEntry {
       // decision SQL is the curate_transcripts oracle reused as a
       // subquery; the A8 last-3 slice is oracled separately
       // (conv_last3).
-      Curate.curateDf(s, cheapTurns(s, dir), QualityRules.productConfig)
+      cheapCurated(s, dir, QualityRules.productConfig)
         .filter(F.col("keep"))
         .groupBy("conv_id")
         .agg(F.count(F.lit(1)).as("n_turns"),
@@ -554,44 +849,44 @@ object SparkEntry {
             F.transform(
               F.array_sort(F.collect_list(F.struct(F.col("turn_idx"), F.col("scrubbed_text")))),
               x => x.getField("scrubbed_text"))).as("reassembled"))
-        .orderBy("conv_id")
-    }),
-    "conv_reassemble_twophase" -> ((s, dir) => {
+        .orderBy("conv_id"),
+      oracle("SELECT conv_id, count(*) AS n_turns, " +
+        "string_agg(scrubbed_text, ' ' ORDER BY turn_idx) AS reassembled " +
+        s"FROM ($productTurnsSql) sub WHERE keep " +
+        "GROUP BY conv_id ORDER BY conv_id")),
+    Declared("conv_reassemble_twophase", (s, dir) =>
       // R3 at scale: bounded reducer state via per-block partials under
       // the planted 20k-turn hot conversation — DuckDB-oracled since
       // r5 (was synth rows-only): block-wise concat must equal the
       // direct ordered concat, compared via md5 (the raw reassembled
       // hot row is ~10 MB). The synth-corpus twin stays in
       // GoldenPipelineSpec.
-      Curate.reassembleTwoPhase(skewTurns(s, dir))
+      Curate.reassembleTwoPhase(keptTurns(s, dir, hot = true))
         .select(F.col("conv_id"), F.col("n_turns"),
           F.md5(F.col("reassembled")).as("reassembled_md5"))
-        .orderBy("conv_id")
-    }),
-    "conv_stats_salted" -> ((s, dir) => {
+        .orderBy("conv_id"),
+      oracle(s"WITH ${keptTurnsCte(hot = true)} " +
+        "SELECT conv_id, count(*) AS n_turns, " +
+        "md5(string_agg(scrubbed, ' ' ORDER BY turn_idx)) AS reassembled_md5 " +
+        "FROM skt WHERE keep GROUP BY conv_id ORDER BY conv_id")),
+    Declared("conv_stats_salted", (s, dir) =>
       // salted two-phase per-conv aggregation, DuckDB-oracled against a
       // direct single-phase SQL aggregate (salting must not change
       // values) — doc-derived turns, SQL-expressible keep rule
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      val turns = tbl(s, dir, "documents")
-        .select(F.col("source").as("conv_id"),
-          F.row_number().over(w).as("turn_idx"),
-          Scrubber.scrubColReference(F.col("text")).as("scrubbed_text"),
-          (F.size(F.split(F.col("text"), " ", -1)) >= 50).as("keep"))
-      Curate.convStatsSalted(turns)
+      Curate.convStatsSalted(keptTurns(s, dir, hot = false))
         .withColumn("avg_chars", r6(F.col("avg_chars")))
-        .orderBy("conv_id")
-    }),
-    "conv_stats_salted_skew" -> ((s, dir) => {
+        .orderBy("conv_id"),
+      oracle(convStatsSql(hot = false))),
+    Declared("conv_stats_salted_skew", (s, dir) =>
       // same operator under a planted 20k-turn hot conversation
       // (reducer-state bound demo) — DuckDB-oracled since r5 (was
       // synth rows-only): salting must not change values vs the direct
       // unsalted SQL aggregate over the identical doc-derived turns
-      Curate.convStatsSalted(skewTurns(s, dir))
+      Curate.convStatsSalted(keptTurns(s, dir, hot = true))
         .withColumn("avg_chars", r6(F.col("avg_chars")))
-        .orderBy("conv_id")
-    }),
-    "change_detect" -> ((s, dir) => {
+        .orderBy("conv_id"),
+      oracle(convStatsSql(hot = true))),
+    Declared("change_detect", (s, dir) => {
       // R4: word-level diff original vs scrubbed, first 5 changes,
       // pipe-joined (driver-comparable). Driver-oracled over documents
       // + the SQL-expressible reference scrub; the documents corpus is
@@ -610,8 +905,17 @@ object SparkEntry {
             F.zip_with(a, b, (x, y) => F.when(x =!= y, F.concat_ws("->", x, y))),
             x => x.isNotNull), 1, 5), "|").as("changes"))
         .orderBy("doc_id")
-    }),
-    "grammar_hits_summary" -> ((s, dir) => {
+    },
+      oracle(s"WITH p AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0 THEN text || '$plantedPii' " +
+        "ELSE text END AS orig FROM documents), " +
+        s"s AS (SELECT doc_id, orig, ${Scrubber.scrubSqlReference("orig")} AS scrubbed FROM p), " +
+        "w AS (SELECT doc_id, regexp_split_to_array(orig, '\\s+') AS a, " +
+        "regexp_split_to_array(scrubbed, '\\s+') AS b FROM s WHERE scrubbed <> orig) " +
+        "SELECT doc_id, array_to_string(list_filter(list_transform(" +
+        "range(1, greatest(len(a), len(b)) + 1), " +
+        "i -> CASE WHEN a[i] <> b[i] THEN a[i] || '->' || b[i] END), " +
+        "x -> x IS NOT NULL)[1:5], '|') AS changes FROM w ORDER BY doc_id")),
+    Declared("grammar_hits_summary", (s, dir) => {
       // G9/A3: per-rule error counts + avg confidence (constant per
       // rule), relational and driver-oracled: raw non-overlapping match
       // counts of the RE2-safe rule subset (see GrammarRules.re2Specs;
@@ -632,8 +936,18 @@ object SparkEntry {
         .agg(F.sum("h.n").as("n"), F.max("h.conf").as("avg_conf"))
         .filter(F.col("n") > 0)
         .orderBy("rule_id")
-    }),
-    "dynamic_grammar" -> ((s, dir) => {
+    },
+      oracle {
+        val branches = GrammarRules.re2Specs.map { case (id, pat, conf) =>
+          val p = pat.replace("'", "''")
+          s"SELECT '$id' AS rule_id, len(regexp_extract_all(text, '$p')) AS n, $conf AS conf FROM d"
+        }.mkString(" UNION ALL ")
+        s"WITH d AS (SELECT CASE WHEN doc_id % 3 = 0 THEN text || '$plantedErrors' " +
+          "ELSE text END AS text FROM documents) " +
+          s"SELECT rule_id, CAST(sum(n) AS BIGINT) AS n, max(conf) AS avg_conf " +
+          s"FROM ($branches) GROUP BY rule_id HAVING sum(n) > 0 ORDER BY rule_id"
+      }),
+    Declared("dynamic_grammar", (s, dir) => {
       // A6: learned (lhs nonterminal, rhs pattern, frequency) dim
       // table over documents — DuckDB-oracled: the whole
       // tag-and-slide learner (cleanWord, lexicon tag resolution,
@@ -644,787 +958,8 @@ object SparkEntry {
           F.concat(F.col("text"), F.lit(plantedErrors))).otherwise(F.col("text")))
       graft.grammar.DynamicGrammar.learn(planted)
         .orderBy(F.desc("frequency"), F.col("lhs"), F.col("rhs"))
-    }),
-    "perplexity_turns" -> ((s, dir) => {
-      // §2.5 standalone: stupid-backoff n-gram perplexity per turn —
-      // DuckDB-oracled since r4: the LM count table is dumped as a
-      // relation and the whole scoring chain (token mix, window
-      // hashes, backoff, Float division) is replicated in HUGEINT SQL
-      // (OracleSql.pplCtes). Input = doc-derived turns so the oracle
-      // sees the same text; doc_id % 17 == 5 rows are planted
-      // token-free to exercise the PPL_MAX path. Independent
-      // plain-Scala oracle remains in ModelsSpec / PerplexitySpec.
-      val m = Curate.defaultModels.lm
-      val b = s.sparkContext.broadcast(m)
-      val u = F.udf((t: String) => b.value.perplexity(t))
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      tbl(s, dir, "documents")
-        .select(F.col("source").as("conv_id"),
-          F.row_number().over(w).as("turn_idx"),
-          F.when(F.col("doc_id") % 17 === 5, F.lit("!!!"))
-            .otherwise(F.col("text")).as("text"))
-        .select(F.col("conv_id"), F.col("turn_idx"),
-          F.round(u(F.col("text")), 4).as("ppl"))
-        .orderBy("conv_id", "turn_idx")
-    }),
-    "cyk_parse" -> ((s, dir) => {
-      // G6/G7: CYK validity over canonical + synthesized sentences —
-      // DuckDB-oracled since r5: the bottom-up span fill replays as an
-      // unrolled per-span-length SQL CTE chain over the same dumped
-      // lexicon/grammar VALUES (OracleSql.cykSql; sentences shared via
-      // cykSentences so query and oracle can never drift)
-      import s.implicits._
-      cykSentences.toDF("sentence")
-        .withColumn("parsed",
-          F.udf((t: String) => Cyk.parseSentence(t)).apply(F.col("sentence")))
-        .select(F.col("sentence"), F.col("parsed.valid").as("valid"),
-          F.col("parsed.reason").as("reason"))
-        .orderBy("sentence")
-    }),
-
-    // ---- dedup family (dedup_minhash / dedup_ngram_jaccard are
-    // DuckDB-oracled over documents; the rest run on synth turns with
-    // exhaustive in-test enumeration oracles) ----
-    "dedup_minhash" -> ((s, dir) => {
-      // DuckDB-oracled: the oracle enumerates ALL pairs with exact
-      // string-trigram jaccard >= 0.8; the LSH path must find every
-      // one (the corpus' near-dups sit at j >= 0.888, where the 16x4
-      // banding miss probability is ~1e-7 — and the hashes are
-      // deterministic, so the comparison is stable run to run)
-      val t = tbl(s, dir, "documents")
-        .select(F.col("doc_id").as("id"), F.col("text"))
-      Dedup.minhashNearDups(t, "id", "text", threshold = 0.8)
-        .withColumn("jaccard", r6(F.col("jaccard")))
-        .orderBy("id_a", "id_b")
-    }),
-    "dedup_simhash" -> ((s, dir) => {
-      // DuckDB-oracled since r4 (r3 verdict #8): the BUCKET STRUCTURE
-      // itself — SimHash bit votes, rep-collapse, 4-band pigeonhole,
-      // Hamming verify — is replicated bit-exactly in HUGEINT SQL
-      // (OracleSql.simhashSql), so chance band collisions are
-      // value-compared, not argued away
-      val t = tbl(s, dir, "documents")
-        .select(F.col("doc_id").as("id"), F.col("text"))
-      Dedup.simhashNearDups(t, "id", "text").orderBy("id_a", "id_b")
-    }),
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      // the exact prefix-filtered path at t = 0.2; the key is kept for
-      // Verify/Bench key stability. DuckDB-oracled: hashed-gram jaccard
-      // == string-gram jaccard (collision-free 64-bit hashes), and the
-      // oracle's gram-df cap never binds at these scales
-      val t = tbl(s, dir, "documents")
-        .select(F.col("doc_id").as("id"), F.col("text"))
-      Dedup.ngramJaccardPrefix(t, "id", "text", n = 3, threshold = 0.2)
-        .withColumn("jaccard", r6(F.col("jaccard")))
-        .orderBy("id_a", "id_b")
-    }),
-    "dedup_ngram_prefix" -> ((s, dir) => {
-      // DuckDB-oracled against the UNCAPPED exhaustive enumeration:
-      // prefix filtering is exact (no maxGramFreq loss), so the oracle
-      // is simply every pair with string-gram jaccard >= 0.5
-      val t = tbl(s, dir, "documents")
-        .select(F.col("doc_id").as("id"), F.col("text"))
-      Dedup.ngramJaccardPrefix(t, "id", "text", n = 3, threshold = 0.5)
-        .withColumn("jaccard", r6(F.col("jaccard")))
-        .orderBy("id_a", "id_b")
-    }),
-    "hll_vocab" -> ((s, dir) => {
-      // HyperLogLog vocabulary size per source: constant 1 KiB
-      // register state per group vs count(DISTINCT word)'s
-      // one-row-per-distinct-word shuffle; exact counts ride along so
-      // the oracle value-compares registers AND the estimate (incl.
-      // the linear-counting branch via a dumped discrete ln table)
-      import graft.functions.HllAgg
-      val docs = tbl(s, dir, "documents")
-      val estU = F.udf((regs: Seq[Int]) => HllAgg.estimate(regs.toArray))
-      val sk = docs.groupBy("source").agg(HllAgg.hll_agg(F.col("text")).as("regs"))
-        .select(F.col("source"), estU(F.col("regs")).as("hll_estimate"))
-      val tokU = F.udf((t: String) => Dedup.tokens(t))
-      val exact = docs
-        .select(F.col("source"), F.explode(tokU(F.col("text"))).as("w"))
-        .groupBy("source")
-        .agg(F.count_distinct(F.col("w")).as("exact_distinct"))
-      sk.join(exact, Seq("source"), "left")
-        .na.fill(0L, Seq("exact_distinct"))
-        .orderBy("source")
-    }),
-    "bm25_topk" -> ((s, dir) => {
-      // lexical retrieval top-k (Okapi BM25, Lucene +1 idf): stats
-      // pass (query-term df + avgdl) then a fused map-only scoring
-      // kernel with a fixed-order fold, TakeOrderedAndProject top-k;
-      // the oracle replays df/avgdl/idf/score with order-forced sums
-      graft.search.Bm25.topK(tbl(s, dir, "documents"),
-        "doc_id", "text", bm25Query, k = 15)
-    }),
-    "cms_word_counts" -> ((s, dir) => {
-      // Count-Min sketch heavy-hitter estimates per source: one
-      // 4x1024 integer sketch per group (constant exchange payload no
-      // matter the vocabulary), probed for a fixed word list; the
-      // exact counts ride along so the oracle checks BOTH the sketch
-      // arithmetic (bit-exact integer adds, replayed bucket-for-bucket
-      // in SQL) and the estimate >= exact guarantee
-      import graft.functions.CountMinAgg
-      val docs = tbl(s, dir, "documents")
-      val sk = docs.groupBy("source")
-        .agg(CountMinAgg.count_min_agg(F.col("text")).as("sk"))
-      val estU = F.udf((sk: Seq[Long], w: String) =>
-        CountMinAgg.estimate(sk.toArray, w))
-      val est = sk.select(F.col("source"),
-          F.explode(F.array(cmsProbes.map(F.lit): _*)).as("word"),
-          F.col("sk"))
-        .withColumn("cms_estimate", estU(F.col("sk"), F.col("word")))
-        .drop("sk")
-      val tokU = F.udf((t: String) => Dedup.tokens(t))
-      val exact = docs
-        .select(F.col("source"), F.explode(tokU(F.col("text"))).as("word"))
-        .filter(F.col("word").isin(cmsProbes: _*))
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).as("exact_count"))
-      est.join(exact, Seq("source", "word"), "left")
-        .na.fill(0L, Seq("exact_count"))
-        .select("source", "word", "cms_estimate", "exact_count")
-        .orderBy("source", "word")
-    }),
-    "dedup_spans" -> ((s, dir) => {
-      // ExactSubstr/C4-family span dedup: duplicated w-token windows
-      // removed corpus-wide except the globally-first occurrence;
-      // tails planted so cross-doc duplicate spans exist at every sf
-      // (%4 in {1,2} share a 12-token sentence; %4==3 gets a unique
-      // closing marker); natural-text duplicate 8-grams dedup too —
-      // the oracle replays them identically
-      val d = tbl(s, dir, "documents").select(
-        F.col("doc_id").as("id"),
-        F.concat(F.col("text"),
-          F.when(F.col("doc_id") % 4 === 1 || F.col("doc_id") % 4 === 2,
-            F.lit(" the quick brown fox jumps over the lazy dog again and again"))
-            .when(F.col("doc_id") % 4 === 3,
-              F.concat(F.lit(" closing marker "), F.col("doc_id").cast("string")))
-            .otherwise(F.lit(""))).as("text"))
-      Dedup.spanDedup(d, "id", "text", w = 8).orderBy("id")
-    }),
-    "dedup_lines" -> ((s, dir) => {
-      // CCNet/C4-style line-level dedup: a deterministic multi-line
-      // doc is derived from each documents row so every decision
-      // branch is live at every sf — 'title k' (df ~ n/40, boilerplate
-      // at df>=10), the flattened natural text (mostly unique),
-      // a blank structural line every 5th doc, 'footer k' (df ~ n/7,
-      // boilerplate), 'shared k' (df ~ n/200 < 10: first-wins branch),
-      // and a per-doc unique line
-      val d = tbl(s, dir, "documents").select(
-        F.col("doc_id").as("id"),
-        F.concat_ws("\n",
-          F.concat(F.lit("title "), (F.col("doc_id") % 40).cast("string")),
-          F.regexp_replace(F.col("text"), "\n", " "),
-          F.when(F.col("doc_id") % 5 === 0, F.lit(""))
-            .otherwise(F.concat(F.lit("footer "), (F.col("doc_id") % 7).cast("string"))),
-          F.concat(F.lit("shared "), (F.col("doc_id") % 200).cast("string")),
-          F.concat(F.lit("unique line "), F.col("doc_id").cast("string"))
-        ).as("text"))
-      Dedup.lineDedup(d, "id", "text", boilerplateMinDf = 10L)
-        .orderBy("id")
-    }),
-    "decontaminate" -> ((s, dir) => {
-      // benchmark decontamination (GPT-3 appendix C style): the
-      // held-out set is the deterministic doc_id % 97 == 0 slice, so
-      // the oracle sees the same benchmark; 8-gram overlap counts
-      // DuckDB-oracled via the generic shingle CTE chain
-      val docs = tbl(s, dir, "documents")
-      Dedup.decontaminate(docs, "doc_id", "text",
-          docs.filter(F.col("doc_id") % 97 === 0), "text")
-        .orderBy("id")
-    }),
-    "sample_temperature" -> ((s, dir) => {
-      // sqrt-temperature domain mixing (XLM-style alpha=0.5): per-
-      // source rates computed from counts with an order-forced sqrt
-      // fold (sqrt is IEEE-exact, so the oracle replays every rate bit
-      // for bit), applied as a map-only pure-double key compare; the
-      // summary exposes rates AND realized kept counts per source
-      val docs = tbl(s, dir, "documents")
-      val rates = graft.sample.Sampling.sqrtTemperatureRates(docs, "source", 0.25)
-      val sampled = graft.sample.Sampling
-        .sampleByRates(docs, "source", "doc_id", rates)
-        .groupBy("source").agg(F.count(F.lit(1)).as("kept"))
-      val rateU = F.udf((src: String) => rates(src))
-      docs.groupBy("source").agg(F.count(F.lit(1)).as("n_docs"))
-        .join(sampled, Seq("source"), "left")
-        .na.fill(0L, Seq("kept"))
-        .withColumn("rate", rateU(F.col("source")))
-        .select("source", "n_docs", "rate", "kept")
-        .orderBy("source")
-    }),
-    "sample_stratified" -> ((s, dir) => {
-      // deterministic exactly-k-per-source sample (domain mixing);
-      // the sampling key is mix(fnv(id)) so the oracle replays rank
-      // and membership bit-exactly
-      graft.sample.Sampling.stratifiedQuota(
-          tbl(s, dir, "documents"), "source", "doc_id", 10)
-        .select("doc_id", "source", "sample_rank")
-        .orderBy("source", "sample_rank")
-    }),
-    "quality_classifier" -> ((s, dir) => {
-      // learned quality scorer (logistic regression, deterministic
-      // driver-side training on the fixed synthetic labeled set):
-      // scoring is map-only; the logit is a fixed-order dot of exact
-      // doubles, so the oracle replays it bit-identically (the
-      // decision logit > 0 needs no sigmoid)
-      graft.ml.QualityClassifier.scoreDf(
-          tbl(s, dir, "documents"), "doc_id", "text")
-        .orderBy("id")
-    }),
-    "pack_shards" -> ((s, dir) => {
-      // greedy training-shard assembly per source: close a shard when
-      // the next doc's word tokens would exceed the 1000-token budget;
-      // the per-stratum fold replays in DuckDB as a string-encoded
-      // list_reduce, so shard ids and positions are value-compared
-      val tokU = F.udf((t: String) => Dedup.tokens(t).length.toLong)
-      graft.sample.Sampling.packGreedy(
-          tbl(s, dir, "documents").withColumn("toks", tokU(F.col("text"))),
-          "source", "doc_id", "toks", budgetTokens = 1000L)
-        .orderBy("source", "doc_id")
-    }),
-    "sample_fraction" -> ((s, dir) => {
-      // map-only per-source Bernoulli-style sampling with NO rng:
-      // keep iff key < fraction·2^64 (unsigned, exact) — stable under
-      // repartitioning, replayed in SQL as a HUGEINT compare
-      graft.sample.Sampling.stratifiedFraction(
-          tbl(s, dir, "documents"), "source", "doc_id",
-          sampleFractions, 0.2)
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    }),
-    "dedup_components" -> ((s, dir) => {
-      // DuckDB-oracled via a RECURSIVE CTE computing the transitive
-      // closure over the SAME pair set dedup_minhash proves exhaustive
-      // (jaccard >= 0.8): component = min reachable id
-      val t = tbl(s, dir, "documents")
-        .select(F.col("doc_id").as("id"), F.col("text"))
-      val pairs = Dedup.minhashNearDups(t, "id", "text", threshold = 0.8)
-      Dedup.connectedComponents(pairs, "id_a", "id_b").orderBy("id")
-    }),
-    "dedup_components_star" -> ((s, dir) => {
-      // same single connectedComponents path as dedup_components (the
-      // key is kept for Verify/Bench key stability), oracled against
-      // the identical DuckDB RECURSIVE-CTE closure
-      val t = tbl(s, dir, "documents")
-        .select(F.col("doc_id").as("id"), F.col("text"))
-      val pairs = Dedup.minhashNearDups(t, "id", "text", threshold = 0.8)
-      Dedup.connectedComponents(pairs, "id_a", "id_b").orderBy("id")
-    }),
-    "dedup_minhash_clusters" -> ((s, dir) => {
-      // DuckDB-oracled since r4 (r3 verdict #8): the one-pass
-      // bucket-min cluster approximation depends on WHICH rows share
-      // LSH buckets — the oracle (OracleSql.minhashClustersSql)
-      // recomputes shingles, the 64 seeded permutations (signed min),
-      // the banded folds and the bucket mins in SQL, bit-exactly
-      val t = tbl(s, dir, "documents")
-        .select(F.col("doc_id").as("id"), F.col("text"))
-      Dedup.minhashClusters(t, "id", "text")
-        .filter(F.col("id") =!= F.col("rep_id")) // the near-dup rows
-        .orderBy("id")
-    }),
-    "dedup_conversations" -> ((s, dir) => {
-      // conversation-level near-dup via the custom MinHashAgg
-      // TypedImperativeAggregate — DuckDB-oracled since r5 (was a
-      // synth-corpus rows-only check): conv = source over documents
-      // (turn = doc), with the min-source conversation planted again
-      // under 'dup::<source>' so a true near-dup pair exists. The
-      // oracle (OracleSql.convDedupSql) replays per-turn shingles, the
-      // element-wise-min union sketch, banded folds, band join and the
-      // signature-agreement estimate bit-exactly. The synth-corpus
-      // twin stays covered by DedupSimilaritySpec.
-      val docs = tbl(s, dir, "documents")
-      val srcMin = docs.agg(F.min("source")).head().getString(0) // 1 value
-      val turns = docs.select(F.col("source").as("conv_id"), F.col("text"))
-      val dup = docs.filter(F.col("source") === srcMin)
-        .select(F.concat(F.lit("dup::"), F.col("source")).as("conv_id"),
-          F.col("text"))
-      Dedup.convNearDups(turns.unionByName(dup), threshold = 0.7)
-        .withColumn("est_jaccard", r6(F.col("est_jaccard")))
-        .orderBy("id_a", "id_b")
-    }),
-    "dedup_embedding" -> ((s, dir) => {
-      Dedup.embeddingNearDups(tbl(s, dir, "embeddings"), "vec_id", "embedding",
-          simThreshold = 0.25, nBits = 8, nBands = 4)
-        .withColumn("sim", r6(F.col("sim")))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- similarity search (rows-only) ----
-    "ann_lsh" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.filter(F.col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0).toArray
-      Similarity.topKLsh(emb, "vec_id", "embedding", q, k = 5)
-        .withColumn("sim", r6(F.col("sim")))
-    }),
-    "ann_ivf" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val q = emb.filter(F.col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0).toArray
-      Similarity.topKIvf(emb, "vec_id", "embedding", q, k = 5, nCells = 16, nprobe = 4)
-        .withColumn("sim", r6(F.col("sim")))
-    }),
-    "ann_ivf_indexed" -> ((s, dir) => {
-      // build-once / query-MANY through the PERSISTED index (r3
-      // verdict #3): one IvfIndex.build, then 4 queries that each read
-      // only probed cell partitions. nprobe = nCells here, so the
-      // result is exactly brute-force top-k — which also proves the
-      // persisted cells partition the corpus exactly (no dropped or
-      // duplicated ids in the index); the pruned-probe path (recall,
-      // inputFiles ⊂ one cell) is asserted in IvfIndexSpec.
-      val emb = tbl(s, dir, "embeddings")
-      val basePath = java.nio.file.Files
-        .createTempDirectory("graft-ivf-indexed").toString
-      val built = graft.knn.IvfIndex.build(s, emb, "vec_id", "embedding",
-        basePath, nCells = 8)
-      val idx = graft.knn.IvfIndex.load(s, basePath) // exercise load()
-      val qs = emb.filter(F.col("vec_id") < 4)
-        .select("vec_id", "embedding").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-      qs.map { case (qid, q) =>
-        idx.query(q, k = 3, nprobe = built.nCells)
-          .select(F.lit(qid).as("qid"), F.col("vec_id").as("cid"),
-            F.col("sim"))
-      }.reduce(_.unionByName(_))
-        // rank over the RAW sim (as the oracle does), round after
-        .withColumn("rank", F.row_number().over(
-          Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("cid"))))
-        .withColumn("sim", r6(F.col("sim")))
-        .orderBy("qid", "rank")
-    }),
-    "ann_batch_topk" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val qs = emb.filter(F.col("vec_id") < 4)
-      Similarity.topKBatch(emb, "vec_id", "embedding", qs, "vec_id", "embedding", k = 3)
-        .withColumn("sim", r6(F.col("sim")))
-        .orderBy("qid", "rank")
-    }),
-    "ann_batch_lsh" -> ((s, dir) => {
-      // large-query-set shape: bucket equi-join, no broadcast (rows-only)
-      val emb = tbl(s, dir, "embeddings")
-      val qs = emb.filter(F.col("vec_id") < 4)
-      Similarity.topKBatchLsh(emb, "vec_id", "embedding", qs, "vec_id", "embedding", k = 3)
-        .withColumn("sim", r6(F.col("sim")))
-        .orderBy("qid", "rank")
-    }),
-
-    // ---- text analysis (rows-only where UDF-based) ----
-    "langid_documents" -> ((s, dir) => {
-      val m = Curate.defaultModels.langId
-      val u = F.udf((t: String) => m.predict(t))
-      tbl(s, dir, "documents")
-        .select(F.col("doc_id"), u(F.col("text")).as("p"))
-        .select(F.col("doc_id"), F.col("p._1").as("lang"),
-          r6(F.col("p._2")).as("conf"))
-        .orderBy("doc_id")
-    }),
-    "quality_score" -> ((s, dir) => {
-      tbl(s, dir, "documents")
-        .select(F.col("doc_id"), TextStats.qualityScore(F.col("text")).as("score"))
-        .orderBy("doc_id")
-    }),
-    "fingerprint" -> ((s, dir) => {
-      // custom Catalyst expression variant (vs TextStats.fingerprintUdf)
-      tbl(s, dir, "documents")
-        .select(F.col("doc_id"),
-          graft.functions.TextMetrics.fingerprint(F.col("text")).as("fp"))
-        .orderBy("doc_id")
-    }),
-    "chunk_documents" -> ((s, dir) => {
-      // C2/C4: overlapping chunker + posexplode. The documents corpus
-      // is punctuation-free (one giant "sentence" → one chunk), so a
-      // period is planted every 10 words to exercise real greedy
-      // packing + overlap carry. DuckDB-oracled since r5: the whole
-      // sentence-split + greedy fold + overlap-tail state machine
-      // replays as a string-encoded list_reduce (OracleSql.chunkSql)
-      val u = F.udf((t: String) => Chunker.chunkText(t, 200, 20))
-      val sentencified =
-        F.regexp_replace(F.col("text"), "((?:\\S+\\s+){9}\\S+)\\s+", "$1. ")
-      tbl(s, dir, "documents")
-        .select(F.col("doc_id"), F.posexplode(u(sentencified)).as(Seq("idx", "chunk")))
-        .orderBy("doc_id", "idx")
-    }),
-
-    // ---- multimodal plumbing (synthetic media; rows-only) ----
-    "multimodal_features" -> ((s, dir) => {
-      val n = if (dir.contains("sf0.1")) 2048 else 128
-      Multimodal.extractFeatures(s, Multimodal.synthMedia(s, n))
-        .toDF()
-        .select("media_id", "kind", "byte_len", "content_hash", "width",
-          "height", "duration_ms")
-        .orderBy("media_id")
-    }),
-    "multimodal_features_raw" -> ((s, dir) => {
-      // BMP + WAV rows ONLY — the two formats whose payloads decode in
-      // pure SQL (raw bottom-up 24-bpp BGR; PCM16 LE) — DuckDB-oracled
-      // since r5 (r4 verdict "What's missing" 1c): the oracle embeds
-      // the exact container bytes as VALUES and independently re-reads
-      // headers, pixels and samples (OracleSql.multimodalRawSql). The
-      // entropy-coded formats (PNG deflate, JPEG scan, GIF LZW) stay
-      // in the rows-only multimodal_features — deflate genuinely is
-      // not SQL.
-      import s.implicits._
-      Multimodal.extractFeatures(s, s.createDataset(rawMediaRows))
-        .toDF()
-        .select(F.col("media_id"), F.col("kind"), F.col("byte_len"),
-          F.col("content_hash"), F.col("width"), F.col("height"),
-          F.col("duration_ms"),
-          F.posexplode(F.col("feature")).as(Seq("feat_idx", "feat_val")))
-        .orderBy("media_id", "feat_idx")
-    }),
-    "multimodal_frames" -> ((s, dir) => {
-      val feats = Multimodal.extractFeatures(s, Multimodal.synthMedia(s, 128)).toDF()
-      Multimodal.sampleFrames(feats).orderBy("media_id", "frame_offset_ms")
-    }),
-
-    // ---- dims / set ops (A7, J4) ----
-    "html_extract" -> ((s, dir) => {
-      // S3 selector cascade end-to-end: wrap each document in a noisy
-      // page template (script/nav/comment/aside/footer) and recover the
-      // exact original text through the extractor (DuckDB-oracled: the
-      // roundtrip must be the identity on the clean corpus)
-      val u = F.udf((h: String) => graft.scrub.HtmlExtract.extract(h))
-      val page = F.concat(
-        F.lit("<html><head><title>t</title><script>var x = 1 < 2;</script></head>" +
-          "<body><nav>Home | About</nav><!-- c --><aside>ad</aside><main><p>"),
-        F.col("text"),
-        F.lit("</p></main><footer>Cookie Policy: accept</footer></body></html>"))
-      tbl(s, dir, "documents")
-        .select(F.col("doc_id"), u(page).as("e"))
-        .select(F.col("doc_id"), F.col("e.content").as("content"),
-          F.col("e.word_count").as("word_count"),
-          F.col("e.content_hash").as("content_hash"))
-        .orderBy("doc_id")
-    }),
-    "store_mutations" -> ((s, dir) => {
-      // S7/S8 lifecycle end-to-end: build a bucketed vector store from
-      // documents, copy-on-write delete doc_id % 7 == 0, read back the
-      // survivors (DuckDB-oracled)
-      import graft.tableio.VectorStore
-      // per-session path: concurrent processes (sbt test + Verify)
-      // must not mutate each other's store
-      val base = s"/tmp/graft-vstore-query-${s.sparkContext.applicationId}-" +
-        dir.replaceAll("[^a-zA-Z0-9.]", "_")
-      val vs = new VectorStore(s, base, nBuckets = 8)
-      vs.reset()
-      vs.add(tbl(s, dir, "documents")
-        .select(F.col("doc_id").cast("string").as("id"),
-          F.col("text").as("chunk"), F.col("source")))
-      vs.deleteWhere(F.col("id").cast("long") % 7 === 0)
-      vs.read().select(F.col("id").cast("long").as("doc_id")).orderBy("doc_id")
-    }),
-    "lexicon_merge" -> ((s, dir) => {
-      import s.implicits._
-      val base = Cyk.lexicon.toSeq.flatMap { case (w, ps) => ps.map(p => (w, p)) }
-      val extra = Seq(("spark", "N"), ("run", "N"), ("the", "DET")) // overlap on purpose
-      (base ++ extra).toDF("word", "pos")
-        .distinct()
-        .groupBy("word")
-        .agg(F.array_join(F.sort_array(F.collect_set("pos")), "|").as("pos_tags"))
-        .orderBy("word")
-    })
-  )
-
-  /** DuckDB-runnable oracle SQL — MUST produce identical column names,
-    * values, and (sorted) rows as the Spark query on the same parquet
-    * dir. DuckDB regexp_replace needs the 'g' flag (Spark replaces all
-    * matches by default); both engines compute doubles in 64-bit and we
-    * round AFTER aggregation on both sides.
-    */
-  def oracleSql: Map[String, String] = {
-    val lexIn = Cyk.lexicon.keySet.toSeq.sorted
-      .map(w => s"'$w'").mkString("(", ", ", ")")
-    val stopIn = TextStats.enStopwords.map(w => s"'$w'").mkString("(", ", ", ")")
-    // Shared CTEs for the curate_cheap family: doc-derived turns with
-    // the deterministic planted rows (MUST mirror cheapTurns) and the
-    // ordered first-failure decision (MUST mirror CurateCore.process
-    // under QualityRules.cheapConfig: empty → too_short(50) →
-    // too_long(2000w/8000cp) → repetition(≥20w, <0.3) →
-    // symbol_ratio(>0.3) → boilerplate).
-    val cheapCte =
-      "p AS (SELECT source, doc_id, " +
-        "CASE WHEN doc_id % 13 = 2 THEN array_to_string(list_transform(range(1, 61), i -> 'spam'), ' ') " +
-        "WHEN doc_id % 13 = 3 THEN array_to_string(list_transform(range(1, 61), i -> 'w' || i || '###'), ' ') " +
-        "WHEN doc_id % 13 = 4 THEN array_to_string(list_transform(range(1, 61), i -> 'word' || i), ' ') || ' Subscribe to our newsletter' " +
-        s"WHEN doc_id % 13 = 5 THEN '$plantedKeep' " +
-        "WHEN doc_id % 13 = 6 THEN array_to_string(list_transform(range(1, 61), i -> (i * 101)::VARCHAR), ' ') " +
-        "ELSE text END AS base FROM documents), " +
-      s"p2 AS (SELECT source, doc_id, CASE WHEN doc_id % 5 = 0 THEN base || '$plantedPii' ELSE base END AS text FROM p), " +
-      "t AS (SELECT source AS conv_id, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS turn_idx, text FROM p2), " +
-      "m AS (SELECT conv_id, turn_idx, text, " +
-        "len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS wc, " +
-        "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS lw FROM t), " +
-      "r AS (SELECT conv_id, turn_idx, text, wc, " +
-        "CASE WHEN len(lw) = 0 THEN 1.0 ELSE len(list_distinct(lw)) * 1.0 / len(lw) END AS dr, " +
-        "CASE WHEN length(text) = 0 THEN 0.0 ELSE length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / length(text) END AS sr FROM m), " +
-      "d AS (SELECT conv_id, turn_idx, text, " +
-        "CASE WHEN wc = 0 THEN 'empty' WHEN wc < 50 THEN 'too_short' " +
-        "WHEN wc > 2000 OR length(text) > 8000 THEN 'too_long' " +
-        "WHEN wc >= 20 AND dr < 0.3 THEN 'repetition' " +
-        "WHEN sr > 0.3 THEN 'symbol_ratio' " +
-        s"WHEN regexp_matches(text, '${QualityRules.boilerplateRegexRe2}') THEN 'boilerplate' " +
-        "ELSE 'none' END AS drop_reason FROM r)"
-    // Staged per-pattern scrub hit counts (each count taken on the text
-    // AS IT STANDS when that pattern runs — Scrubber.scrub's sequential
-    // semantics), generated from the one patternSpecs definition.
-    def scrubStagesFrom(src: String): String = {
-      val specs = Scrubber.patternSpecs
-      val sb = new StringBuilder(
-        s"s0 AS (SELECT drop_reason, trim(regexp_replace(text, '\\s+', ' ', 'g')) AS t0 FROM $src)")
-      specs.indices.foreach { i =>
-        val (name, pat) = specs(i)
-        val carried = ("drop_reason" +: specs.take(i).map(s => s"n_${s._1}")).mkString(", ")
-        val tOut =
-          if (i == specs.length - 1) ""
-          else s", regexp_replace(t$i, '$pat', '', 'g') AS t${i + 1}"
-        sb ++= s", s${i + 1} AS (SELECT $carried, len(regexp_extract_all(t$i, '$pat')) AS n_$name$tOut FROM s$i)"
-      }
-      sb.toString
-    }
-    val scrubStages = scrubStagesFrom("d")
-    // grammarTurns mirrored verbatim (shared by curate_grammar and its
-    // metrics twin): the planted-fragment hit count is recomputed with
-    // regexp_extract_all ("he are" fires BASIC_SUBJ_VERB and BASIC_001
-    // on the SAME span — the engine's overlap-dedup collapses them to
-    // one, counted once here); the gate ordering replays as a CASE
-    // chain (grammarDec)
-    val grammarDec = "CASE WHEN cheap <> 'none' THEN cheap " +
-      "WHEN n_rule_hits >= 3 THEN 'grammar' ELSE 'none' END"
-    val grammarCte =
-      s"g0 AS (SELECT source, doc_id, CASE " +
-        s"WHEN doc_id % 5 = 0 THEN '$plantedKeep$plantedErrors' " +
-        s"WHEN doc_id % 5 = 1 THEN '$plantedKeep$plantedErrors2' " +
-        "WHEN doc_id % 5 = 2 THEN 'he are short.' " +
-        "WHEN doc_id % 5 = 3 THEN array_to_string(list_transform(range(1, 61), i -> 'spam'), ' ') " +
-        s"|| '$plantedErrors' ELSE '$plantedKeep' END AS text FROM documents), " +
-        "gt AS (SELECT source AS conv_id, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS turn_idx, text FROM g0), " +
-        "gm AS (SELECT conv_id, turn_idx, text, " +
-        "len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS wc, " +
-        "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS lw FROM gt), " +
-        "gr AS (SELECT conv_id, turn_idx, text, wc, " +
-        "CASE WHEN len(lw) = 0 THEN 1.0 ELSE len(list_distinct(lw)) * 1.0 / len(lw) END AS dr, " +
-        "CASE WHEN length(text) = 0 THEN 0.0 ELSE length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / length(text) END AS sr FROM gm), " +
-        "gch AS (SELECT conv_id, turn_idx, text, " +
-        "CASE WHEN wc = 0 THEN 'empty' WHEN wc < 50 THEN 'too_short' " +
-        "WHEN wc > 2000 OR length(text) > 8000 THEN 'too_long' " +
-        "WHEN wc >= 20 AND dr < 0.3 THEN 'repetition' " +
-        "WHEN sr > 0.3 THEN 'symbol_ratio' " +
-        s"WHEN regexp_matches(text, '${QualityRules.boilerplateRegexRe2}') THEN 'boilerplate' " +
-        "ELSE 'none' END AS cheap FROM gr), " +
-        "gh AS (SELECT conv_id, turn_idx, text, cheap, CASE WHEN cheap <> 'none' THEN 0 ELSE " +
-        "len(regexp_extract_all(text, '(?i)\\bhe\\s+are\\b')) + " +
-        "len(regexp_extract_all(text, '(?i)\\b(they|we|you)\\s+is\\b')) + " +
-        "len(regexp_extract_all(text, '(?i)\\bfocus\\s+on\\b')) END AS n_rule_hits FROM gch)"
-    // skewTurns mirrored verbatim (shared by both skew-variant oracles)
-    val skewCte =
-      "sk0 AS (SELECT source AS conv_id, " +
-        "row_number() OVER (PARTITION BY source ORDER BY doc_id) AS turn_idx, text FROM documents " +
-        "UNION ALL SELECT 'hot', unnest(range(1, 20001)), text " +
-        "FROM (SELECT text FROM documents ORDER BY doc_id LIMIT 1)), " +
-        s"skt AS (SELECT conv_id, turn_idx, ${Scrubber.scrubSqlReference("text")} AS scrubbed, " +
-        "len(string_split(text, ' ')) >= 50 AS keep FROM sk0)"
-    // the base/br/sc aggregation tail shared by both metrics oracles
-    def metricsTail(lastStage: String): String = {
-      val hitBranches = Scrubber.patternSpecs.map { case (name, _) =>
-        s"SELECT '$name' AS k, CAST(sum(n_$name) AS BIGINT) AS n FROM $lastStage HAVING sum(n_$name) > 0"
-      }.mkString(" UNION ALL ")
-      s"base AS (SELECT count(*) AS turns_seen, " +
-        "CAST(sum(CASE WHEN drop_reason = 'none' THEN 1 ELSE 0 END) AS BIGINT) AS turns_kept, " +
-        s"CAST(sum(CASE WHEN drop_reason = 'none' THEN 0 ELSE 1 END) AS BIGINT) AS turns_dropped FROM $lastStage), " +
-        "br AS (SELECT coalesce('{' || string_agg('\"' || drop_reason || '\":' || n, ',' ORDER BY drop_reason) || '}', '{}') AS dropped_by_rule " +
-        s"FROM (SELECT drop_reason, count(*) AS n FROM $lastStage WHERE drop_reason <> 'none' GROUP BY 1) x), " +
-        "sc AS (SELECT coalesce('{' || string_agg('\"' || k || '\":' || n, ',' ORDER BY k) || '}', '{}') AS scrub_hit_counts " +
-        s"FROM ($hitBranches) y) " +
-        "SELECT 0 AS part_id, turns_seen, turns_kept, turns_dropped, dropped_by_rule, scrub_hit_counts FROM base, br, sc"
-    }
-    val m = Map(
-      "q1_agg" ->
-        ("SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 4) AS sum_qty, " +
-          "round(sum(l_extendedprice), 4) AS sum_price, round(avg(l_discount), 6) AS avg_disc, " +
-          "count(*) AS n FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"),
-      "q2_join_topk" ->
-        ("SELECT n_name, round(sum(o_totalprice), 2) AS revenue, count(*) AS n_orders " +
-          "FROM orders JOIN customer ON o_custkey = c_custkey " +
-          "JOIN nation ON c_nationkey = n_nationkey " +
-          "GROUP BY n_name ORDER BY revenue DESC, n_name LIMIT 5"),
-      "q3_window" ->
-        ("SELECT user_id, event_id, row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn " +
-          "FROM events ORDER BY user_id, rn"),
-      "q11_events_hourly" ->
-        ("SELECT event_type, date_trunc('hour', ts) AS hour, count(*) AS n, " +
-          "round(sum(value), 4) AS sum_value FROM events GROUP BY 1, 2 ORDER BY 1, 2"),
-      "q17_running_window" ->
-        ("SELECT user_id, event_id, round(sum(value) OVER (PARTITION BY user_id " +
-          "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) " +
-          "AS running_value FROM events ORDER BY user_id, event_id"),
-      "q18_sessionize" ->
-        ("WITH gaps AS (SELECT user_id, event_id, ts, CASE WHEN ts - lag(ts) OVER " +
-          "(PARTITION BY user_id ORDER BY ts, event_id) > INTERVAL 30 MINUTE THEN 1 ELSE 0 END " +
-          "AS new_session FROM events) SELECT user_id, event_id, CAST(sum(new_session) OVER " +
-          "(PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-          "CURRENT ROW) AS BIGINT) AS session_id FROM gaps ORDER BY user_id, event_id"),
-      "q19_distinct_agg" ->
-        ("SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_custs, count(*) AS n " +
-          "FROM orders GROUP BY 1 ORDER BY 1"),
-      "q20_anti_join" ->
-        ("SELECT c_custkey FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders " +
-          "WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT') ORDER BY c_custkey"),
-      "q21_join_agg_topk" ->
-        ("SELECT p_brand, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue, " +
-          "count(*) AS n FROM lineitem JOIN part ON l_partkey = p_partkey " +
-          "GROUP BY 1 ORDER BY revenue DESC, p_brand LIMIT 10"),
-      "q4_hash_project" ->
-        ("SELECT doc_id, md5(text) AS content_hash, " +
-          "len(string_split(text, ' ')) AS word_count FROM documents ORDER BY doc_id"),
-      "q5_minlen_filter" ->
-        ("SELECT doc_id, n_chars FROM documents " +
-          "WHERE len(string_split(text, ' ')) >= 50 ORDER BY doc_id"),
-      "q6_dedup_exact" ->
-        ("SELECT md5(text) AS content_hash, min(doc_id) AS doc_id, count(*) AS n " +
-          "FROM documents GROUP BY 1 ORDER BY 2"),
-      "q7_scrub" ->
-        (s"SELECT doc_id, ${Scrubber.scrubSqlReference("text")} AS scrubbed " +
-          "FROM documents ORDER BY doc_id"),
-      "q8_rule_match_counts" ->
-        ("SELECT doc_id, len(regexp_extract_all(text, '\\bthe\\b')) AS n_the, " +
-          "len(regexp_extract_all(text, '\\b(he|she|it) are\\b')) AS n_sv " +
-          "FROM documents ORDER BY doc_id"),
-      "q9_quality" ->
-        ("SELECT doc_id, len(string_split(text, ' ')) AS word_count, " +
-          "round(len(list_distinct(string_split(lower(text), ' '))) * 1.0 / len(string_split(text, ' ')), 6) AS distinct_ratio, " +
-          "round(length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / length(text), 6) AS symbol_ratio, " +
-          "regexp_matches(text, '(?i)(Cookie\\s+Policy|Privacy\\s+Policy|Terms\\s+of\\s+Service|Subscribe\\s+to.*newsletter|Follow\\s+us\\s+on|Share\\s+this)') AS boilerplate " +
-          "FROM documents ORDER BY doc_id"),
-      "q10_topk_sources" ->
-        "SELECT source, count(*) AS n FROM documents GROUP BY source ORDER BY n DESC, source LIMIT 5",
-      "q13_token_stats" ->
-        (s"SELECT doc_id, len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS n_tokens, " +
-          s"len(list_filter(string_split(lower(text), ' '), x -> x IN $stopIn)) AS n_stop " +
-          "FROM documents ORDER BY doc_id"),
-      "q14_new_words" ->
-        (s"SELECT DISTINCT w FROM (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents) " +
-          s"WHERE w NOT IN $lexIn AND w <> '' ORDER BY w"),
-      "q15_lang_summary" ->
-        ("SELECT lang, count(*) AS n, round(avg(n_chars), 4) AS avg_chars " +
-          "FROM documents GROUP BY lang ORDER BY lang"),
-      "q16_custom_expr" ->
-        ("SELECT doc_id, len(regexp_extract_all(text, '\\S+')) AS word_count, " +
-          "round(length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / length(text), 6) AS symbol_ratio " +
-          "FROM documents ORDER BY doc_id"),
-      "quality_score" ->
-        (s"SELECT doc_id, round(" +
-          "least(len(regexp_split_to_array(lower(trim(text)), '\\s+')) / 50.0, 1.0) * 0.3 + " +
-          "greatest(0.0, 1.0 - (length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / greatest(length(text), 1)) * 3.0) * 0.3 + " +
-          s"least((len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x IN $stopIn)) * 1.0 / greatest(len(regexp_split_to_array(lower(trim(text)), '\\s+')), 1)) * 4.0, 1.0) * 0.2 + " +
-          "(CASE WHEN (length(regexp_replace(text, '\\s+', '', 'g')) * 1.0 / greatest(len(regexp_split_to_array(lower(trim(text)), '\\s+')), 1)) BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.3 END) * 0.2" +
-          ", 6) AS score FROM documents ORDER BY doc_id"),
-      "q12_knn" ->
-        ("WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0) " +
-          "SELECT e.vec_id, round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qe), 6) AS sim " +
-          "FROM embeddings e, q WHERE e.vec_id <> 0 ORDER BY sim DESC, e.vec_id LIMIT 5"),
-      "ann_batch_topk" ->
-        ("WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qemb FROM embeddings WHERE vec_id < 4), " +
-          "scored AS (SELECT q.qid, e.vec_id AS cid, " +
-          "list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qemb) AS s FROM embeddings e, q), " +
-          "ranked AS (SELECT qid, cid, s, row_number() OVER (PARTITION BY qid ORDER BY s DESC, cid) AS rank FROM scored) " +
-          "SELECT qid, cid, round(s, 6) AS sim, rank FROM ranked WHERE rank <= 3 ORDER BY qid, rank"),
-      "conv_reassemble" ->
-        (s"WITH turns AS (SELECT source AS conv_id, " +
-          "row_number() OVER (PARTITION BY source ORDER BY doc_id) AS turn_idx, " +
-          s"${Scrubber.scrubSqlReference("text")} AS scrubbed FROM documents) " +
-          "SELECT conv_id, count(*) AS n_turns, " +
-          "string_agg(scrubbed, ' ' ORDER BY turn_idx) AS reassembled " +
-          "FROM turns GROUP BY conv_id ORDER BY conv_id"),
-      "change_detect" ->
-        (s"WITH p AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0 THEN text || '$plantedPii' " +
-          "ELSE text END AS orig FROM documents), " +
-          s"s AS (SELECT doc_id, orig, ${Scrubber.scrubSqlReference("orig")} AS scrubbed FROM p), " +
-          "w AS (SELECT doc_id, regexp_split_to_array(orig, '\\s+') AS a, " +
-          "regexp_split_to_array(scrubbed, '\\s+') AS b FROM s WHERE scrubbed <> orig) " +
-          "SELECT doc_id, array_to_string(list_filter(list_transform(" +
-          "range(1, greatest(len(a), len(b)) + 1), " +
-          "i -> CASE WHEN a[i] <> b[i] THEN a[i] || '->' || b[i] END), " +
-          "x -> x IS NOT NULL)[1:5], '|') AS changes FROM w ORDER BY doc_id"),
-      "grammar_hits_summary" -> {
-        val branches = graft.rules.GrammarRules.re2Specs.map { case (id, pat, conf) =>
-          val p = pat.replace("'", "''")
-          s"SELECT '$id' AS rule_id, len(regexp_extract_all(text, '$p')) AS n, $conf AS conf FROM d"
-        }.mkString(" UNION ALL ")
-        s"WITH d AS (SELECT CASE WHEN doc_id % 3 = 0 THEN text || '$plantedErrors' " +
-          "ELSE text END AS text FROM documents) " +
-          s"SELECT rule_id, CAST(sum(n) AS BIGINT) AS n, max(conf) AS avg_conf " +
-          s"FROM ($branches) GROUP BY rule_id HAVING sum(n) > 0 ORDER BY rule_id"
-      },
-      "store_mutations" ->
-        "SELECT doc_id FROM documents WHERE doc_id % 7 <> 0 ORDER BY doc_id",
-      "html_extract" ->
-        // word_count mirrors the engine's non-empty-token count
-        // (cleaned.split(" ").count(_.nonEmpty)) — a bare
-        // len(string_split(..)) counts empty tokens and would break on
-        // any doc with doubled/leading spaces (ADVICE r2)
-        ("SELECT doc_id, text AS content, " +
-          "len(list_filter(string_split(text, ' '), x -> x <> '')) AS word_count, " +
-          "md5(text) AS content_hash FROM documents ORDER BY doc_id"),
-      "curate_cheap" ->
-        (s"WITH $cheapCte " +
-          "SELECT conv_id, turn_idx, drop_reason = 'none' AS keep, drop_reason, " +
-          s"${Scrubber.scrubSqlFull("text")} AS scrubbed_text " +
-          "FROM d ORDER BY conv_id, turn_idx"),
-      "curate_grammar" -> {
-        s"WITH $grammarCte " +
-          "SELECT conv_id, turn_idx, CAST(n_rule_hits AS BIGINT) AS n_rule_hits, " +
-          s"$grammarDec = 'none' AS keep, $grammarDec AS drop_reason, " +
-          s"${Scrubber.scrubSqlFull("text")} AS scrubbed_text " +
-          "FROM gh ORDER BY conv_id, turn_idx"
-      },
-      "curate_metrics_grammar" ->
-        (s"WITH $grammarCte, " +
-          s"gd AS (SELECT $grammarDec AS drop_reason, text FROM gh), " +
-          s"${scrubStagesFrom("gd")}, " +
-          s"${metricsTail(s"s${Scrubber.patternSpecs.length}")}"),
-      "curate_metrics_cheap" ->
-        s"WITH $cheapCte, $scrubStages, ${metricsTail(s"s${Scrubber.patternSpecs.length}")}",
-      "curate_metrics_product" -> {
-        // A2 metrics of the REAL-model run: the full product decision
-        // (cheap chain → langid → ppl) feeds the same staged scrub
-        // counts and map aggregations
-        val keys = Seq("conv_id", "turn_idx")
-        val (lBlock, lR) = OracleSql.langidCtes("d", keys, "L")
-        val (pBlock, pR) = OracleSql.pplCtes("d", keys, "P")
-        s"WITH $cheapCte, $lBlock, $pBlock, " +
-          "fin AS (SELECT d.text, d.drop_reason AS cheap, " +
-          "lr.lang AS plang, lr.conf AS pconf, pp.ppl AS pppl " +
-          s"FROM d LEFT JOIN $lR lr ON lr.conv_id = d.conv_id AND lr.turn_idx = d.turn_idx " +
-          s"LEFT JOIN $pR pp ON pp.conv_id = d.conv_id AND pp.turn_idx = d.turn_idx), " +
-          s"fin2 AS (SELECT text, ${OracleSql.productDecision()} AS drop_reason FROM fin), " +
-          s"${scrubStagesFrom("fin2")}, ${metricsTail(s"s${Scrubber.patternSpecs.length}")}"
-      },
-      "conv_last3" ->
-        ("WITH t AS (SELECT source AS conv_id, " +
-          "row_number() OVER (PARTITION BY source ORDER BY doc_id) AS turn_idx, " +
-          "'role' || (doc_id % 4) AS role FROM documents) " +
-          "SELECT conv_id, count(*) AS n_turns, " +
-          "array_to_string((list(role ORDER BY turn_idx))[-3:], '|') AS last_3_roles " +
-          "FROM t GROUP BY conv_id ORDER BY conv_id"),
-      "grammar_context" ->
-        // independent reconstruction of the G4 window over the SAME
-        // doc_id-derived text (corpus-free): prefix is whole (start <
-        // 100 cp), suffix is the 100 code points after the match end,
-        // final Python-strip = rtrim
-        ("WITH t AS (SELECT doc_id, array_to_string(list_transform(range(1, 31), " +
-          "i -> 'w' || (doc_id % 7) || 'x' || i), ' ') AS filler FROM documents) " +
-          "SELECT doc_id, 'BASIC_001' AS rule_id, 'he are' AS snippet, " +
-          "rtrim('Doc ' || doc_id || '. **he are**' || substr(' happy. ' || filler, 1, 100), ' ') AS context " +
-          "FROM t ORDER BY doc_id"),
-      "dedup_ngram_dropped" ->
-        ("WITH toks AS (SELECT doc_id AS id, " +
-          "list_filter(regexp_split_to_array(lower(text), '[^\\pL\\pN_]+'), x -> x <> '') AS w FROM documents), " +
-          "sh AS (SELECT id, CASE WHEN len(w) < 3 THEN list_distinct(w) " +
-          "ELSE list_distinct(list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) END AS grams FROM toks), " +
-          "g AS (SELECT id, unnest(grams) AS g FROM sh), " +
-          "f AS (SELECT g, count(*) AS gf FROM g GROUP BY g HAVING count(*) > 1) " +
-          "SELECT count(*) AS n_dropped_grams, coalesce(CAST(sum(gf) AS BIGINT), 0) AS dropped_occurrences FROM f"),
-      "dynamic_grammar" -> {
+    },
+      oracle {
         import graft.grammar.DynamicGrammar
         // lexicon words grouped by their RESOLVED tag (tagPriority
         // applied in Scala — the SQL sees flat IN-lists)
@@ -1454,116 +989,26 @@ object SparkEntry {
           "w -> trim(lower(w), '.,!?\";')), c -> " + tagCase + ") AS tags FROM sents) " +
           s"SELECT lhs, rhs, count(*) AS frequency FROM ($branches) " +
           "GROUP BY lhs, rhs ORDER BY frequency DESC, lhs, rhs"
-      },
-      "fingerprint" ->
-        // the custom codegen FingerprintExpr vs an independent HUGEINT
-        // mod-2^64 formulation of the same rolling hash (seed
-        // 1125899906842597, h*31+lower(char), ws runs collapse to ' ')
-        // leading-ws strip uses regex \\s (Java isWhitespace analog for
-        // the ASCII fixture; ltrim would strip spaces only) — corpus is
-        // ASCII/BMP so code-point-vs-UTF-16 iteration agrees
-        ("WITH n AS (SELECT doc_id, regexp_replace(regexp_replace(lower(text), '^\\s+', ''), '\\s+', ' ', 'g') AS t FROM documents), " +
-          "f AS (SELECT doc_id, list_reduce(" +
-          "list_prepend(CAST(1125899906842597 AS HUGEINT), " +
-          "list_transform(range(1, length(t) + 1), i -> CAST(unicode(t[i]) AS HUGEINT))), " +
-          "(h, c) -> (h * 31 + c) % CAST('18446744073709551616' AS HUGEINT)) AS hu FROM n) " +
-          "SELECT doc_id, CAST(CASE WHEN hu >= CAST('9223372036854775808' AS HUGEINT) " +
-          "THEN hu - CAST('18446744073709551616' AS HUGEINT) ELSE hu END AS BIGINT) AS fp " +
-          "FROM f ORDER BY doc_id"),
-      "conv_stats_salted" ->
-        (s"WITH t AS (SELECT source AS conv_id, ${Scrubber.scrubSqlReference("text")} AS scrubbed, " +
-          "len(string_split(text, ' ')) >= 50 AS keep FROM documents) " +
-          "SELECT conv_id, count(*) AS n_turns, " +
-          "CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept, " +
-          "round(sum(length(scrubbed)) * 1.0 / count(*), 6) AS avg_chars " +
-          "FROM t GROUP BY conv_id ORDER BY conv_id"),
-      // skewTurns mirrored: doc-derived turns + the first doc exploded
-      // into a 20k-turn hot conversation; the salted/blocked two-phase
-      // aggregates must equal these DIRECT single-phase aggregates
-      "conv_stats_salted_skew" ->
-        (s"WITH $skewCte " +
-          "SELECT conv_id, count(*) AS n_turns, " +
-          "CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept, " +
-          "round(sum(length(scrubbed)) * 1.0 / count(*), 6) AS avg_chars " +
-          "FROM skt GROUP BY conv_id ORDER BY conv_id"),
-      "conv_reassemble_twophase" ->
-        (s"WITH $skewCte " +
-          "SELECT conv_id, count(*) AS n_turns, " +
-          "md5(string_agg(scrubbed, ' ' ORDER BY turn_idx)) AS reassembled_md5 " +
-          "FROM skt WHERE keep GROUP BY conv_id ORDER BY conv_id"),
-      "dedup_minhash" ->
-        ("WITH toks AS (SELECT doc_id AS id, " +
-          "list_filter(regexp_split_to_array(lower(text), '[^\\pL\\pN_]+'), x -> x <> '') AS w FROM documents), " +
-          "sh AS (SELECT id, CASE WHEN len(w) < 3 THEN list_distinct(w) " +
-          "ELSE list_distinct(list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) END AS grams FROM toks), " +
-          "g AS (SELECT id, unnest(grams) AS g FROM sh), " +
-          "sizes AS (SELECT id, count(*) AS sz FROM g GROUP BY id), " +
-          "pairs AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS inter " +
-          "FROM g a JOIN g b ON a.g = b.g AND a.id < b.id GROUP BY 1, 2) " +
-          "SELECT id_a, id_b, round(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard " +
-          "FROM pairs JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b " +
-          "WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8 ORDER BY id_a, id_b"),
-      "dedup_ngram_jaccard" ->
-        ("WITH toks AS (SELECT doc_id AS id, " +
-          "list_filter(regexp_split_to_array(lower(text), '[^\\pL\\pN_]+'), x -> x <> '') AS w FROM documents), " +
-          "sh AS (SELECT id, CASE WHEN len(w) < 3 THEN list_distinct(w) " +
-          "ELSE list_distinct(list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) END AS grams FROM toks), " +
-          "g AS (SELECT id, unnest(grams) AS g FROM sh), " +
-          "capped AS (SELECT g FROM g GROUP BY g HAVING count(*) <= 1000), " +
-          "fg AS (SELECT g.id, g.g FROM g JOIN capped USING (g)), " +
-          "sizes AS (SELECT id, count(*) AS sz FROM fg GROUP BY id), " +
-          "pairs AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS inter " +
-          "FROM fg a JOIN fg b ON a.g = b.g AND a.id < b.id GROUP BY 1, 2) " +
-          "SELECT id_a, id_b, round(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard " +
-          "FROM pairs JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b " +
-          "WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.2 ORDER BY id_a, id_b"),
-      "dedup_components" ->
-        ("WITH RECURSIVE toks AS (SELECT doc_id AS id, " +
-          "list_filter(regexp_split_to_array(lower(text), '[^\\pL\\pN_]+'), x -> x <> '') AS w FROM documents), " +
-          "sh AS (SELECT id, CASE WHEN len(w) < 3 THEN list_distinct(w) " +
-          "ELSE list_distinct(list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) END AS grams FROM toks), " +
-          "g AS (SELECT id, unnest(grams) AS g FROM sh), " +
-          "sizes AS (SELECT id, count(*) AS sz FROM g GROUP BY id), " +
-          "p AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS inter " +
-          "FROM g a JOIN g b ON a.g = b.g AND a.id < b.id GROUP BY 1, 2), " +
-          "pairs AS (SELECT id_a, id_b FROM p JOIN sizes sa ON sa.id = id_a " +
-          "JOIN sizes sb ON sb.id = id_b " +
-          "WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8), " +
-          "edges AS (SELECT id_a AS u, id_b AS v FROM pairs " +
-          "UNION SELECT id_b, id_a FROM pairs), " +
-          "reach AS (SELECT u, v FROM edges " +
-          "UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u) " +
-          "SELECT u AS id, least(u, min(v)) AS comp FROM reach GROUP BY u ORDER BY id"),
-      "dedup_ngram_prefix" ->
-        ("WITH toks AS (SELECT doc_id AS id, " +
-          "list_filter(regexp_split_to_array(lower(text), '[^\\pL\\pN_]+'), x -> x <> '') AS w FROM documents), " +
-          "sh AS (SELECT id, CASE WHEN len(w) < 3 THEN list_distinct(w) " +
-          "ELSE list_distinct(list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) END AS grams FROM toks), " +
-          "g AS (SELECT id, unnest(grams) AS g FROM sh), " +
-          "sizes AS (SELECT id, count(*) AS sz FROM g GROUP BY id), " +
-          "pairs AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS inter " +
-          "FROM g a JOIN g b ON a.g = b.g AND a.id < b.id GROUP BY 1, 2) " +
-          "SELECT id_a, id_b, round(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard " +
-          "FROM pairs JOIN sizes sa ON sa.id = id_a JOIN sizes sb ON sb.id = id_b " +
-          "WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.5 ORDER BY id_a, id_b"),
-      "lexicon_merge" -> {
-        val baseVals = (Cyk.lexicon.toSeq.flatMap { case (w, ps) => ps.map(p => (w, p)) } ++
-          Seq(("spark", "N"), ("run", "N"), ("the", "DET")))
-          .map { case (w, p) => s"('$w','$p')" }.mkString(", ")
-        s"WITH t AS (SELECT DISTINCT word, pos FROM (VALUES $baseVals) AS v(word, pos)) " +
-          "SELECT word, array_to_string(list_sort(list(pos)), '|') AS pos_tags " +
-          "FROM t GROUP BY word ORDER BY word"
-      },
-      "langid_documents" -> {
-        // §2.4 under the hard oracle: DuckDB re-scores the SAME dumped
-        // weight matrix (OracleSql.langidCtes replicates predict())
-        val (block, r) = OracleSql.langidCtes("documents", Seq("doc_id"), "L")
-        s"WITH $block " +
-          "SELECT d.doc_id, coalesce(r.lang, 'und') AS lang, " +
-          "coalesce(round(r.conf, 6), 0.0) AS conf " +
-          s"FROM documents d LEFT JOIN $r r ON r.doc_id = d.doc_id ORDER BY d.doc_id"
-      },
-      "perplexity_turns" -> {
+      }),
+    Declared("perplexity_turns", (s, dir) => {
+      // §2.5 standalone: stupid-backoff n-gram perplexity per turn —
+      // DuckDB-oracled since r4: the LM count table is dumped as a
+      // relation and the whole scoring chain (token mix, window
+      // hashes, backoff, Float division) is replicated in HUGEINT SQL
+      // (OracleSql.pplCtes). Input = doc-derived turns so the oracle
+      // sees the same text; doc_id % 17 == 5 rows are planted
+      // token-free to exercise the PPL_MAX path. Independent
+      // plain-Scala oracle remains in ModelsSpec / PerplexitySpec.
+      val m = Curate.defaultModels.lm
+      val b = s.sparkContext.broadcast(m)
+      val u = F.udf((t: String) => b.value.perplexity(t))
+      docTurns(s, dir, F.when(F.col("doc_id") % 17 === 5, F.lit("!!!"))
+          .otherwise(F.col("text")).as("text"))
+        .select(F.col("conv_id"), F.col("turn_idx"),
+          F.round(u(F.col("text")), 4).as("ppl"))
+        .orderBy("conv_id", "turn_idx")
+    },
+      oracle {
         // exactLn (r6, the CORRECTNESS_r04/r05 red row): every per-token
         // ln comes from a dumped Java-computed log table, so the sum the
         // oracle folds is IEEE-identical to the engine's on ANY DuckDB
@@ -1572,14 +1017,13 @@ object SparkEntry {
         // ulps from every round(,4) boundary; see scripts/ppl_audit.py)
         val (block, r) =
           OracleSql.pplCtes("t", Seq("conv_id", "turn_idx"), "P", exactLn = true)
-        "WITH t AS (SELECT source AS conv_id, " +
-          "row_number() OVER (PARTITION BY source ORDER BY doc_id) AS turn_idx, " +
+        s"WITH t AS (SELECT $docTurnsSql, " +
           "CASE WHEN doc_id % 17 = 5 THEN '!!!' ELSE text END AS text FROM documents), " +
           s"$block " +
           // token-free rows emit round(PPL_MAX, 4) = PPL_MAX itself
           // (1.07e13): DuckDB's multiply-rint round loses bits above
           // 2^53/1e4 and lands on a NEIGHBORING double (..465 vs ..463)
-          // — the r4/r5 driver red row, invisible to the 9-significant-
+          // — the r4/r5 red correctness row, invisible to the 9-significant-
           // digit local compare. The Spark-side value is precomputed in
           // Java (the engine's own Round semantics) and emitted as a
           // literal; DuckDB round only ever runs on token-bearing ppl
@@ -1589,82 +1033,506 @@ object SparkEntry {
           s"THEN ${OracleSql.pplMaxRound4Lit} ELSE round(pp.ppl, 4) END AS ppl " +
           s"FROM t LEFT JOIN $r pp ON pp.conv_id = t.conv_id AND pp.turn_idx = t.turn_idx " +
           "ORDER BY t.conv_id, t.turn_idx"
-      },
-      "curate_transcripts" -> {
-        // the REAL-model composed decision: cheap chain (shared
-        // cheapCte) → langid argmax/softmax gate → stupid-backoff ppl
-        // gate → full scrub, all value-compared
-        val keys = Seq("conv_id", "turn_idx")
-        val (lBlock, lR) = OracleSql.langidCtes("d", keys, "L")
-        val (pBlock, pR) = OracleSql.pplCtes("d", keys, "P")
-        s"WITH $cheapCte, $lBlock, $pBlock, " +
-          "fin AS (SELECT d.conv_id, d.turn_idx, d.text, d.drop_reason AS cheap, " +
-          "lr.lang AS plang, lr.conf AS pconf, pp.ppl AS pppl " +
-          s"FROM d LEFT JOIN $lR lr ON lr.conv_id = d.conv_id AND lr.turn_idx = d.turn_idx " +
-          s"LEFT JOIN $pR pp ON pp.conv_id = d.conv_id AND pp.turn_idx = d.turn_idx) " +
-          "SELECT conv_id, turn_idx, " +
-          "CASE WHEN cheap <> 'none' THEN 'und' ELSE coalesce(plang, 'und') END AS lang, " +
-          s"${OracleSql.productDecision()} AS drop_reason, " +
-          "drop_reason = 'none' AS keep, " +
-          s"${Scrubber.scrubSqlFull("text")} AS scrubbed_text " +
-          "FROM fin ORDER BY conv_id, turn_idx"
-      }
-    )
-    // the persisted-index query probes ALL cells (nprobe = nCells), so
-    // its exact result is brute-force top-k — the ann_batch_topk SQL
-    // verbatim. This also value-proves the index partitions the corpus
-    // exactly (a dropped/duplicated id in any cell breaks the compare).
-    m + ("ann_ivf_indexed" -> m("ann_batch_topk")) +
-      ("dedup_simhash" -> OracleSql.simhashSql()) +
-      ("dedup_minhash_clusters" -> OracleSql.minhashClustersSql()) +
-      // conversation-level MinHashAgg union sketch replayed in SQL
-      ("dedup_conversations" -> OracleSql.convDedupSql()) +
-      // CYK span fill unrolled per span length over the dumped grammar
-      ("cyk_parse" -> OracleSql.cykSql(cykSentences)) +
-      // BMP/WAV payload decode replayed in SQL over the exact bytes
-      ("multimodal_features_raw" -> OracleSql.multimodalRawSql(
-        rawMediaRows.map(r => (r.media_id, r.kind, r.media)))) +
+      }),
+    Declared("cyk_parse", (s, dir) => {
+      // G6/G7: CYK validity over canonical + synthesized sentences —
+      // DuckDB-oracled since r5: the bottom-up span fill replays as an
+      // unrolled per-span-length SQL CTE chain over the same dumped
+      // lexicon/grammar VALUES (OracleSql.cykSql; sentences shared via
+      // cykSentences so query and oracle can never drift)
+      import s.implicits._
+      cykSentences.toDF("sentence")
+        .withColumn("parsed",
+          F.udf((t: String) => Cyk.parseSentence(t)).apply(F.col("sentence")))
+        .select(F.col("sentence"), F.col("parsed.valid").as("valid"),
+          F.col("parsed.reason").as("reason"))
+        .orderBy("sentence")
+    },
+      oracle(OracleSql.cykSql(cykSentences))),
+
+    // ---- dedup family ----
+    Declared("dedup_minhash", (s, dir) =>
+      // DuckDB-oracled: the oracle enumerates ALL pairs with exact
+      // string-trigram jaccard >= 0.8; the LSH path must find every
+      // one (the corpus' near-dups sit at j >= 0.888, where the 16x4
+      // banding miss probability is ~1e-7 — and the hashes are
+      // deterministic, so the comparison is stable run to run)
+      Dedup.minhashNearDups(idText(s, dir), "id", "text", threshold = 0.8)
+        .withColumn("jaccard", r6(F.col("jaccard")))
+        .orderBy("id_a", "id_b"),
+      oracle(trigramPairSql(0.8))),
+    Declared("dedup_simhash", (s, dir) =>
+      // DuckDB-oracled since r4 (r3 verdict #8): the BUCKET STRUCTURE
+      // itself — SimHash bit votes, rep-collapse, 4-band pigeonhole,
+      // Hamming verify — is replicated bit-exactly in HUGEINT SQL
+      // (OracleSql.simhashSql), so chance band collisions are
+      // value-compared, not argued away
+      Dedup.simhashNearDups(idText(s, dir), "id", "text").orderBy("id_a", "id_b"),
+      oracle(OracleSql.simhashSql())),
+    Declared("dedup_ngram_jaccard", (s, dir) =>
+      // the exact prefix-filtered path at t = 0.2; the key is kept for
+      // Verify/Bench key stability. DuckDB-oracled by the same
+      // exhaustive trigram-pair enumeration as dedup_ngram_prefix
+      Dedup.ngramJaccardPrefix(idText(s, dir), "id", "text", n = 3, threshold = 0.2)
+        .withColumn("jaccard", r6(F.col("jaccard")))
+        .orderBy("id_a", "id_b"),
+      oracle(trigramPairSql(0.2))),
+    Declared("dedup_ngram_prefix", (s, dir) =>
+      // DuckDB-oracled against the UNCAPPED exhaustive enumeration:
+      // prefix filtering is exact (no maxGramFreq loss), so the oracle
+      // is simply every pair with string-gram jaccard >= 0.5
+      Dedup.ngramJaccardPrefix(idText(s, dir), "id", "text", n = 3, threshold = 0.5)
+        .withColumn("jaccard", r6(F.col("jaccard")))
+        .orderBy("id_a", "id_b"),
+      oracle(trigramPairSql(0.5))),
+    Declared("hll_vocab", (s, dir) => {
+      // HyperLogLog vocabulary size per source: constant 1 KiB
+      // register state per group vs count(DISTINCT word)'s
+      // one-row-per-distinct-word shuffle; exact counts ride along so
+      // the oracle value-compares registers AND the estimate (incl.
+      // the linear-counting branch via a dumped discrete ln table)
+      import graft.functions.HllAgg
+      val docs = tbl(s, dir, "documents")
+      val estU = F.udf((regs: Seq[Int]) => HllAgg.estimate(regs.toArray))
+      val sk = docs.groupBy("source").agg(HllAgg.hll_agg(F.col("text")).as("regs"))
+        .select(F.col("source"), estU(F.col("regs")).as("hll_estimate"))
+      val tokU = F.udf((t: String) => Dedup.tokens(t))
+      val exact = docs
+        .select(F.col("source"), F.explode(tokU(F.col("text"))).as("w"))
+        .groupBy("source")
+        .agg(F.count_distinct(F.col("w")).as("exact_distinct"))
+      sk.join(exact, Seq("source"), "left")
+        .na.fill(0L, Seq("exact_distinct"))
+        .orderBy("source")
+    },
+      oracle(OracleSql.hllVocabSql())),
+    Declared("bm25_topk", (s, dir) =>
+      // lexical retrieval top-k (Okapi BM25, Lucene +1 idf): stats
+      // pass (query-term df + avgdl) then a fused map-only scoring
+      // kernel with a fixed-order fold, TakeOrderedAndProject top-k;
+      // the oracle replays df/avgdl/idf/score with order-forced sums
+      graft.search.Bm25.topK(tbl(s, dir, "documents"),
+        "doc_id", "text", bm25Query, k = 15),
+      oracle(OracleSql.bm25Sql(bm25Query, 15, 1.2, 0.75))),
+    Declared("cms_word_counts", (s, dir) => {
+      // Count-Min sketch heavy-hitter estimates per source: one
+      // 4x1024 integer sketch per group (constant exchange payload no
+      // matter the vocabulary), probed for a fixed word list; the
+      // exact counts ride along so the oracle checks BOTH the sketch
+      // arithmetic (bit-exact integer adds, replayed bucket-for-bucket
+      // in SQL) and the estimate >= exact guarantee
+      import graft.functions.CountMinAgg
+      val docs = tbl(s, dir, "documents")
+      val sk = docs.groupBy("source")
+        .agg(CountMinAgg.count_min_agg(F.col("text")).as("sk"))
+      val estU = F.udf((sk: Seq[Long], w: String) =>
+        CountMinAgg.estimate(sk.toArray, w))
+      val est = sk.select(F.col("source"),
+          F.explode(F.array(cmsProbes.map(F.lit): _*)).as("word"),
+          F.col("sk"))
+        .withColumn("cms_estimate", estU(F.col("sk"), F.col("word")))
+        .drop("sk")
+      val tokU = F.udf((t: String) => Dedup.tokens(t))
+      val exact = docs
+        .select(F.col("source"), F.explode(tokU(F.col("text"))).as("word"))
+        .filter(F.col("word").isin(cmsProbes: _*))
+        .groupBy("source", "word")
+        .agg(F.count(F.lit(1)).as("exact_count"))
+      est.join(exact, Seq("source", "word"), "left")
+        .na.fill(0L, Seq("exact_count"))
+        .select("source", "word", "cms_estimate", "exact_count")
+        .orderBy("source", "word")
+    },
+      oracle(OracleSql.cmsWordCountsSql(cmsProbes))),
+    Declared("dedup_spans", (s, dir) => {
+      // ExactSubstr/C4-family span dedup: duplicated w-token windows
+      // removed corpus-wide except the globally-first occurrence;
+      // tails planted so cross-doc duplicate spans exist at every sf
+      // (%4 in {1,2} share a 12-token sentence; %4==3 gets a unique
+      // closing marker); natural-text duplicate 8-grams dedup too —
+      // the oracle replays them identically
+      val d = tbl(s, dir, "documents").select(
+        F.col("doc_id").as("id"),
+        F.concat(F.col("text"),
+          F.when(F.col("doc_id") % 4 === 1 || F.col("doc_id") % 4 === 2,
+            F.lit(" the quick brown fox jumps over the lazy dog again and again"))
+            .when(F.col("doc_id") % 4 === 3,
+              F.concat(F.lit(" closing marker "), F.col("doc_id").cast("string")))
+            .otherwise(F.lit(""))).as("text"))
+      Dedup.spanDedup(d, "id", "text", w = 8).orderBy("id")
+    },
+      oracle(OracleSql.spanDedupSql(8))),
+    Declared("dedup_lines", (s, dir) => {
+      // CCNet/C4-style line-level dedup: a deterministic multi-line
+      // doc is derived from each documents row so every decision
+      // branch is live at every sf — 'title k' (df ~ n/40, boilerplate
+      // at df>=10), the flattened natural text (mostly unique),
+      // a blank structural line every 5th doc, 'footer k' (df ~ n/7,
+      // boilerplate), 'shared k' (df ~ n/200 < 10: first-wins branch),
+      // and a per-doc unique line
+      val d = tbl(s, dir, "documents").select(
+        F.col("doc_id").as("id"),
+        F.concat_ws("\n",
+          F.concat(F.lit("title "), (F.col("doc_id") % 40).cast("string")),
+          F.regexp_replace(F.col("text"), "\n", " "),
+          F.when(F.col("doc_id") % 5 === 0, F.lit(""))
+            .otherwise(F.concat(F.lit("footer "), (F.col("doc_id") % 7).cast("string"))),
+          F.concat(F.lit("shared "), (F.col("doc_id") % 200).cast("string")),
+          F.concat(F.lit("unique line "), F.col("doc_id").cast("string"))
+        ).as("text"))
+      Dedup.lineDedup(d, "id", "text", boilerplateMinDf = 10L)
+        .orderBy("id")
+    },
+      oracle(OracleSql.lineDedupSql(10L))),
+    Declared("decontaminate", (s, dir) => {
+      // benchmark decontamination (GPT-3 appendix C style): the
+      // held-out set is the deterministic doc_id % 97 == 0 slice, so
+      // the oracle sees the same benchmark; 8-gram overlap counts
+      // DuckDB-oracled via the generic shingle CTE chain
+      val docs = tbl(s, dir, "documents")
+      Dedup.decontaminate(docs, "doc_id", "text",
+          docs.filter(F.col("doc_id") % 97 === 0), "text")
+        .orderBy("id")
+    },
+      oracle(OracleSql.decontaminateSql())),
+    Declared("sample_temperature", (s, dir) => {
+      // sqrt-temperature domain mixing (XLM-style alpha=0.5): per-
+      // source rates computed from counts with an order-forced sqrt
+      // fold (sqrt is IEEE-exact, so the oracle replays every rate bit
+      // for bit), applied as a map-only pure-double key compare; the
+      // summary exposes rates AND realized kept counts per source
+      val docs = tbl(s, dir, "documents")
+      val rates = graft.sample.Sampling.sqrtTemperatureRates(docs, "source", 0.25)
+      val sampled = graft.sample.Sampling
+        .sampleByRates(docs, "source", "doc_id", rates)
+        .groupBy("source").agg(F.count(F.lit(1)).as("kept"))
+      val rateU = F.udf((src: String) => rates(src))
+      docs.groupBy("source").agg(F.count(F.lit(1)).as("n_docs"))
+        .join(sampled, Seq("source"), "left")
+        .na.fill(0L, Seq("kept"))
+        .withColumn("rate", rateU(F.col("source")))
+        .select("source", "n_docs", "rate", "kept")
+        .orderBy("source")
+    },
+      oracle(OracleSql.sampleTemperatureSql(0.25))),
+    Declared("sample_stratified", (s, dir) =>
+      // deterministic exactly-k-per-source sample (domain mixing);
+      // the sampling key is mix(fnv(id)) so the oracle replays rank
+      // and membership bit-exactly
+      graft.sample.Sampling.stratifiedQuota(
+          tbl(s, dir, "documents"), "source", "doc_id", 10)
+        .select("doc_id", "source", "sample_rank")
+        .orderBy("source", "sample_rank"),
+      oracle(OracleSql.sampleStratifiedSql(10))),
+    Declared("quality_classifier", (s, dir) =>
+      // learned quality scorer (logistic regression, deterministic
+      // driver-side training on the fixed synthetic labeled set):
+      // scoring is map-only; the logit is a fixed-order dot of exact
+      // doubles, so the oracle replays it bit-identically (the
+      // decision logit > 0 needs no sigmoid)
+      graft.ml.QualityClassifier.scoreDf(
+          tbl(s, dir, "documents"), "doc_id", "text")
+        .orderBy("id"),
+      oracle(OracleSql.qualityClassifierSql(graft.ml.QualityClassifier.defaultModel))),
+    Declared("pack_shards", (s, dir) => {
+      // greedy training-shard assembly per source: close a shard when
+      // the next doc's word tokens would exceed the 1000-token budget;
+      // the per-stratum fold replays in DuckDB as a string-encoded
+      // list_reduce, so shard ids and positions are value-compared
+      val tokU = F.udf((t: String) => Dedup.tokens(t).length.toLong)
+      graft.sample.Sampling.packGreedy(
+          tbl(s, dir, "documents").withColumn("toks", tokU(F.col("text"))),
+          "source", "doc_id", "toks", budgetTokens = 1000L)
+        .orderBy("source", "doc_id")
+    },
+      oracle(OracleSql.packShardsSql(1000L))),
+    Declared("sample_fraction", (s, dir) =>
+      // map-only per-source Bernoulli-style sampling with NO rng:
+      // keep iff key < fraction·2^64 (unsigned, exact) — stable under
+      // repartitioning, replayed in SQL as a HUGEINT compare
+      graft.sample.Sampling.stratifiedFraction(
+          tbl(s, dir, "documents"), "source", "doc_id",
+          sampleFractions, 0.2)
+        .select("doc_id", "source")
+        .orderBy("doc_id"),
+      oracle(OracleSql.sampleFractionSql(sampleFractions, 0.2))),
+    components,
+    // the same connectedComponents path and closure oracle; the key is
+    // kept for Verify/Bench key stability
+    components.copy(name = "dedup_components_star"),
+    Declared("dedup_minhash_clusters", (s, dir) =>
+      // DuckDB-oracled since r4 (r3 verdict #8): the one-pass
+      // bucket-min cluster approximation depends on WHICH rows share
+      // LSH buckets — the oracle (OracleSql.minhashClustersSql)
+      // recomputes shingles, the 64 seeded permutations (signed min),
+      // the banded folds and the bucket mins in SQL, bit-exactly
+      Dedup.minhashClusters(idText(s, dir), "id", "text")
+        .filter(F.col("id") =!= F.col("rep_id")) // the near-dup rows
+        .orderBy("id"),
+      oracle(OracleSql.minhashClustersSql())),
+    Declared("dedup_conversations", (s, dir) => {
+      // conversation-level near-dup via the custom MinHashAgg
+      // TypedImperativeAggregate — DuckDB-oracled since r5 (was a
+      // synth-corpus rows-only check): conv = source over documents
+      // (turn = doc), with the min-source conversation planted again
+      // under 'dup::<source>' so a true near-dup pair exists. The
+      // oracle (OracleSql.convDedupSql) replays per-turn shingles, the
+      // element-wise-min union sketch, banded folds, band join and the
+      // signature-agreement estimate bit-exactly. The synth-corpus
+      // twin stays covered by DedupSimilaritySpec.
+      val docs = tbl(s, dir, "documents")
+      val srcMin = docs.agg(F.min("source")).head().getString(0) // 1 value
+      val turns = docs.select(F.col("source").as("conv_id"), F.col("text"))
+      val dup = docs.filter(F.col("source") === srcMin)
+        .select(F.concat(F.lit("dup::"), F.col("source")).as("conv_id"),
+          F.col("text"))
+      Dedup.convNearDups(turns.unionByName(dup), threshold = 0.7)
+        .withColumn("est_jaccard", r6(F.col("est_jaccard")))
+        .orderBy("id_a", "id_b")
+    },
+      oracle(OracleSql.convDedupSql())),
+    Declared("dedup_embedding", (s, dir) =>
+      Dedup.embeddingNearDups(tbl(s, dir, "embeddings"), "vec_id", "embedding",
+          simThreshold = 0.25, nBits = 8, nBands = 4)
+        .withColumn("sim", r6(F.col("sim")))
+        .orderBy("id_a", "id_b"),
       // hyperplane-LSH family: signatures/buckets/cosines replayed as
       // order-forced double folds — bucket membership bit-exact
-      ("dedup_embedding" -> OracleSql.embeddingDedupSql()) +
-      ("ann_lsh" -> OracleSql.annLshSql()) +
-      ("ann_batch_lsh" -> OracleSql.annBatchLshSql()) +
-      // benchmark decontamination + deterministic sampling (all three
-      // replay the mix(fnv(·)) key chain the dedup oracles share)
-      ("dedup_lines" -> OracleSql.lineDedupSql(10L)) +
-      ("dedup_spans" -> OracleSql.spanDedupSql(8)) +
-      ("cms_word_counts" -> OracleSql.cmsWordCountsSql(cmsProbes)) +
-      ("bm25_topk" -> OracleSql.bm25Sql(bm25Query, 15, 1.2, 0.75)) +
-      ("hll_vocab" -> OracleSql.hllVocabSql()) +
-      ("decontaminate" -> OracleSql.decontaminateSql()) +
-      ("sample_stratified" -> OracleSql.sampleStratifiedSql(10)) +
-      ("sample_fraction" -> OracleSql.sampleFractionSql(sampleFractions, 0.2)) +
-      ("sample_temperature" -> OracleSql.sampleTemperatureSql(0.25)) +
-      ("pack_shards" -> OracleSql.packShardsSql(1000L)) +
-      ("quality_classifier" -> OracleSql.qualityClassifierSql(
-        graft.ml.QualityClassifier.defaultModel)) +
-      // the C2 greedy-packing chunker as a string-encoded SQL fold
-      ("chunk_documents" -> OracleSql.chunkSql()) +
+      oracle(OracleSql.embeddingDedupSql())),
+
+    // ---- similarity search ----
+    Declared("ann_lsh", (s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.filter(F.col("vec_id") === 0)
+        .select("embedding").head().getSeq[Float](0).toArray
+      Similarity.topKLsh(emb, "vec_id", "embedding", q, k = 5)
+        .withColumn("sim", r6(F.col("sim")))
+    },
+      oracle(OracleSql.annLshSql())),
+    Declared("ann_ivf", (s, dir) => {
+      val emb = tbl(s, dir, "embeddings")
+      val q = emb.filter(F.col("vec_id") === 0)
+        .select("embedding").head().getSeq[Float](0).toArray
+      Similarity.topKIvf(emb, "vec_id", "embedding", q, k = 5, nCells = 16, nprobe = 4)
+        .withColumn("sim", r6(F.col("sim")))
+    },
+      Left("approximate top-k: 4 of 16 k-means cells are probed, so the answer " +
+        "depends on the trained centroids and no order-insensitive candidate-set " +
+        "SQL replay exists yet (the persisted index probing every cell is oracled)")),
+    Declared("ann_ivf_indexed", (s, dir) => {
+      // build-once / query-MANY through the PERSISTED index (r3
+      // verdict #3): one IvfIndex.build, then 4 queries that each read
+      // only probed cell partitions. nprobe = nCells here, so the
+      // result is exactly brute-force top-k — which also proves the
+      // persisted cells partition the corpus exactly (no dropped or
+      // duplicated ids in the index); the pruned-probe path (recall,
+      // inputFiles ⊂ one cell) is asserted in IvfIndexSpec.
+      val emb = tbl(s, dir, "embeddings")
+      val basePath = java.nio.file.Files
+        .createTempDirectory("graft-ivf-indexed").toString
+      val built = graft.knn.IvfIndex.build(s, emb, "vec_id", "embedding",
+        basePath, nCells = 8)
+      val idx = graft.knn.IvfIndex.load(s, basePath) // exercise load()
+      val qs = emb.filter(F.col("vec_id") < 4)
+        .select("vec_id", "embedding").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+      qs.map { case (qid, q) =>
+        idx.query(q, k = 3, nprobe = built.nCells)
+          .select(F.lit(qid).as("qid"), F.col("vec_id").as("cid"),
+            F.col("sim"))
+      }.reduce(_.unionByName(_))
+        // rank over the RAW sim (as the oracle does), round after
+        .withColumn("rank", F.row_number().over(
+          Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("cid"))))
+        .withColumn("sim", r6(F.col("sim")))
+        .orderBy("qid", "rank")
+    },
+      // all cells probed, so the exact result is brute-force top-k: the
+      // ann_batch_topk oracle verbatim (a dropped/duplicated id in any
+      // cell breaks the compare)
+      batchTopk.oracle),
+    batchTopk,
+    Declared("ann_batch_lsh", (s, dir) => {
+      // large-query-set shape: bucket equi-join, no broadcast
+      val emb = tbl(s, dir, "embeddings")
+      val qs = emb.filter(F.col("vec_id") < 4)
+      Similarity.topKBatchLsh(emb, "vec_id", "embedding", qs, "vec_id", "embedding", k = 3)
+        .withColumn("sim", r6(F.col("sim")))
+        .orderBy("qid", "rank")
+    },
+      oracle(OracleSql.annBatchLshSql())),
+
+    // ---- text analysis ----
+    Declared("langid_documents", (s, dir) => {
+      val m = Curate.defaultModels.langId
+      val u = F.udf((t: String) => m.predict(t))
+      tbl(s, dir, "documents")
+        .select(F.col("doc_id"), u(F.col("text")).as("p"))
+        .select(F.col("doc_id"), F.col("p._1").as("lang"),
+          r6(F.col("p._2")).as("conf"))
+        .orderBy("doc_id")
+    },
+      oracle {
+        // §2.4 under the hard oracle: DuckDB re-scores the SAME dumped
+        // weight matrix (OracleSql.langidCtes replicates predict())
+        val (block, r) = OracleSql.langidCtes("documents", Seq("doc_id"), "L")
+        s"WITH $block " +
+          "SELECT d.doc_id, coalesce(r.lang, 'und') AS lang, " +
+          "coalesce(round(r.conf, 6), 0.0) AS conf " +
+          s"FROM documents d LEFT JOIN $r r ON r.doc_id = d.doc_id ORDER BY d.doc_id"
+      }),
+    Declared("quality_score", (s, dir) =>
+      tbl(s, dir, "documents")
+        .select(F.col("doc_id"), TextStats.qualityScore(F.col("text")).as("score"))
+        .orderBy("doc_id"),
+      oracle(s"SELECT doc_id, round(" +
+        "least(len(regexp_split_to_array(lower(trim(text)), '\\s+')) / 50.0, 1.0) * 0.3 + " +
+        "greatest(0.0, 1.0 - (length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / greatest(length(text), 1)) * 3.0) * 0.3 + " +
+        s"least((len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x IN $stopIn)) * 1.0 / greatest(len(regexp_split_to_array(lower(trim(text)), '\\s+')), 1)) * 4.0, 1.0) * 0.2 + " +
+        "(CASE WHEN (length(regexp_replace(text, '\\s+', '', 'g')) * 1.0 / greatest(len(regexp_split_to_array(lower(trim(text)), '\\s+')), 1)) BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.3 END) * 0.2" +
+        ", 6) AS score FROM documents ORDER BY doc_id")),
+    Declared("fingerprint", (s, dir) =>
+      // custom Catalyst expression variant (vs TextStats.fingerprintUdf)
+      tbl(s, dir, "documents")
+        .select(F.col("doc_id"),
+          graft.functions.TextMetrics.fingerprint(F.col("text")).as("fp"))
+        .orderBy("doc_id"),
+      // the custom codegen FingerprintExpr vs an independent HUGEINT
+      // mod-2^64 formulation of the same rolling hash (seed
+      // 1125899906842597, h*31+lower(char), ws runs collapse to ' ')
+      // leading-ws strip uses regex \\s (Java isWhitespace analog for
+      // the ASCII fixture; ltrim would strip spaces only) — corpus is
+      // ASCII/BMP so code-point-vs-UTF-16 iteration agrees
+      oracle("WITH n AS (SELECT doc_id, regexp_replace(regexp_replace(lower(text), '^\\s+', ''), '\\s+', ' ', 'g') AS t FROM documents), " +
+        "f AS (SELECT doc_id, list_reduce(" +
+        "list_prepend(CAST(1125899906842597 AS HUGEINT), " +
+        "list_transform(range(1, length(t) + 1), i -> CAST(unicode(t[i]) AS HUGEINT))), " +
+        "(h, c) -> (h * 31 + c) % CAST('18446744073709551616' AS HUGEINT)) AS hu FROM n) " +
+        "SELECT doc_id, CAST(CASE WHEN hu >= CAST('9223372036854775808' AS HUGEINT) " +
+        "THEN hu - CAST('18446744073709551616' AS HUGEINT) ELSE hu END AS BIGINT) AS fp " +
+        "FROM f ORDER BY doc_id")),
+    Declared("chunk_documents", (s, dir) => {
+      // C2/C4: overlapping chunker + posexplode. The documents corpus
+      // is punctuation-free (one giant "sentence" → one chunk), so a
+      // period is planted every 10 words to exercise real greedy
+      // packing + overlap carry. DuckDB-oracled since r5: the whole
+      // sentence-split + greedy fold + overlap-tail state machine
+      // replays as a string-encoded list_reduce (OracleSql.chunkSql)
+      val u = F.udf((t: String) => Chunker.chunkText(t, 200, 20))
+      val sentencified =
+        F.regexp_replace(F.col("text"), "((?:\\S+\\s+){9}\\S+)\\s+", "$1. ")
+      tbl(s, dir, "documents")
+        .select(F.col("doc_id"), F.posexplode(u(sentencified)).as(Seq("idx", "chunk")))
+        .orderBy("doc_id", "idx")
+    },
+      oracle(OracleSql.chunkSql())),
+
+    // ---- multimodal plumbing (synthetic media) ----
+    Declared("multimodal_features", (s, dir) => {
+      val n = if (dir.contains("sf0.1")) 2048 else 128
+      Multimodal.extractFeatures(s, Multimodal.synthMedia(s, n))
+        .toDF()
+        .select("media_id", "kind", "byte_len", "content_hash", "width",
+          "height", "duration_ms")
+        .orderBy("media_id")
+    },
       // media METADATA path over the exact synthMedia bytes (hex
       // VALUES): real header reads + the hash-derived video stub.
-      // NOTE: valid at the 128-row scale the driver verifies (the
-      // query sizes up only at sf0.1, which Verify never runs).
-      ("multimodal_features" -> OracleSql.multimodalMetaSql(
-        (0 until 128).map { i =>
-          val r = Multimodal.synthMediaRow(i.toLong)
-          (r.media_id, r.kind, r.media)
-        })) +
-      ("multimodal_frames" -> OracleSql.multimodalFramesSql(
+      // NOTE: valid at the 128-row scale of sf ≤ 0.01 (the query
+      // sizes up only at sf0.1, where no oracle compare runs).
+      oracle(OracleSql.multimodalMetaSql((0 until 128).map { i =>
+        val r = Multimodal.synthMediaRow(i.toLong)
+        (r.media_id, r.kind, r.media)
+      }))),
+    Declared("multimodal_features_raw", (s, dir) => {
+      // BMP + WAV rows ONLY — the two formats whose payloads decode in
+      // pure SQL (raw bottom-up 24-bpp BGR; PCM16 LE) — DuckDB-oracled
+      // since r5 (r4 verdict "What's missing" 1c): the oracle embeds
+      // the exact container bytes as VALUES and independently re-reads
+      // headers, pixels and samples (OracleSql.multimodalRawSql). The
+      // entropy-coded formats (PNG deflate, JPEG scan, GIF LZW) stay
+      // in multimodal_features, oracled on metadata only — deflate
+      // genuinely is not SQL.
+      import s.implicits._
+      Multimodal.extractFeatures(s, s.createDataset(rawMediaRows))
+        .toDF()
+        .select(F.col("media_id"), F.col("kind"), F.col("byte_len"),
+          F.col("content_hash"), F.col("width"), F.col("height"),
+          F.col("duration_ms"),
+          F.posexplode(F.col("feature")).as(Seq("feat_idx", "feat_val")))
+        .orderBy("media_id", "feat_idx")
+    },
+      oracle(OracleSql.multimodalRawSql(rawMediaRows.map(r => (r.media_id, r.kind, r.media))))),
+    Declared("multimodal_frames", (s, dir) => {
+      val feats = Multimodal.extractFeatures(s, Multimodal.synthMedia(s, 128)).toDF()
+      Multimodal.sampleFrames(feats).orderBy("media_id", "frame_offset_ms")
+    },
+      oracle(OracleSql.multimodalFramesSql(
         (0 until 128).map(i => Multimodal.synthMediaRow(i.toLong))
-          .filter(_.kind == "video").map(r => (r.media_id, r.media)))) +
-      // same components path as dedup_components, same closure
-      ("dedup_components_star" -> m("dedup_components")) +
-      // kept-turn reassembly over the SAME composed real-model
-      // decision — the curate_transcripts oracle as a subquery
-      ("conv_reassemble_curated" ->
-        ("SELECT conv_id, count(*) AS n_turns, " +
-          "string_agg(scrubbed_text, ' ' ORDER BY turn_idx) AS reassembled " +
-          s"FROM (${m("curate_transcripts")}) sub WHERE keep " +
-          "GROUP BY conv_id ORDER BY conv_id"))
-  }
+          .filter(_.kind == "video").map(r => (r.media_id, r.media))))),
+
+    // ---- dims / set ops (A7, J4) ----
+    Declared("html_extract", (s, dir) => {
+      // S3 selector cascade end-to-end: wrap each document in a noisy
+      // page template (script/nav/comment/aside/footer) and recover the
+      // exact original text through the extractor (DuckDB-oracled: the
+      // roundtrip must be the identity on the clean corpus)
+      val u = F.udf((h: String) => graft.scrub.HtmlExtract.extract(h))
+      val page = F.concat(
+        F.lit("<html><head><title>t</title><script>var x = 1 < 2;</script></head>" +
+          "<body><nav>Home | About</nav><!-- c --><aside>ad</aside><main><p>"),
+        F.col("text"),
+        F.lit("</p></main><footer>Cookie Policy: accept</footer></body></html>"))
+      tbl(s, dir, "documents")
+        .select(F.col("doc_id"), u(page).as("e"))
+        .select(F.col("doc_id"), F.col("e.content").as("content"),
+          F.col("e.word_count").as("word_count"),
+          F.col("e.content_hash").as("content_hash"))
+        .orderBy("doc_id")
+    },
+      // word_count mirrors the engine's non-empty-token count
+      // (cleaned.split(" ").count(_.nonEmpty)) — a bare
+      // len(string_split(..)) counts empty tokens and would break on
+      // any doc with doubled/leading spaces (ADVICE r2)
+      oracle("SELECT doc_id, text AS content, " +
+        "len(list_filter(string_split(text, ' '), x -> x <> '')) AS word_count, " +
+        "md5(text) AS content_hash FROM documents ORDER BY doc_id")),
+    Declared("store_mutations", (s, dir) => {
+      // S7/S8 lifecycle end-to-end: build a bucketed vector store from
+      // documents, copy-on-write delete doc_id % 7 == 0, read back the
+      // survivors (DuckDB-oracled)
+      import graft.tableio.VectorStore
+      // per-session path: concurrent processes (sbt test + Verify)
+      // must not mutate each other's store
+      val base = s"/tmp/graft-vstore-query-${s.sparkContext.applicationId}-" +
+        dir.replaceAll("[^a-zA-Z0-9.]", "_")
+      val vs = new VectorStore(s, base, nBuckets = 8)
+      vs.reset()
+      vs.add(tbl(s, dir, "documents")
+        .select(F.col("doc_id").cast("string").as("id"),
+          F.col("text").as("chunk"), F.col("source")))
+      vs.deleteWhere(F.col("id").cast("long") % 7 === 0)
+      vs.read().select(F.col("id").cast("long").as("doc_id")).orderBy("doc_id")
+    },
+      oracle("SELECT doc_id FROM documents WHERE doc_id % 7 <> 0 ORDER BY doc_id")),
+    Declared("lexicon_merge", (s, dir) => {
+      import s.implicits._
+      (lexiconPairs ++ lexiconExtra).toDF("word", "pos")
+        .distinct()
+        .groupBy("word")
+        .agg(F.array_join(F.sort_array(F.collect_set("pos")), "|").as("pos_tags"))
+        .orderBy("word")
+    },
+      oracle {
+        val vals = (lexiconPairs ++ lexiconExtra).map { case (w, p) => s"('$w','$p')" }.mkString(", ")
+        s"WITH t AS (SELECT DISTINCT word, pos FROM (VALUES $vals) AS v(word, pos)) " +
+          "SELECT word, array_to_string(list_sort(list(pos)), '|') AS pos_tags " +
+          "FROM t GROUP BY word ORDER BY word"
+      })
+  )
+
+  // lexicon_merge input: every (word, tag) of the CYK lexicon plus
+  // extra pairs that overlap it on purpose
+  private def lexiconPairs = Cyk.lexicon.toSeq.flatMap { case (w, ps) => ps.map(p => (w, p)) }
+  private val lexiconExtra = Seq(("spark", "N"), ("run", "N"), ("the", "DET"))
 }
