@@ -16,7 +16,9 @@ import graft.tableio.TableIO
   * kill processes only partitions missing from the output manifest
   * (checkpoint/Resume). On a cluster the session comes from
   * spark-submit's conf (executor count/memory set there — the N vs 4N
-  * executor scaling axis); local runs honor SPARK_GRAFT_CPUS.
+  * executor scaling axis); local runs use SPARK_GRAFT_CPUS cores, else
+  * every core of the host, and write that many files per partition
+  * unless --write-partitions says otherwise.
   * Exit summary (one JSON line) reports per-run lineage totals.
   */
 object CurateJob {
@@ -29,18 +31,20 @@ object CurateJob {
         "use TableIO.writeBucketedInput or an Iceberg bucket(N, conv_id) spec)"))
     val output = opts.getOrElse("output", sys.error("--output <dir> required"))
     val concurrency = opts.getOrElse("concurrency", "2").toInt
-    val writeParts = opts.getOrElse("write-partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).toInt
+    // local core count: SPARK_GRAFT_CPUS, else this host's processors
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val writeParts = opts.getOrElse("write-partitions", cpus).toInt
     val maxParts = opts.getOrElse("max-partitions", Int.MaxValue.toString).toInt
 
     // under spark-submit the master/executor topology comes from the
     // submit conf (the N vs 4N executor axis); standalone runs fall
-    // back to local[SPARK_GRAFT_CPUS]
+    // back to local[cpus]
     val base = SparkSession.builder().appName("graft-curate")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
     val spark = (if (sys.props.contains("spark.master")) base
-                 else base.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
+                 else base.master(s"local[$cpus]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -53,8 +57,7 @@ object CurateJob {
     // roll up manifests for the exit summary
     val manifests = TableIO.donePartitions(output).toSeq.sorted
       .flatMap(p => TableIO.readManifest(output, p))
-    val seen = "\"turns_seen\": (\\d+)".r
-    val totalSeen = manifests.flatMap(m => seen.findFirstMatchIn(m).map(_.group(1).toLong)).sum
+    val totalSeen = manifests.map(m => Resume.Manifest.parse(m).turnsSeen).sum
     println(
       s"""{"job":"graft-curate","processed_partitions":${result.processed.size},""" +
         s""""skipped_partitions":${result.skipped.size},"total_turns_committed":$totalSeen,""" +

@@ -1,6 +1,14 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Observation, SparkSession}
 
 import graft.pipeline.Curate
 import graft.rules.QualityRules
@@ -15,9 +23,13 @@ import graft.tableio.TableIO
   * correction_stats, smart_corrector.py:90-96,252-260).
   *
   * Scale notes: the loop is over PARTITIONS (thousands at 10^12 turns),
-  * each processed with full cluster parallelism; per-partition work is
-  * map-only (no shuffle) + one tiny metrics aggregate. `maxPartitions`
-  * lets tests simulate a kill after k partitions.
+  * each processed with full cluster parallelism. A partition runs three
+  * Spark jobs: the input schema read, the salted shuffle's map stage and
+  * the write. The manifest metrics are observed on the write job itself
+  * (`Curate.metricAggs`, collected in its result stage), never read back;
+  * the write is validated on the driver against the committed parquet
+  * footers' row counts. `maxPartitions` lets tests simulate a kill after
+  * k partitions.
   */
 object Resume {
 
@@ -47,11 +59,15 @@ object Resume {
     def processOne(p: Int): Unit = {
       val turns = TableIO.readPartition(spark, inputBase, p)
       val curated = Curate.curateDf(spark, turns, cfg, models)
+      // observed after the shuffle, in the write's result stage, where a
+      // retried task's update still counts once
+      val obs = Observation()
       val ordered = Curate.saltedForWrite(curated, writePartitions)
+        .observe(obs, Curate.metricAggs.head, Curate.metricAggs.tail: _*)
       val dir = TableIO.commitPartition(ordered, outputBase, p)
-      // metrics from the committed files (also validates the write)
-      val m = Curate.metrics(spark.read.parquet(dir.toString), p).head()
-      TableIO.writeManifest(outputBase, p, manifestJson(p, inputBase, m))
+      val m = Manifest.observed(p, s"$inputBase/${TableIO.PART_COL}=$p", obs.get)
+        .checked(footerRowCount(dir, spark.sparkContext.hadoopConfiguration))
+      TableIO.writeManifest(outputBase, p, m.toJson)
       processed.add(p)
     }
 
@@ -64,20 +80,91 @@ object Resume {
         futures.foreach(_.get()) // propagate first failure
       } finally pool.shutdown()
     }
-    import scala.jdk.CollectionConverters._
     RunResult(processed.asScala.toSeq.sorted, done.toSeq.sorted)
   }
 
   def listInputPartitions(inputBase: String): Seq[Int] = {
     val d = java.nio.file.Paths.get(inputBase)
-    if (!java.nio.file.Files.isDirectory(d)) return Nil
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(d).iterator().asScala
+    if (!Files.isDirectory(d)) return Nil
+    Files.list(d).iterator().asScala
       .map(_.getFileName.toString)
       .collect { case s if s.startsWith(s"${TableIO.PART_COL}=") =>
         s.stripPrefix(s"${TableIO.PART_COL}=").toInt
       }
       .toSeq
+  }
+
+  /** Rows in a committed partition, summed from its parquet footers on
+    * the driver (no Spark job).
+    */
+  private def footerRowCount(dir: Path, conf: Configuration): Long =
+    Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map { f =>
+        val r = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try r.getRecordCount finally r.close()
+      }
+      .sum
+
+  /** One committed partition's lineage + metrics (deterministic fields
+    * only): the manifest file is `toJson`, read back with `parse`. Maps
+    * hold no zero counts; keys are written sorted.
+    */
+  final case class Manifest(
+      partId: Int,
+      input: String,
+      turnsSeen: Long,
+      turnsKept: Long,
+      turnsDropped: Long,
+      droppedByRule: Map[String, Long],
+      scrubHitCounts: Map[String, Long]
+  ) {
+    def toJson: String =
+      s"""{"part_id": $partId, "input": ${jstr(input)}, """ +
+        s""""turns_seen": $turnsSeen, "turns_kept": $turnsKept, """ +
+        s""""turns_dropped": $turnsDropped, "dropped_by_rule": ${jmap(droppedByRule)}, """ +
+        s""""scrub_hit_counts": ${jmap(scrubHitCounts)}}"""
+
+    /** This manifest, after checking it against the committed rows: the
+      * footers must hold `turnsSeen` rows, and every dropped turn must
+      * be counted under a rule of `QualityRules.ruleOrder`.
+      */
+    def checked(committedRows: Long): Manifest = {
+      require(committedRows == turnsSeen,
+        s"partition $partId: committed footers hold $committedRows rows, " +
+          s"the write observed $turnsSeen")
+      require(droppedByRule.values.sum == turnsDropped,
+        s"partition $partId: per-rule drop counts $droppedByRule do not sum to " +
+          s"turns_dropped $turnsDropped (a drop_reason outside QualityRules.ruleOrder)")
+      this
+    }
+  }
+
+  object Manifest {
+    private val mapper = new ObjectMapper()
+
+    def parse(json: String): Manifest = {
+      val j = mapper.readTree(json)
+      def counts(field: String): Map[String, Long] = {
+        val o = j.get(field)
+        o.fieldNames().asScala.map(k => k -> o.get(k).asLong).toMap
+      }
+      Manifest(j.get("part_id").asInt, j.get("input").asText,
+        j.get("turns_seen").asLong, j.get("turns_kept").asLong,
+        j.get("turns_dropped").asLong, counts("dropped_by_rule"), counts("scrub_hit_counts"))
+    }
+
+    /** From the values `Curate.metricAggs` observed, keyed by alias. */
+    def observed(partId: Int, input: String, v: Map[String, Any]): Manifest = {
+      // a sum over no rows is null: an empty partition counts 0
+      def n(k: String): Long = Option(v(k)).fold(0L)(_.asInstanceOf[Long])
+      def counts(keys: Seq[String], col: String => String) =
+        keys.map(k => k -> n(col(k))).filter(_._2 > 0).toMap
+      Manifest(partId, input, n("turns_seen"), n("turns_kept"), n("turns_dropped"),
+        counts(Curate.metricRules, Curate.ruleCount),
+        counts(Curate.metricScrubs, Curate.scrubCount))
+    }
   }
 
   private def jstr(s: String) =
@@ -86,16 +173,4 @@ object Resume {
   private def jmap(m: Map[String, Long]) =
     m.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ", ", "}")
-
-  /** Lineage + metrics manifest row (deterministic fields only). */
-  def manifestJson(partId: Int, inputBase: String, m: Row): String = {
-    val byRule = Option(m.getAs[Map[String, Long]]("dropped_by_rule")).getOrElse(Map.empty)
-    val scrub = Option(m.getAs[Map[String, Long]]("scrub_hit_counts")).getOrElse(Map.empty)
-    s"""{"part_id": $partId, "input": ${jstr(s"$inputBase/${TableIO.PART_COL}=$partId")}, """ +
-      s""""turns_seen": ${m.getAs[Long]("turns_seen")}, """ +
-      s""""turns_kept": ${m.getAs[Long]("turns_kept")}, """ +
-      s""""turns_dropped": ${m.getAs[Long]("turns_dropped")}, """ +
-      s""""dropped_by_rule": ${jmap(byRule)}, """ +
-      s""""scrub_hit_counts": ${jmap(scrub)}}"""
-  }
 }

@@ -1,12 +1,13 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, functions => F}
 
 import graft.langid.{LangId, LangIdModel}
 import graft.lm.NGramLM
 import graft.model.Turn
 import graft.rules.QualityRules
+import graft.scrub.Scrubber
 import graft.synth.Transcripts
 
 /** The curation DAG (SURVEY.md §3 "Spark rebuild of this lifecycle"):
@@ -15,8 +16,8 @@ import graft.synth.Transcripts
   *   → (gated) perplexity → keep/drop decision → scrub → curated
   *
   * One lazily-built DataFrame plan, map-only (NO shuffle on the hot
-  * path — the per-turn pipeline is embarrassingly parallel; the only
-  * shuffles in the whole flow are the tiny metrics aggregations).
+  * path — the per-turn pipeline is embarrassingly parallel; the
+  * metrics are one global aggregate, or observed on the write job).
   *
   * Expensive-operator gating is STRUCTURAL, mirroring the reference's
   * "only error chunks reach the LLM" short-circuit
@@ -84,35 +85,48 @@ object Curate {
     curateDf(spark, turns.toDF(), cfg, models).as[graft.model.CuratedTurn]
   }
 
+  /** Drop-reason and scrub-pattern vocabularies the metrics count, in
+    * manifest key order.
+    */
+  val metricRules: Seq[String] = QualityRules.ruleOrder.sorted
+  val metricScrubs: Seq[String] = Scrubber.patternSpecs.map(_._1).sorted
+  def ruleCount(rule: String): String = s"dropped_$rule"
+  def scrubCount(pattern: String): String = s"scrub_$pattern"
+
+  /** The per-run metrics as ONE aggregate list: turn count, kept and
+    * dropped sums, one count per drop reason and one hit sum per scrub
+    * pattern. [[metrics]] aggregates it; `Resume` observes it on the
+    * partition's write job.
+    */
+  val metricAggs: Seq[Column] = Seq(
+    F.count(F.lit(1)).as("turns_seen"),
+    F.sum(F.when(F.col("keep"), 1L).otherwise(0L)).as("turns_kept"),
+    F.sum(F.when(F.col("keep"), 0L).otherwise(1L)).as("turns_dropped")) ++
+    metricRules.map(r =>
+      F.count(F.when(F.col("drop_reason") === r, 1)).as(ruleCount(r))) ++
+    metricScrubs.map(k =>
+      F.coalesce(F.sum(F.col("scrub_hits").getItem(k).cast("long")), F.lit(0L))
+        .as(scrubCount(k)))
+
   /** Per-run metrics — rebuild of the reference's summary aggregates
-    * (smart_corrector.py:229-260, SURVEY.md §2.9 A2). Two tiny
-    * shuffles over already-reduced data (map-side partial aggregation
-    * is automatic for hash aggregates).
+    * (smart_corrector.py:229-260, SURVEY.md §2.9 A2): one aggregate of
+    * [[metricAggs]], its counts folded into sorted-key maps without
+    * zero entries. Fails when the per-rule counts do not sum to
+    * `turns_dropped`, i.e. on a drop reason outside
+    * `QualityRules.ruleOrder`.
     */
   def metrics(curated: DataFrame, partId: Int = 0): DataFrame = {
-    val byRule = curated
-      .filter(F.col("drop_reason").isNotNull)
-      .groupBy("drop_reason").count()
-      .agg(F.map_from_entries(
-        F.sort_array(F.collect_list(F.struct(F.col("drop_reason"), F.col("count")))))
-        .as("dropped_by_rule"))
-    val scrubCounts = curated
-      .select(F.explode_outer(F.col("scrub_hits")).as(Seq("k", "v")))
-      .filter(F.col("k").isNotNull)
-      .groupBy("k").agg(F.sum("v").cast("long").as("n"))
-      .agg(F.map_from_entries(
-        F.sort_array(F.collect_list(F.struct(F.col("k"), F.col("n")))))
-        .as("scrub_hit_counts"))
-    val base = curated.agg(
-      F.count(F.lit(1)).as("turns_seen"),
-      F.sum(F.when(F.col("keep"), 1L).otherwise(0L)).as("turns_kept"),
-      F.sum(F.when(F.col("keep"), 0L).otherwise(1L)).as("turns_dropped"))
-    base
-      .crossJoin(byRule)
-      .crossJoin(scrubCounts)
-      .withColumn("part_id", F.lit(partId))
-      .select("part_id", "turns_seen", "turns_kept", "turns_dropped",
-        "dropped_by_rule", "scrub_hit_counts")
+    def countMap(keys: Seq[String], col: String => String) =
+      F.map_filter(F.map(keys.flatMap(k => Seq(F.lit(k), F.col(col(k)))): _*), (_, v) => v > 0)
+    val ruleSum = metricRules.map(r => F.col(ruleCount(r))).reduce(_ + _)
+    curated.agg(metricAggs.head, metricAggs.tail: _*)
+      .filter(F.when(ruleSum === F.col("turns_dropped"), F.lit(true))
+        .otherwise(F.raise_error(F.lit("Curate.metrics: per-rule drop counts do not " +
+          "sum to turns_dropped (a drop_reason outside QualityRules.ruleOrder)"))))
+      .select(F.lit(partId).as("part_id"), F.col("turns_seen"), F.col("turns_kept"),
+        F.col("turns_dropped"),
+        countMap(metricRules, ruleCount).as("dropped_by_rule"),
+        countMap(metricScrubs, scrubCount).as("scrub_hit_counts"))
   }
 
   /** Two-phase ordered per-conversation reassembly (SURVEY.md §2.7 R3

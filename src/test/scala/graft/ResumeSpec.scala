@@ -5,6 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.checkpoint.Resume
+import graft.pipeline.Curate
+import graft.rules.QualityRules
+import graft.scrub.Scrubber
 import graft.synth.Transcripts
 import graft.tableio.TableIO
 
@@ -100,5 +103,93 @@ class ResumeSpec extends SparkTestBase {
     } finally {
       Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
     }
+  }
+
+  test("every partition's observed manifest == Curate.metrics over its committed files") {
+    val in = freshDir("in3")
+    val out = freshDir("out3")
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 60L).toDF(), in, nBuckets = 3)
+      Resume.run(spark, in, out, concurrency = 2)
+      val parts = TableIO.donePartitions(out).toSeq.sorted
+      assert(parts == Seq(0, 1, 2))
+      val manifests = parts.map { p =>
+        val json = TableIO.readManifest(out, p).get
+        val m = Resume.Manifest.parse(json)
+        assert(m.toJson == json, "manifest codec must round-trip the file bytes")
+        // oracle 1: the read-back aggregate over the committed files
+        val committed = spark.read.parquet(TableIO.partitionDir(out, p).toString)
+        val r = Curate.metrics(committed, p).head()
+        def counts(c: String) = r.getMap[String, Long](r.fieldIndex(c)).toMap
+        assert(m == Resume.Manifest(p, s"$in/${TableIO.PART_COL}=$p",
+          r.getAs[Long]("turns_seen"), r.getAs[Long]("turns_kept"),
+          r.getAs[Long]("turns_dropped"), counts("dropped_by_rule"),
+          counts("scrub_hit_counts")), s"partition $p")
+        // oracle 2: a driver-side tally of the committed rows
+        val rows = committed.select("keep", "drop_reason", "scrub_hits").collect()
+        assert(m.turnsSeen == rows.length)
+        assert(m.turnsKept == rows.count(_.getBoolean(0)))
+        assert(m.droppedByRule == rows.filter(!_.isNullAt(1))
+          .groupBy(_.getString(1)).map { case (k, v) => k -> v.length.toLong })
+        assert(m.scrubHitCounts == rows.flatMap(_.getMap[String, Int](2).toSeq)
+          .groupBy(_._1).map { case (k, v) => k -> v.map(_._2.toLong).sum })
+        m
+      }
+      // the fixture exercises several drop reasons and every scrub kind
+      assert(manifests.flatMap(_.droppedByRule.keys).distinct.size >= 3)
+      assert(manifests.flatMap(_.scrubHitCounts.keys).toSet ==
+        Scrubber.patternSpecs.map(_._1).toSet)
+    } finally {
+      Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
+
+  test("a partition runs at most three Spark jobs: schema read, shuffle map, write") {
+    val in = freshDir("in4")
+    val out = freshDir("out4")
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 20L).toDF(), in, nBuckets = 2)
+      val sc = spark.sparkContext
+      (0 until 2).foreach { i =>
+        val group = s"resume-partition-$i-${System.nanoTime()}"
+        sc.setJobGroup(group, "one Resume.run partition")
+        val r = try Resume.run(spark, in, out, maxPartitions = 1)
+                finally sc.clearJobGroup()
+        assert(r.processed.size == 1)
+        val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+        assert(jobs <= 3, s"partition ${r.processed.head} ran $jobs jobs")
+      }
+    } finally {
+      Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
+
+  test("Curate.metrics fails on a drop_reason outside QualityRules.ruleOrder") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq(
+      (true, null: String, Map("url" -> 1)),
+      (false, "too_short", Map.empty[String, Int]),
+      (false, "not_a_rule", Map("email" -> 2))).toDF("keep", "drop_reason", "scrub_hits")
+    assert(!QualityRules.ruleOrder.contains("not_a_rule"))
+    val e = intercept[Exception](Curate.metrics(rows).collect())
+    assert(e.getMessage.contains("ruleOrder"), e.getMessage)
+    // without the stray reason the same rows aggregate
+    val ok = Curate.metrics(rows.filter($"drop_reason".isNull || $"drop_reason" =!= "not_a_rule"))
+      .head()
+    assert(ok.getAs[Long]("turns_dropped") == 1L)
+    assert(ok.getMap[String, Long](ok.fieldIndex("dropped_by_rule")).toMap == Map("too_short" -> 1L))
+    assert(ok.getMap[String, Long](ok.fieldIndex("scrub_hit_counts")).toMap == Map("url" -> 1L))
+  }
+
+  test("a manifest fails its check on a footer row mismatch or uncounted drops") {
+    val m = Resume.Manifest(0, "in/part_id=0", turnsSeen = 5, turnsKept = 3,
+      turnsDropped = 2, droppedByRule = Map("ppl" -> 1L, "too_short" -> 1L),
+      scrubHitCounts = Map("url" -> 4L))
+    assert(m.checked(5) == m)
+    assert(intercept[IllegalArgumentException](m.checked(4)).getMessage.contains("footers"))
+    val stray = m.copy(droppedByRule = Map("ppl" -> 1L))
+    assert(intercept[IllegalArgumentException](stray.checked(5)).getMessage.contains("ruleOrder"))
+    assert(Resume.Manifest.parse(m.toJson) == m)
   }
 }
