@@ -1,6 +1,7 @@
 package graft.checkpoint
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -39,7 +40,9 @@ object Resume {
     *   scheduler is thread-safe: each worker thread submits its
     *   partition's jobs independently, keeping the cluster busy while
     *   another partition is in its (cheap, driver-side) commit step.
-    *   Each partition still commits atomically and independently.
+    *   Each partition still commits atomically and independently. On
+    *   the first failure the partitions not yet started are cancelled,
+    *   the in-flight ones finish, and then the failure is rethrown.
     */
   def run(
       spark: SparkSession,
@@ -73,12 +76,20 @@ object Resume {
 
     if (concurrency <= 1) todo.foreach(processOne)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
-      try {
-        val futures = todo.map(p =>
-          pool.submit(new Runnable { def run(): Unit = processOne(p) }))
-        futures.foreach(_.get()) // propagate first failure
-      } finally pool.shutdown()
+      val pool = Executors.newFixedThreadPool(concurrency)
+      val finished = new ExecutorCompletionService[Unit](pool)
+      val futures = todo.map(p => finished.submit(() => processOne(p)))
+      try todo.foreach(_ => finished.take().get())
+      catch {
+        case t: Throwable =>
+          // the first failure: no queued partition may start (and commit)
+          // after run has thrown
+          futures.foreach(_.cancel(false))
+          throw (t match { case e: ExecutionException => e.getCause; case _ => t })
+      } finally {
+        pool.shutdown() // in-flight partitions finish before run returns
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
     }
     RunResult(processed.asScala.toSeq.sorted, done.toSeq.sorted)
   }

@@ -1,9 +1,9 @@
 package graft.multimodal
 
-/** REAL video container support — MJPEG-in-AVI, JDK-only: a RIFF
-  * chunk-walk parser (avih header → dims, frame count, frame period;
-  * LIST movi → frames) over Motion-JPEG frames decoded by the existing
-  * baseline [[JpegCodec]]. This retires the last media stub: with it,
+/** REAL video container support — MJPEG-in-AVI: a RIFF chunk-walk
+  * parser (avih header → dims, frame count, frame period; LIST movi →
+  * frames) over Motion-JPEG frames, the first of which decodes through
+  * [[HeaderCodec.decodePixels]] (the JDK's JPEG reader). With it,
   * every synthetic media kind (image BMP/PNG/GIF/JPEG, audio WAV,
   * video AVI) decodes to content-derived features. Format layout per
   * the public RIFF/AVI specification (Microsoft Video for Windows,
@@ -74,7 +74,7 @@ object AviCodec extends Serializable {
   }
 
   /** First video frame ("00dc" chunk inside LIST movi) decoded through
-    * the baseline JPEG decoder. Total.
+    * [[HeaderCodec.decodePixels]]. Total.
     */
   def firstFramePixels(b: Array[Byte]): Option[HeaderCodec.RgbImage] = {
     if (!isAvi(b)) return None
@@ -93,7 +93,7 @@ object AviCodec extends Serializable {
           if (fourcc(b, qi, "00dc")) {
             if (q + 8 + csz > end) return None
             val frame = java.util.Arrays.copyOfRange(b, qi + 8, qi + 8 + csz.toInt)
-            return JpegCodec.decodePixels(frame)
+            return HeaderCodec.decodePixels(frame)
           }
           q += 8 + csz + (csz & 1)
         }

@@ -1,35 +1,26 @@
 package graft.multimodal
 
-/** REAL GIF89a codec — JDK-only, no image library: a genuine LZW
-  * encoder/decoder (variable code width 3–12 bits, LSB-first bit
-  * packing, clear-code dictionary resets at 4096 entries, 255-byte
-  * sub-block framing) plus the container walk (logical screen
-  * descriptor, global color table, extension skip, image descriptor).
-  *
-  * This closes the last image-format stub in [[Multimodal.MediaCodec]]:
-  * BMP (raw), PNG (deflate), JPEG (baseline Huffman) and now GIF (LZW)
-  * all decode to content-derived pixels. The reference pipeline treats
-  * media as opaque text-adjacent payloads (data_manager.py stores text
-  * only), so this is beyond-reference capability; format layout per
-  * the public GIF89a specification (CompuServe, 1990).
+/** GIF89a encoder for the synthetic media table: a genuine LZW
+  * compressor (variable code width 3–12 bits, LSB-first bit packing,
+  * clear-code dictionary resets at 4096 entries, 255-byte sub-block
+  * framing) and the container around it (logical screen descriptor,
+  * global color table, image descriptor). Decoding is
+  * [[HeaderCodec.decodePixels]], through the JDK's GIF reader. Format
+  * layout per the public GIF89a specification (CompuServe, 1990).
   *
   * The encoder emits codes in the classic compress/ppmtogif order —
   * write the prefix code at the CURRENT width, then grow the width
   * when the next free slot would no longer fit ((1 &lt;&lt; codeSize)),
   * then insert the new dictionary entry — which is exactly the
-  * transition order the standard decoder mirrors (insert, then grow
+  * transition order a standard decoder mirrors (insert, then grow
   * when `next` reaches the width limit). Both sides reset through the
   * clear code when the table fills at 4096.
-  *
-  * All public entry points are total: malformed, truncated or
-  * out-of-scope streams (local color tables, interlace) return None,
-  * never throw.
   */
 object GifCodec extends Serializable {
 
   /** Fixed 256-entry palette — a pure function of the index (odd
     * multipliers are bijections mod 256, so the three channels spread
-    * independently), shared by the encoder, the decoder and tests.
+    * independently), shared by the encoder and tests.
     */
   @inline def paletteR(i: Int): Int = i & 0xff
   @inline def paletteG(i: Int): Int = (i * 73) & 0xff
@@ -66,25 +57,6 @@ object GifCodec extends Serializable {
     def finish(): Array[Byte] = {
       if (nBits > 0) { out.write(cur & 0xff); cur = 0; nBits = 0 }
       out.toByteArray
-    }
-  }
-
-  private final class BitReader(data: Array[Byte]) {
-    private var pos = 0
-    private var cur = 0
-    private var nBits = 0
-    /** Next `width`-bit code, or -1 when the stream is exhausted. */
-    def read(width: Int): Int = {
-      while (nBits < width) {
-        if (pos >= data.length) return -1
-        cur |= (data(pos) & 0xff) << nBits
-        pos += 1
-        nBits += 8
-      }
-      val v = cur & ((1 << width) - 1)
-      cur >>>= width
-      nBits -= width
-      v
     }
   }
 
@@ -128,68 +100,10 @@ object GifCodec extends Serializable {
     bw.finish()
   }
 
-  /** LZW-decompress into exactly `nPixels` indices; None on any
-    * malformed code, truncation before `nPixels`, or bad minCodeSize.
-    */
-  def lzwDecode(data: Array[Byte], minCodeSize: Int, nPixels: Int): Option[Array[Byte]] = {
-    if (minCodeSize < 2 || minCodeSize > 8 || nPixels < 0) return None
-    val clear = 1 << minCodeSize
-    val eoi = clear + 1
-    val br = new BitReader(data)
-    val out = new Array[Byte](nPixels)
-    var pos = 0
-    val prefixOf = new Array[Int](4096)
-    val suffixOf = new Array[Byte](4096)
-    var i = 0
-    while (i < clear) { prefixOf(i) = -1; suffixOf(i) = i.toByte; i += 1 }
-    var codeSize = minCodeSize + 1
-    var next = eoi + 1
-    var prev = -1
-    val buf = new Array[Byte](4096)
-    // append str(code) to out; returns its first byte (0 on overflow)
-    def emit(code: Int): Byte = {
-      var c = code
-      var n = 0
-      while (c >= 0) { buf(n) = suffixOf(c); n += 1; c = prefixOf(c) }
-      val first = buf(n - 1)
-      var j = n - 1
-      while (j >= 0 && pos < nPixels) { out(pos) = buf(j); pos += 1; j -= 1 }
-      first
-    }
-    var done = false
-    while (!done && pos < nPixels) {
-      val code = br.read(codeSize)
-      if (code < 0 || code == eoi) done = true
-      else if (code == clear) { codeSize = minCodeSize + 1; next = eoi + 1; prev = -1 }
-      else if (prev < 0) {
-        if (code >= clear) return None // first code after clear must be a literal
-        emit(code)
-        prev = code
-      } else {
-        var first: Byte = 0
-        if (code < next) first = emit(code)
-        else if (code == next) { // the (prev + first(prev)) special case
-          var c = prev
-          while (prefixOf(c) >= 0) c = prefixOf(c)
-          first = suffixOf(c)
-          emit(prev)
-          if (pos < nPixels) { out(pos) = first; pos += 1 }
-        } else return None // code beyond the table: corrupt stream
-        if (next < 4096) {
-          prefixOf(next) = prev
-          suffixOf(next) = first
-          next += 1
-          if (next == (1 << codeSize) && codeSize < 12) codeSize += 1
-        }
-        prev = code
-      }
-    }
-    if (pos == nPixels) Some(out) else None
-  }
-
   /** Full GIF89a with a 256-entry global color table and a REAL
     * LZW-compressed image of [[gifIndexPixels]] noise —
-    * [[decodePixels]] round-trips it to the exact palette-mapped RGB.
+    * [[HeaderCodec.decodePixels]] round-trips it to the exact
+    * palette-mapped RGB.
     */
   def gifPixelBytes(w: Int, h: Int, seed: Long): Array[Byte] = {
     require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff)
@@ -221,75 +135,5 @@ object GifCodec extends Serializable {
     out.write(0)    // block terminator
     out.write(0x3b) // trailer
     out.toByteArray
-  }
-
-  /** REAL GIF pixel decode: global-color-table, non-interlaced images
-    * (what [[gifPixelBytes]] emits — and any plain single-frame GIF);
-    * extensions are skipped, local color tables and interlace decline
-    * to None (header dims still parse via [[HeaderCodec.parseGif]]).
-    * Total, never throws.
-    */
-  def decodePixels(b: Array[Byte]): Option[HeaderCodec.RgbImage] = {
-    if (!HeaderCodec.isGif(b)) return None
-    val packed = b(10) & 0xff
-    if ((packed & 0x80) == 0) return None // no global color table
-    val gctSize = 1 << ((packed & 7) + 1)
-    var p = 13
-    if (p + gctSize * 3 > b.length) return None
-    val gctOff = p
-    p += gctSize * 3
-    // block walk to the first image descriptor
-    while (p < b.length) {
-      (b(p) & 0xff) match {
-        case 0x21 => // extension: label + sub-blocks
-          p += 2
-          var go = true
-          while (go) {
-            if (p >= b.length) return None
-            val n = b(p) & 0xff
-            p += 1 + n
-            if (n == 0) go = false
-          }
-        case 0x2c => // image descriptor
-          if (p + 10 > b.length) return None
-          def u16(i: Int) = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-          val w = u16(p + 5)
-          val h = u16(p + 7)
-          val ipacked = b(p + 9) & 0xff
-          if ((ipacked & 0x80) != 0 || (ipacked & 0x40) != 0) return None // LCT / interlace
-          if (w <= 0 || h <= 0 || w.toLong * h * 3 > 64L * 1024 * 1024) return None
-          p += 10
-          if (p >= b.length) return None
-          val minCodeSize = b(p) & 0xff
-          p += 1
-          val lzw = new java.io.ByteArrayOutputStream()
-          var go = true
-          while (go) {
-            if (p >= b.length) return None
-            val n = b(p) & 0xff
-            if (n == 0) { p += 1; go = false }
-            else {
-              if (p + 1 + n > b.length) return None
-              lzw.write(b, p + 1, n)
-              p += 1 + n
-            }
-          }
-          val idx = lzwDecode(lzw.toByteArray, minCodeSize, w * h).getOrElse(return None)
-          val rgb = new Array[Byte](w * h * 3)
-          var i = 0
-          while (i < idx.length) {
-            val ci = idx(i) & 0xff
-            if (ci >= gctSize) return None // index beyond the palette
-            rgb(i * 3) = b(gctOff + ci * 3)
-            rgb(i * 3 + 1) = b(gctOff + ci * 3 + 1)
-            rgb(i * 3 + 2) = b(gctOff + ci * 3 + 2)
-            i += 1
-          }
-          return Some(HeaderCodec.RgbImage(w, h, rgb))
-        case 0x3b => return None // trailer before any image data
-        case _ => return None    // lost framing
-      }
-    }
-    None
   }
 }

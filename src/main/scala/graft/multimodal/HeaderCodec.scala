@@ -1,8 +1,7 @@
 package graft.multimodal
 
-/** REAL header-arithmetic decoders for uncompressed media formats —
-  * no codec library needed, just byte arithmetic over the published
-  * container layouts:
+/** Header parsers for the media containers, plus pixel and sample
+  * decoding — byte arithmetic over the published container layouts:
   *
   *   - BMP: BITMAPFILEHEADER ("BM", 14 bytes) + BITMAPINFOHEADER
   *     (width int32 LE at offset 18, height int32 LE at offset 22;
@@ -20,12 +19,14 @@ package graft.multimodal
   *     width u16 BE at +3/+5 in the segment body). Dimension
   *     extraction needs no entropy decoding — SOF precedes the scan.
   *
-  * These replace the stub behind [[Multimodal.MediaCodec.decode]] for
-  * the formats they recognize (the reference pipeline treats media as
-  * opaque payloads — data_manager.py stores text only — so this is
-  * beyond-reference capability); unrecognized bytes still fall through
-  * to the deterministic stub. All parsers are total: malformed or
-  * truncated headers return None, never throw.
+  * BMP pixels and WAV samples are decoded here by hand, because the
+  * `multimodal_features_raw` SQL oracle mirrors exactly these readers;
+  * PNG, GIF and JPEG pixels come from the JDK's `javax.imageio`
+  * readers through the same [[decodePixels]] entry point. The
+  * reference pipeline treats media as opaque payloads (data_manager.py
+  * stores text only), so this is beyond-reference capability. All
+  * parsers are total: malformed or truncated input returns None, never
+  * throws.
   */
 object HeaderCodec extends Serializable {
 
@@ -117,85 +118,50 @@ object HeaderCodec extends Serializable {
 
   final case class RgbImage(width: Int, height: Int, rgb: Array[Byte])
 
-  /** REAL PNG pixel decode for the 8-bit truecolor / no-interlace
-    * profile (what [[pngBytes]] emits): walk the chunks, CRC-verify
-    * and concatenate the IDAT payloads, inflate with the JDK
-    * `java.util.zip.Inflater`, then reverse the per-row scanline
-    * filters (None/Sub/Up/Average/Paeth — the full PNG filter set).
-    * Returns w·h·3 RGB bytes; None for other color types, bad CRCs,
-    * short streams, or any zlib error — total, never throws.
+  /** Decoded pixels may take at most this many RGB bytes (w·h·3). */
+  private val maxPixelBytes = 64L * 1024 * 1024
+
+  /** Pixels of any supported image container, as RGB bytes. BMP goes
+    * through [[decodeBmpPixels]] (the SQL oracle mirrors it); PNG, GIF
+    * and JPEG, chosen by magic number only, go through the JDK's
+    * `javax.imageio` reader for that format, fed from memory (no cache
+    * file). The one size cap is checked against the header dims before
+    * any pixel is read. A reader that throws or warns yields None: on
+    * a truncated JPEG, ImageIO warns and fills the rest with gray.
+    * Total, never throws.
     */
-  def decodePngPixels(b: Array[Byte]): Option[RgbImage] = {
-    val dims = parsePng(b).getOrElse(return None)
-    // IHDR data: depth @24, colorType @25, compression @26, filter
-    // @27, interlace @28 — only depth 8 / truecolor 2 / method 0 here
-    if (u8(b, 24) != 8 || u8(b, 25) != 2 || u8(b, 26) != 0 ||
-      u8(b, 27) != 0 || u8(b, 28) != 0) return None
-    val w = dims.width
-    val h = dims.height
-    if (w.toLong * h * 3 > 64L * 1024 * 1024) return None // bound decode memory
-    // collect IDAT payloads
-    val idat = new java.io.ByteArrayOutputStream()
-    var i = 8 + 25 // after IHDR chunk
-    var sawEnd = false
-    while (!sawEnd && i + 12 <= b.length) {
-      val len = i32be(b, i)
-      if (len < 0 || i + 12 + len > b.length) return None
-      val typ = new String(b, i + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      if (typ == "IDAT") {
-        val crc = new java.util.zip.CRC32
-        crc.update(b, i + 4, 4 + len)
-        if (crc.getValue != (i32be(b, i + 8 + len) & 0xffffffffL)) return None
-        idat.write(b, i + 8, len)
-      } else if (typ == "IEND") sawEnd = true
-      i += 12 + len
+  def decodePixels(b: Array[Byte]): Option[RgbImage] =
+    decodeBmpPixels(b).orElse {
+      if (isPng(b)) readImage(b, "png")
+      else if (isGif(b)) readImage(b, "gif")
+      else if (isJpeg(b)) readImage(b, "jpeg")
+      else None
     }
-    if (!sawEnd || idat.size == 0) return None
-    val stride = w * 3
-    val raw = new Array[Byte]((stride + 1) * h)
-    val inf = new java.util.zip.Inflater()
+
+  private def readImage(b: Array[Byte], format: String): Option[RgbImage] = {
+    val reader = javax.imageio.ImageIO.getImageReadersByFormatName(format).next()
     try {
-      inf.setInput(idat.toByteArray)
-      var off = 0
-      while (off < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, off, raw.length - off)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        off += n
+      var warned = false
+      reader.addIIOReadWarningListener((_, _) => warned = true)
+      reader.setInput(new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(b)), true, true)
+      val w = reader.getWidth(0)
+      val h = reader.getHeight(0)
+      if (w <= 0 || h <= 0 || w.toLong * h * 3 > maxPixelBytes) return None
+      val img = reader.read(0)
+      if (warned) return None
+      val argb = img.getRGB(0, 0, w, h, null, 0, w)
+      val out = new Array[Byte](w * h * 3)
+      var i = 0
+      while (i < argb.length) {
+        out(i * 3) = (argb(i) >> 16).toByte
+        out(i * 3 + 1) = (argb(i) >> 8).toByte
+        out(i * 3 + 2) = argb(i).toByte
+        i += 1
       }
-      if (off < raw.length) return None
-    } catch { case _: java.util.zip.DataFormatException => return None }
-    finally inf.end()
-    // unfilter
-    val out = new Array[Byte](stride * h)
-    var y = 0
-    while (y < h) {
-      val f = u8(raw, y * (stride + 1))
-      val rowIn = y * (stride + 1) + 1
-      val rowOut = y * stride
-      if (f > 4) return None
-      var x = 0
-      while (x < stride) {
-        val cur = u8(raw, rowIn + x)
-        val left = if (x >= 3) u8(out, rowOut + x - 3) else 0
-        val up = if (y > 0) u8(out, rowOut - stride + x) else 0
-        val ul = if (y > 0 && x >= 3) u8(out, rowOut - stride + x - 3) else 0
-        val v = f match {
-          case 0 => cur
-          case 1 => cur + left
-          case 2 => cur + up
-          case 3 => cur + ((left + up) >> 1)
-          case 4 => // Paeth predictor
-            val p = left + up - ul
-            val pa = math.abs(p - left); val pb = math.abs(p - up)
-            val pc = math.abs(p - ul)
-            cur + (if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul)
-        }
-        out(rowOut + x) = v.toByte
-        x += 1
-      }
-      y += 1
-    }
-    Some(RgbImage(w, h, out))
+      Some(RgbImage(w, h, out))
+    } catch { case scala.util.control.NonFatal(_) => None }
+    finally reader.dispose()
   }
 
   /** REAL BMP pixel decode: uncompressed 24-bpp, BITMAPINFOHEADER,
@@ -207,7 +173,7 @@ object HeaderCodec extends Serializable {
     if (u16le(b, 28) != 24 || i32le(b, 30) != 0) return None // bpp / BI_RGB only
     val w = dims.width
     val h = dims.height
-    if (w.toLong * h * 3 > 64L * 1024 * 1024) return None
+    if (w.toLong * h * 3 > maxPixelBytes) return None
     val topDown = i32le(b, 22) < 0
     val dataOff = u32le(b, 10)
     val rowSize = ((w * 3 + 3) / 4) * 4
@@ -427,9 +393,8 @@ object HeaderCodec extends Serializable {
 
   /** REAL PNG: signature + IHDR (valid CRC) + one IDAT holding a
     * GENUINE zlib stream (JDK Deflater over filter-0 scanlines of
-    * [[pngNoisePixels]]) + IEND. [[decodePngPixels]] round-trips it to
-    * the exact pixel bytes — nothing stubbed in this container
-    * anymore (r3 verdict #4).
+    * [[pngNoisePixels]]) + IEND. [[decodePixels]] round-trips it to
+    * the exact pixel bytes.
     */
   def pngBytes(w: Int, h: Int, seed: Long): Array[Byte] = {
     require(w > 0 && h > 0)

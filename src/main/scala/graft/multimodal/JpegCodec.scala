@@ -2,22 +2,14 @@ package graft.multimodal
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Baseline JPEG (ITU T.81) encode/decode — JDK-only, no codec
-  * library. Completes the last image-format payload path (r4 verdict
-  * "Next round" #8): PNG and BMP features were already content-derived;
-  * with this, the synthetic JPEG rows carry a REAL entropy-coded scan
-  * and the extractor decodes it back to pixels.
+/** Baseline JPEG (ITU T.81) encoder for the synthetic media table:
+  * the JPEG rows and the MJPEG-in-AVI frames carry a REAL entropy-coded
+  * scan, which [[HeaderCodec.decodePixels]] decodes back to pixels
+  * through the JDK's JPEG reader.
   *
-  * Scope (the honest contract): baseline sequential DCT, 8-bit,
-  * 3-component YCbCr, NO chroma subsampling (1x1x1), no restart
-  * markers, standard Annex K Huffman tables on encode. The decoder
-  * reads DQT/DHT generically from the stream (it decodes any
-  * 1x1x1-sampled baseline file, not just our own bytes) and declines
-  * anything outside scope by returning None — the caller falls back to
-  * the header-dims + hash-stub path, exactly like every other codec
-  * guard in [[Multimodal.MediaCodec]].
-  *
-  * The reference treats media as opaque blobs, so this is
+  * Scope: baseline sequential DCT, 8-bit, 3-component YCbCr, NO chroma
+  * subsampling (1x1x1), no restart markers, standard Annex K Huffman
+  * tables. The reference treats media as opaque blobs, so this is
   * beyond-reference polish; the Spark-side contract (batched
   * mapPartitions, schema, null-safety) is unchanged.
   */
@@ -69,7 +61,8 @@ object JpegCodec extends Serializable {
     0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa)
 
   /** Near-lossless quant table (all 1s): round-trip error is only the
-    * FDCT/IDCT float rounding, so specs can assert a tight tolerance.
+    * DCT and color-transform rounding, so specs can assert a tight
+    * tolerance.
     */
   val flatQuant: Array[Int] = Array.fill(64)(1)
 
@@ -79,18 +72,11 @@ object JpegCodec extends Serializable {
   private final class HuffTable(bits: Array[Int], vals: Array[Int]) {
     val size = new Array[Int](256)
     val code = new Array[Int](256)
-    // decode side: for each length, first code and index into vals
-    val minCode = new Array[Int](17)
-    val maxCode = new Array[Int](17) // -1 = no codes of this length
-    val valPtr = new Array[Int](17)
-    val values: Array[Int] = vals
     locally {
       var c = 0
       var k = 0
       var l = 1
       while (l <= 16) {
-        minCode(l) = c
-        valPtr(l) = k
         var i = 0
         while (i < bits(l)) {
           size(vals(k)) = l
@@ -99,7 +85,6 @@ object JpegCodec extends Serializable {
           k += 1
           i += 1
         }
-        maxCode(l) = if (bits(l) > 0) c - 1 else -1
         c <<= 1
         l += 1
       }
@@ -111,7 +96,7 @@ object JpegCodec extends Serializable {
   private val acLum = new HuffTable(acLumBits, acLumVals)
   private val acChr = new HuffTable(acChrBits, acChrVals)
 
-  // ---- bit IO with 0xFF byte stuffing ----
+  // ---- bit output with 0xFF byte stuffing ----
 
   private final class BitWriter(out: ArrayBuffer[Byte]) {
     private var acc = 0
@@ -132,48 +117,6 @@ object JpegCodec extends Serializable {
     /** pad with 1-bits to a byte boundary (T.81 F.1.2.3) */
     def flush(): Unit = if (nbits > 0) put(0xff, 8 - nbits)
   }
-
-  private final class BitReader(b: Array[Byte], var pos: Int) {
-    private var acc = 0
-    private var nbits = 0
-    var badMarker = false
-    def bit(): Int = {
-      if (nbits == 0) {
-        if (pos >= b.length) { badMarker = true; return 0 }
-        var v = b(pos) & 0xff
-        pos += 1
-        if (v == 0xff) {
-          if (pos >= b.length) { badMarker = true; return 0 }
-          val m = b(pos) & 0xff
-          if (m == 0x00) pos += 1 // stuffed
-          else { badMarker = true; v = 0xff } // real marker mid-scan
-        }
-        acc = v; nbits = 8
-      }
-      nbits -= 1
-      (acc >> nbits) & 1
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def decode(t: HuffTable): Int = {
-      var c = bit()
-      var l = 1
-      while (l <= 16 && (t.maxCode(l) < 0 || c > t.maxCode(l))) {
-        c = (c << 1) | bit()
-        l += 1
-      }
-      if (l > 16) { badMarker = true; return 0 }
-      t.values(t.valPtr(l) + (c - t.minCode(l)))
-    }
-  }
-
-  /** T.81 F.12 EXTEND: map an s-bit magnitude to its signed value. */
-  @inline private def extend(v: Int, s: Int): Int =
-    if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
 
   @inline private def bitLen(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
 
@@ -213,28 +156,6 @@ object JpegCodec extends Serializable {
         u += 1
       }
       v += 1
-    }
-  }
-
-  private def idct(in: Array[Double], out: Array[Double]): Unit = {
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        var s = 0.0
-        var v = 0
-        while (v < 8) {
-          var u = 0
-          while (u < 8) {
-            s += cc(u) * cc(v) * in(v * 8 + u) * cosT(x * 8 + u) * cosT(y * 8 + v)
-            u += 1
-          }
-          v += 1
-        }
-        out(y * 8 + x) = 0.25 * s
-        x += 1
-      }
-      y += 1
     }
   }
 
@@ -361,188 +282,4 @@ object JpegCodec extends Serializable {
     */
   def jpegScanBytes(w: Int, h: Int, seed: Long): Array[Byte] =
     encodeBaseline(w, h, HeaderCodec.pngNoisePixels(w, h, seed))
-
-  // ---- decoder ----
-
-  /** Decode a baseline 1x1x1-sampled 8-bit JPEG to RGB. Returns None
-    * for anything outside scope (subsampling, progressive, missing
-    * scan, 12-bit, >3 components, restart intervals) or corrupt data —
-    * never throws.
-    */
-  def decodePixels(b: Array[Byte]): Option[HeaderCodec.RgbImage] = {
-    if (b == null || b.length < 4 ||
-      b(0) != 0xff.toByte || b(1) != 0xd8.toByte) return None
-    val quant = Array.ofDim[Int](4, 64)
-    val qSeen = new Array[Boolean](4)
-    val huff = new Array[HuffTable](8) // (cls << 2) | id
-    var w = 0
-    var h = 0
-    var nComp = 0
-    val compQ = new Array[Int](3)
-    val compDc = new Array[Int](3)
-    val compAc = new Array[Int](3)
-    var scanStart = -1
-    var i = 2
-    // marker walk
-    while (scanStart < 0 && i + 4 <= b.length) {
-      if (b(i) != 0xff.toByte) return None
-      val m = b(i + 1) & 0xff
-      if (m == 0xd9) return None // EOI before SOS
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (len < 2 || i + 2 + len > b.length) return None
-      val seg = i + 4
-      val segLen = len - 2
-      m match {
-        case 0xdb => // DQT (possibly several tables per segment)
-          var p = seg
-          while (p < seg + segLen) {
-            val pq = (b(p) & 0xff) >> 4
-            val id = b(p) & 0x0f
-            if (pq != 0 || id > 3 || p + 1 + 64 > seg + segLen) return None
-            var k = 0
-            while (k < 64) { quant(id)(zigzag(k)) = b(p + 1 + k) & 0xff; k += 1 }
-            qSeen(id) = true
-            p += 65
-          }
-        case 0xc4 => // DHT (possibly several tables per segment)
-          var p = seg
-          while (p < seg + segLen) {
-            val cls = (b(p) & 0xff) >> 4
-            val id = b(p) & 0x0f
-            if (cls > 1 || id > 3 || p + 17 > seg + segLen) return None
-            val bits = new Array[Int](17)
-            var total = 0
-            var l = 1
-            while (l <= 16) { bits(l) = b(p + l) & 0xff; total += bits(l); l += 1 }
-            if (p + 17 + total > seg + segLen) return None
-            val vals = new Array[Int](total)
-            var k = 0
-            while (k < total) { vals(k) = b(p + 17 + k) & 0xff; k += 1 }
-            huff((cls << 2) | id) = new HuffTable(bits, vals)
-            p += 17 + total
-          }
-        case 0xc0 => // SOF0 baseline
-          if (segLen < 6) return None
-          if ((b(seg) & 0xff) != 8) return None // precision
-          h = ((b(seg + 1) & 0xff) << 8) | (b(seg + 2) & 0xff)
-          w = ((b(seg + 3) & 0xff) << 8) | (b(seg + 4) & 0xff)
-          nComp = b(seg + 5) & 0xff
-          if (w <= 0 || h <= 0 || nComp != 3) return None
-          if (segLen < 6 + 3 * 3) return None // component entries must fit the segment
-          if (w.toLong * h * 3 > 64L * 1024 * 1024) return None
-          var c = 0
-          while (c < 3) {
-            val samp = b(seg + 6 + c * 3 + 1) & 0xff
-            if (samp != 0x11) return None // 1x1 sampling only
-            compQ(c) = b(seg + 6 + c * 3 + 2) & 0x0f
-            if (compQ(c) > 3) return None // quant table id out of range
-            c += 1
-          }
-        case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 |
-             0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
-          return None // non-baseline SOF
-        case 0xdd => return None // DRI: restart markers out of scope
-        case 0xda => // SOS
-          if (segLen < 1 + 3 * 2 + 3 || nComp != 3) return None
-          if ((b(seg) & 0xff) != 3) return None
-          var c = 0
-          while (c < 3) {
-            val tables = b(seg + 1 + c * 2 + 1) & 0xff
-            compDc(c) = tables >> 4
-            compAc(c) = tables & 0x0f
-            if (compDc(c) > 3 || compAc(c) > 3) return None // table id out of range
-            c += 1
-          }
-          scanStart = i + 2 + len
-        case _ => // APPn / COM / others: skip
-      }
-      if (scanStart < 0) i += 2 + len
-    }
-    if (scanStart < 0 || w == 0) return None
-    var c = 0
-    while (c < 3) {
-      if (!qSeen(compQ(c)) || huff(compDc(c)) == null || huff((1 << 2) | compAc(c)) == null)
-        return None
-      c += 1
-    }
-
-    val br = new BitReader(b, scanStart)
-    val bx = (w + 7) / 8
-    val by = (h + 7) / 8
-    val planes = Array.ofDim[Double](3, bx * 8 * by * 8)
-    val coef = new Array[Double](64)
-    val pix = new Array[Double](64)
-    val zz = new Array[Int](64)
-    val prevDc = new Array[Int](3)
-    var myy = 0
-    while (myy < by) {
-      var mxx = 0
-      while (mxx < bx) {
-        c = 0
-        while (c < 3) {
-          val dcT = huff(compDc(c))
-          val acT = huff((1 << 2) | compAc(c))
-          val q = quant(compQ(c))
-          java.util.Arrays.fill(zz, 0)
-          val s = br.decode(dcT)
-          if (s > 15) return None
-          prevDc(c) += extend(br.bits(s), s)
-          zz(0) = prevDc(c)
-          var k = 1
-          while (k < 64) {
-            val rs = br.decode(acT)
-            val run = rs >> 4
-            val sz = rs & 0x0f
-            if (sz == 0) {
-              if (run == 15) k += 16 // ZRL
-              else k = 64 // EOB
-            } else {
-              k += run
-              if (k > 63) return None
-              zz(k) = extend(br.bits(sz), sz)
-              k += 1
-            }
-          }
-          if (br.badMarker) return None
-          var j = 0
-          while (j < 64) { coef(zigzag(j)) = zz(j).toDouble * q(zigzag(j)); j += 1 }
-          idct(coef, pix)
-          val plane = planes(c)
-          var yy = 0
-          while (yy < 8) {
-            var xx = 0
-            while (xx < 8) {
-              plane((myy * 8 + yy) * (bx * 8) + mxx * 8 + xx) = pix(yy * 8 + xx)
-              xx += 1
-            }
-            yy += 1
-          }
-          c += 1
-        }
-        mxx += 1
-      }
-      myy += 1
-    }
-    // YCbCr → RGB, crop to (w, h)
-    val out = new Array[Byte](w * h * 3)
-    @inline def clamp(v: Double): Byte =
-      math.max(0, math.min(255, math.round(v))).toByte
-    val stride = bx * 8
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val yv = planes(0)(y * stride + x) + 128.0
-        val cb = planes(1)(y * stride + x)
-        val cr = planes(2)(y * stride + x)
-        val o = (y * w + x) * 3
-        out(o) = clamp(yv + 1.402 * cr)
-        out(o + 1) = clamp(yv - 0.344136 * cb - 0.714136 * cr)
-        out(o + 2) = clamp(yv + 1.772 * cb)
-        x += 1
-      }
-      y += 1
-    }
-    Some(HeaderCodec.RgbImage(w, h, out))
-  }
 }

@@ -4,19 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed in per-partition BATCHES
-  * (the JVM analog of `mapInPandas` — one decoder init per partition,
-  * vectorized-ish inner loop, bounded batch memory).
+  * (the JVM analog of `mapInPandas` — bounded batch memory).
   *
-  * Decode coverage (r5): PNG (zlib inflate + unfilter), BMP (raw
-  * 24-bpp), JPEG (baseline Huffman + dequant + IDCT, [[JpegCodec]]),
-  * GIF (LZW, [[GifCodec]]), WAV (PCM16) and MJPEG-in-AVI video
-  * ([[AviCodec]]: RIFF chunk walk + first-frame JPEG decode) are
-  * decoded FOR REAL — JDK-only, no codec library — with
-  * content-derived features (channel means, luminance histogram;
-  * RMS/peak/ZCR, amplitude histogram). No stub format remains for
-  * the synthetic media kinds; bytes no codec recognizes still take
-  * the deterministic hash fallback, so the Spark-side contract —
-  * schema, batch shape, partition-level resource lifecycle, null
+  * Decode coverage: BMP (raw 24-bpp) and WAV (PCM16) by hand in
+  * [[HeaderCodec]]; PNG, GIF and JPEG through the JDK's
+  * `javax.imageio` readers behind [[HeaderCodec.decodePixels]]; and
+  * MJPEG-in-AVI video ([[AviCodec]]: RIFF chunk walk + first-frame
+  * decode) — no library beyond the JDK, with content-derived features
+  * (channel means, luminance histogram; RMS/peak/ZCR, amplitude
+  * histogram). No stub format remains for the synthetic media kinds;
+  * bytes no codec recognizes still take the deterministic hash
+  * fallback, so the Spark-side contract — schema, batch shape, null
   * handling — is uniform for arbitrary foreign payloads.
   */
 object Multimodal {
@@ -40,11 +38,11 @@ object Multimodal {
       feature: Array[Float] // fixed-dim feature vector (stub: hashed bytes)
   )
 
-  /** The media codec (formerly the stub): real JDK-only decoders for
-    * every synthetic container — [[HeaderCodec]] (BMP/PNG/WAV + all
-    * header parsers), [[JpegCodec]], [[GifCodec]], [[AviCodec]] — with
-    * a deterministic hash fallback for unrecognized payloads so
-    * decode() is total over arbitrary bytes.
+  /** The media codec: real decoders for every synthetic container —
+    * [[HeaderCodec]] (all header parsers, BMP/WAV by hand, PNG/GIF/JPEG
+    * through `javax.imageio`) and [[AviCodec]] — with a deterministic
+    * hash fallback for unrecognized payloads so decode() is total over
+    * arbitrary bytes.
     */
   object MediaCodec extends Serializable {
     val featureDim = 16
@@ -118,10 +116,10 @@ object Multimodal {
 
     /** Decode: REAL header parsing for BMP/PPM/PNG/GIF/JPEG
       * (width/height), WAV (duration) and AVI (dims + duration) plus
-      * REAL pixel/sample decode — PNG (zlib inflate + unfilter), BMP
-      * (raw 24-bpp), JPEG (baseline), GIF (LZW), WAV (PCM16), AVI
-      * first frame (MJPEG) — with content-derived features. Bytes no
-      * codec recognizes keep the deterministic content-hash fallback.
+      * REAL pixel/sample decode — BMP/PNG/GIF/JPEG through
+      * [[HeaderCodec.decodePixels]], WAV (PCM16), AVI first frame
+      * (MJPEG) — with content-derived features. Bytes no codec
+      * recognizes keep the deterministic content-hash fallback.
       * Byte-stable, null-safe, never throws.
       */
     def decode(row: MediaRow): MediaFeatures = {
@@ -131,7 +129,7 @@ object Multimodal {
         ((mix(h + 3 + d) & 0xffff).toFloat / 0xffff.toFloat) * 2f - 1f
       }
       // full-content paths first (dims AND pixels/samples)
-      decodeAnyImage(bytes) match {
+      HeaderCodec.decodePixels(bytes) match {
         case Some(img) =>
           return MediaFeatures(row.media_id, row.kind, bytes.length, h,
             img.width, img.height, 0L, imageFeature(img))
@@ -144,7 +142,7 @@ object Multimodal {
         case None =>
       }
       // video: MJPEG-in-AVI — real header meta + first-frame content
-      // feature through the baseline JPEG decoder
+      // feature
       AviCodec.parseAvi(bytes) match {
         case Some(meta) =>
           val feat = AviCodec.firstFramePixels(bytes)
@@ -171,15 +169,6 @@ object Multimodal {
       }
     }
 
-    /** Any decodable image container → RGB pixels (PNG zlib, BMP raw,
-      * JPEG baseline, GIF LZW).
-      */
-    def decodeAnyImage(bytes: Array[Byte]): Option[HeaderCodec.RgbImage] =
-      HeaderCodec.decodePngPixels(bytes)
-        .orElse(HeaderCodec.decodeBmpPixels(bytes))
-        .orElse(JpegCodec.decodePixels(bytes))
-        .orElse(GifCodec.decodePixels(bytes))
-
     /** REAL resize: decode any supported container, box-filter
       * resample with pure integer math (each target pixel averages its
       * proportional source rectangle — deterministic, no float), emit
@@ -188,7 +177,7 @@ object Multimodal {
       * payloads).
       */
     def resize(bytes: Array[Byte], w: Int, h: Int): Array[Byte] =
-      decodeAnyImage(bytes) match {
+      HeaderCodec.decodePixels(bytes) match {
         case Some(img) => HeaderCodec.bmpBytesFromRgb(resampleBox(img, w, h))
         case None =>
           val h0 = hashBytes(bytes)
@@ -248,10 +237,11 @@ object Multimodal {
     }
   }
 
-  /** Batched decode/feature-extract over partitions: resources (a real
-    * codec handle) init once per partition; rows stream through in
-    * `batchSize` groups so peak memory is bounded by batch × row size,
-    * not partition size.
+  /** Batched decode/feature-extract over partitions: rows stream
+    * through in `batchSize` groups so peak memory is bounded by batch ×
+    * row size, not partition size. Each row's decode creates and
+    * disposes its own `javax.imageio` reader, so no codec handle
+    * outlives a row.
     */
   def extractFeatures(
       spark: SparkSession,
@@ -260,7 +250,6 @@ object Multimodal {
   ): Dataset[MediaFeatures] = {
     import spark.implicits._
     media.mapPartitions { rows =>
-      // [real codec: open native handle here, close via final batch]
       rows.grouped(batchSize).flatMap { batch =>
         batch.map(MediaCodec.decode)
       }

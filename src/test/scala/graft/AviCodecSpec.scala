@@ -14,11 +14,11 @@ class AviCodecSpec extends AnyFunSuite {
       assert(meta.width == w && meta.height == h && meta.nFrames == n)
       assert(meta.usPerFrame == 1000000L / fps)
       assert(meta.durationMs == (1000000L / fps) * n / 1000L)
-      // first frame decodes through the baseline JPEG decoder to the
+      // first frame decodes through HeaderCodec.decodePixels to the
       // exact pixels of the standalone frame-0 encode
       val frame = AviCodec.firstFramePixels(bytes).get
       assert(frame.width == w && frame.height == h)
-      val standalone = JpegCodec.decodePixels(
+      val standalone = HeaderCodec.decodePixels(
         JpegCodec.jpegScanBytes(w, h, seed * 131L)).get
       assert(frame.rgb.toSeq == standalone.rgb.toSeq)
     }

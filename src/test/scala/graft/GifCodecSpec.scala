@@ -7,22 +7,21 @@ import graft.multimodal.{GifCodec, HeaderCodec}
 class GifCodecSpec extends AnyFunSuite {
 
   test("LZW round-trips index streams (incl. width growth and 4096 dict reset)") {
-    for ((n, seed) <- Seq((0, 1L), (1, 2L), (7, 3L), (255, 4L), (300, 5L),
+    // an empty stream is a GIF of no pixels: check the encoder's codes
+    assert(GifCodec.lzwEncode(Array.emptyByteArray, 8).toSeq == GifFixtures.emptyLzw(8))
+    for ((n, seed) <- Seq((1, 2L), (7, 3L), (255, 4L), (300, 5L),
       (4096, 6L), (10000, 7L), (20000, 8L))) {
-      val idx = GifCodec.gifIndexPixels(math.max(1, n), 1, seed).take(n)
-      val enc = GifCodec.lzwEncode(idx, 8)
-      assert(GifCodec.lzwDecode(enc, 8, n).map(_.toSeq).contains(idx.toSeq),
-        s"round-trip failed at n=$n")
+      val idx = GifCodec.gifIndexPixels(n, 1, seed)
+      assert(GifFixtures.roundTrip(idx, 8).contains(idx.toSeq), s"round-trip failed at n=$n")
     }
     // low-entropy stream (long runs) exercises deep dictionary chains
     val runs = Array.tabulate(8000)(i => ((i / 97) % 5).toByte)
     val enc = GifCodec.lzwEncode(runs, 8)
     assert(enc.length < runs.length / 2) // actually compresses
-    assert(GifCodec.lzwDecode(enc, 8, runs.length).map(_.toSeq).contains(runs.toSeq))
+    assert(GifFixtures.roundTrip(runs, 8).contains(runs.toSeq))
     // small min-code-size path (3-bit palette)
     val small = Array.tabulate(500)(i => (i % 8).toByte)
-    val enc3 = GifCodec.lzwEncode(small, 3)
-    assert(GifCodec.lzwDecode(enc3, 3, small.length).map(_.toSeq).contains(small.toSeq))
+    assert(GifFixtures.roundTrip(small, 3).contains(small.toSeq))
   }
 
   test("decodes a known third-party minimal GIF (1x1 white, spec-style bytes)") {
@@ -35,7 +34,7 @@ class GifCodecSpec extends AnyFunSuite {
       0x2c, 0x00, 0x00, 0x00, 0x00, 0x01, 0x00, 0x01, 0x00, 0x00, // image desc
       0x02, 0x02, 0x44, 0x01, 0x00, // minCodeSize 2, sub-block, terminator
       0x3b).map(_.toByte)
-    val img = GifCodec.decodePixels(bytes).get
+    val img = HeaderCodec.decodePixels(bytes).get
     assert(img.width == 1 && img.height == 1)
     assert(img.rgb.toSeq == Seq(0xff.toByte, 0xff.toByte, 0xff.toByte))
   }
@@ -45,7 +44,7 @@ class GifCodecSpec extends AnyFunSuite {
       val bytes = GifCodec.gifPixelBytes(w, h, seed)
       // header dims parse like any other GIF
       assert(HeaderCodec.parseGif(bytes).contains(HeaderCodec.ImageDims(w, h)))
-      val img = GifCodec.decodePixels(bytes).get
+      val img = HeaderCodec.decodePixels(bytes).get
       assert(img.width == w && img.height == h)
       val idx = GifCodec.gifIndexPixels(w, h, seed)
       val expected = new Array[Byte](w * h * 3)
@@ -63,23 +62,31 @@ class GifCodecSpec extends AnyFunSuite {
     val good = GifCodec.gifPixelBytes(16, 16, 42L)
     // every truncation prefix: total, never throws
     (0 until good.length by 7).foreach { n =>
-      GifCodec.decodePixels(good.take(n)) // must not throw
+      HeaderCodec.decodePixels(good.take(n)) // must not throw
     }
     (0 until good.length).foreach { i => // single-byte corruption fuzz
       val bad = good.clone(); bad(i) = (bad(i) ^ 0x5a).toByte
-      GifCodec.decodePixels(bad) // must not throw
+      HeaderCodec.decodePixels(bad) // must not throw
     }
-    // interlace flag declines
-    val inter = good.clone()
-    val descOff = 13 + 256 * 3
-    assert(inter(descOff) == 0x2c)
-    inter(descOff + 9) = 0x40.toByte
-    assert(GifCodec.decodePixels(inter).isEmpty)
+    // an interlaced GIF decodes: the stream's k-th row is the k-th row
+    // of the GIF interlace order (every 8th from 0, every 8th from 4,
+    // every 4th from 2, every 2nd from 1)
+    for ((w, h, seed) <- Seq((16, 16, 42L), (5, 11, 43L), (64, 37, 44L))) {
+      val plain = GifCodec.gifPixelBytes(w, h, seed)
+      val inter = plain.clone()
+      val descOff = 13 + 256 * 3
+      assert(inter(descOff) == 0x2c)
+      inter(descOff + 9) = 0x40.toByte
+      val rows = HeaderCodec.decodePixels(plain).get.rgb.grouped(w * 3).map(_.toSeq).toSeq
+      val got = HeaderCodec.decodePixels(inter).get.rgb.grouped(w * 3).map(_.toSeq).toSeq
+      val order = (0 until h by 8) ++ (4 until h by 8) ++ (2 until h by 4) ++ (1 until h by 2)
+      assert(order.map(got) == rows, s"interlace permutation at ${w}x$h")
+    }
     // the legacy header-only GIF (no image data) declines but parses dims
     val empty = HeaderCodec.gifBytes(320, 200)
-    assert(GifCodec.decodePixels(empty).isEmpty)
+    assert(HeaderCodec.decodePixels(empty).isEmpty)
     assert(HeaderCodec.parseGif(empty).contains(HeaderCodec.ImageDims(320, 200)))
-    // corrupt LZW: a code beyond the table
-    assert(GifCodec.lzwDecode(Array[Byte](-1, -1, -1), 8, 10).isEmpty)
+    // corrupt LZW (codes beyond the table): total
+    HeaderCodec.decodePixels(GifFixtures.gifOf(Array[Byte](-1, -1, -1), 8, 10, 1))
   }
 }

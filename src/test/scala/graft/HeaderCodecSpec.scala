@@ -146,14 +146,14 @@ class HeaderCodecSpec extends AnyFunSuite {
 
   test("PNG pixel decode: real zlib IDAT round-trips to the exact pixels") {
     for ((w, h, seed) <- Seq((1, 1, 3L), (5, 3, 7L), (16, 16, 42L))) {
-      val img = HeaderCodec.decodePngPixels(HeaderCodec.pngBytes(w, h, seed)).get
+      val img = HeaderCodec.decodePixels(HeaderCodec.pngBytes(w, h, seed)).get
       assert(img.width == w && img.height == h)
       assert(img.rgb.toSeq == HeaderCodec.pngNoisePixels(w, h, seed).toSeq)
     }
-    // corrupt one IDAT byte → CRC fails → None (no garbage pixels)
+    // corrupt the IDAT chunk type → no image data → None (no garbage pixels)
     val png = HeaderCodec.pngBytes(4, 4, 9L)
     png(40) = (png(40) ^ 0x55).toByte
-    assert(HeaderCodec.decodePngPixels(png).isEmpty)
+    assert(HeaderCodec.decodePixels(png).isEmpty)
   }
 
   test("PNG unfilter: hand-deflated Sub/Up/Average/Paeth scanlines decode exactly") {
@@ -187,14 +187,14 @@ class HeaderCodecSpec extends AnyFunSuite {
     val rawA = Array[Byte](
       1, 10, 20, 30, 1, 2, 3, // Sub: second pixel stores deltas vs left
       2, 3, 4, 5, 2, 3, 3)    // Up: deltas vs row above (per byte)
-    val a = HeaderCodec.decodePngPixels(pngWithIdat(2, 2, deflate(rawA))).get
+    val a = HeaderCodec.decodePixels(pngWithIdat(2, 2, deflate(rawA))).get
     // row0: (10,20,30),(11,22,33); row1 = cur + row0 bytes
     assert(a.rgb.toSeq == Seq[Byte](10, 20, 30, 11, 22, 33, 13, 24, 35, 13, 25, 36))
     // image B: row0 filter 3 (Average, up=0 so avg=left/2), row1 filter 4 (Paeth)
     val rawB = Array[Byte](
       3, 10, 20, 30, 6, 11, 16, // Average: v = cur + (left+0)/2 → (10,20,30),(11,21,31)
       4, 2, 2, 2, 1, 1, 1)      // Paeth row: predictor resolves per byte
-    val b = HeaderCodec.decodePngPixels(pngWithIdat(2, 2, deflate(rawB))).get
+    val b = HeaderCodec.decodePixels(pngWithIdat(2, 2, deflate(rawB))).get
     // row1 Paeth: x=0: p=up (left=0,ul=0 → pa=|up-0... predictor picks up) → 12,22,32
     //            x=1: left=12, up=11, ul=10 → p=13 → pa=1,pb=2,pc=3 → left → 13,23,33
     assert(b.rgb.slice(0, 6).toSeq == Seq[Byte](10, 20, 30, 11, 21, 31))
@@ -261,10 +261,15 @@ class HeaderCodecSpec extends AnyFunSuite {
         (i % 3 match { case 0 => r; case 1 => g; case _ => b }).toByte
       }
       val enc = JpegCodec.encodeBaseline(w, h, rgb)
-      val dec = JpegCodec.decodePixels(enc).get
+      val dec = HeaderCodec.decodePixels(enc).get
       assert(dec.width == w && dec.height == h)
-      assert(dec.rgb.toSeq == rgb.toSeq,
-        s"uniform ($r,$g,$b) did not survive: got ${dec.rgb.take(6).toSeq}")
+      // the decoded image is exactly uniform; its color is the source's
+      // up to the reader's fixed-point YCbCr→RGB rounding (±1 level)
+      val first = dec.rgb.take(3).toSeq
+      assert(dec.rgb.grouped(3).forall(_.toSeq == first),
+        s"uniform ($r,$g,$b) decoded non-uniform: ${dec.rgb.take(12).toSeq}")
+      assert(first.zip(Seq(r, g, b)).forall { case (d, s) => math.abs((d & 0xff) - s) <= 1 },
+        s"uniform ($r,$g,$b) decoded as ${first.map(_ & 0xff)}")
     }
   }
 
@@ -273,7 +278,7 @@ class HeaderCodecSpec extends AnyFunSuite {
     for ((w, h) <- Seq((8, 8), (17, 9), (33, 21))) {
       val rgb = HeaderCodec.pngNoisePixels(w, h, 42L + w)
       val enc = JpegCodec.encodeBaseline(w, h, rgb)
-      val dec = JpegCodec.decodePixels(enc).get
+      val dec = HeaderCodec.decodePixels(enc).get
       assert(dec.width == w && dec.height == h)
       val maxDiff = rgb.indices.map(i =>
         math.abs((rgb(i) & 0xff) - (dec.rgb(i) & 0xff))).max
@@ -288,13 +293,52 @@ class HeaderCodecSpec extends AnyFunSuite {
   test("JPEG baseline decoder declines out-of-scope streams, never throws") {
     import graft.multimodal.JpegCodec
     // legacy scanless synthetic JPEG (2x2 subsampling, no SOS)
-    assert(JpegCodec.decodePixels(HeaderCodec.jpegBytes(16, 16, 7L)).isEmpty)
-    // truncated real stream
+    assert(HeaderCodec.decodePixels(HeaderCodec.jpegBytes(16, 16, 7L)).isEmpty)
     val enc = JpegCodec.encodeBaseline(16, 16, HeaderCodec.pngNoisePixels(16, 16, 7L))
+    // truncated real stream: never throws, and never yields pixels (the
+    // reader only warns on a short scan and fills the rest with gray)
     (1 until enc.length by 37).foreach { cut =>
-      JpegCodec.decodePixels(enc.take(cut)) // must not throw
+      assert(HeaderCodec.decodePixels(enc.take(cut)).isEmpty, s"cut at $cut")
     }
-    assert(JpegCodec.decodePixels(Array[Byte](0x12, 0x34)).isEmpty)
-    assert(JpegCodec.decodePixels(null).isEmpty)
+    assert(HeaderCodec.decodePixels(Array[Byte](0x12, 0x34)).isEmpty)
+    assert(HeaderCodec.decodePixels(null).isEmpty)
+  }
+
+  test("decodePixels: PNG/GIF/JPEG dims over the 64 MB cap decline without allocating") {
+    import graft.multimodal.{GifCodec, JpegCodec}
+    // 4730 x 4730 x 3 bytes is just over 64 MiB; 4729 x 4729 x 3 is under
+    val side = 4730
+    assert(side.toLong * side * 3 > (64L << 20) && (side - 1).toLong * (side - 1) * 3 <= (64L << 20))
+    def be16(b: Array[Byte], i: Int, v: Int): Unit = { b(i) = (v >> 8).toByte; b(i + 1) = v.toByte }
+    def le16(b: Array[Byte], i: Int, v: Int): Unit = { b(i) = v.toByte; b(i + 1) = (v >> 8).toByte }
+    def be32(b: Array[Byte], i: Int, v: Int): Unit = { be16(b, i, v >> 16); be16(b, i + 2, v) }
+    val png = HeaderCodec.pngBytes(4, 4, 1L)
+    val gif = GifCodec.gifPixelBytes(4, 4, 1L)
+    val jpeg = JpegCodec.encodeBaseline(16, 16, HeaderCodec.pngNoisePixels(16, 16, 1L))
+    // the valid originals decode (and load each reader's classes)
+    Seq(png, gif, jpeg).foreach(b => assert(HeaderCodec.decodePixels(b).isDefined))
+    // PNG: IHDR dims, CRC recomputed so the header stays valid
+    be32(png, 16, side); be32(png, 20, side)
+    val crc = new java.util.zip.CRC32
+    crc.update(png, 12, 4 + 13)
+    be32(png, 29, crc.getValue.toInt)
+    // GIF: logical screen and image descriptor dims
+    Seq(6, 8, 13 + 256 * 3 + 5, 13 + 256 * 3 + 7).foreach(le16(gif, _, side))
+    // JPEG: SOF0 height and width
+    val sof = jpeg.indices.find(i => jpeg(i) == 0xff.toByte && jpeg(i + 1) == 0xc0.toByte).get
+    be16(jpeg, sof + 5, side); be16(jpeg, sof + 7, side)
+    val dims = HeaderCodec.ImageDims(side, side)
+    assert(HeaderCodec.parsePng(png).contains(dims) && HeaderCodec.parseGif(gif).contains(dims) &&
+      HeaderCodec.parseJpeg(jpeg).contains(dims))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread.getId
+    for ((name, b) <- Seq("png" -> png, "gif" -> gif, "jpeg" -> jpeg)) {
+      val before = mx.getThreadAllocatedBytes(tid)
+      assert(HeaderCodec.decodePixels(b).isEmpty, name)
+      val allocated = mx.getThreadAllocatedBytes(tid) - before
+      // a decode would allocate at least the 22 MB of one byte a pixel
+      assert(allocated < (8L << 20), s"$name allocated $allocated bytes")
+    }
   }
 }

@@ -153,7 +153,7 @@ class MultimodalSpec extends SparkTestBase {
           assert(d.width >= 1 && d.width <= 64 && d.height >= 1 && d.height <= 64)
           assert(m.media.last == 0x3b) // trailer
           // the LZW payload is real: it round-trips to the exact pixels
-          val img = graft.multimodal.GifCodec.decodePixels(m.media).get
+          val img = HeaderCodec.decodePixels(m.media).get
           assert(img.width == d.width && img.height == d.height)
         case "image/jpeg" =>
           assert(HeaderCodec.isJpeg(m.media))

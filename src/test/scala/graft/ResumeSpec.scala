@@ -192,4 +192,39 @@ class ResumeSpec extends SparkTestBase {
     assert(intercept[IllegalArgumentException](stray.checked(5)).getMessage.contains("ruleOrder"))
     assert(Resume.Manifest.parse(m.toJson) == m)
   }
+
+  test("a failed partition at concurrency 2 stops the run: nothing commits after it throws") {
+    val in = freshDir("in5")
+    val out = freshDir("out5")
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 40L).toDF(), in, nBuckets = 4)
+      // bucket 0, the first to run, holds a corrupt parquet file
+      import scala.jdk.CollectionConverters._
+      val victim = Files.list(TableIO.partitionDir(in, 0)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString).head
+      val original = Files.readAllBytes(victim)
+      Files.write(victim, "not a parquet file".getBytes("US-ASCII"))
+      intercept[Exception](Resume.run(spark, in, out, concurrency = 2))
+      val committed = TableIO.donePartitions(out)
+      assert(!committed.contains(0))
+      // wait until no Spark job has run for 2 s: a partition still
+      // running after run threw would commit in that time
+      val sc = spark.sparkContext
+      var quietSince = System.nanoTime()
+      val deadline = quietSince + 60L * 1000000000L
+      while (System.nanoTime() - quietSince < 2000000000L && System.nanoTime() < deadline) {
+        if (sc.statusTracker.getActiveJobIds().nonEmpty) quietSince = System.nanoTime()
+        Thread.sleep(50)
+      }
+      assert(TableIO.donePartitions(out) == committed, "partitions committed after run threw")
+      // repaired, the resume redoes exactly the partitions with no manifest
+      Files.write(victim, original)
+      val r = Resume.run(spark, in, out, concurrency = 2)
+      assert(r.skipped.toSet == committed)
+      assert(r.processed.toSet == (0 until 4).toSet -- committed)
+      assert(TableIO.donePartitions(out) == (0 until 4).toSet)
+    } finally {
+      Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
 }
