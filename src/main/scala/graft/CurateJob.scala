@@ -10,7 +10,7 @@ import graft.tableio.TableIO
   *   spark-submit --class graft.CurateJob <jar> \
   *     --input <transcripts table dir (Hive-bucketed by part_id)> \
   *     --output <curated table dir> \
-  *     [--concurrency 4] [--write-partitions 64] [--max-partitions N]
+  *     [--concurrency 2] [--write-partitions 64] [--max-partitions N]
   *
   * Resumable by construction: re-running the same command after a
   * kill processes only partitions missing from the output manifest
@@ -30,7 +30,7 @@ object CurateJob {
       sys.error("--input <dir> required (Hive-bucketed transcripts; " +
         "use TableIO.writeBucketedInput or an Iceberg bucket(N, conv_id) spec)"))
     val output = opts.getOrElse("output", sys.error("--output <dir> required"))
-    val concurrency = opts.getOrElse("concurrency", "2").toInt
+    val concurrency = opts.get("concurrency").fold(Resume.defaultConcurrency)(_.toInt)
     // local core count: SPARK_GRAFT_CPUS, else this host's processors
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)

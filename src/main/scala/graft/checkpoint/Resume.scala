@@ -24,25 +24,33 @@ import graft.tableio.TableIO
   * correction_stats, smart_corrector.py:90-96,252-260).
   *
   * Scale notes: the loop is over PARTITIONS (thousands at 10^12 turns),
-  * each processed with full cluster parallelism. A partition runs three
-  * Spark jobs: the input schema read, the salted shuffle's map stage and
-  * the write. The manifest metrics are observed on the write job itself
-  * (`Curate.metricAggs`, collected in its result stage), never read back;
-  * the write is validated on the driver against the committed parquet
-  * footers' row counts. `maxPartitions` lets tests simulate a kill after
-  * k partitions.
+  * each processed with full cluster parallelism. A partition runs two
+  * Spark jobs: the salted shuffle's map stage and the write (its input
+  * schema comes from one parquet footer on the driver,
+  * `TableIO.readPartition`). The manifest metrics are observed on the
+  * write job itself (`Curate.metricAggs`, collected in its result
+  * stage), never read back; the write is validated on the driver
+  * against the committed parquet footers' row counts. By default two
+  * partitions are in flight, so one partition's driver-side planning,
+  * commit, footer check and manifest write overlap the other's jobs.
+  * `maxPartitions` lets tests simulate a kill after k partitions.
   */
 object Resume {
 
   final case class RunResult(processed: Seq[Int], skipped: Seq[Int])
 
-  /** @param concurrency number of partitions in flight at once. Spark's
-    *   scheduler is thread-safe: each worker thread submits its
-    *   partition's jobs independently, keeping the cluster busy while
-    *   another partition is in its (cheap, driver-side) commit step.
-    *   Each partition still commits atomically and independently. On
-    *   the first failure the partitions not yet started are cancelled,
-    *   the in-flight ones finish, and then the failure is rethrown.
+  /** Partitions `run` keeps in flight unless told otherwise. */
+  val defaultConcurrency = 2
+
+  /** @param concurrency number of partitions in flight at once (at
+    *   least 1). Spark's scheduler is thread-safe: each worker thread
+    *   submits its partition's jobs independently, keeping the cluster
+    *   busy while another partition is in its (cheap, driver-side)
+    *   commit step. The worker threads inherit the caller's job group.
+    *   Each partition still commits atomically and independently, and
+    *   the output does not depend on the concurrency. On the first
+    *   failure the partitions not yet started are cancelled, the
+    *   in-flight ones finish, and then the failure is rethrown.
     */
   def run(
       spark: SparkSession,
@@ -52,8 +60,9 @@ object Resume {
       models: Curate.Models = Curate.defaultModels,
       writePartitions: Int = 8,
       maxPartitions: Int = Int.MaxValue,
-      concurrency: Int = 1
+      concurrency: Int = defaultConcurrency
   ): RunResult = {
+    require(concurrency >= 1, s"concurrency must be at least 1, got $concurrency")
     val inputParts = listInputPartitions(inputBase)
     val done = TableIO.donePartitions(outputBase)
     val todo = inputParts.filterNot(done.contains).sorted.take(maxPartitions)
@@ -74,22 +83,19 @@ object Resume {
       processed.add(p)
     }
 
-    if (concurrency <= 1) todo.foreach(processOne)
-    else {
-      val pool = Executors.newFixedThreadPool(concurrency)
-      val finished = new ExecutorCompletionService[Unit](pool)
-      val futures = todo.map(p => finished.submit(() => processOne(p)))
-      try todo.foreach(_ => finished.take().get())
-      catch {
-        case t: Throwable =>
-          // the first failure: no queued partition may start (and commit)
-          // after run has thrown
-          futures.foreach(_.cancel(false))
-          throw (t match { case e: ExecutionException => e.getCause; case _ => t })
-      } finally {
-        pool.shutdown() // in-flight partitions finish before run returns
-        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      }
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(concurrency, todo.size)))
+    val finished = new ExecutorCompletionService[Unit](pool)
+    val futures = todo.map(p => finished.submit(() => processOne(p)))
+    try todo.foreach(_ => finished.take().get())
+    catch {
+      case t: Throwable =>
+        // the first failure: no queued partition may start (and commit)
+        // after run has thrown
+        futures.foreach(_.cancel(false))
+        throw (t match { case e: ExecutionException => e.getCause; case _ => t })
+    } finally {
+      pool.shutdown() // in-flight partitions finish before run returns
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
     RunResult(processed.asScala.toSeq.sorted, done.toSeq.sorted)
   }
@@ -109,8 +115,7 @@ object Resume {
     * the driver (no Spark job).
     */
   private def footerRowCount(dir: Path, conf: Configuration): Long =
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
+    TableIO.parquetFiles(dir)
       .map { f =>
         val r = ParquetFileReader.open(
           HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))

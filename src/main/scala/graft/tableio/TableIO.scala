@@ -5,7 +5,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.{fs => hfs}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 
 /** Iceberg-shaped table seam (SURVEY.md §1.2): Hive-style partitioned
   * Parquet with the Iceberg semantics the engine needs — partition
@@ -90,8 +94,37 @@ object TableIO {
       .parquet(parts.map(p => partitionDir(base, p).toString): _*)
   }
 
-  def readPartition(spark: SparkSession, base: String, partId: Int): DataFrame =
-    spark.read.parquet(partitionDir(base, partId).toString)
+  /** One partition's rows, read with the schema of its first parquet
+    * file in name order. The footer is read and converted on the driver
+    * by the conversion Spark's parquet inference applies to each footer
+    * (`ParquetFileFormat.readSchemaFromFooter`: Spark's row metadata
+    * first, then `ParquetToSparkSchemaConverter` under the session's
+    * conf), so this is the schema `spark.read.parquet(dir)` infers with
+    * `mergeSchema` off, without the Spark job that inference runs.
+    */
+  def readPartition(spark: SparkSession, base: String, partId: Int): DataFrame = {
+    val dir = partitionDir(base, partId)
+    val first = new hfs.Path(parquetFiles(dir).headOption.getOrElse(
+      throw new IllegalArgumentException(s"no parquet file in partition directory $dir")).toUri)
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(first, spark.sparkContext.hadoopConfiguration))
+    val footer = try reader.getFooter finally reader.close()
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(dir.toString)
+  }
+
+  /** The parquet files directly in `dir`, in name order (none when `dir`
+    * does not exist).
+    */
+  private[graft] def parquetFiles(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val files = Files.list(dir)
+      try files.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .toSeq.sortBy(_.getFileName.toString)
+      finally files.close()
+    }
 
   /** Materialize an input table Hive-partitioned by the conv_id hash
     * bucket — the Iceberg `bucket(N, conv_id)` partition-spec analog.

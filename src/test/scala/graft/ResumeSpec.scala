@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.checkpoint.Resume
@@ -28,6 +29,20 @@ class ResumeSpec extends SparkTestBase {
     TableIO.read(spark, base)
       .select("conv_id", "turn_idx", "keep", "drop_reason", "scrubbed_text", "part_id")
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
+
+  /** Every committed file's rows in file order, keyed by its partition
+    * and its `part-NNNNN` write-task index (the rest of a file name
+    * differs between runs).
+    */
+  private def committedFiles(base: String): Map[(Int, String), Seq[Row]] = {
+    val task = "^(part-\\d+)-.*".r
+    TableIO.donePartitions(base).toSeq.flatMap { p =>
+      TableIO.parquetFiles(TableIO.partitionDir(base, p)).map { f =>
+        val task(idx) = f.getFileName.toString
+        (p, idx) -> spark.read.parquet(f.toString).collect().toSeq
+      }
+    }.toMap
+  }
 
   test("kill after k partitions → resume completes without recompute; output byte-identical") {
     val in = freshDir("in")
@@ -95,11 +110,18 @@ class ResumeSpec extends SparkTestBase {
       val r = Resume.run(spark, in, out, concurrency = 3)
       assert(r.processed.contains(victim))
       assert(TableIO.donePartitions(out).size == 3)
-      val rows = collectOutput(out)
       val ref = freshDir("out2ref")
-      Resume.run(spark, in, ref, concurrency = 3) // concurrent == sequential output
-      assert(rows == collectOutput(ref))
-      TableIO.deleteRecursive(Paths.get(ref))
+      try {
+        Resume.run(spark, in, ref, concurrency = 1) // concurrent == sequential output
+        val files = committedFiles(out)
+        assert(files.nonEmpty && files.values.forall(_.nonEmpty))
+        val refFiles = committedFiles(ref)
+        assert(files.keySet == refFiles.keySet)
+        files.foreach { case (k, rows) => assert(rows == refFiles(k), s"file $k") }
+        (0 until 3).foreach { p =>
+          assert(TableIO.readManifest(out, p) == TableIO.readManifest(ref, p), s"manifest $p")
+        }
+      } finally TableIO.deleteRecursive(Paths.get(ref))
     } finally {
       Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
     }
@@ -144,21 +166,40 @@ class ResumeSpec extends SparkTestBase {
     }
   }
 
-  test("a partition runs at most three Spark jobs: schema read, shuffle map, write") {
+  /** Spark jobs `body` starts inside a fresh job group. */
+  private def jobsIn[A](label: String)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"$label-${System.nanoTime()}"
+    sc.setJobGroup(group, label)
+    val a = try body finally sc.clearJobGroup()
+    (a, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  test("a partition runs at most two Spark jobs: shuffle map, write") {
     val in = freshDir("in4")
     val out = freshDir("out4")
     try {
       TableIO.writeBucketedInput(Transcripts.dataset(spark, 20L).toDF(), in, nBuckets = 2)
-      val sc = spark.sparkContext
-      (0 until 2).foreach { i =>
-        val group = s"resume-partition-$i-${System.nanoTime()}"
-        sc.setJobGroup(group, "one Resume.run partition")
-        val r = try Resume.run(spark, in, out, maxPartitions = 1)
-                finally sc.clearJobGroup()
+      (0 until 2).foreach { _ =>
+        val (r, jobs) = jobsIn("resume-partition")(Resume.run(spark, in, out, maxPartitions = 1))
         assert(r.processed.size == 1)
-        val jobs = sc.statusTracker.getJobIdsForGroup(group).length
-        assert(jobs <= 3, s"partition ${r.processed.head} ran $jobs jobs")
+        assert(jobs <= 2, s"partition ${r.processed.head} ran $jobs jobs")
       }
+    } finally {
+      Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
+
+  test("two partitions at the default concurrency run at most four Spark jobs in the caller's group") {
+    val in = freshDir("in6")
+    val out = freshDir("out6")
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 20L).toDF(), in, nBuckets = 2)
+      val (r, jobs) = jobsIn("resume-run")(Resume.run(spark, in, out))
+      assert(r.processed == Seq(0, 1))
+      // the jobs run on the pool threads, so they count here only if the
+      // job group reached them; each partition's write is one of them
+      assert(jobs >= 2 && jobs <= 4, s"two partitions ran $jobs jobs in the group")
     } finally {
       Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
     }
