@@ -571,8 +571,7 @@ object Dedup extends Serializable {
     import graft.knn.Similarity
     val vecs = df.select(F.col(idCol).as("id"), F.col(embCol).as("emb"))
     // id-only banding (de-payloaded); the ONE bucket-scheme definition
-    val banded = Similarity.hyperplaneBanded(
-      vecs, "id", "emb", "id", None, nBits, nBands)
+    val banded = Similarity.hyperplaneBanded(vecs, "id", "emb", "id", nBits, nBands)
     val cosU = F.udf((a: Array[Float], b: Array[Float]) => Similarity.cosine(a, b))
     verifyPairs(keyedPairs(banded, Seq("band", "bh")), vecs, "emb", cosU, "sim", simThreshold)
   }

@@ -5,18 +5,21 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.BloomAgg
 import graft.tableio.TableIO
 
-/** Persisted IVF index — the build-once / query-many ANN lifecycle
-  * (r3 verdict #3: `topKIvf` re-ran k-means + a full corpus assignment
-  * scan inside every query call; the reference's Chroma store is
+/** Persisted IVF index, the engine's one IVF — the build-once /
+  * query-many ANN lifecycle (the reference's Chroma store is
   * build-once, data_manager.py:97-150 add / :210-248 query).
   *
   * Layout under `base`:
   *   part_id=&lt;cell&gt;/...         (idCol, embCol) rows of one IVF cell
-  *   _manifest/part-&lt;cell&gt;.json  per-cell row count (TableIO protocol)
+  *   _manifest/part-&lt;cell&gt;.json  per-cell [[IvfIndex.CellManifest]]:
+  *                                rows, id range, id bloom (TableIO protocol)
   *   _ivf_meta.txt                idCol/embCol/nAssign + centroid rows,
   *                                written LAST = the build commit point
   *
@@ -28,10 +31,10 @@ import graft.tableio.TableIO
   * Mutations keep the index consistent WITHOUT re-clustering: centroids
   * are fixed at build time, so an added row's cell is a pure function
   * of its embedding — `add` stages every receiving cell in ONE
-  * partitionBy job (job count independent of cell count), and `delete`
-  * anti-joins ids only in cells whose manifest id range can contain
-  * them (a bloom filter in the manifest would prune non-contiguous id
-  * sets even harder; the range covers the common monotonic-id case).
+  * partitionBy job (job count independent of cell count), and
+  * `deleteIdsDf` anti-joins ids only in cells whose manifest id range
+  * and id bloom can contain them (the range covers the common
+  * monotonic-id case, the bloom non-contiguous id sets).
   */
 final class IvfIndex private[knn] (
     spark: SparkSession,
@@ -46,10 +49,7 @@ final class IvfIndex private[knn] (
 
   /** Cells a query probes: `nprobe` nearest centroids by cosine. */
   def probeCells(q: Array[Float], nprobe: Int): Seq[Int] =
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, Similarity.cosine(q, c)) }
-      .sortBy { case (i, s) => (-s, i) }
-      .take(nprobe).map(_._1).toSeq
+    IvfIndex.nearestCells(centroids, q, nprobe)
 
   /** Cells a VECTOR is indexed under (its nAssign nearest centroids —
     * same metric as the probe, so probe/assign stay consistent).
@@ -58,23 +58,10 @@ final class IvfIndex private[knn] (
     val cs = centroids
     val nA = nAssign
     if (nA == 1) {
-      val u = F.udf { (v: Array[Float]) =>
-        var best = 0
-        var bestSim = Double.NegativeInfinity
-        var i = 0
-        while (i < cs.length) {
-          val s = Similarity.cosine(v, cs(i))
-          if (s > bestSim) { bestSim = s; best = i }
-          i += 1
-        }
-        best
-      }
+      val u = F.udf((v: Array[Float]) => Similarity.nearestCentroid(v, cs))
       c => u(c)
     } else {
-      val u = F.udf { (v: Array[Float]) =>
-        cs.indices.map(i => (i, Similarity.cosine(v, cs(i))))
-          .sortBy { case (i, s) => (-s, i) }.take(nA).map(_._1)
-      }
+      val u = F.udf((v: Array[Float]) => IvfIndex.nearestCells(cs, v, nA))
       c => F.explode(u(c))
     }
   }
@@ -92,101 +79,38 @@ final class IvfIndex private[knn] (
     val cells = probeCells(q, nprobe).filter(done.contains)
     require(cells.nonEmpty, s"no committed cells among probed $nprobe at $base")
     val cosU = F.udf((a: Array[Float]) => Similarity.cosine(a, q))
-    val df = spark.read.option("basePath", base)
-      .parquet(cells.map(c => TableIO.partitionDir(base, c).toString): _*)
-    val scored = df.select(F.col(idCol), cosU(F.col(embCol)).as("sim"))
+    val scored = TableIO.readPartitions(spark, base, cells)
+      .select(F.col(idCol), cosU(F.col(embCol)).as("sim"))
     // multi-assignment can surface one id via several probed cells
     (if (nAssign > 1) scored.dropDuplicates(idCol) else scored)
       .orderBy(F.col("sim").desc, F.col(idCol))
       .limit(k)
   }
 
-  /** Index new rows under the FIXED centroids. ONE staging job writes
-    * every receiving cell (the previous shape ran one Spark write job
-    * per cell — hundreds of sequential jobs for a batch touching
-    * hundreds of cells): existing rows of the affected cells union the
-    * id-deduped new rows and land partitionBy(part_id) in a single
-    * pass (the build path's own commit shape), then each staged cell
-    * directory is atomically moved into place — metadata ops, no
-    * further jobs. The only driver collect is the receiving CELL IDS
-    * (≤ nCells ints, never rows). Id-idempotent: rows whose id a cell
-    * already holds are skipped, so a crashed caller can redo the whole
-    * add safely.
+  /** Index new rows under the FIXED centroids: every receiving cell is
+    * rewritten off ONE staged write ([[TableIO.appendPartitions]]), so
+    * the job count does not grow with the number of cells, and the only
+    * driver collect is the receiving CELL IDS (≤ nCells ints, never
+    * rows). Id-idempotent: a batch carrying an id twice indexes it
+    * once, and rows whose id a cell already holds are skipped, so a
+    * crashed caller can redo the whole add safely.
     */
   def add(df: DataFrame): Unit = {
-    val pc = TableIO.PART_COL
-    val batch = withCells(df).cache()
-    try {
-      val affected = batch.select(pc).distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (affected.isEmpty) return
-      val done = TableIO.donePartitions(base)
-      val existingCells = affected.filter(done.contains)
-      val merged =
-        if (existingCells.isEmpty) batch
-        else {
-          val existing = spark.read.option("basePath", base)
-            .parquet(existingCells.map(c => TableIO.partitionDir(base, c).toString): _*)
-            .select(F.col(idCol), F.col(embCol), F.col(pc).cast("int").as(pc))
-          existing.unionByName(
-            batch.join(existing.select(pc, idCol), Seq(pc, idCol), "left_anti"))
-        }
-      val staging = Paths.get(base, "_staging_add")
-      TableIO.deleteRecursive(staging)
-      merged.write.partitionBy(pc).mode("overwrite").parquet(staging.toString)
-      val stats = cellStats(spark.read.option("basePath", staging.toString)
-        .parquet(staging.toString))
-      stats.keys.toSeq.sorted.foreach { cell =>
-        val staged = Paths.get(staging.toString, s"$pc=$cell")
-        val target = TableIO.partitionDir(base, cell)
-        TableIO.deleteRecursive(target)
-        Files.createDirectories(target.getParent)
-        Files.move(staged, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        TableIO.writeManifest(base, cell, manifestJson(cell, stats(cell)))
-      }
-      TableIO.deleteRecursive(staging)
-    } finally batch.unpersist()
+    val batch = withCells(df.dropDuplicates(idCol)).cache()
+    try TableIO.appendPartitions(batch, base, idCol, cellStats: _*)(cellManifest)
+    finally batch.unpersist()
   }
 
-  /** Remove ids. Cells whose manifest id RANGE cannot contain any of
-    * the ids are SKIPPED untouched (the previous shape rewrote EVERY
-    * cell copy-on-write — at 10^4 cells a small delete was a full-index
-    * rewrite), and cells whose manifest BLOOM contains none of them
-    * are skipped too — the range handles contiguous deletes, the bloom
-    * handles scattered ids whose hull overlaps every cell. Legacy
-    * manifests without range/bloom stay conservative and rewrite. Only
-    * possibly-containing cells are anti-joined and recommitted.
-    */
-  def deleteIds(ids: Seq[Any]): Unit = {
-    if (ids.isEmpty) return
-    TableIO.donePartitions(base).toSeq.sorted.foreach { cell =>
-      val rangeSkip = cellIdRange(cell).exists { case (mn, mx) =>
-        !ids.exists(v => idCmp(mn, v) <= 0 && idCmp(v, mx) <= 0)
-      }
-      // decode the 8 KiB filter ONCE per cell, not once per (id, cell)
-      val bloomSkip = !rangeSkip &&
-        cellBloom(cell).flatMap(graft.functions.BloomAgg.decode).exists { words =>
-          !ids.exists(v => graft.functions.BloomAgg.mightContainWords(
-            words, graft.functions.BloomAgg.externalToCanonical(v)))
-        }
-      if (!rangeSkip && !bloomSkip) {
-        val existing = TableIO.readPartition(spark, base, cell)
-        val kept = existing.filter(!F.col(idCol).isInCollection(ids))
-        commitCell(kept, cell)
-      }
-    }
-  }
-
-  /** Distributed variant: remove every id in `ids` (a one-column frame
-    * that may lazily read OTHER tables — it is fully consumed here,
-    * before any caller-side rewrite invalidates it). No driver collect
-    * of the ids: pruning is (1) the min/max hull (one tiny agg) against
-    * each cell's manifest range, then (2) ONE distributed pass testing
-    * every id against the broadcast blooms of the hull-surviving cells
-    * — only the HIT CELL IDS come back to the driver (≤ nCells ints,
-    * never ids). A scattered delete set whose hull covers the whole
-    * index thus still rewrites only the cells that can contain a
-    * target.
+  /** Remove every id in `ids` (a one-column frame that may lazily read
+    * OTHER tables — it is fully consumed here, before any caller-side
+    * rewrite invalidates it). No driver collect of the ids: pruning is
+    * (1) the min/max hull (one tiny agg) against each cell's manifest
+    * range, then (2) ONE distributed pass testing every id against the
+    * broadcast blooms of the hull-surviving cells — only the HIT CELL
+    * IDS come back to the driver (≤ nCells ints, never ids). A
+    * scattered delete set whose hull covers the whole index thus still
+    * rewrites only the cells that can contain a target. A manifest
+    * without range or bloom cannot prune: its cell is rewritten.
     */
   def deleteIdsDf(ids: DataFrame): Unit = {
     val idsOnly = ids.toDF(idCol).cache()
@@ -194,25 +118,21 @@ final class IvfIndex private[knn] (
       val hull = idsOnly.agg(F.min(idCol), F.max(idCol)).head()
       if (hull.isNullAt(0)) return
       val (hmn, hmx) = (idLit(hull.get(0)), idLit(hull.get(1)))
-      val hullSurvivors = TableIO.donePartitions(base).toSeq.sorted.filter { cell =>
-        !cellIdRange(cell).exists { case (mn, mx) =>
-          idCmp(mx, hmn) < 0 || idCmp(hmx, mn) < 0
-        }
-      }
+      val hullSurvivors = TableIO.donePartitions(base).toSeq.sorted
+        .flatMap(c => TableIO.readManifest(base, c).map(IvfIndex.CellManifest.parse))
+        .filterNot(_.idRange.exists(r => idCmp(r.max, hmn) < 0 || idCmp(hmx, r.min) < 0))
       // pre-decoded word arrays (ADVICE r5): the per-row UDF below
       // probes every cell's filter — decoding 8 KiB per (id, cell)
       // call allocated O(|ids|·|cells|) transient arrays; malformed
       // blooms decode to None and fall into the conservative rewrite
-      // set exactly as legacy manifests do
-      val blooms = hullSurvivors.flatMap(c =>
-        cellBloom(c).flatMap(graft.functions.BloomAgg.decode).map(w => (c, w)))
-      val noBloom = hullSurvivors.toSet -- blooms.map(_._1).toSet // legacy: rewrite
-      val numericIds = cellIdKindIsNum(hullSurvivors)
+      // set exactly as manifests without a bloom do
+      val blooms = hullSurvivors.flatMap(m =>
+        m.idBloom.flatMap(BloomAgg.decode).map(w => (m.partId, w)))
+      val noBloom = hullSurvivors.map(_.partId).toSet -- blooms.map(_._1)
+      val numericIds = hullSurvivors.flatMap(_.idRange).headOption.exists(_.numeric)
       val bloomHits: Set[Int] =
         if (blooms.isEmpty) Set.empty
         else {
-          import graft.functions.BloomAgg
-          val bloomsLocal = blooms // serializable closure capture
           val hitU = F.udf { (s: String) =>
             if (s == null) Seq.empty[Int]
             else {
@@ -221,7 +141,7 @@ final class IvfIndex private[knn] (
                   scala.util.Try(BloomAgg.externalToCanonical(
                     new java.math.BigDecimal(s))).getOrElse(s)
                 else s
-              bloomsLocal.collect {
+              blooms.collect {
                 case (c, w) if BloomAgg.mightContainWords(w, canonical) => c
               }
             }
@@ -232,131 +152,59 @@ final class IvfIndex private[knn] (
             .collect().map(_.getInt(0)).toSet
         }
       (noBloom ++ bloomHits).toSeq.sorted.foreach { cell =>
-        val existing = TableIO.readPartition(spark, base, cell)
-        val kept = existing.join(idsOnly, Seq(idCol), "left_anti")
-        commitCell(kept, cell)
+        val kept = TableIO.readPartition(spark, base, cell)
+          .join(idsOnly, Seq(idCol), "left_anti")
+        TableIO.commitOrDrop(kept, base, cell, cellStats: _*)(cellManifest)
       }
     } finally idsOnly.unpersist()
   }
 
-  private def commitCell(df: DataFrame, cell: Int): Unit = {
-    val kept = df.cache()
-    try {
-      val st = kept.agg(F.count(F.lit(1)), F.min(idCol), F.max(idCol),
-        graft.functions.BloomAgg.bloom_agg(F.col(idCol))).head()
-      if (st.getLong(0) == 0) {
-        TableIO.deleteRecursive(TableIO.partitionDir(base, cell))
-        Files.deleteIfExists(TableIO.manifestPath(base, cell))
-      } else {
-        TableIO.commitPartition(kept, base, cell)
-        TableIO.writeManifest(base, cell,
-          manifestJson(cell, (st.getLong(0), st.get(1), st.get(2),
-            st.getAs[Array[Byte]](3))))
-      }
-    } finally kept.unpersist()
+  /** A cell's stats after its row count: id min, id max, id bloom. */
+  private def cellStats: Seq[Column] =
+    Seq(F.min(idCol), F.max(idCol), BloomAgg.bloom_agg(F.col(idCol)))
+
+  private def cellManifest(cell: Int, st: Row): String = {
+    val range = IvfIndex.IdRange(st.get(1).isInstanceOf[Number],
+      st.get(1).toString, st.get(2).toString)
+    IvfIndex.CellManifest(cell, st.getLong(0), Some(range),
+      Some(st.getAs[Array[Byte]](3))).toJson
   }
 
-  /** Per-cell (rows, id_min, id_max, id bloom) in ONE aggregate job. */
-  private def cellStats(df: DataFrame): Map[Int, (Long, Any, Any, Array[Byte])] =
-    df.groupBy(TableIO.PART_COL)
-      .agg(F.count(F.lit(1)), F.min(idCol), F.max(idCol),
-        graft.functions.BloomAgg.bloom_agg(F.col(idCol)))
-      .collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.get(2), r.get(3),
-        r.getAs[Array[Byte]](4))))
-      .toMap
-
-  /** Manifest entry with the delete-pruning id range AND a fixed-size
-    * id Bloom filter (base64). Ids serialize as JSON strings; "num"
-    * ranges compare as exact decimals (never Double — a >2^53 long
-    * would round and could wrongly prune), "str" ranges as UTF-8 bytes
-    * unsigned (Spark's own string ordering — Java compareTo is UTF-16
-    * and disagrees above the BMP). The bloom prunes NON-CONTIGUOUS
-    * delete sets the range can't (ids scattered across the hull);
-    * false positives only disable pruning, never skip a real id.
+  /** Orders a manifest range bound against a hull bound: exact
+    * decimals for numeric ids, UTF-8 bytes unsigned for string ids
+    * (Spark's own string ordering).
     */
-  private def manifestJson(cell: Int, s: (Long, Any, Any, Array[Byte])): String = {
-    def esc(v: Any) = v.toString.replace("\\", "\\\\").replace("\"", "\\\"")
-    val kind = s._2 match { case _: Number => "num"; case _ => "str" }
-    val bloom = java.util.Base64.getEncoder.encodeToString(s._4)
-    s"""{"part_id":$cell,"rows":${s._1},"id_kind":"$kind",""" +
-      s""""id_min":"${esc(s._2)}","id_max":"${esc(s._3)}","id_bloom":"$bloom"}"""
-  }
-
   private def idCmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.math.BigDecimal, _) => x.compareTo(idLit(b).asInstanceOf[java.math.BigDecimal])
-    case (_, y: java.math.BigDecimal) => idLit(a).asInstanceOf[java.math.BigDecimal].compareTo(y)
-    case (x: String, y) => utf8Cmp(x, y.toString)
-    case (x, y: String) => utf8Cmp(x.toString, y)
-    case (x, y) => new java.math.BigDecimal(x.toString)
-      .compareTo(new java.math.BigDecimal(y.toString))
+    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
+    case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case _ => throw new IllegalArgumentException(
+      s"delete ids and the index's ids are of different kinds ($a vs $b)")
   }
 
   private def idLit(v: Any): Any = v match {
     case s: String => s
-    case n: java.math.BigDecimal => n
-    case other =>
-      scala.util.Try(new java.math.BigDecimal(other.toString)).getOrElse(other.toString)
+    case n => scala.util.Try(new java.math.BigDecimal(n.toString)).getOrElse(n.toString)
   }
-
-  private def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(StandardCharsets.UTF_8)
-    val y = b.getBytes(StandardCharsets.UTF_8)
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  /** Parsed (id_min, id_max) from a cell's manifest; None when the
-    * manifest predates ranges (conservative: caller rewrites).
-    */
-  private def cellIdRange(cell: Int): Option[(Any, Any)] =
-    TableIO.readManifest(base, cell).flatMap { json =>
-      val re = """"id_kind":"(num|str)","id_min":"((?:[^"\\]|\\.)*)","id_max":"((?:[^"\\]|\\.)*)"""".r
-      re.findFirstMatchIn(json).map { m =>
-        def un(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-        if (m.group(1) == "num")
-          (new java.math.BigDecimal(un(m.group(2))), new java.math.BigDecimal(un(m.group(3))))
-        else (un(m.group(2)), un(m.group(3)))
-      }
-    }
-
-  /** Parsed id Bloom filter bytes from a cell's manifest; None for
-    * legacy manifests (conservative: caller rewrites).
-    */
-  private def cellBloom(cell: Int): Option[Array[Byte]] =
-    TableIO.readManifest(base, cell).flatMap { json =>
-      """"id_bloom":"([A-Za-z0-9+/=]*)"""".r.findFirstMatchIn(json)
-        .flatMap(m => scala.util.Try(
-          java.util.Base64.getDecoder.decode(m.group(1))).toOption)
-    }
-
-  /** True when the cells' manifests record numeric ids (drives the
-    * string→canonical normalization in the distributed bloom test).
-    */
-  private def cellIdKindIsNum(cells: Seq[Int]): Boolean =
-    cells.iterator
-      .flatMap(c => TableIO.readManifest(base, c))
-      .flatMap(j => """"id_kind":"(num|str)"""".r.findFirstMatchIn(j))
-      .map(_.group(1))
-      .nextOption()
-      .contains("num")
 }
 
 object IvfIndex {
 
   private def metaPath(base: String) = Paths.get(base, "_ivf_meta.txt")
 
+  /** The `n` centroids nearest `v` by cosine, nearest first (ties to
+    * the lower cell).
+    */
+  private def nearestCells(centroids: Array[Array[Float]], v: Array[Float], n: Int): Seq[Int] =
+    centroids.indices.map(i => (i, Similarity.cosine(v, centroids(i))))
+      .sortBy { case (i, s) => (-s, i) }.take(n).map(_._1)
+
   def exists(base: String): Boolean = Files.exists(metaPath(base))
 
   /** Build the index: deterministic k-means centroids (bounded driver
-    * sample), one distributed assignment pass written partition-per-
-    * cell, per-cell manifests, meta file LAST (the commit point — a
-    * crashed build has no meta and is rebuilt from scratch).
+    * sample), one distributed assignment pass committed partition-per-
+    * cell ([[TableIO.commitPartitions]]: one staged write, per-cell
+    * manifests), meta file LAST (the commit point — a crashed build has
+    * no meta and is rebuilt from scratch).
     */
   def build(
       spark: SparkSession,
@@ -370,26 +218,62 @@ object IvfIndex {
     TableIO.deleteRecursive(Paths.get(base))
     val centroids = Similarity.kmeansCentroids(df, idCol, embCol, nCells)
     val idx = new IvfIndex(spark, base, idCol, embCol, nAssign, centroids)
-    val assigned = idx.withCells(df)
-    assigned.write.partitionBy(TableIO.PART_COL).mode("overwrite")
-      .parquet(Paths.get(base, "_staging_build").toString)
-    // move cell dirs into place, manifest each (rows + the delete-
-    // pruning id range, from one agg job)
-    val stats = idx.cellStats(
-      spark.read.option("basePath", Paths.get(base, "_staging_build").toString)
-        .parquet(Paths.get(base, "_staging_build").toString))
-    stats.keys.toSeq.sorted.foreach { cell =>
-      val staged = Paths.get(base, "_staging_build", s"${TableIO.PART_COL}=$cell")
-      val target = TableIO.partitionDir(base, cell)
-      TableIO.deleteRecursive(target)
-      Files.createDirectories(target.getParent)
-      Files.move(staged, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      TableIO.writeManifest(base, cell, idx.manifestJson(cell, stats(cell)))
-    }
-    TableIO.deleteRecursive(Paths.get(base, "_staging_build"))
+    TableIO.commitPartitions(idx.withCells(df), base, idx.cellStats: _*)(idx.cellManifest)
     writeMeta(base, idCol, embCol, nAssign, centroids)
     idx
+  }
+
+  /** A cell manifest's id range: the id kind ("num" ranges compare as
+    * exact decimals — never Double, a >2^53 long would round and could
+    * wrongly prune; "str" ranges as UTF-8 bytes unsigned, Spark's own
+    * string ordering, where Java compareTo is UTF-16 and disagrees
+    * above the BMP) and the bounds as written.
+    */
+  private[knn] final case class IdRange(numeric: Boolean, minText: String, maxText: String) {
+    def min: Any = bound(minText)
+    def max: Any = bound(maxText)
+    private def bound(t: String): Any = if (numeric) new java.math.BigDecimal(t) else t
+  }
+
+  /** One cell's manifest: row count, the delete-pruning id range and a
+    * fixed-size id Bloom filter (base64 in the JSON). The bloom prunes
+    * NON-CONTIGUOUS delete sets the range can't (ids scattered across
+    * the hull); false positives only disable pruning, never skip a real
+    * id. A manifest without range or bloom parses to None there, and a
+    * delete then rewrites that cell.
+    */
+  private[knn] final case class CellManifest(
+      partId: Int,
+      rows: Long,
+      idRange: Option[IdRange],
+      idBloom: Option[Array[Byte]]
+  ) {
+    def toJson: String = {
+      val o = CellManifest.mapper.createObjectNode().put("part_id", partId).put("rows", rows)
+      idRange.foreach { r =>
+        o.put("id_kind", if (r.numeric) "num" else "str")
+          .put("id_min", r.minText).put("id_max", r.maxText)
+      }
+      idBloom.foreach(b => o.put("id_bloom", java.util.Base64.getEncoder.encodeToString(b)))
+      CellManifest.mapper.writeValueAsString(o)
+    }
+  }
+
+  private[knn] object CellManifest {
+    private val mapper = new ObjectMapper()
+
+    def parse(json: String): CellManifest = {
+      val j = mapper.readTree(json)
+      def text(field: String) = Option(j.get(field)).map(_.asText)
+      val range = for {
+        kind <- text("id_kind") if kind == "num" || kind == "str"
+        mn <- text("id_min")
+        mx <- text("id_max")
+      } yield IdRange(kind == "num", mn, mx)
+      val bloom = text("id_bloom").flatMap(b =>
+        scala.util.Try(java.util.Base64.getDecoder.decode(b)).toOption)
+      CellManifest(j.get("part_id").asInt, j.get("rows").asLong, range, bloom)
+    }
   }
 
   def load(spark: SparkSession, base: String): IvfIndex = {

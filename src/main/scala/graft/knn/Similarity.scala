@@ -80,13 +80,12 @@ object Similarity extends Serializable {
     * broadcasts the query side (right only while queries fit in one
     * executor); this variant equi-joins corpus and queries on shared
     * random-hyperplane LSH buckets, so BOTH sides shuffle by bucket
-    * key: the 10^12-corpus × 10^9-query shape. Exact cosine runs at
-    * the join (scalar output), so the candidate-dedup exchange moves
-    * (qid, cid, sim) rows — never embedding payloads (same
-    * de-payloading as Dedup's pair paths; a pair colliding in several
-    * bands re-scores rather than re-shuffles). Per-query top-k via
-    * window rank. Recall is governed by nBits/nBands exactly as in
-    * [[topKLsh]].
+    * key: the 10^12-corpus × 10^9-query shape. The bucket join and the
+    * (qid, cid) dedup move bare ids; each embedding is re-attached by
+    * id after the dedup, so a pair sharing several bands is scored
+    * once (same de-payloading as Dedup's pair paths; ids are unique on
+    * each side). Per-query top-k via window rank. Recall is governed
+    * by nBits/nBands exactly as in [[topKLsh]].
     */
   def topKBatchLsh(
       corpus: DataFrame, corpusId: String, corpusEmb: String,
@@ -96,51 +95,44 @@ object Similarity extends Serializable {
       nBands: Int = 4
   ): DataFrame = {
     val cosU = F.udf((a: Array[Float], b: Array[Float]) => cosine(a, b))
-    val scored =
-      hyperplaneBanded(corpus, corpusId, corpusEmb, "cid", Some("cemb"), nBits, nBands)
-        .join(hyperplaneBanded(queries, queryId, queryEmb, "qid", Some("qemb"), nBits, nBands),
-          Seq("band", "bh"))
-      .select(F.col("qid"), F.col("cid"),
-        cosU(F.col("cemb"), F.col("qemb")).as("sim"))
+    val scored = hyperplaneBanded(corpus, corpusId, corpusEmb, "cid", nBits, nBands)
+      .join(hyperplaneBanded(queries, queryId, queryEmb, "qid", nBits, nBands),
+        Seq("band", "bh"))
+      .select("qid", "cid")
       .dropDuplicates("qid", "cid")
+      .join(corpus.select(F.col(corpusId).as("cid"), F.col(corpusEmb).as("cemb")), "cid")
+      .join(queries.select(F.col(queryId).as("qid"), F.col(queryEmb).as("qemb")), "qid")
+      .select(F.col("qid"), F.col("cid"), cosU(F.col("cemb"), F.col("qemb")).as("sim"))
     val w = Window.partitionBy("qid").orderBy(F.col("sim").desc, F.col("cid"))
     scored.withColumn("rank", F.row_number().over(w))
       .filter(F.col("rank") <= k)
       .select("qid", "cid", "sim", "rank")
   }
 
-  /** THE hyperplane-LSH bucket scheme, defined once: (idAlias
-    * [, embAlias], band, bh) rows — one per band — for any embedding
-    * DataFrame. Shared by [[topKBatchLsh]] and
-    * [[graft.dedup.Dedup.embeddingNearDups]] so a change to band
-    * extraction cannot drift between them. Pass `embAlias = None` for
-    * the de-payloaded id-only shape (nothing but ids enters the bucket
-    * shuffle).
+  /** THE hyperplane-LSH bucket scheme, defined once: id-only
+    * (idAlias, band, bh) rows — one per band — for any embedding
+    * DataFrame, so nothing but ids enters the bucket shuffle. Shared
+    * by [[topKBatchLsh]] and [[graft.dedup.Dedup.embeddingNearDups]] so
+    * a change to band extraction cannot drift between them.
     */
   def hyperplaneBanded(
       df: DataFrame,
       idCol: String,
       embCol: String,
       idAlias: String,
-      embAlias: Option[String],
       nBits: Int,
       nBands: Int
   ): DataFrame = {
     require(nBits % nBands == 0, "nBands must divide nBits")
     val bits = nBits / nBands
     val sigU = F.udf((v: Array[Float]) => hyperplaneSig(v, nBits))
-    val sigged = df
-      .select(F.col(idCol).as(idAlias), F.col(embCol).as("__emb"))
-      .withColumn("__sig", sigU(F.col("__emb")))
-    val keep = F.col(idAlias) +: embAlias.map(a => F.col("__emb").as(a)).toSeq
-    val kept = embAlias.map(F.col).toSeq
-    sigged
-      .select(keep :+
+    df.select(F.col(idCol).as(idAlias), sigU(F.col(embCol)).as("__sig"))
+      .select(F.col(idAlias),
         F.explode(F.array((0 until nBands).map(b =>
           F.struct(F.lit(b).as("band"),
             F.shiftright(F.col("__sig"), b * bits)
-              .bitwiseAND(F.lit((1L << bits) - 1)).as("bh"))): _*)).as("b"): _*)
-      .select(F.col(idAlias) +: kept :+ F.col("b.band") :+ F.col("b.bh"): _*)
+              .bitwiseAND(F.lit((1L << bits) - 1)).as("bh"))): _*)).as("b"))
+      .select(F.col(idAlias), F.col("b.band"), F.col("b.bh"))
   }
 
   /** Deterministic random hyperplane for LSH bit b (seeded hash — no
@@ -165,6 +157,21 @@ object Similarity extends Serializable {
       b += 1
     }
     sig
+  }
+
+  /** Index of the centroid nearest `v` by cosine (the first on ties):
+    * k-means assignment and the IVF cell of a vector.
+    */
+  def nearestCentroid(v: Array[Float], centroids: Array[Array[Float]]): Int = {
+    var best = 0
+    var bestSim = Double.NegativeInfinity
+    var c = 0
+    while (c < centroids.length) {
+      val s = cosine(v, centroids(c))
+      if (s > bestSim) { bestSim = s; best = c }
+      c += 1
+    }
+    best
   }
 
   /** Deterministic spherical k-means centroids for the IVF index:
@@ -204,14 +211,7 @@ object Similarity extends Serializable {
       val sums = Array.ofDim[Double](centroids.length, dim)
       val counts = new Array[Int](centroids.length)
       sample.foreach { v =>
-        var best = 0
-        var bestSim = Double.NegativeInfinity
-        var c = 0
-        while (c < centroids.length) {
-          val s = cosine(v, centroids(c))
-          if (s > bestSim) { bestSim = s; best = c }
-          c += 1
-        }
+        val best = nearestCentroid(v, centroids)
         counts(best) += 1
         var d = 0
         while (d < dim) { sums(best)(d) += v(d); d += 1 }
@@ -229,83 +229,6 @@ object Similarity extends Serializable {
       it += 1
     }
     centroids
-  }
-
-  /** IVF (inverted-file) index: deterministic k-means centroids, every
-    * vector assigned to its nearest centroid (map-only). At scale the
-    * assignment is a table column / partition key, so probes prune
-    * partitions.
-    */
-  /** @param nAssign multi-probe ASSIGNMENT: each vector is indexed
-    *   under its `nAssign` nearest cells (index grows nAssign×, recall
-    *   at a fixed nprobe rises — the standard knob when the corpus has
-    *   weak cluster structure). 1 = classic IVF. The frame explodes to
-    *   one row per assignment; callers must dedup ids after scoring.
-    */
-  def ivfAssign(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      k: Int = 16,
-      nAssign: Int = 1
-  ): (Array[Array[Float]], DataFrame) = {
-    val centroids = kmeansCentroids(df, idCol, embCol, k)
-    val assigned =
-      if (nAssign == 1) {
-        // hot path (benched): allocation-free argmax scan per row
-        val argmaxU = F.udf { (v: Array[Float]) =>
-          var best = 0
-          var bestSim = Double.NegativeInfinity
-          var i = 0
-          while (i < centroids.length) {
-            val s = cosine(v, centroids(i))
-            if (s > bestSim) { bestSim = s; best = i }
-            i += 1
-          }
-          best
-        }
-        df.withColumn("__ivf_cell", argmaxU(F.col(embCol)))
-      } else {
-        val topU = F.udf { (v: Array[Float]) =>
-          centroids.indices
-            .map(i => (i, cosine(v, centroids(i))))
-            .sortBy { case (i, s) => (-s, i) }
-            .take(nAssign).map(_._1)
-        }
-        df.withColumn("__ivf_cell", F.explode(topU(F.col(embCol))))
-      }
-    (centroids, assigned)
-  }
-
-  /** IVF approximate top-k: score the query against the centroids,
-    * probe the `nprobe` nearest cells, exact cosine only inside them.
-    * nprobe == nCells degenerates to exact brute force (tested);
-    * recall@5 at nprobe=4/nCells=8 is asserted ≥ 0.9 on the
-    * embeddings fixture (DedupSimilaritySpec).
-    */
-  def topKIvf(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      query: Array[Float],
-      k: Int = 5,
-      nCells: Int = 16,
-      nprobe: Int = 4,
-      nAssign: Int = 1
-  ): DataFrame = {
-    val (centroids, assigned) = ivfAssign(df, idCol, embCol, nCells, nAssign)
-    val probed = centroids.zipWithIndex
-      .map { case (c, i) => (i, cosine(query, c)) }
-      .sortBy { case (i, s) => (-s, i) }
-      .take(nprobe).map(_._1).toSet
-    val cosU = F.udf((a: Array[Float]) => cosine(a, query))
-    val scored = assigned
-      .filter(F.col("__ivf_cell").isInCollection(probed))
-      .select(F.col(idCol), cosU(F.col(embCol)).as("sim"))
-    // multi-assignment can surface the same id via several probed cells
-    (if (nAssign > 1) scored.dropDuplicates(idCol) else scored)
-      .orderBy(F.col("sim").desc, F.col(idCol))
-      .limit(k)
   }
 
   /** LSH-bucketed approximate top-k for one query: prune to rows whose

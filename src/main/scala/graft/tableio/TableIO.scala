@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.{fs => hfs}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 
 /** Iceberg-shaped table seam (SURVEY.md §1.2): Hive-style partitioned
@@ -28,6 +28,9 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
   * move into place → append manifest file. A crash between move and
   * manifest leaves the partition NOT in the manifest; the resume loop
   * simply reprocesses it (output is deterministic → byte-identical).
+  * [[commitPartitions]] runs the protocol for many partitions off one
+  * staged write; [[commitOrDrop]] runs it for one partition that a
+  * rewrite may have emptied.
   */
 object TableIO {
 
@@ -65,6 +68,76 @@ object TableIO {
     target
   }
 
+  /** Commit every partition of `df` (rows carrying `part_id`) off ONE
+    * staged write: `df` lands partitionBy(part_id) under base/_staging,
+    * one aggregate over the staged rows gives each partition's stats
+    * row — its row count, then `stats` — and each staged partition is
+    * moved into place and its manifest, `manifest(partId, stats row)`,
+    * written last. The moves are metadata ops, so the job count does
+    * not grow with the number of partitions.
+    */
+  def commitPartitions(df: DataFrame, base: String, stats: Column*)(
+      manifest: (Int, Row) => String): Unit = {
+    val staging = Paths.get(base, "_staging")
+    deleteRecursive(staging)
+    df.write.partitionBy(PART_COL).mode("overwrite").parquet(staging.toString)
+    df.sparkSession.read.parquet(staging.toString)
+      .groupBy(PART_COL).agg(F.struct(F.count(F.lit(1)) +: stats: _*))
+      .collect().sortBy(_.getInt(0))
+      .foreach { r =>
+        val p = r.getInt(0)
+        val target = partitionDir(base, p)
+        deleteRecursive(target)
+        Files.createDirectories(target.getParent)
+        Files.move(partitionDir(staging.toString, p), target, StandardCopyOption.ATOMIC_MOVE)
+        writeManifest(base, p, manifest(p, r.getStruct(1)))
+      }
+    deleteRecursive(staging)
+  }
+
+  /** Add `batch` (rows carrying `part_id`) to the partitions it
+    * touches and commit them with [[commitPartitions]]. A row whose
+    * (part_id, `key`) its partition already holds is skipped, so
+    * re-applying a batch converges: a redo after a crash between a
+    * partition's move and its manifest merges nothing new into that
+    * partition. `batch` is read twice; callers cache it.
+    */
+  def appendPartitions(batch: DataFrame, base: String, key: String, stats: Column*)(
+      manifest: (Int, Row) => String): Unit = {
+    val parts = batch.select(PART_COL).distinct().collect().map(_.getInt(0))
+    if (parts.isEmpty) return
+    val done = donePartitions(base)
+    val existing = parts.filter(done.contains).sorted
+    val merged =
+      if (existing.isEmpty) batch
+      else {
+        val old = readPartitions(batch.sparkSession, base, existing)
+        old.unionByName(batch.join(old.select(PART_COL, key), Seq(PART_COL, key), "left_anti"))
+      }
+    commitPartitions(merged, base, stats: _*)(manifest)
+  }
+
+  /** Commit one partition's rows and then its manifest,
+    * `manifest(partId, stats row)` with the row count first; a `df`
+    * with no rows instead drops the partition's directory and manifest
+    * (an empty parquet directory would break schema inference on later
+    * reads).
+    */
+  def commitOrDrop(df: DataFrame, base: String, partId: Int, stats: Column*)(
+      manifest: (Int, Row) => String): Unit = {
+    val rows = df.cache()
+    try {
+      val st = rows.agg(F.count(F.lit(1)), stats: _*).head()
+      if (st.getLong(0) == 0) {
+        deleteRecursive(partitionDir(base, partId))
+        Files.deleteIfExists(manifestPath(base, partId))
+      } else {
+        commitPartition(rows, base, partId)
+        writeManifest(base, partId, manifest(partId, st))
+      }
+    } finally rows.unpersist()
+  }
+
   /** Append the manifest entry LAST — this is the commit point. */
   def writeManifest(base: String, partId: Int, json: String): Unit = {
     val p = manifestPath(base, partId)
@@ -90,9 +163,13 @@ object TableIO {
     val parts = donePartitions(base).toSeq.sorted
     require(parts.nonEmpty,
       s"no committed partitions under $base (manifest empty — run the job first)")
+    readPartitions(spark, base, parts)
+  }
+
+  /** The rows of partitions `parts` (non-empty), `part_id` kept. */
+  def readPartitions(spark: SparkSession, base: String, parts: Seq[Int]): DataFrame =
     spark.read.option("basePath", base)
       .parquet(parts.map(p => partitionDir(base, p).toString): _*)
-  }
 
   /** One partition's rows, read with the schema of its first parquet
     * file in name order. The footer is read and converted on the driver

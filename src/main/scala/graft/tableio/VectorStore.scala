@@ -3,7 +3,7 @@ package graft.tableio
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
 
 /** Vector-store mutations (SURVEY.md §2.1 S7/S8) — rebuild of the
   * reference's ChromaDB collection lifecycle (data_manager.py):
@@ -56,10 +56,12 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
 
   /** Append rows (id-keyed add, like collection.add — Chroma rejects
     * duplicate ids; here they are skipped): only the partitions
-    * receiving new rows are rewritten.
+    * receiving new rows are rewritten, all of them off one staged write
+    * ([[TableIO.appendPartitions]]), so the job count does not grow with
+    * the number of receiving partitions.
     *
-    * Idempotent resume (ADVICE r2): a crash between commitPartition's
-    * directory move and writeManifest leaves the merged rows live under
+    * Idempotent resume (ADVICE r2): a crash between a partition's
+    * directory move and its manifest leaves the merged rows live under
     * a stale manifest, and the job reruns the add. Incoming rows are
     * therefore anti-joined on `id` against the existing partition
     * before the union — re-applying a batch that already landed merges
@@ -77,9 +79,6 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
     val batch = df.dropDuplicates("id")
       .withColumn(TableIO.PART_COL, bucketOf(F.col("id"))).cache()
     try {
-      val affected = batch.select(TableIO.PART_COL).distinct()
-        .collect().map(_.getInt(0)).sorted
-      val done = TableIO.donePartitions(base)
       // attached-IVF update FIRST, while the store still holds the
       // pre-add snapshot: the anti-join computes exactly the rows that
       // will land (skipped duplicate ids never reach the index), and
@@ -87,22 +86,11 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
       // between index update and store rewrite converges on redo —
       // no driver-side id collect at any store size
       ivf.foreach { idx =>
-        val landed =
-          if (done.isEmpty) batch.drop(TableIO.PART_COL)
-          else batch.drop(TableIO.PART_COL)
-            .join(TableIO.read(spark, base).select("id"), Seq("id"), "left_anti")
-        idx.add(landed)
+        val rows = batch.drop(TableIO.PART_COL)
+        idx.add(if (isEmpty) rows
+          else rows.join(TableIO.read(spark, base).select("id"), Seq("id"), "left_anti"))
       }
-      affected.foreach { p =>
-        val newRows = batch.filter(F.col(TableIO.PART_COL) === p).drop(TableIO.PART_COL)
-        val merged =
-          if (done.contains(p)) {
-            val existing = TableIO.readPartition(spark, base, p)
-            existing.unionByName(
-              newRows.join(existing.select("id"), Seq("id"), "left_anti"))
-          } else newRows
-        commit(merged, p)
-      }
+      TableIO.appendPartitions(batch, base, "id")(manifest)
     } finally batch.unpersist()
   }
 
@@ -130,7 +118,7 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
       // failed cast) without counting them — only TRUE deletes
       val keep = TableIO.readPartition(spark, base, p)
         .filter(!F.coalesce(cond, F.lit(false)))
-      commit(keep, p)
+      TableIO.commitOrDrop(keep, base, p)(manifest)
     }
     affected.map(_._2).sum
   }
@@ -177,16 +165,6 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
   def exportDistributed(path: String): Unit =
     read().write.mode("overwrite").json(path)
 
-  private def commit(df: DataFrame, partId: Int): Unit = {
-    val n = df.count()
-    if (n == 0) {
-      // fully-emptied partition: drop dir + manifest (an empty parquet
-      // directory would break schema inference on later reads)
-      TableIO.deleteRecursive(TableIO.partitionDir(base, partId))
-      Files.deleteIfExists(TableIO.manifestPath(base, partId))
-    } else {
-      TableIO.commitPartition(df, base, partId)
-      TableIO.writeManifest(base, partId, s"""{"part_id":$partId,"rows":$n}""")
-    }
-  }
+  private def manifest(partId: Int, stats: Row): String =
+    s"""{"part_id":$partId,"rows":${stats.getLong(0)}}"""
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
-import graft.knn.Similarity
+import graft.knn.{IvfIndex, Similarity}
 
 class DedupSimilaritySpec extends SparkTestBase {
   import org.apache.spark.sql.functions._
@@ -497,6 +497,16 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(lsh.contains(1L)) // near vector shares buckets with base
   }
 
+  /** Builds an [[IvfIndex]] over `df` in a temp dir, hands it to `f`
+    * and deletes the dir afterwards.
+    */
+  private def withIvf[T](df: org.apache.spark.sql.DataFrame, nCells: Int,
+      nAssign: Int = 1)(f: IvfIndex => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-spec")
+    try f(IvfIndex.build(spark, df, "vec_id", "embedding", dir.toString, nCells, nAssign))
+    finally graft.tableio.TableIO.deleteRecursive(dir)
+  }
+
   test("IVF: probing all cells == brute force; partial probe returns a subset") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = emb.filter(col("vec_id") === 7)
@@ -504,28 +514,27 @@ class DedupSimilaritySpec extends SparkTestBase {
     val brute = Similarity.topK(emb, "vec_id", "embedding",
         q.map(_.toDouble).toSeq, k = 5)
       .collect().map(_.getLong(0)).toSeq
-    val ivfAll = Similarity.topKIvf(emb, "vec_id", "embedding", q,
-        k = 5, nCells = 8, nprobe = 8)
-      .collect().map(_.getLong(0)).toSeq
-    assert(ivfAll == brute) // full probe degenerates to exact search
-    val ivfPartial = Similarity.topKIvf(emb, "vec_id", "embedding", q,
-        k = 5, nCells = 8, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(ivfPartial.nonEmpty)
-    // partial-probe results are genuine similarities from probed cells,
-    // sorted descending
-    assert(ivfPartial.map(_._2).toSeq == ivfPartial.map(_._2).sorted.reverse.toSeq)
+    withIvf(emb, nCells = 8) { idx =>
+      val ivfAll = idx.query(q, k = 5, nprobe = 8)
+        .collect().map(_.getLong(0)).toSeq
+      assert(ivfAll == brute) // full probe degenerates to exact search
+      val ivfPartial = idx.query(q, k = 5, nprobe = 2)
+        .collect().map(r => (r.getLong(0), r.getDouble(1)))
+      assert(ivfPartial.nonEmpty)
+      // partial-probe results are genuine similarities from probed cells,
+      // sorted descending
+      assert(ivfPartial.map(_._2).toSeq == ivfPartial.map(_._2).sorted.reverse.toSeq)
+    }
   }
 
   private def ivfRecallAt5(df: org.apache.spark.sql.DataFrame,
       queries: Seq[Array[Float]], nCells: Int, nprobe: Int,
-      nAssign: Int = 1): Double = {
+      nAssign: Int = 1): Double = withIvf(df, nCells, nAssign) { idx =>
     val recalls = queries.map { q =>
       val brute = Similarity.topK(df, "vec_id", "embedding",
           q.map(_.toDouble).toSeq, k = 5)
         .collect().map(_.getLong(0)).toSet
-      val ivf = Similarity.topKIvf(df, "vec_id", "embedding", q,
-          k = 5, nCells = nCells, nprobe = nprobe, nAssign = nAssign)
+      val ivf = idx.query(q, k = 5, nprobe = nprobe)
         .collect().map(_.getLong(0)).toSet
       (brute intersect ivf).size.toDouble / brute.size
     }

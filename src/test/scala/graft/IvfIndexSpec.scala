@@ -101,7 +101,7 @@ class IvfIndexSpec extends SparkTestBase {
     idx.add(extra)
     // redo the same add — id-idempotent, nothing duplicates
     idx.add(extra)
-    idx.deleteIds(Seq(3L, 51L))
+    idx.deleteIdsDf(Seq(3L, 51L).toDF("id"))
     val q = vec(9L)
     val expectDf = corpus(70).filter(!col("id").isin(3L, 51L))
     val want = bruteTopK(expectDf, q, 6)
@@ -158,20 +158,28 @@ class IvfIndexSpec extends SparkTestBase {
     def cellIds(c: Int) = TableIO.readPartition(spark, base, c)
       .select("id").collect().map(_.getLong(0)).toSet
     val byCell = cells.map(c => c -> cellIds(c)).toMap
-    // ids contiguous within exactly one cell's [min,max] and outside all others
+    // ids contiguous within exactly one cell's [min,max] whose hull lies
+    // outside every other cell's range
     val victimCell = byCell.maxBy { case (_, ids) => ids.size }._1
     val others = cells.filterNot(_ == victimCell)
     val ranges = others.map(c => byCell(c).min -> byCell(c).max)
     val candidates = byCell(victimCell).filter(v =>
-      ranges.forall { case (mn, mx) => v < mn || v > mx }).take(2).toSeq
+      ranges.forall { case (mn, mx) => v < mn || v > mx }).toSeq.sorted.take(2)
     assume(candidates.nonEmpty, "fixture produced no cell-exclusive ids")
+    assume(ranges.forall { case (mn, mx) => candidates.max < mn || candidates.min > mx },
+      "the victims' hull overlaps another cell's range")
+    // strip the other cells' blooms: only their id range can skip them
+    others.foreach { c =>
+      val json = TableIO.readManifest(base, c).get
+      TableIO.writeManifest(base, c, json.replaceAll(""","id_bloom":"[^"]*"""", ""))
+    }
     def snapshot() = others.flatMap { c =>
       val dir = TableIO.partitionDir(base, c)
       java.nio.file.Files.list(dir).iterator().asScala.toSeq
         .map(p => p.toString -> java.nio.file.Files.getLastModifiedTime(p))
     }.toMap
     val before = snapshot()
-    idx.deleteIds(candidates)
+    idx.deleteIdsDf(candidates.toDF("id"))
     assert(snapshot() == before,
       "a delete confined to one cell's id range rewrote other cells")
     val survivors = TableIO.read(spark, base)
@@ -202,7 +210,7 @@ class IvfIndexSpec extends SparkTestBase {
         .map(p => p.toString -> java.nio.file.Files.getLastModifiedTime(p))
     }.toMap
     val before = snapshot()
-    idx.deleteIds(victims)
+    idx.deleteIdsDf(victims.toDF("id"))
     assert(snapshot() == before,
       "a delete bloom-confined to one cell rewrote range-overlapping cells")
     val survivors = TableIO.read(spark, base)
@@ -297,5 +305,40 @@ class IvfIndexSpec extends SparkTestBase {
     assert(jobs.get() <= 12, s"add ran ${jobs.get()} jobs — per-cell commit shape is back")
     val total = TableIO.read(spark, base).count()
     assert(total == 160)
+  }
+
+  test("add stores an id its batch carries twice once, and query returns it once") {
+    val base = fresh("batchdup")
+    val idx = IvfIndex.build(spark, corpus(40), "id", "emb", base, nCells = 4)
+    val twice = Seq((100L, vec(100L)), (100L, vec(100L))).toDF("id", "emb")
+    idx.add(twice)
+    val held = TableIO.read(spark, base).filter(col("id") === 100L).count()
+    assert(held == 1, s"index holds id 100 $held times")
+    val got = idx.query(vec(100L), k = 5, nprobe = 4).collect().map(_.getLong(0)).toSeq
+    assert(got.count(_ == 100L) == 1, s"query returned $got")
+    assert(TableIO.read(spark, base).count() == 41)
+  }
+
+  test("a cell manifest without id range or bloom gets the conservative rewrite") {
+    val base = fresh("legacy")
+    val idx = IvfIndex.build(spark, corpus(80), "id", "emb", base, nCells = 4)
+    val cells = TableIO.donePartitions(base).toSeq.sorted
+    assert(cells.size >= 2)
+    // manifests with the row count only: nothing can prune these cells
+    cells.foreach { c =>
+      val rows = TableIO.readPartition(spark, base, c).count()
+      TableIO.writeManifest(base, c, s"""{"part_id":$c,"rows":$rows}""")
+    }
+    def files(c: Int) = java.nio.file.Files.list(TableIO.partitionDir(base, c))
+      .iterator().asScala.map(_.getFileName.toString).toSet
+    val before = cells.map(c => c -> files(c)).toMap
+    idx.deleteIdsDf(Seq(5L).toDF("id"))
+    cells.foreach { c =>
+      assert(files(c) != before(c), s"cell $c was not rewritten")
+      assert(TableIO.readManifest(base, c).get.contains("\"id_bloom\":"),
+        s"cell $c's rewritten manifest carries no bloom")
+    }
+    val survivors = TableIO.read(spark, base).select("id").collect().map(_.getLong(0)).toSet
+    assert(survivors == (0L until 80L).toSet - 5L)
   }
 }

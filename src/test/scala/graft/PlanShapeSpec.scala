@@ -55,7 +55,8 @@ class PlanShapeSpec extends SparkTestBase {
       Seq(
         graft.dedup.Dedup.minhashNearDups(docs, "id", "text"),
         graft.dedup.Dedup.embeddingNearDups(embs, "id", "emb"),
-        graft.dedup.Dedup.convNearDups(turns) // de-payloaded in r6
+        graft.dedup.Dedup.convNearDups(turns), // de-payloaded in r6
+        graft.knn.Similarity.topKBatchLsh(embs, "id", "emb", embs, "id", "emb")
       ).foreach { df =>
         val exchanges = df.queryExecution.executedPlan.collect {
           case e: ShuffleExchangeExec => e

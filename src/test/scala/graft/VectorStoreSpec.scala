@@ -12,10 +12,10 @@ import graft.tableio.{TableIO, VectorStore}
 class VectorStoreSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshStore(name: String): (VectorStore, String) = {
+  private def freshStore(name: String, nBuckets: Int = 4): (VectorStore, String) = {
     val base = s"/tmp/graft-vstore-$name"
     TableIO.deleteRecursive(java.nio.file.Paths.get(base))
-    (new VectorStore(spark, base, nBuckets = 4), base)
+    (new VectorStore(spark, base, nBuckets), base)
   }
 
   private def rows(ids: Range, source: String) =
@@ -149,5 +149,45 @@ class VectorStoreSpec extends SparkTestBase {
     vs.reset()
     assert(vs.isEmpty)
     assert(vs.count() == 0L)
+  }
+
+  /** Spark jobs `body` starts, counted once the listener bus is quiet. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var last = -1; var stable = 0; var waited = 0
+      while (stable < 4 && waited < 100) {
+        Thread.sleep(100); waited += 1
+        val now = jobs.get()
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("an add touching all 16 buckets runs no more Spark jobs than one touching 2") {
+    val (vs, base) = freshStore("addjobs", nBuckets = 16)
+    vs.add(rows(0 until 200, "web"))
+    assert(TableIO.donePartitions(base).size == 16)
+    // new ids, bucketed as the store buckets them
+    val bucketed = rows(200 until 600, "pdf")
+      .select(col("id"), pmod(xxhash64(col("id")), lit(16)).cast("int"))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toSeq
+    val two = bucketed.map(_._2).distinct.sorted.take(2).toSet
+    val intoTwo = bucketed.collect { case (id, b) if two(b) => id }.take(6).toSet
+    val intoAll = bucketed.map(_._1).filterNot(intoTwo).take(200).toSet
+    def buckets(ids: Set[String]) = bucketed.filter(r => ids(r._1)).map(_._2).toSet
+    assert(buckets(intoTwo) == two && buckets(intoAll).size == 16)
+    def batch(ids: Set[String]) = rows(200 until 600, "pdf").filter(col("id").isin(ids.toSeq: _*))
+    val jobs2 = jobsOf(vs.add(batch(intoTwo)))
+    val jobs16 = jobsOf(vs.add(batch(intoAll)))
+    assert(jobs16 <= jobs2, s"16-bucket add ran $jobs16 jobs, 2-bucket add $jobs2")
+    assert(vs.count() == 200 + intoTwo.size + intoAll.size)
   }
 }
