@@ -51,14 +51,25 @@ object SparkEntry {
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** A fresh temp directory for a table a query writes, deleted when
-    * the JVM exits: the query's frame is lazy and reads the table
-    * whenever it is run, so the directory cannot go earlier.
+  /** Root of the tables queries write: one per JVM, so concurrent
+    * processes (sbt test + Verify) never share a table, deleted by one
+    * shutdown hook.
     */
-  private def queryTempDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook(graft.tableio.TableIO.deleteRecursive(dir))
-    dir.toString
+  private lazy val queryTempRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-query-tables")
+    sys.addShutdownHook(graft.tableio.TableIO.deleteRecursive(root))
+    root
+  }
+
+  /** The directory of the table query `name` writes, emptied on each
+    * call, so repeated runs in one JVM keep one table per query. The
+    * query's frame is lazy and reads the table whenever it is run: it
+    * stays valid until the next call of the same query.
+    */
+  private def queryTempDir(name: String): String = synchronized {
+    val dir = queryTempRoot.resolve(name)
+    graft.tableio.TableIO.deleteRecursive(dir)
+    java.nio.file.Files.createDirectories(dir).toString
   }
 
   /** documents as the (id, text) frame the dedup operators take. */
@@ -1323,12 +1334,10 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       val q = emb.filter(F.col("vec_id") === 0)
         .select("embedding").head().getSeq[Float](0).toArray
-      graft.knn.IvfIndex.build(s, emb, "vec_id", "embedding", queryTempDir("graft-ivf"),
-          nCells = 16)
-        .query(q, 5, nprobe = 4)
+      graft.knn.IvfIndex.topK(emb, "vec_id", "embedding", q, k = 5, nCells = 16, nprobe = 4)
         .withColumn("sim", r6(F.col("sim")))
     },
-      Left("approximate top-k: the IvfIndex probes 4 of its 16 k-means cells, so " +
+      Left("approximate top-k: IvfIndex.topK probes 4 of 16 k-means cells, so " +
         "the answer depends on the trained centroids; the SQL replay of them (a " +
         "VALUES table of the centroids, assignment and probe) is not written yet " +
         "(ann_ivf_indexed, probing every cell, is oracled)")),
@@ -1341,7 +1350,7 @@ object SparkEntry {
       // duplicated ids in the index); the pruned-probe path (recall,
       // inputFiles ⊂ one cell) is asserted in IvfIndexSpec.
       val emb = tbl(s, dir, "embeddings")
-      val basePath = queryTempDir("graft-ivf-indexed")
+      val basePath = queryTempDir("ann_ivf_indexed")
       val built = graft.knn.IvfIndex.build(s, emb, "vec_id", "embedding",
         basePath, nCells = 8)
       val idx = graft.knn.IvfIndex.load(s, basePath) // exercise load()
@@ -1514,9 +1523,9 @@ object SparkEntry {
       // documents, copy-on-write delete doc_id % 7 == 0, read back the
       // survivors (DuckDB-oracled)
       import graft.tableio.VectorStore
-      // a fresh dir per call: concurrent processes (sbt test + Verify)
-      // must not mutate each other's store
-      val vs = new VectorStore(s, queryTempDir("graft-vstore-query"), nBuckets = 8)
+      // a per-JVM dir: concurrent processes (sbt test + Verify) must
+      // not mutate each other's store
+      val vs = new VectorStore(s, queryTempDir("store_mutations"), nBuckets = 8)
       vs.add(tbl(s, dir, "documents")
         .select(F.col("doc_id").cast("string").as("id"),
           F.col("text").as("chunk"), F.col("source")))

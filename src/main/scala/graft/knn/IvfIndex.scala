@@ -27,6 +27,8 @@ import graft.tableio.TableIO
   * `nprobe` cell directories and reads ONLY those (genuine partition
   * pruning — the 10^12-row analog is an Iceberg partition spec on the
   * cell id). No k-means, no full scan, no driver collect of vectors.
+  * [[IvfIndex.topK]] runs the same assignment, probe and top-k for a
+  * single query without writing an index.
   *
   * Mutations keep the index consistent WITHOUT re-clustering: centroids
   * are fixed at build time, so an added row's cell is a pure function
@@ -51,24 +53,8 @@ final class IvfIndex private[knn] (
   def probeCells(q: Array[Float], nprobe: Int): Seq[Int] =
     IvfIndex.nearestCells(centroids, q, nprobe)
 
-  /** Cells a VECTOR is indexed under (its nAssign nearest centroids —
-    * same metric as the probe, so probe/assign stay consistent).
-    */
-  private def assignUdf: Column => Column = {
-    val cs = centroids
-    val nA = nAssign
-    if (nA == 1) {
-      val u = F.udf((v: Array[Float]) => Similarity.nearestCentroid(v, cs))
-      c => u(c)
-    } else {
-      val u = F.udf((v: Array[Float]) => IvfIndex.nearestCells(cs, v, nA))
-      c => F.explode(u(c))
-    }
-  }
-
   private def withCells(df: DataFrame): DataFrame =
-    df.select(F.col(idCol), F.col(embCol))
-      .withColumn(TableIO.PART_COL, assignUdf(F.col(embCol)))
+    IvfIndex.withCells(df, idCol, embCol, centroids, nAssign)
 
   /** Top-k by exact cosine over the probed cells only. The returned
     * plan's scan contains ONLY the probed partition directories
@@ -78,13 +64,7 @@ final class IvfIndex private[knn] (
     val done = TableIO.donePartitions(base)
     val cells = probeCells(q, nprobe).filter(done.contains)
     require(cells.nonEmpty, s"no committed cells among probed $nprobe at $base")
-    val cosU = F.udf((a: Array[Float]) => Similarity.cosine(a, q))
-    val scored = TableIO.readPartitions(spark, base, cells)
-      .select(F.col(idCol), cosU(F.col(embCol)).as("sim"))
-    // multi-assignment can surface one id via several probed cells
-    (if (nAssign > 1) scored.dropDuplicates(idCol) else scored)
-      .orderBy(F.col("sim").desc, F.col(idCol))
-      .limit(k)
+    IvfIndex.topKOf(TableIO.readPartitions(spark, base, cells), idCol, embCol, nAssign, q, k)
   }
 
   /** Index new rows under the FIXED centroids: every receiving cell is
@@ -197,6 +177,47 @@ object IvfIndex {
   private def nearestCells(centroids: Array[Array[Float]], v: Array[Float], n: Int): Seq[Int] =
     centroids.indices.map(i => (i, Similarity.cosine(v, centroids(i))))
       .sortBy { case (i, s) => (-s, i) }.take(n).map(_._1)
+
+  /** (idCol, embCol, part_id) rows: each vector under its `nAssign`
+    * nearest centroids (same metric as the probe, so probe and assign
+    * stay consistent; one row per assignment).
+    */
+  private def withCells(
+      df: DataFrame, idCol: String, embCol: String,
+      centroids: Array[Array[Float]], nAssign: Int): DataFrame = {
+    val emb = F.col(embCol)
+    val cell =
+      if (nAssign == 1) F.udf((v: Array[Float]) => Similarity.nearestCentroid(v, centroids)).apply(emb)
+      else F.explode(F.udf((v: Array[Float]) => nearestCells(centroids, v, nAssign)).apply(emb))
+    df.select(F.col(idCol), emb).withColumn(TableIO.PART_COL, cell)
+  }
+
+  /** Exact-cosine top-k of `rows` by (sim desc, id). */
+  private def topKOf(
+      rows: DataFrame, idCol: String, embCol: String, nAssign: Int,
+      q: Array[Float], k: Int): DataFrame = {
+    val cosU = F.udf((a: Array[Float]) => Similarity.cosine(a, q))
+    val scored = rows.select(F.col(idCol), cosU(F.col(embCol)).as("sim"))
+    // multi-assignment can surface one id via several probed cells
+    (if (nAssign > 1) scored.dropDuplicates(idCol) else scored)
+      .orderBy(F.col("sim").desc, F.col(idCol))
+      .limit(k)
+  }
+
+  /** One-shot IVF top-k that writes nothing: the centroids, assignment,
+    * probe and top-k of `build(...).query(q, k, nprobe)`, over `df`'s
+    * assigned rows filtered to the probed cells instead of a persisted
+    * index. For a single query, where building the index would cost
+    * more than the query.
+    */
+  def topK(df: DataFrame, idCol: String, embCol: String, q: Array[Float],
+      k: Int = 5, nCells: Int = 16, nprobe: Int = 4, nAssign: Int = 1): DataFrame = {
+    val centroids = Similarity.kmeansCentroids(df, idCol, embCol, nCells)
+    val cells = nearestCells(centroids, q, nprobe)
+    val probed = withCells(df, idCol, embCol, centroids, nAssign)
+      .filter(F.col(TableIO.PART_COL).isin(cells: _*))
+    topKOf(probed, idCol, embCol, nAssign, q, k)
+  }
 
   def exists(base: String): Boolean = Files.exists(metaPath(base))
 

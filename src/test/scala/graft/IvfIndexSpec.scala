@@ -93,6 +93,22 @@ class IvfIndexSpec extends SparkTestBase {
       built.query(q, 5, 4).collect().toSeq)
   }
 
+  test("topK writes no index and returns build + query's rows (nAssign 1 and 2)") {
+    val data = corpus(80)
+    for (nAssign <- Seq(1, 2)) {
+      val idx = IvfIndex.build(spark, data, "id", "emb", fresh(s"topk$nAssign"),
+        nCells = 8, nAssign = nAssign)
+      for (qs <- Seq(3L, 17L, 42L)) {
+        val q = vec(qs)
+        val oneShot = IvfIndex.topK(data, "id", "emb", q, k = 5, nCells = 8, nprobe = 3,
+          nAssign = nAssign)
+        assert(oneShot.inputFiles.isEmpty) // reads only the in-memory corpus
+        assert(oneShot.collect().toSeq == idx.query(q, k = 5, nprobe = 3).collect().toSeq,
+          s"nAssign $nAssign, query $qs")
+      }
+    }
+  }
+
   test("incremental add/delete keeps the index equal to a fresh rebuild (fixed centroids)") {
     val base = fresh("incr")
     val first = corpus(50)

@@ -151,24 +151,13 @@ class VectorStoreSpec extends SparkTestBase {
     assert(vs.count() == 0L)
   }
 
-  /** Spark jobs `body` starts, counted once the listener bus is quiet. */
+  /** Spark jobs `body` starts, counted in a job group of its own. */
   private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 4 && waited < 100) {
-        Thread.sleep(100); waited += 1
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
+    val sc = spark.sparkContext
+    val group = s"vstore-add-${System.nanoTime()}"
+    sc.setJobGroup(group, "VectorStore.add")
+    try body finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
   }
 
   test("an add touching all 16 buckets runs no more Spark jobs than one touching 2") {
