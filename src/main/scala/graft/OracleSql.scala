@@ -132,7 +132,7 @@ object OracleSql {
     val vcols = (0 to nL).map(i => s"c$i").mkString(", ")
     // ORDER-FORCED left-fold, not sum(): the engine adds per-gram
     // weights in gram-emission order (position ascending, gram length
-    // 1→3 within a position, LangId.foreachGramBucket); unordered
+    // 1→3 within a position, LangId.gramBuckets); unordered
     // float sum() has the same build/threading last-ulp exposure that
     // flipped perplexity_turns in CORRECTNESS_r04.
     val sums = (0 until nL).map { l =>

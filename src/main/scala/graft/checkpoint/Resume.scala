@@ -7,11 +7,9 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Observation, SparkSession}
 
-import graft.pipeline.Curate
+import graft.pipeline.{Curate, CurateCore}
 import graft.rules.QualityRules
 import graft.tableio.TableIO
 
@@ -67,10 +65,13 @@ object Resume {
     val done = TableIO.donePartitions(outputBase)
     val todo = inputParts.filterNot(done.contains).sorted.take(maxPartitions)
     val processed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    if (todo.isEmpty) return RunResult(Nil, done.toSeq.sorted)
+    // one broadcast of the kernel for every partition of this run
+    val core = spark.sparkContext.broadcast(new CurateCore(models.langId, models.lm, cfg))
 
     def processOne(p: Int): Unit = {
       val turns = TableIO.readPartition(spark, inputBase, p)
-      val curated = Curate.curateDf(spark, turns, cfg, models)
+      val curated = Curate.curateWith(turns, core)
       // observed after the shuffle, in the write's result stage, where a
       // retried task's update still counts once
       val obs = Observation()
@@ -96,6 +97,7 @@ object Resume {
     } finally {
       pool.shutdown() // in-flight partitions finish before run returns
       pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      core.destroy()
     }
     RunResult(processed.asScala.toSeq.sorted, done.toSeq.sorted)
   }
@@ -117,8 +119,7 @@ object Resume {
   private def footerRowCount(dir: Path, conf: Configuration): Long =
     TableIO.parquetFiles(dir)
       .map { f =>
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+        val r = TableIO.openFooter(new org.apache.hadoop.fs.Path(f.toUri), conf)
         try r.getRecordCount finally r.close()
       }
       .sum

@@ -29,18 +29,35 @@ final class LangIdModel(
     */
   def predict(text: String): (String, Double) = {
     val nL = langs.length
-    val scores = new Array[Double](nL)
-    var nGrams = 0
-    LangId.foreachGramBucket(text, nBuckets) { b =>
-      val base = b * nL
-      var l = 0
-      while (l < nL) { scores(l) += weights(base + l); l += 1 }
-      nGrams += 1
-    }
+    val buckets = new Array[Int](LangId.maxGrams(text))
+    val nGrams = LangId.gramBuckets(text, nBuckets, buckets)
     if (nGrams == 0) return ("und", 0.0)
+    // each language's score sums its weights in gram order, so the sum
+    // is the same double however the languages interleave. One pass over
+    // the grams sums up to four languages, each in its own register
+    val scores = new Array[Double](nL)
+    var l = 0
+    while (l < nL) {
+      val k = math.min(4, nL - l)
+      var s0, s1, s2, s3 = 0.0
+      var g = 0
+      while (g < nGrams) {
+        val w = buckets(g) * nL + l
+        s0 += weights(w)
+        if (k > 1) s1 += weights(w + 1)
+        if (k > 2) s2 += weights(w + 2)
+        if (k > 3) s3 += weights(w + 3)
+        g += 1
+      }
+      scores(l) = s0
+      if (k > 1) scores(l + 1) = s1
+      if (k > 2) scores(l + 2) = s2
+      if (k > 3) scores(l + 3) = s3
+      l += 4
+    }
     // average log-prob → softmax over languages
     var best = 0
-    var l = 1
+    l = 1
     while (l < nL) { if (scores(l) > scores(best)) best = l; l += 1 }
     var denom = 0.0
     l = 0
@@ -59,56 +76,79 @@ object LangId extends Serializable {
     */
   val maxChars = 512
 
-  /** Iterate hashed buckets of char 1..3-grams over the lowercased,
-    * space-normalized, boundary-marked text. FNV-1a over the gram chars;
+  /** Hashed buckets of char 1..3-grams over the lowercased,
+    * space-normalized, boundary-marked text, in a fixed order: by end
+    * position, then 1-, 2-, 3-gram. FNV-1a over the gram chars;
     * deterministic across JVMs (no String.hashCode dependence needed,
-    * but FNV keeps it explicit).
+    * but FNV keeps it explicit). The order keeps the float sums of
+    * [[LangIdModel.predict]] reproducible; [[train]] counts the same
+    * buckets.
+    *
+    * One pass over the text: each char is normalized and tested with
+    * `Character.isLetter` once, the 2- and 3-gram hashes ending at a
+    * char extend the 1- and 2-gram hashes that ended at the char before
+    * it, and a power-of-two `nBuckets` reduces a hash with a mask, which
+    * equals the `%` of the non-negative hash.
+    *
+    * @param out receives the buckets; at least [[maxGrams]]`(text)` long
+    * @return the number of buckets written
     */
-  @inline def foreachGramBucket(text: String, nBuckets: Int)(f: Int => Unit): Unit = {
-    if (text == null || text.isEmpty) return
+  def gramBuckets(text: String, nBuckets: Int, out: Array[Int]): Int = {
+    if (text == null || text.isEmpty) return 0
     val len = math.min(text.length, maxChars)
-    // normalized char stream with sentinel boundaries
-    val buf = new StringBuilder(len + 2)
-    buf.append(' ')
-    var i = 0
+    var n = 0
+    val mask = if (Integer.bitCount(nBuckets) == 1) nBuckets - 1 else -1
+    var h1Prev, h2Prev = 0 // hashes of the 1- and 2-gram ending one char back
+    var letter1Prev, letter2Prev = false // whether the chars one and two back are letters
+    var j = 0 // position in the normalized stream
     var prevSpace = true
-    while (i < len) {
-      val c0 = text.charAt(i)
-      val c = if (Character.isWhitespace(c0)) ' ' else Character.toLowerCase(c0)
-      if (c != ' ' || !prevSpace) buf.append(c)
-      prevSpace = c == ' '
+    var i = -1 // text index; -1 is the leading boundary space, len the trailing one
+    while (i <= len) {
+      var c = ' '
+      val emit =
+        if (i < 0) true
+        else if (i == len) !prevSpace
+        else {
+          val c0 = text.charAt(i)
+          if (c0 < 0x80) { // ASCII: the Character methods' answers, inline
+            if (!(c0 == ' ' || (c0 >= '\t' && c0 <= '\r') || (c0 >= 0x1c && c0 <= 0x1f)))
+              c = if (c0 >= 'A' && c0 <= 'Z') (c0 | 0x20).toChar else c0
+          } else if (!Character.isWhitespace(c0)) c = Character.toLowerCase(c0)
+          val e = c != ' ' || !prevSpace
+          prevSpace = c == ' '
+          e
+        }
+      if (emit) {
+        // grams with no letter carry no language signal (digits,
+        // punctuation, the boundary spaces) — skipped in BOTH train and
+        // predict, so letter-free text yields zero features → "und"
+        val letter = if (c < 0x80) c >= 'a' && c <= 'z' else Character.isLetter(c) // c is lowercased
+        val h1 = (0x811c9dc5 ^ c) * 0x01000193 // FNV offset, FNV prime
+        val h2 = (h1Prev ^ c) * 0x01000193
+        val h3 = (h2Prev ^ c) * 0x01000193
+        if (letter) { out(n) = bucket(h1, nBuckets, mask); n += 1 }
+        if (j >= 1 && (letter || letter1Prev)) { out(n) = bucket(h2, nBuckets, mask); n += 1 }
+        if (j >= 2 && (letter || letter1Prev || letter2Prev)) {
+          out(n) = bucket(h3, nBuckets, mask); n += 1
+        }
+        h2Prev = h2; h1Prev = h1
+        letter2Prev = letter1Prev; letter1Prev = letter
+        j += 1
+      }
       i += 1
     }
-    if (!prevSpace) buf.append(' ')
-    val s = buf
-    val n = s.length
-    var j = 0
-    while (j < n) {
-      // 1-gram (skip pure spaces), 2-gram, 3-gram ending at j
-      var g = 1
-      while (g <= 3 && g <= j + 1) {
-        val st = j - g + 1
-        // grams with no letter carry no language signal (digits,
-        // punctuation) — skipped in BOTH train and predict, so
-        // letter-free text yields zero features → "und"
-        var hasLetter = false
-        var h = 0x811c9dc5 // FNV offset
-        var k = st
-        while (k <= j) {
-          val ch = s.charAt(k)
-          if (Character.isLetter(ch)) hasLetter = true
-          h = (h ^ ch) * 0x01000193
-          k += 1
-        }
-        if (hasLetter) {
-          val b = (h & 0x7fffffff) % nBuckets
-          f(b)
-        }
-        g += 1
-      }
-      j += 1
-    }
+    n
   }
+
+  /** An upper bound on the buckets [[gramBuckets]] writes: 3 grams per
+    * char of the normalized stream, the scored chars plus the two
+    * boundary spaces.
+    */
+  def maxGrams(text: String): Int =
+    if (text == null || text.isEmpty) 0 else 3 * (math.min(text.length, maxChars) + 2)
+
+  @inline private def bucket(h: Int, nBuckets: Int, mask: Int): Int =
+    if (mask >= 0) h & 0x7fffffff & mask else (h & 0x7fffffff) % nBuckets
 
   /** Train from (text, lang) samples. Add-k smoothing (k=0.5). */
   def train(samples: Seq[(String, String)], nBuckets: Int = 1 << 15): LangIdModel = {
@@ -119,10 +159,11 @@ object LangId extends Serializable {
     val totals = new Array[Double](nL)
     samples.foreach { case (text, lang) =>
       val li = idx(lang)
-      foreachGramBucket(text, nBuckets) { b =>
-        counts(b * nL + li) += 1.0
-        totals(li) += 1.0
-      }
+      val buckets = new Array[Int](maxGrams(text))
+      val n = gramBuckets(text, nBuckets, buckets)
+      var g = 0
+      while (g < n) { counts(buckets(g) * nL + li) += 1.0; g += 1 }
+      totals(li) += n
     }
     val k = 0.5
     val weights = new Array[Float](nBuckets * nL)

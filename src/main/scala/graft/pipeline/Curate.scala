@@ -59,10 +59,15 @@ object Curate {
       turns: DataFrame,
       cfg: QualityRules.Config = QualityRules.defaultConfig,
       models: Models = defaultModels
-  ): DataFrame = {
-    val bCore: Broadcast[CurateCore] = spark.sparkContext.broadcast(
-      new CurateCore(models.langId, models.lm, cfg))
-    val coreU = F.udf((t: String) => bCore.value.process(t))
+  ): DataFrame =
+    curateWith(turns, spark.sparkContext.broadcast(new CurateCore(models.langId, models.lm, cfg)))
+
+  /** [[curateDf]] with the kernel already broadcast: a caller that
+    * curates many DataFrames with one kernel (`Resume.run`, once per
+    * partition) ships it once and destroys the broadcast when done.
+    */
+  private[graft] def curateWith(turns: DataFrame, core: Broadcast[CurateCore]): DataFrame = {
+    val coreU = F.udf((t: String) => core.value.process(t))
     turns
       .withColumn("__c", coreU(F.col("text")))
       .select(

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.Locale
+
 import graft.langid.LangIdModel
 import graft.lm.NGramLM
 import graft.rules.{GrammarRules, QualityRules}
@@ -20,6 +22,26 @@ import graft.scrub.Scrubber
   * cheap rules pass; perplexity only when everything else passes —
   * the reference's "only error chunks reach the LLM" analog,
   * smart_corrector.py:114-128).
+  *
+  * A row that passes the length gates is lowercased ONCE, under
+  * `Locale.ROOT`, and that copy feeds the repetition rule, the
+  * boilerplate guard and the grammar guards. Each guard skips a regex
+  * scan only where the regex cannot match, so no decision depends on
+  * them:
+  *  - boilerplate: every alternative starts with an ASCII word that
+  *    `(?i)` matches only in ASCII letters, which lowercase to that
+  *    word under `Locale.ROOT` — so the regex runs only when the copy
+  *    contains one (`QualityRules.isBoilerplate`);
+  *  - grammar: a rule runs only when the copy contains one of its
+  *    literals (lowercasing maps ASCII letters and `\s` chars one to
+  *    one, so `He  ARE` shows in the copy as `he  are`), and for the
+  *    subject-verb, article and POS rules only when a scan of the text
+  *    finds the literal words in the order, case and spacing the
+  *    pattern requires. A scan rejects a `\b` only next to an ASCII
+  *    word char, where Java's `\b` certainly fails
+  *    (`GrammarRules.pairCandidate` and the scans beside it);
+  *  - repetition: not a guard but the same tokens — the copy is split
+  *    on exactly the chars of regex `\s`, as `split("\\s+")` did.
   */
 final case class CurateResult(
     lang: String,
@@ -45,7 +67,8 @@ final class CurateCore(
     // one-pass scalar stats: word count, distinct-word ratio inputs,
     // symbol count (same definitions as QualityRules.*Col)
     var reason: String = null
-    if (text == null || isBlank(text)) reason = "empty"
+    var lower: String = null // text.toLowerCase(Locale.ROOT), once past the length gates
+    if (text == null) reason = "empty"
     else {
       var wc = 0
       var sym = 0
@@ -62,19 +85,26 @@ final class CurateCore(
       }
       // length gate counts CODE POINTS — the unfused pipeline's
       // F.length is code points, and UTF-16 units would flip keep/drop
-      // for supplementary-char rows near maxChars (ADVICE r1)
-      val cpLen = text.codePointCount(0, len)
-      if (wc < cfg.minWords) reason = "too_short"
-      else if (wc > cfg.maxWords || cpLen > cfg.maxChars) reason = "too_long"
-      else if (wc >= cfg.repMinWords && distinctRatio(text, wc) < cfg.minDistinctRatio)
-        reason = "repetition"
-      else if (sym.toDouble / len > cfg.maxSymbolRatio) reason = "symbol_ratio"
-      else if (QualityRules.isBoilerplate(text)) reason = "boilerplate"
+      // for supplementary-char rows near maxChars (ADVICE r1); there are
+      // no more code points than units, so only a long row is counted
+      val tooManyChars = len > cfg.maxChars && text.codePointCount(0, len) > cfg.maxChars
+      // no word ⇔ every char is whitespace (or there is none)
+      if (wc == 0) reason = "empty"
+      else if (wc < cfg.minWords) reason = "too_short"
+      else if (wc > cfg.maxWords || tooManyChars) reason = "too_long"
+      else {
+        lower = text.toLowerCase(Locale.ROOT)
+        if (wc >= cfg.repMinWords &&
+            QualityRules.distinctRatioOfLower(lower) < cfg.minDistinctRatio)
+          reason = "repetition"
+        else if (sym.toDouble / len > cfg.maxSymbolRatio) reason = "symbol_ratio"
+        else if (QualityRules.isBoilerplate(text, lower)) reason = "boilerplate"
+      }
     }
 
     var hits: Seq[String] = Nil
     if (reason == null && cfg.grammarEnabled) {
-      val rh = GrammarRules.ruleHits(text, withContext = false)
+      val rh = GrammarRules.ruleHitsOfLower(text, lower, includePos = true, withContext = false)
       hits = rh.map(_.rule_id)
       if (rh.size >= cfg.maxRuleHits) reason = "grammar"
       else if (cfg.cykEnabled &&
@@ -102,33 +132,5 @@ final class CurateCore(
 
     CurateResult(lang, langConf, ppl, hits, reason == null, reason,
       scrub.scrubbed, scrub.hits)
-  }
-
-  @inline private def isBlank(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      if (!Character.isWhitespace(s.charAt(i))) return false
-      i += 1
-    }
-    true
-  }
-
-  /** distinct lowercased whitespace-token ratio — EXACTLY matches
-    * QualityRules.distinctRatioCol
-    * (array_remove(split(lower(text), "\\s+"), "")): same regex split,
-    * same empty-token filter, no Java trim (which strips \t/\n that
-    * the column form's space-only trim kept — ADVICE r1), so fused and
-    * unfused pipelines agree on every input.
-    */
-  private def distinctRatio(text: String, wc: Int): Double = {
-    val words = text.toLowerCase.split("\\s+")
-    var n = 0
-    val set = new java.util.HashSet[String](wc * 2)
-    var i = 0
-    while (i < words.length) {
-      if (words(i).nonEmpty) { set.add(words(i)); n += 1 }
-      i += 1
-    }
-    if (n == 0) 1.0 else set.size.toDouble / n
   }
 }

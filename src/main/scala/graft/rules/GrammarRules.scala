@@ -1,5 +1,6 @@
 package graft.rules
 
+import java.util.Locale
 import java.util.regex.Pattern
 
 import scala.collection.mutable.ArrayBuffer
@@ -62,16 +63,23 @@ object GrammarRules extends Serializable {
     graft.util.PyStr.pyStrip(marked)
   }
 
-  /** `guards`: lowercase literal substrings, at least one of which MUST
-    * appear in the lowercased text for the pattern to possibly match
-    * (conservative pre-filter — `String.contains` is far cheaper than a
-    * regex scan, and on clean text most rules are skipped entirely).
-    * Empty = always run.
-    */
-  /** @param noSentPunctOnly the pattern can only match a text with NO
+  /** @param guards lowercase literal substrings, at least one of which
+    *   MUST appear in the text lowercased under `Locale.ROOT` for the
+    *   pattern to possibly match (conservative pre-filter —
+    *   `String.contains` is far cheaper than a regex scan, and on clean
+    *   text most rules are skipped entirely). Empty = always run.
+    * @param candidate when set, a test of (text, lowercased text) that is
+    *   true whenever the pattern can match; run after a guard passed,
+    *   and the regex runs only when it holds. Each one is exact in that
+    *   sense (see [[pairCandidate]], [[articleCandidate]]), so the hits
+    *   never change: the regex still decides.
+    * @param noSentPunctOnly the pattern can only match a text with NO
     *   sentence punctuation anywhere (every char is consumed by a piece
     *   that excludes [.!?]) — one indexOf beats an anchored regex scan
     *   on the common punctuated text.
+    * @param sameAs index of an earlier spec with the same pattern,
+    *   guards and candidate: its matches are reused, not scanned for
+    *   again.
     */
   private final case class Spec(
       ruleId: String,
@@ -79,10 +87,19 @@ object GrammarRules extends Serializable {
       pattern: Pattern,
       confidence: Double,
       guards: Array[String],
-      noSentPunctOnly: Boolean = false
+      candidate: (String, String) => Boolean = null,
+      noSentPunctOnly: Boolean = false,
+      sameAs: Int = -1
   )
 
   private def ci(p: String) = Pattern.compile(p, Pattern.CASE_INSENSITIVE)
+  // the literal words of the subject-verb patterns, for their candidate scans
+  private val heSheIt = Array("he", "she", "it")
+  private val theyWeYou = Array("they", "we", "you")
+  private val iWord = Array("i")
+  private val areWord = Array("are")
+  private val isWord = Array("is")
+  private val wasWord = Array("was")
   private def cs(p: String) = Pattern.compile(p)
 
   /** Evaluation order = reference check_text order (cfg_checker.py:283-308):
@@ -90,12 +107,17 @@ object GrammarRules extends Serializable {
     */
   private val specs: Array[Spec] = Array(
     // Rule 1: subject-verb disagreement (cfg_checker.py:141-146, conf 0.8)
-    Spec("BASIC_SUBJ_VERB", "Basic Subject-Verb Agreement", ci("\\b(he|she|it)\\s+are\\b"), 0.8, Array("are")),
-    Spec("BASIC_SUBJ_VERB", "Basic Subject-Verb Agreement", ci("\\b(they|we|you)\\s+is\\b"), 0.8, Array("is")),
-    Spec("BASIC_SUBJ_VERB", "Basic Subject-Verb Agreement", ci("\\b(I)\\s+are\\b"), 0.8, Array("are")),
-    Spec("BASIC_SUBJ_VERB", "Basic Subject-Verb Agreement", ci("\\b(was)\\s+(they|we|you)\\b"), 0.8, Array("was")),
+    Spec("BASIC_SUBJ_VERB", "Basic Subject-Verb Agreement", ci("\\b(he|she|it)\\s+are\\b"), 0.8, Array("are"),
+      (t, l) => spaceThen(l, "are") && pairCandidate(t, heSheIt, areWord)),
+    Spec("BASIC_SUBJ_VERB", "Basic Subject-Verb Agreement", ci("\\b(they|we|you)\\s+is\\b"), 0.8, Array("is"),
+      (t, l) => spaceThen(l, "is") && pairCandidate(t, theyWeYou, isWord)),
+    Spec("BASIC_SUBJ_VERB", "Basic Subject-Verb Agreement", ci("\\b(I)\\s+are\\b"), 0.8, Array("are"),
+      (t, l) => spaceThen(l, "are") && pairCandidate(t, iWord, areWord)),
+    Spec("BASIC_SUBJ_VERB", "Basic Subject-Verb Agreement", ci("\\b(was)\\s+(they|we|you)\\b"), 0.8, Array("was"),
+      (t, _) => pairCandidate(t, wasWord, theyWeYou)),
     // Rule 2: missing articles (cfg_checker.py:165-168, conf 0.6, case-sensitive)
-    Spec("BASIC_ARTICLES", "Basic Article Usage", cs("\\b(is|was)\\s+([A-Z][a-z]+)\\b"), 0.6, Array("is", "was")),
+    Spec("BASIC_ARTICLES", "Basic Article Usage", cs("\\b(is|was)\\s+([A-Z][a-z]+)\\b"), 0.6, Array("is", "was"),
+      (t, _) => articleCandidate(t)),
     Spec("BASIC_ARTICLES", "Basic Article Usage", cs("\\bwent\\s+to\\s+([a-z]+)\\b"), 0.6, Array("went")),
     // Rule 3: common mistakes (cfg_checker.py:187-192, conf 0.7)
     Spec("BASIC_COMMON", "Common Grammar Mistakes", ci("\\bthere\\s+is\\s+many\\b"), 0.7, Array("there")),
@@ -103,7 +125,9 @@ object GrammarRules extends Serializable {
     Spec("BASIC_COMMON", "Common Grammar Mistakes", ci("\\bfocus\\s+on\\b"), 0.7, Array("focus")),
     Spec("BASIC_COMMON", "Common Grammar Mistakes", ci("\\bmachine\\s+to\\s+understand\\b"), 0.7, Array("machine")),
     // Bank rules (cfg_checker.py:81-111 via :212-242, IGNORECASE)
-    Spec("BASIC_001", "subject_verb_disagreement", ci("\\b(he|she|it)\\s+are\\b"), 0.9, Array("are")),
+    // the pattern of the first BASIC_SUBJ_VERB spec, scanned once for both
+    Spec("BASIC_001", "subject_verb_disagreement", ci("\\b(he|she|it)\\s+are\\b"), 0.9, Array("are"),
+      sameAs = 0),
     Spec("BASIC_002", "double_negative",
       ci("\\b(don't|doesn't|didn't|won't|can't|couldn't|shouldn't|wouldn't)\\s+\\w*n't\\b"), 0.8, Array("n't", "n’t")),
     Spec("BASIC_003", "incomplete_sentence", ci("^\\s*[A-Z][^.!?]*[a-z]\\s*$"), 0.7,
@@ -142,6 +166,122 @@ object GrammarRules extends Serializable {
   @inline private def isWordChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
       (c >= '0' && c <= '9') || c == '_'
+
+  // ---- exact candidate scans (Spec.candidate) ----
+  //
+  // Each is true whenever its regex can match. A scan that looks at
+  // neighbours reads `text`, not the lowercased copy, since lowercasing
+  // may change the length (`İ` becomes two chars). Java's `\b` (JDK 17)
+  // counts every `Character.isLetterOrDigit` char as a word char, and a
+  // non-spacing mark after one, so a scan may rule out a boundary only
+  // where the neighbour is an ASCII `[A-Za-z0-9_]`: next to an ASCII
+  // letter of the match there is then certainly none.
+
+  @inline private def wordCharAt(text: String, i: Int): Boolean =
+    i >= 0 && i < text.length && isWordChar(text.charAt(i))
+
+  /** `word` (lowercase ASCII letters) at `i` the way CASE_INSENSITIVE
+    * without UNICODE_CASE matches it: each char in either ASCII case.
+    */
+  @inline private def asciiCiAt(text: String, i: Int, word: String): Boolean = {
+    if (i < 0 || i + word.length > text.length) return false
+    var k = 0
+    while (k < word.length) {
+      if ((text.charAt(i + k) | 0x20) != word.charAt(k)) return false
+      k += 1
+    }
+    true
+  }
+
+  /** Whether `lower` holds `word` (lowercase ASCII) right after a `\s`
+    * char. It does whenever the text holds `word` ASCII-case-insensitively
+    * right after one: lowercasing maps each of those chars to one char,
+    * the ASCII letters to lowercase and the `\s` chars to themselves. A
+    * cheap pre-filter for [[pairCandidate]], on the fast `indexOf`.
+    */
+  private def spaceThen(lower: String, word: String): Boolean = {
+    var k = lower.indexOf(word, 1)
+    while (k > 0) {
+      if (QualityRules.isRegexSpace(lower.charAt(k - 1))) return true
+      k = lower.indexOf(word, k + 1)
+    }
+    false
+  }
+
+  /** True whenever `(?i)\b(firsts)\s+(seconds)\b` can match: some
+    * second word with no ASCII word char after it, then going back at
+    * least one `\s` (`QualityRules.isRegexSpace`), and then a first
+    * word ending there with no ASCII word char before it. The `\s+`
+    * takes every space between the two words, so the first word must
+    * end exactly where the backward walk stops.
+    */
+  private def pairCandidate(text: String, firsts: Array[String],
+      seconds: Array[String]): Boolean = {
+    var p = 1
+    while (p < text.length) {
+      val c = text.charAt(p) | 0x20
+      var s = 0
+      while (s < seconds.length) {
+        val w = seconds(s)
+        if (c == w.charAt(0) && asciiCiAt(text, p, w) && !wordCharAt(text, p + w.length)) {
+          var q = p - 1
+          while (q >= 0 && QualityRules.isRegexSpace(text.charAt(q))) q -= 1
+          if (q < p - 1) {
+            var f = 0
+            while (f < firsts.length) {
+              val st = q + 1 - firsts(f).length
+              if (asciiCiAt(text, st, firsts(f)) && !wordCharAt(text, st - 1)) return true
+              f += 1
+            }
+          }
+        }
+        s += 1
+      }
+      p += 1
+    }
+    false
+  }
+
+  /** True whenever `(?i)\bword\b` can match: `word` with no ASCII word
+    * char on either side.
+    */
+  private def wordCandidate(text: String, word: String): Boolean = {
+    val c0 = word.charAt(0)
+    var p = 0
+    while (p < text.length) {
+      if ((text.charAt(p) | 0x20) == c0 && asciiCiAt(text, p, word) && !wordCharAt(text, p - 1) &&
+          !wordCharAt(text, p + word.length)) return true
+      p += 1
+    }
+    false
+  }
+
+  /** True whenever the case-sensitive `\b(is|was)\s+([A-Z][a-z]+)\b`
+    * can match: a literal `is` or `was` with no ASCII word char before
+    * it, then at least one `\s`, then an ASCII capital and an ASCII
+    * lowercase letter.
+    */
+  private def articleCandidate(text: String): Boolean = {
+    var p = 0
+    while (p < text.length) {
+      val c = text.charAt(p)
+      val n =
+        if (c == 'i' && text.startsWith("is", p)) 2
+        else if (c == 'w' && text.startsWith("was", p)) 3
+        else 0
+      if (n > 0 && !wordCharAt(text, p - 1)) {
+        var q = p + n
+        while (q < text.length && QualityRules.isRegexSpace(text.charAt(q))) q += 1
+        if (q > p + n && q + 1 < text.length) {
+          val c0 = text.charAt(q)
+          val c1 = text.charAt(q + 1)
+          if (c0 >= 'A' && c0 <= 'Z' && c1 >= 'a' && c1 <= 'z') return true
+        }
+      }
+      p += 1
+    }
+    false
+  }
 
   /** POS-bigram rule (cfg_checker.py:256-277): noun followed by "are",
     * conf 0.75. Tagger = lexicon lookup + suffix fallback
@@ -204,9 +344,19 @@ object GrammarRules extends Serializable {
       text: String,
       includePos: Boolean = true,
       withContext: Boolean = true
+  ): Seq[RuleHit] =
+    if (text == null || text.isEmpty) Nil
+    else ruleHitsOfLower(text, text.toLowerCase(Locale.ROOT), includePos, withContext)
+
+  /** [[ruleHits]] of a non-empty `text` given `lower`,
+    * `text.toLowerCase(Locale.ROOT)`, which the guards read.
+    */
+  private[graft] def ruleHitsOfLower(
+      text: String,
+      lower: String,
+      includePos: Boolean,
+      withContext: Boolean
   ): Seq[RuleHit] = {
-    if (text == null || text.isEmpty) return Nil
-    val lower = text.toLowerCase
     val hasSentPunct = {
       var j = 0
       var found = false
@@ -218,27 +368,42 @@ object GrammarRules extends Serializable {
       found
     }
     val all = new ArrayBuffer[RuleHit](8)
+    // spec i's hits are all(from(i) until from(i + 1))
+    val from = new Array[Int](specs.length + 1)
     var i = 0
     while (i < specs.length) {
       val s = specs(i)
-      var run = s.guards.isEmpty
-      var g = 0
-      while (!run && g < s.guards.length) {
-        if (lower.contains(s.guards(g))) run = true
-        g += 1
-      }
-      if (run && s.noSentPunctOnly && hasSentPunct) run = false
-      if (run) {
-        val m = s.pattern.matcher(text)
-        while (m.find()) {
-          val ctx = if (withContext) context(text, m.start(), m.end()) else ""
-          all += RuleHit(s.ruleId, s.ruleName, m.start(), m.end(), m.group(),
-            s.confidence, ctx)
+      from(i) = all.length
+      if (s.sameAs >= 0) {
+        var h = from(s.sameAs)
+        while (h < from(s.sameAs + 1)) {
+          all += all(h).copy(rule_id = s.ruleId, rule_name = s.ruleName,
+            confidence = s.confidence)
+          h += 1
+        }
+      } else {
+        var run = s.guards.isEmpty
+        var g = 0
+        while (!run && g < s.guards.length) {
+          if (lower.contains(s.guards(g))) run = true
+          g += 1
+        }
+        if (run && s.noSentPunctOnly && hasSentPunct) run = false
+        if (run && s.candidate != null) run = s.candidate(text, lower)
+        if (run) {
+          val m = s.pattern.matcher(text)
+          while (m.find()) {
+            val ctx = if (withContext) context(text, m.start(), m.end()) else ""
+            all += RuleHit(s.ruleId, s.ruleName, m.start(), m.end(), m.group(),
+              s.confidence, ctx)
+          }
         }
       }
       i += 1
     }
-    if (includePos && lower.contains("are")) posHits(text, all, withContext)
+    from(specs.length) = all.length
+    if (includePos && lower.contains("are") && wordCandidate(text, "are"))
+      posHits(text, all, withContext)
     dedup(all)
   }
 

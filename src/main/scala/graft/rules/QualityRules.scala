@@ -1,5 +1,6 @@
 package graft.rules
 
+import java.util.Locale
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.{Column, functions => F}
@@ -103,10 +104,7 @@ object QualityRules extends Serializable {
     * forms so the fused kernel and the column pipeline agree on
     * whitespace-degenerate input (ADVICE r1).
     */
-  def distinctRatio(text: String): Double = {
-    val words = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-    if (words.isEmpty) 1.0 else words.distinct.length.toDouble / words.length
-  }
+  def distinctRatio(text: String): Double = distinctRatioOfLower(text.toLowerCase(Locale.ROOT))
 
   /** Fraction of non-letter/digit/whitespace chars. */
   def symbolRatio(text: String): Double = {
@@ -121,7 +119,44 @@ object QualityRules extends Serializable {
   }
 
   def isBoilerplate(text: String): Boolean =
-    text != null && boilerplateP.matcher(text).find()
+    text != null && isBoilerplate(text, text.toLowerCase(Locale.ROOT))
+
+  /** [[isBoilerplate]] given `lower`, `text.toLowerCase(Locale.ROOT)`.
+    * Every alternative of [[boilerplateRegex]] starts with an ASCII word
+    * that `(?i)` matches only in ASCII letters of either case, which
+    * lowercase to that word under `Locale.ROOT` (a Turkish default
+    * locale would lowercase `I` to `ı`). So `lower` holds one of the
+    * words whenever the regex can match, and the regex runs only then.
+    */
+  private[graft] def isBoilerplate(text: String, lower: String): Boolean =
+    boilerplateHeads.exists(lower.contains) && boilerplateP.matcher(text).find()
+
+  private val boilerplateHeads =
+    Array("cookie", "privacy", "terms", "subscribe", "follow", "share")
+
+  /** [[distinctRatio]] given `lower`, the text lowercased: its tokens
+    * are the non-empty runs between the chars of Java regex `\s`,
+    * `[ \t\n\x0B\f\r]` (not `Character.isWhitespace`, which also
+    * takes U+001C–U+001F and the Unicode spaces), split by hand.
+    */
+  private[graft] def distinctRatioOfLower(lower: String): Double = {
+    // sized for the usual ≥ 3 chars per token, so it rarely rehashes
+    val set = new java.util.HashSet[String](math.max(16, lower.length / 3))
+    var n = 0
+    var start = -1
+    var i = 0
+    while (i <= lower.length) {
+      if (i == lower.length || isRegexSpace(lower.charAt(i))) {
+        if (start >= 0) { set.add(lower.substring(start, i)); n += 1; start = -1 }
+      } else if (start < 0) start = i
+      i += 1
+    }
+    if (n == 0) 1.0 else set.size.toDouble / n
+  }
+
+  /** A char of Java regex `\s` (no UNICODE_CHARACTER_CLASS). */
+  @inline private[graft] def isRegexSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
 
   /** Deterministic rule evaluation order — drop_reason vocabulary. */
   val ruleOrder: Seq[String] = Seq(

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.{fs => hfs}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
@@ -74,14 +76,23 @@ object TableIO {
     * row — its row count, then `stats` — and each staged partition is
     * moved into place and its manifest, `manifest(partId, stats row)`,
     * written last. The moves are metadata ops, so the job count does
-    * not grow with the number of partitions.
+    * not grow with the number of partitions. The staged rows are read
+    * back from the `part_id=K` directories with `basePath` set to the
+    * staging directory: Spark ignores a path whose name starts with `_`
+    * (and says so in a warning) when it is the one path given.
     */
   def commitPartitions(df: DataFrame, base: String, stats: Column*)(
       manifest: (Int, Row) => String): Unit = {
     val staging = Paths.get(base, "_staging")
     deleteRecursive(staging)
     df.write.partitionBy(PART_COL).mode("overwrite").parquet(staging.toString)
-    df.sparkSession.read.parquet(staging.toString)
+    val staged = {
+      val dirs = Files.list(staging)
+      try dirs.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"$PART_COL=")).map(staging.resolve(_).toString).toSeq.sorted
+      finally dirs.close()
+    }
+    df.sparkSession.read.option("basePath", staging.toString).parquet(staged: _*)
       .groupBy(PART_COL).agg(F.struct(F.count(F.lit(1)) +: stats: _*))
       .collect().sortBy(_.getInt(0))
       .foreach { r =>
@@ -183,13 +194,21 @@ object TableIO {
     val dir = partitionDir(base, partId)
     val first = new hfs.Path(parquetFiles(dir).headOption.getOrElse(
       throw new IllegalArgumentException(s"no parquet file in partition directory $dir")).toUri)
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(first, spark.sparkContext.hadoopConfiguration))
+    val reader = openFooter(first, spark.sparkContext.hadoopConfiguration)
     val footer = try reader.getFooter finally reader.close()
     val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     spark.read.schema(schema).parquet(dir.toString)
   }
+
+  /** A reader of parquet file `file` with read options built from
+    * `conf`. `ParquetFileReader.open(inputFile)` alone builds its options
+    * from a new Hadoop `Configuration`, parsing the default XML
+    * resources again on every open.
+    */
+  private[graft] def openFooter(file: hfs.Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf).build())
 
   /** The parquet files directly in `dir`, in name order (none when `dir`
     * does not exist).

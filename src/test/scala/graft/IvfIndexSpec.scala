@@ -12,7 +12,7 @@ import graft.tableio.{TableIO, VectorStore}
   * probe, load() round-trip, incremental add/delete consistency, and
   * the VectorStore wiring that keeps the index in sync on mutation.
   */
-class IvfIndexSpec extends SparkTestBase {
+class IvfIndexSpec extends SparkTestBase with FixtureDirs {
   import spark.implicits._
 
   private val dim = 8
@@ -30,11 +30,7 @@ class IvfIndexSpec extends SparkTestBase {
   private def corpus(n: Int) =
     (0 until n).map(i => (i.toLong, vec(i.toLong))).toDF("id", "emb")
 
-  private def fresh(name: String): String = {
-    val p = s"/tmp/graft-ivfidx-$name"
-    TableIO.deleteRecursive(java.nio.file.Paths.get(p))
-    p
-  }
+  private def fresh(name: String): String = fixtureDir(s"/tmp/graft-ivfidx-$name")
 
   private def bruteTopK(df: org.apache.spark.sql.DataFrame, q: Array[Float], k: Int) =
     df.collect()

@@ -9,12 +9,11 @@ import graft.tableio.{TableIO, VectorStore}
   * reset / export — each mutation a copy-on-write rewrite of ONLY the
   * affected partitions.
   */
-class VectorStoreSpec extends SparkTestBase {
+class VectorStoreSpec extends SparkTestBase with FixtureDirs {
   import spark.implicits._
 
   private def freshStore(name: String, nBuckets: Int = 4): (VectorStore, String) = {
-    val base = s"/tmp/graft-vstore-$name"
-    TableIO.deleteRecursive(java.nio.file.Paths.get(base))
+    val base = fixtureDir(s"/tmp/graft-vstore-$name")
     (new VectorStore(spark, base, nBuckets), base)
   }
 
@@ -128,7 +127,7 @@ class VectorStoreSpec extends SparkTestBase {
   test("exportJson streams via toLocalIterator across many partitions (no whole-store collect)") {
     val (vs, _) = freshStore("streamexport")
     vs.add(rows(0 until 200, "web")) // spread over all 4 buckets
-    val out = vs.exportJson("/tmp/graft-vstore-export/stream.json", "big")
+    val out = vs.exportJson(fixtureDir("/tmp/graft-vstore-export") + "/stream.json", "big")
     val json = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(out)), java.nio.charset.StandardCharsets.UTF_8)
     assert(json.contains("\"total_documents\": 200"))
@@ -140,7 +139,7 @@ class VectorStoreSpec extends SparkTestBase {
   test("reset drops the collection; export writes the reference JSON shape") {
     val (vs, _) = freshStore("reset")
     vs.add(rows(0 until 5, "web"))
-    val out = vs.exportJson("/tmp/graft-vstore-export/export.json", "curated")
+    val out = vs.exportJson(fixtureDir("/tmp/graft-vstore-export") + "/export.json", "curated")
     val json = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(out)), java.nio.charset.StandardCharsets.UTF_8)
     assert(json.contains("\"collection_name\": \"curated\""))
