@@ -48,8 +48,8 @@ object Bench {
   /** Queries whose single-run variance was flagged in round 1 — min-of-3. */
   private val tripleRep = Set("dedup_conversations")
 
-  /** THE bench session config (shared with BenchOne so ad-hoc timings
-    * stay comparable with the headline bench).
+  /** THE bench session config (shared with Verify and ScalingBench so
+    * their runs stay comparable with the headline bench).
     */
   def session(cpus: String): SparkSession = {
     val s = SparkSession.builder()

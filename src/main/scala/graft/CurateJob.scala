@@ -22,10 +22,22 @@ import graft.tableio.TableIO
   * Exit summary (one JSON line) reports per-run lineage totals.
   */
 object CurateJob {
+  private val flags = Seq("--input", "--output", "--concurrency", "--write-partitions",
+    "--max-partitions")
+
+  /** `--key value` pairs, by key without the dashes; an unknown key or a
+    * key with no value fails, naming it.
+    */
+  private[graft] def parseFlags(args: Seq[String]): Map[String, String] = args match {
+    case Seq() => Map.empty
+    case k +: rest =>
+      require(flags.contains(k), s"unknown flag $k (flags: ${flags.mkString(" ")})")
+      require(rest.nonEmpty && !rest.head.startsWith("--"), s"flag $k has no value")
+      parseFlags(rest.tail) + (k.stripPrefix("--") -> rest.head)
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-    }.toMap
+    val opts = parseFlags(args.toSeq)
     val input = opts.getOrElse("input",
       sys.error("--input <dir> required (Hive-bucketed transcripts; " +
         "use TableIO.writeBucketedInput or an Iceberg bucket(N, conv_id) spec)"))

@@ -1,13 +1,14 @@
 package graft.checkpoint
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Path, Paths}
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 import graft.pipeline.{Curate, CurateCore}
 import graft.rules.QualityRules
@@ -40,6 +41,9 @@ object Resume {
   /** Partitions `run` keeps in flight unless told otherwise. */
   val defaultConcurrency = 2
 
+  /** Files `run` writes per committed partition unless told otherwise. */
+  val defaultWritePartitions = 8
+
   /** @param concurrency number of partitions in flight at once (at
     *   least 1). Spark's scheduler is thread-safe: each worker thread
     *   submits its partition's jobs independently, keeping the cluster
@@ -56,7 +60,7 @@ object Resume {
       outputBase: String,
       cfg: QualityRules.Config = QualityRules.defaultConfig,
       models: Curate.Models = Curate.defaultModels,
-      writePartitions: Int = 8,
+      writePartitions: Int = defaultWritePartitions,
       maxPartitions: Int = Int.MaxValue,
       concurrency: Int = defaultConcurrency
   ): RunResult = {
@@ -70,17 +74,8 @@ object Resume {
     val core = spark.sparkContext.broadcast(new CurateCore(models.langId, models.lm, cfg))
 
     def processOne(p: Int): Unit = {
-      val turns = TableIO.readPartition(spark, inputBase, p)
-      val curated = Curate.curateWith(turns, core)
-      // observed after the shuffle, in the write's result stage, where a
-      // retried task's update still counts once
-      val obs = Observation()
-      val ordered = Curate.saltedForWrite(curated, writePartitions)
-        .observe(obs, Curate.metricAggs.head, Curate.metricAggs.tail: _*)
-      val dir = TableIO.commitPartition(ordered, outputBase, p)
-      val m = Manifest.observed(p, s"$inputBase/${TableIO.PART_COL}=$p", obs.get)
-        .checked(footerRowCount(dir, spark.sparkContext.hadoopConfiguration))
-      TableIO.writeManifest(outputBase, p, m.toJson)
+      commitCurated(TableIO.readPartition(spark, inputBase, p), core, outputBase, p,
+        s"$inputBase/${TableIO.PART_COL}=$p", writePartitions)
       processed.add(p)
     }
 
@@ -102,16 +97,35 @@ object Resume {
     RunResult(processed.asScala.toSeq.sorted, done.toSeq.sorted)
   }
 
-  def listInputPartitions(inputBase: String): Seq[Int] = {
-    val d = java.nio.file.Paths.get(inputBase)
-    if (!Files.isDirectory(d)) return Nil
-    Files.list(d).iterator().asScala
-      .map(_.getFileName.toString)
+  /** Curate `turns` and commit them as partition `partId` of
+    * `outputBase` in `writePartitions` files, then its checked manifest
+    * with lineage `input`: the one commit of curated turns, per input
+    * partition in `run` and per micro-batch in `StreamingCurate`.
+    */
+  private[graft] def commitCurated(
+      turns: DataFrame,
+      core: Broadcast[CurateCore],
+      outputBase: String,
+      partId: Int,
+      input: String,
+      writePartitions: Int
+  ): Unit = {
+    // observed after the shuffle, in the write's result stage, where a
+    // retried task's update still counts once
+    val obs = Observation()
+    val ordered = Curate.saltedForWrite(Curate.curateWith(turns, core), writePartitions)
+      .observe(obs, Curate.metricAggs.head, Curate.metricAggs.tail: _*)
+    val dir = TableIO.commitPartition(ordered, outputBase, partId)
+    val m = Manifest.observed(partId, input, obs.get)
+      .checked(footerRowCount(dir, turns.sparkSession.sparkContext.hadoopConfiguration))
+    TableIO.writeManifest(outputBase, partId, m.toJson)
+  }
+
+  def listInputPartitions(inputBase: String): Seq[Int] =
+    TableIO.entryNames(Paths.get(inputBase))
       .collect { case s if s.startsWith(s"${TableIO.PART_COL}=") =>
         s.stripPrefix(s"${TableIO.PART_COL}=").toInt
       }
-      .toSeq
-  }
 
   /** Rows in a committed partition, summed from its parquet footers on
     * the driver (no Spark job).

@@ -517,7 +517,7 @@ object Dedup extends Serializable {
     // NOT pinned (r6 measured negative): prefix feeds both sides of the
     // candidate self-join, so an eager localCheckpoint here would run
     // the join+window pipeline once instead of twice — but the A/B
-    // (BenchOne, 8 reps, same harness, spin ~80) read 1.23s unpinned vs
+    // (8 reps on the Bench harness, spin ~80) read 1.23s unpinned vs
     // 1.72s pinned at sf0.1: the materialization costs more than the
     // duplicated window pass saves (the subtree below the window's
     // exchange is already shared via ReuseExchange; only the small

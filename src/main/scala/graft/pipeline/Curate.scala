@@ -63,8 +63,9 @@ object Curate {
     curateWith(turns, spark.sparkContext.broadcast(new CurateCore(models.langId, models.lm, cfg)))
 
   /** [[curateDf]] with the kernel already broadcast: a caller that
-    * curates many DataFrames with one kernel (`Resume.run`, once per
-    * partition) ships it once and destroys the broadcast when done.
+    * curates many DataFrames with one kernel (`Resume.run` per partition,
+    * `StreamingCurate` per micro-batch) ships it once and destroys the
+    * broadcast when done.
     */
   private[graft] def curateWith(turns: DataFrame, core: Broadcast[CurateCore]): DataFrame = {
     val coreU = F.udf((t: String) => core.value.process(t))
@@ -189,8 +190,9 @@ object Curate {
 
   /** Skew-safe repartition for the WRITE path (SURVEY.md §4.1): spread
     * a hot conv_id over `salt` buckets while keeping (conv_id,
-    * turn_idx) runs sorted within each output file — per-turn outputs
-    * stay byte-identical run-to-run.
+    * turn_idx) runs sorted within each output file — each file holds the
+    * same rows in the same order run-to-run (the parquet bytes may still
+    * differ: see `TableIO`'s commit-protocol note).
     */
   def saltedForWrite(df: DataFrame, numPartitions: Int, salt: Int = 16): DataFrame =
     df.repartition(numPartitions, F.col("conv_id"),

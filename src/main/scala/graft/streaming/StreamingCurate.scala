@@ -1,11 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+
+import graft.checkpoint.Resume
 import graft.model.{CuratedTurn, Turn}
-import graft.pipeline.Curate
+import graft.pipeline.{Curate, CurateCore}
 import graft.rules.QualityRules
+import graft.tableio.TableIO
 
 /** Structured-Streaming face of the curation engine. The reference is
   * strictly batch (SURVEY.md §2.12), and the batch path stays primary;
@@ -19,9 +23,9 @@ import graft.rules.QualityRules
   *  - windowed drop-reason metrics under a watermark;
   *  - per-conversation running state via mapGroupsWithState.
   *
-  * `Trigger.AvailableNow` + checkpointLocation makes this the
-  * streaming twin of checkpoint/Resume: each invocation processes
-  * exactly the new files, with Spark-managed offsets.
+  * `runAvailableNowToParquet` is the streaming twin of checkpoint/Resume:
+  * its micro-batches commit as `Resume.run`'s partitions do, so a stream
+  * and a `CurateJob` write the same table layout and manifests.
   */
 object StreamingCurate {
 
@@ -103,10 +107,12 @@ object StreamingCurate {
       }
   }
 
-  /** Production shape: bounded incremental pass to a parquet sink with
-    * a recoverable checkpoint — re-invoking processes ONLY files that
-    * arrived since the last run (the streaming twin of
-    * checkpoint/Resume).
+  /** Production shape: each invocation curates only the files that
+    * arrived since the last one and commits micro-batch `id` through
+    * `Resume.commitCurated` as `part_id=<id>` of `outDir`, manifest
+    * lineage `<inputDir>#batch=<id>`. A batch whose manifest exists is
+    * skipped, as `Resume.run` skips a done partition, so a batch Spark
+    * replays after a kill is committed once.
     */
   def runAvailableNowToParquet(
       spark: SparkSession,
@@ -114,14 +120,23 @@ object StreamingCurate {
       outDir: String,
       checkpointDir: String
   ): Unit = {
-    val q = curateStream(spark, inputDir)
+    val models = Curate.defaultModels
+    // one broadcast of the kernel for every batch of this run
+    val core = spark.sparkContext.broadcast(
+      new CurateCore(models.langId, models.lm, QualityRules.defaultConfig))
+    def commitBatch(batch: DataFrame, batchId: Long): Unit = {
+      val p = Math.toIntExact(batchId)
+      if (!Files.exists(TableIO.manifestPath(outDir, p)))
+        Resume.commitCurated(batch, core, outDir, p, s"$inputDir#batch=$batchId",
+          Resume.defaultWritePartitions)
+    }
+    try spark.readStream.schema(turnSchema).parquet(inputDir)
       .writeStream
-      .format("parquet")
-      .option("path", outDir)
+      .foreachBatch(commitBatch _)
       .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
+    finally core.destroy()
   }
 }

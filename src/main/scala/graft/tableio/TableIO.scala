@@ -29,7 +29,10 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
   * Commit protocol per partition: write to _staging → atomic directory
   * move into place → append manifest file. A crash between move and
   * manifest leaves the partition NOT in the manifest; the resume loop
-  * simply reprocesses it (output is deterministic → byte-identical).
+  * simply reprocesses it. The output is deterministic: a redone
+  * partition has the same rows, in the same files and order, and the
+  * same manifest, but not the same bytes, because parquet-mr writes each
+  * column chunk's `encodings` list in hash-set order.
   * [[commitPartitions]] runs the protocol for many partitions off one
   * staged write; [[commitOrDrop]] runs it for one partition that a
   * rewrite may have emptied.
@@ -44,16 +47,12 @@ object TableIO {
     Paths.get(base, "_manifest", s"part-$partId.json")
 
   /** Partitions already committed (manifest present). */
-  def donePartitions(base: String): Set[Int] = {
-    val dir = Paths.get(base, "_manifest")
-    if (!Files.isDirectory(dir)) return Set.empty
-    Files.list(dir).iterator().asScala
-      .map(_.getFileName.toString)
+  def donePartitions(base: String): Set[Int] =
+    entryNames(Paths.get(base, "_manifest"))
       .collect { case s if s.startsWith("part-") && s.endsWith(".json") =>
         s.stripPrefix("part-").stripSuffix(".json").toInt
       }
       .toSet
-  }
 
   /** Write one partition's rows atomically; returns the committed dir.
     * `df` must already be in the desired row order (caller applies
@@ -86,12 +85,8 @@ object TableIO {
     val staging = Paths.get(base, "_staging")
     deleteRecursive(staging)
     df.write.partitionBy(PART_COL).mode("overwrite").parquet(staging.toString)
-    val staged = {
-      val dirs = Files.list(staging)
-      try dirs.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith(s"$PART_COL=")).map(staging.resolve(_).toString).toSeq.sorted
-      finally dirs.close()
-    }
+    val staged = entryNames(staging).filter(_.startsWith(s"$PART_COL="))
+      .map(staging.resolve(_).toString).sorted
     df.sparkSession.read.option("basePath", staging.toString).parquet(staged: _*)
       .groupBy(PART_COL).agg(F.struct(F.count(F.lit(1)) +: stats: _*))
       .collect().sortBy(_.getInt(0))
@@ -214,12 +209,16 @@ object TableIO {
     * does not exist).
     */
   private[graft] def parquetFiles(dir: Path): Seq[Path] =
+    entryNames(dir).filter(_.endsWith(".parquet")).sorted.map(dir.resolve)
+
+  /** The names of the entries directly in `dir` (none when `dir` is not
+    * a directory).
+    */
+  private[graft] def entryNames(dir: Path): Seq[String] =
     if (!Files.isDirectory(dir)) Nil
     else {
-      val files = Files.list(dir)
-      try files.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally files.close()
+      val entries = Files.list(dir)
+      try entries.iterator().asScala.map(_.getFileName.toString).toSeq finally entries.close()
     }
 
   /** Materialize an input table Hive-partitioned by the conv_id hash

@@ -3,7 +3,7 @@ package graft
 import graft.dedup.Dedup
 import graft.knn.{IvfIndex, Similarity}
 
-class DedupSimilaritySpec extends SparkTestBase {
+class DedupSimilaritySpec extends SparkTestBase with FixtureDirs {
   import org.apache.spark.sql.functions._
 
   lazy val docs = {
@@ -80,7 +80,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     // LocalRelation gets its projections CONSTANT-FOLDED per logical
     // branch at optimization time (ConvertToLocalRelation), which would
     // count driver-side evaluations no real scan performs.
-    val path = "/tmp/graft-dedup-sketch-once"
+    val path = fixtureDir("/tmp/graft-dedup-sketch-once")
     docs.write.mode("overwrite").parquet(path)
     val input = spark.read.parquet(path)
     val acc = spark.sparkContext.longAccumulator("sketch-calls")
@@ -325,7 +325,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     // shared by the prefix emission and both verify-join sides;
     // parquet-backed input so ConvertToLocalRelation can't fake the
     // count
-    val path = "/tmp/graft-ngram-prefix-sketch-once"
+    val path = fixtureDir("/tmp/graft-ngram-prefix-sketch-once")
     docs.write.mode("overwrite").parquet(path)
     val input = spark.read.parquet(path)
     val acc = spark.sparkContext.longAccumulator("prefix-sketch-calls")

@@ -1,17 +1,13 @@
 package graft
 
-import java.nio.file.Paths
 import java.sql.Timestamp
-
-import org.apache.spark.sql.DataFrame
 
 import graft.dedup.Dedup
 import graft.streaming.StreamingDedup
-import graft.tableio.TableIO
 
 private[graft] final case class SDoc(id: Long, text: String, ts: Timestamp)
 
-class StreamingDedupSpec extends SparkTestBase {
+class StreamingDedupSpec extends SparkTestBase with FixtureDirs {
 
   /** Driver-side oracle: the exact (band, bh, id, rep) set the
     * bucket-min MUST produce over every doc seen so far (global min id
@@ -48,62 +44,58 @@ class StreamingDedupSpec extends SparkTestBase {
   test("watermarked MinHash bucket-min: single pass matches the exact oracle; " +
     "state survives checkpointed re-invocation; idle buckets evict on event time") {
     import spark.implicits._
-    val in = s"/tmp/graft-sdedup-in-${System.nanoTime()}"
-    val out = s"/tmp/graft-sdedup-out-${System.nanoTime()}"
-    val ckpt = s"/tmp/graft-sdedup-ck-${System.nanoTime()}"
-    try {
-      val t0 = 1700000000000L
-      def doc(id: Long, text: String, ms: Long) = SDoc(id, text, new Timestamp(ms))
-      val dupText = "the quick brown fox jumps over the lazy dog near the quiet river bank"
-      val nearText = "the quick brown fox jumps over the lazy cat near the quiet river bank"
-      val batch1 = Seq(
-        doc(0L, dupText, t0),
-        doc(1L, dupText, t0 + 1000), // exact dup of 0 → all 16 buckets shared
-        doc(2L, nearText, t0 + 2000), // near dup → shares whatever bands the sketch says
-        doc(3L, "completely different content about spark shuffle partitioning", t0 + 3000),
-        doc(4L, "@@@ ###", t0 + 4000)) // token-less: no bands, no candidates
-      def write(docs: Seq[SDoc], mode: String): Unit =
-        docs.toDF().write.mode(mode).parquet(in)
+    val in = fixtureDir("/tmp/graft-sdedup-in")
+    val out = fixtureDir("/tmp/graft-sdedup-out")
+    val ckpt = fixtureDir("/tmp/graft-sdedup-ck")
+    val t0 = 1700000000000L
+    def doc(id: Long, text: String, ms: Long) = SDoc(id, text, new Timestamp(ms))
+    val dupText = "the quick brown fox jumps over the lazy dog near the quiet river bank"
+    val nearText = "the quick brown fox jumps over the lazy cat near the quiet river bank"
+    val batch1 = Seq(
+      doc(0L, dupText, t0),
+      doc(1L, dupText, t0 + 1000), // exact dup of 0 → all 16 buckets shared
+      doc(2L, nearText, t0 + 2000), // near dup → shares whatever bands the sketch says
+      doc(3L, "completely different content about spark shuffle partitioning", t0 + 3000),
+      doc(4L, "@@@ ###", t0 + 4000)) // token-less: no bands, no candidates
+    def write(docs: Seq[SDoc], mode: String): Unit =
+      docs.toDF().write.mode(mode).parquet(in)
 
-      // pass 1: everything in one micro-batch == the batch bucket-min
-      write(batch1, "overwrite")
-      runPass(in, out, ckpt)
-      assert(sinkAssigns(out) == expectedAssigns(batch1))
-      // the exact-dup pair shares a representative on every band
-      val rep1 = StreamingDedup.repAssignments(spark.read.parquet(out))
-        .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rep_id")).toMap
-      assert(rep1(0L) == 0L && rep1(1L) == 0L)
-      assert(!rep1.contains(4L)) // token-less row produced no candidates
+    // pass 1: everything in one micro-batch == the batch bucket-min
+    write(batch1, "overwrite")
+    runPass(in, out, ckpt)
+    assert(sinkAssigns(out) == expectedAssigns(batch1))
+    // the exact-dup pair shares a representative on every band
+    val rep1 = StreamingDedup.repAssignments(spark.read.parquet(out))
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rep_id")).toMap
+    assert(rep1(0L) == 0L && rep1(1L) == 0L)
+    assert(!rep1.contains(4L)) // token-less row produced no candidates
 
-      // pass 2: a replayed duplicate (new id 100) dedups against the
-      // RETAINED state — checkpoint carries the bucket minimums
-      val batch2 = Seq(doc(100L, dupText, t0 + 10 * 1000))
-      write(batch2, "append")
-      runPass(in, out, ckpt)
-      val assigns2 = sinkAssigns(out)
-      assert(assigns2 == expectedAssigns(batch1 ++ batch2))
-      val rep2 = StreamingDedup.repAssignments(spark.read.parquet(out))
-        .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rep_id")).toMap
-      assert(rep2(100L) == 0L, "cross-batch near-dup must resolve to the retained rep")
+    // pass 2: a replayed duplicate (new id 100) dedups against the
+    // RETAINED state — checkpoint carries the bucket minimums
+    val batch2 = Seq(doc(100L, dupText, t0 + 10 * 1000))
+    write(batch2, "append")
+    runPass(in, out, ckpt)
+    val assigns2 = sinkAssigns(out)
+    assert(assigns2 == expectedAssigns(batch1 ++ batch2))
+    val rep2 = StreamingDedup.repAssignments(spark.read.parquet(out))
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rep_id")).toMap
+    assert(rep2(100L) == 0L, "cross-batch near-dup must resolve to the retained rep")
 
-      // pass 3: advance the watermark far past the horizon (unrelated
-      // doc at t0+10min, delay 60s) — then pass 4 fires the timeouts
-      // for every idle bucket (timeouts process on batches where the
-      // key has no data), so the re-replayed duplicate (id 200) now
-      // forms a FRESH bucket with itself as representative: eviction
-      // genuinely bounded the state
-      write(Seq(doc(150L, "unrelated watermark advancing content entirely new words", t0 + 600 * 1000)), "append")
-      runPass(in, out, ckpt)
-      write(Seq(doc(200L, dupText, t0 + 601 * 1000)), "append")
-      runPass(in, out, ckpt)
-      val rep4 = StreamingDedup.repAssignments(spark.read.parquet(out))
-        .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rep_id")).toMap
-      assert(rep4(200L) == 200L,
-        s"expected evicted state → self-rep, got ${rep4(200L)}")
-      // history is immutable: earlier assignments unchanged
-      assert(rep4(100L) == 0L && rep4(0L) == 0L)
-    } finally {
-      Seq(in, out, ckpt).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
-    }
+    // pass 3: advance the watermark far past the horizon (unrelated
+    // doc at t0+10min, delay 60s) — then pass 4 fires the timeouts
+    // for every idle bucket (timeouts process on batches where the
+    // key has no data), so the re-replayed duplicate (id 200) now
+    // forms a FRESH bucket with itself as representative: eviction
+    // genuinely bounded the state
+    write(Seq(doc(150L, "unrelated watermark advancing content entirely new words", t0 + 600 * 1000)), "append")
+    runPass(in, out, ckpt)
+    write(Seq(doc(200L, dupText, t0 + 601 * 1000)), "append")
+    runPass(in, out, ckpt)
+    val rep4 = StreamingDedup.repAssignments(spark.read.parquet(out))
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rep_id")).toMap
+    assert(rep4(200L) == 200L,
+      s"expected evicted state → self-rep, got ${rep4(200L)}")
+    // history is immutable: earlier assignments unchanged
+    assert(rep4(100L) == 0L && rep4(0L) == 0L)
   }
 }
