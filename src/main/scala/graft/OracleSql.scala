@@ -176,8 +176,8 @@ object OracleSql {
     * window hash colliding with -1 reads the token total in BOTH
     * engines), longest-match backoff with (startN - n) penalties, and
     * the engine's Float division for seen n-grams (REAL / REAL).
-    */
-  /** @param exactLn replace every data-dependent `ln(num / den)` with a
+    *
+    * @param exactLn replace every data-dependent `ln(num / den)` with a
     *   JOIN against a dumped Java-computed log table over the model's
     *   bounded count universe (the HllAgg discrete-ln technique) and the
     *   unseen-unigram `ln` with a Java literal, so NO DuckDB `ln` ever

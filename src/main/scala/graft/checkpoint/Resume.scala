@@ -152,10 +152,10 @@ object Resume {
       scrubHitCounts: Map[String, Long]
   ) {
     def toJson: String =
-      s"""{"part_id": $partId, "input": ${jstr(input)}, """ +
+      s"""{"part_id": $partId, "input": ${Manifest.jstr(input)}, """ +
         s""""turns_seen": $turnsSeen, "turns_kept": $turnsKept, """ +
-        s""""turns_dropped": $turnsDropped, "dropped_by_rule": ${jmap(droppedByRule)}, """ +
-        s""""scrub_hit_counts": ${jmap(scrubHitCounts)}}"""
+        s""""turns_dropped": $turnsDropped, "dropped_by_rule": ${Manifest.jmap(droppedByRule)}, """ +
+        s""""scrub_hit_counts": ${Manifest.jmap(scrubHitCounts)}}"""
 
     /** This manifest, after checking it against the committed rows: the
       * footers must hold `turnsSeen` rows, and every dropped turn must
@@ -174,6 +174,15 @@ object Resume {
 
   object Manifest {
     private val mapper = new ObjectMapper()
+
+    /** A JSON string literal: Jackson escapes `"`, `\` and every
+      * control char, and writes other chars as they are.
+      */
+    private def jstr(s: String): String = mapper.writeValueAsString(s)
+
+    private def jmap(m: Map[String, Long]) =
+      m.toSeq.sortBy(_._1)
+        .map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ", ", "}")
 
     def parse(json: String): Manifest = {
       val j = mapper.readTree(json)
@@ -198,10 +207,4 @@ object Resume {
     }
   }
 
-  private def jstr(s: String) =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  private def jmap(m: Map[String, Long]) =
-    m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}: $v" }.mkString("{", ", ", "}")
 }

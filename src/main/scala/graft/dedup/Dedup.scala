@@ -3,6 +3,10 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 
+import scala.collection.immutable.ArraySeq
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.knn.Similarity
 import graft.util.Hash.mix
 
 /** Deduplication operator family for large-scale training-data
@@ -175,6 +179,29 @@ object Dedup extends Serializable {
       (b, h)
     }
 
+  /** Signature rows per LSH band; `bands` must divide `numHashes`. */
+  private[graft] def rowsPerBand(numHashes: Int, bands: Int): Int = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    numHashes / bands
+  }
+
+  /** MinHash LSH banding as ONE UDF — the single definition the banded
+    * MinHash operators share ([[minhashNearDups]], [[minhashClusters]],
+    * `StreamingDedup.minhashBucketStream`): `sketch` of the input (a
+    * sorted shingle set, [[shingles]]) → [[minhashSignature]] →
+    * [[bandHashes]], one (band, band hash) per band; empty for an input
+    * with no shingles, so a token-less row lands in no bucket.
+    */
+  private[graft] def minhashBandUdf[A: TypeTag](numHashes: Int, bands: Int)(
+      sketch: A => Array[Long]): UserDefinedFunction = {
+    val rows = rowsPerBand(numHashes, bands)
+    F.udf { (a: A) =>
+      val sh = sketch(a)
+      if (sh.isEmpty) Seq.empty[(Int, Long)]
+      else bandHashes(ArraySeq.unsafeWrapArray(minhashSignature(sh, numHashes)), bands, rows)
+    }
+  }
+
   /** Candidate pairs from an equi-join of `keyed` (columns `id`, `keys`
     * and `carry`) with itself on `keys` — an LSH band bucket or a
     * prefix gram, never an O(n²) cross product: ids a < b sharing a
@@ -244,15 +271,11 @@ object Dedup extends Serializable {
       threshold: Double = 0.8,
       sketchCounter: Option[org.apache.spark.util.LongAccumulator] = None
   ): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+    val bandU = minhashBandUdf[Array[Long]](numHashes, bands)(identity)
     val shU = F.udf { (t: String) =>
       sketchCounter.foreach(_.add(1L))
       shingles(t, shingleSize)
     }
-    val bandU = F.udf((sh: Array[Long]) =>
-      bandHashes(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        minhashSignature(sh, numHashes)), bands, rows))
     val jacU = F.udf((a: Array[Long], b: Array[Long]) => jaccard(a, b))
 
     // token-less rows are filtered on the CHEAP column predicate BEFORE
@@ -288,17 +311,10 @@ object Dedup extends Serializable {
       numHashes: Int = 64,
       bands: Int = 16
   ): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
     // one UDF: shingle → signature → band hashes, with the empty-sketch
     // marker inline (an empty Seq) so token-less rows need no second
     // evaluation of the sketch over a separate DAG branch
-    val bandU = F.udf { (t: String) =>
-      val sh = shingles(t, shingleSize)
-      if (sh.isEmpty) Seq.empty[(Int, Long)]
-      else bandHashes(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        minhashSignature(sh, numHashes)), bands, rows)
-    }
+    val bandU = minhashBandUdf[String](numHashes, bands)(shingles(_, shingleSize))
     // sketch computed ONCE: the pinned rows are (id, band, bh) —
     // ids + ints only, never text — so the bucket-min aggregate and
     // the join-back below are two cheap jobs over pinned rows, not two
@@ -341,8 +357,7 @@ object Dedup extends Serializable {
       bands: Int = 16,
       threshold: Double = 0.8
   ): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     // pinned: the sketch table feeds the banding AND both sig
     // re-attach joins below; one row per conversation (id + 64 longs),
     // so the materialization is tiny while saving two re-aggregations
@@ -417,11 +432,7 @@ object Dedup extends Serializable {
         F.lit(0).as("hamming"))
     val groups = reps.select(F.col("rep"), F.col("sig"))
     val banded = groups.select(
-      F.col("rep"), F.col("sig"),
-      F.explode(F.array((0 until 4).map(b =>
-        F.struct(F.lit(b).as("band"),
-          F.shiftright(F.col("sig"), b * 16).bitwiseAND(F.lit(0xffffL)).as("bh"))): _*))
-        .as("b"))
+      F.col("rep"), F.col("sig"), Similarity.explodeBitBands(F.col("sig"), 4, 16).as("b"))
       .select(F.col("rep"), F.col("sig"), F.col("b.band"), F.col("b.bh"))
     val l = banded.select(F.col("band"), F.col("bh"), F.col("rep").as("id_a"), F.col("sig").as("sig_a"))
     val r = banded.select(F.col("band"), F.col("bh"), F.col("rep").as("id_b"), F.col("sig").as("sig_b"))
@@ -568,7 +579,6 @@ object Dedup extends Serializable {
       nBits: Int = 16,
       nBands: Int = 4
   ): DataFrame = {
-    import graft.knn.Similarity
     val vecs = df.select(F.col(idCol).as("id"), F.col(embCol).as("emb"))
     // id-only banding (de-payloaded); the ONE bucket-scheme definition
     val banded = Similarity.hyperplaneBanded(vecs, "id", "emb", "id", nBits, nBands)

@@ -7,40 +7,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.rules.QualityRules
+
 /** Static kernels shared by interpreted eval and generated code —
   * `doGenCode` emits direct calls into these, so the expressions stay
   * INSIDE whole-stage codegen (no UDF object, no encoder round-trip,
   * no closure serialization).
   */
 object TextMetricsUtil {
-  def wordCount(s: UTF8String): Int = {
-    if (s == null) return 0
-    val t = s.toString
-    var n = 0
-    var inWord = false
-    var i = 0
-    while (i < t.length) {
-      val ws = Character.isWhitespace(t.charAt(i))
-      if (!ws && !inWord) { n += 1; inWord = true }
-      else if (ws) inWord = false
-      i += 1
-    }
-    n
-  }
+  def wordCount(s: UTF8String): Int =
+    if (s == null) 0 else QualityRules.wordCount(s.toString)
 
-  def symbolRatio(s: UTF8String): Double = {
-    if (s == null) return 0.0
-    val t = s.toString
-    if (t.isEmpty) return 0.0
-    var sym = 0
-    var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (!Character.isLetterOrDigit(c) && !Character.isWhitespace(c)) sym += 1
-      i += 1
-    }
-    sym.toDouble / t.length
-  }
+  def symbolRatio(s: UTF8String): Double =
+    if (s == null) 0.0 else QualityRules.symbolRatio(s.toString)
 
   /** 64-bit polynomial rolling hash of the ws-normalized lowercased
     * text (graft.textstats.TextStats.fingerprint semantics).
@@ -54,31 +33,18 @@ object TextMetricsUtil {
     *  size(array_remove(split(lower(x), "\\s+"), ""))`
     * on every token-ful input (same lower() = UTF8String.toLowerCase,
     * same Java-regex ASCII \s token boundaries), single-pass with no
-    * array allocation. DELIBERATE delta on token-less input: the chain
+    * array allocation ([[QualityRules.distinctRatioOfLower]] on the
+    * `UTF8String.toLowerCase` copy). DELIBERATE delta on token-less
+    * input (only [[QualityRules.isRegexSpace]] chars): the chain
     * divides by zero (ANSI error / non-ANSI NULL); this returns NaN —
     * unreachable in the pipeline (repetition rule gates on
     * wc >= repMinWords) and asserted in FunctionsSpec.
     */
   def distinctRatio(s: UTF8String): Double = {
     if (s == null) return Double.NaN
-    val t = s.toLowerCase.toString
-    val set = new java.util.HashSet[String]()
-    var total = 0
-    var i = 0
-    var start = -1
-    @inline def asciiWs(c: Char) =
-      c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-    while (i <= t.length) {
-      val isWs = i == t.length || asciiWs(t.charAt(i))
-      if (!isWs && start < 0) start = i
-      else if (isWs && start >= 0) {
-        set.add(t.substring(start, i))
-        total += 1
-        start = -1
-      }
-      i += 1
-    }
-    if (total == 0) Double.NaN else set.size.toDouble / total
+    val lower = s.toLowerCase.toString
+    if (lower.forall(QualityRules.isRegexSpace)) Double.NaN
+    else QualityRules.distinctRatioOfLower(lower)
   }
 }
 

@@ -127,13 +127,22 @@ object Similarity extends Serializable {
     val bits = nBits / nBands
     val sigU = F.udf((v: Array[Float]) => hyperplaneSig(v, nBits))
     df.select(F.col(idCol).as(idAlias), sigU(F.col(embCol)).as("__sig"))
-      .select(F.col(idAlias),
-        F.explode(F.array((0 until nBands).map(b =>
-          F.struct(F.lit(b).as("band"),
-            F.shiftright(F.col("__sig"), b * bits)
-              .bitwiseAND(F.lit((1L << bits) - 1)).as("bh"))): _*)).as("b"))
+      .select(F.col(idAlias), explodeBitBands(F.col("__sig"), nBands, bits).as("b"))
       .select(F.col(idAlias), F.col("b.band"), F.col("b.bh"))
   }
+
+  /** Band `b` of a bit-banded Long signature column: its bits
+    * [b·bits, (b+1)·bits), as a Long. The one band split of the
+    * hyperplane LSH ([[hyperplaneBanded]], [[topKLsh]]) and of
+    * `Dedup.simhashNearDups`.
+    */
+  private[graft] def bitBand(sig: Column, b: Int, bits: Int): Column =
+    F.shiftright(sig, b * bits).bitwiseAND(F.lit((1L << bits) - 1))
+
+  /** One struct (band, bh = [[bitBand]]) per band of `sig`, exploded. */
+  private[graft] def explodeBitBands(sig: Column, nBands: Int, bits: Int): Column =
+    F.explode(F.array((0 until nBands).map(b =>
+      F.struct(F.lit(b).as("band"), bitBand(sig, b, bits).as("bh"))): _*))
 
   /** Deterministic random hyperplane for LSH bit b (seeded hash — no
     * RNG state, identical on every executor).
@@ -251,10 +260,7 @@ object Similarity extends Serializable {
       .map(b => (b, (qSig >>> (b * bits)) & ((1L << bits) - 1)))
     val sigU = F.udf((v: Array[Float]) => hyperplaneSig(v, nBits))
     val matchesBand = qBands
-      .map { case (b, bh) =>
-        F.shiftright(F.col("__sig"), b * bits)
-          .bitwiseAND(F.lit((1L << bits) - 1)) === F.lit(bh)
-      }
+      .map { case (b, bh) => bitBand(F.col("__sig"), b, bits) === F.lit(bh) }
       .reduce(_ || _)
     val cosU = F.udf((a: Array[Float]) => cosine(a, query))
     df.withColumn("__sig", sigU(F.col(embCol)))

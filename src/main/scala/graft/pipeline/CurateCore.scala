@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.Locale
-
 import graft.langid.LangIdModel
 import graft.lm.NGramLM
 import graft.rules.{GrammarRules, QualityRules}
@@ -14,8 +12,9 @@ import graft.scrub.Scrubber
   * agreement); it exists because per-stage timing showed the generic
   * column-expression chain (split + array_distinct + regexp_replace
   * per rule) and four separate UDF string conversions dominating the
-  * per-turn cost — one UTF8String→String conversion and a single
-  * hand-rolled scan is ~2× cheaper at 10^12-turn scale.
+  * per-turn cost — one UTF8String→String conversion and the plain
+  * cheap-rule chain (`QualityRules.cheapVerdict`, hand-rolled loops)
+  * is ~2× cheaper at 10^12-turn scale.
   *
   * Rule evaluation order is QualityRules.ruleOrder; expensive stages
   * stay structurally gated exactly as before (grammar hits only when
@@ -24,10 +23,10 @@ import graft.scrub.Scrubber
   * smart_corrector.py:114-128).
   *
   * A row that passes the length gates is lowercased ONCE, under
-  * `Locale.ROOT`, and that copy feeds the repetition rule, the
-  * boilerplate guard and the grammar guards. Each guard skips a regex
-  * scan only where the regex cannot match, so no decision depends on
-  * them:
+  * `Locale.ROOT`, by the cheap chain, and that copy feeds the
+  * repetition rule, the boilerplate guard and the grammar guards. Each
+  * guard skips a regex scan only where the regex cannot match, so no
+  * decision depends on them:
   *  - boilerplate: every alternative starts with an ASCII word that
   *    `(?i)` matches only in ASCII letters, which lowercase to that
   *    word under `Locale.ROOT` — so the regex runs only when the copy
@@ -63,48 +62,12 @@ final class CurateCore(
 
   def process(text: String): Result = {
     val scrub = Scrubber.scrub(text)
-
-    // one-pass scalar stats: word count, distinct-word ratio inputs,
-    // symbol count (same definitions as QualityRules.*Col)
-    var reason: String = null
-    var lower: String = null // text.toLowerCase(Locale.ROOT), once past the length gates
-    if (text == null) reason = "empty"
-    else {
-      var wc = 0
-      var sym = 0
-      var inWord = false
-      var i = 0
-      val len = text.length
-      while (i < len) {
-        val c = text.charAt(i)
-        val ws = Character.isWhitespace(c)
-        if (!ws && !inWord) { wc += 1; inWord = true }
-        else if (ws) inWord = false
-        if (!ws && !Character.isLetterOrDigit(c)) sym += 1
-        i += 1
-      }
-      // length gate counts CODE POINTS — the unfused pipeline's
-      // F.length is code points, and UTF-16 units would flip keep/drop
-      // for supplementary-char rows near maxChars (ADVICE r1); there are
-      // no more code points than units, so only a long row is counted
-      val tooManyChars = len > cfg.maxChars && text.codePointCount(0, len) > cfg.maxChars
-      // no word ⇔ every char is whitespace (or there is none)
-      if (wc == 0) reason = "empty"
-      else if (wc < cfg.minWords) reason = "too_short"
-      else if (wc > cfg.maxWords || tooManyChars) reason = "too_long"
-      else {
-        lower = text.toLowerCase(Locale.ROOT)
-        if (wc >= cfg.repMinWords &&
-            QualityRules.distinctRatioOfLower(lower) < cfg.minDistinctRatio)
-          reason = "repetition"
-        else if (sym.toDouble / len > cfg.maxSymbolRatio) reason = "symbol_ratio"
-        else if (QualityRules.isBoilerplate(text, lower)) reason = "boilerplate"
-      }
-    }
+    val cheap = QualityRules.cheapVerdict(text, cfg)
+    var reason = cheap.reason
 
     var hits: Seq[String] = Nil
     if (reason == null && cfg.grammarEnabled) {
-      val rh = GrammarRules.ruleHitsOfLower(text, lower, includePos = true, withContext = false)
+      val rh = GrammarRules.ruleHitsOfLower(text, cheap.lower, includePos = true, withContext = false)
       hits = rh.map(_.rule_id)
       if (rh.size >= cfg.maxRuleHits) reason = "grammar"
       else if (cfg.cykEnabled &&

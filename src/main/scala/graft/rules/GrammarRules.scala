@@ -331,8 +331,8 @@ object GrammarRules extends Serializable {
   /** All rule hits on a text, deduped (overlap → keep max confidence,
     * port of cfg_checker.py:317-343) and sorted by start position
     * (cfg_checker.py:312). Null-safe.
-    */
-  /** @param includePos include the POS-bigram rule (G3). The
+    *
+    * @param includePos include the POS-bigram rule (G3). The
     *   reference's POS path is NLTK-based; pass false when comparing
     *   against the reference's regex-only subset (reference-parity
     *   harness, scripts/reference_parity.py).

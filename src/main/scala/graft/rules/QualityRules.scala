@@ -18,8 +18,11 @@ import org.apache.spark.sql.{Column, functions => F}
   * grammar gate = "chunk has ≥1 detected error" (smart_corrector.py:114-128).
   *
   * Every scalar rule has BOTH a `Column` form (codegen'd built-ins,
-  * DuckDB-expressible for the driver oracle) and a plain-Scala form
-  * (used by the UDF pipeline core + independent golden oracle tests).
+  * DuckDB-expressible for the driver oracle) and a plain-Scala form.
+  * The plain forms make up the one cheap-rule chain, [[cheapVerdict]]:
+  * the fused curate kernel (`CurateCore.process`) runs it on every row,
+  * [[firstScalarFailure]] returns its reason, and the codegen'd
+  * `graft.functions.TextMetrics` expressions call its per-row loops.
   */
 object QualityRules extends Serializable {
 
@@ -163,21 +166,53 @@ object QualityRules extends Serializable {
     "empty", "too_short", "too_long", "repetition", "symbol_ratio",
     "boilerplate", "grammar", "cyk", "lang", "ppl")
 
-  /** First failing scalar rule on raw text (grammar/cyk/lang/ppl are
-    * decided by the pipeline with their computed inputs); null if all pass.
+  /** The cheap chain's verdict on one row: `reason`, the first failing
+    * rule of `empty` … `boilerplate` in [[ruleOrder]] (null if all
+    * pass), and `lower`, the row lowercased under `Locale.ROOT` once it
+    * has passed the length gates (null before), for the grammar guards
+    * after the chain to reuse.
     */
-  def firstScalarFailure(text: String, cfg: Config = defaultConfig): String = {
-    if (text == null || text.trim.isEmpty) return "empty"
+  private[graft] final case class CheapVerdict(reason: String, lower: String)
+
+  private val emptyVerdict = CheapVerdict("empty", null)
+  private val tooShortVerdict = CheapVerdict("too_short", null)
+  private val tooLongVerdict = CheapVerdict("too_long", null)
+
+  /** THE cheap-rule chain, cheapest test first:
+    *  - `empty` is "no word": every char is `Character.isWhitespace`
+    *    (or there is none), decided by [[wordCount]];
+    *  - the length gate counts CODE POINTS, as the column pipeline's
+    *    `F.length` does (UTF-16 units would flip keep/drop for
+    *    supplementary-char rows near `maxChars`, ADVICE r1); there are
+    *    no more code points than units, so only a row longer than
+    *    `maxChars` units is counted;
+    *  - a row past the length gates is lowercased once, and that copy
+    *    feeds the repetition rule and the boilerplate guard;
+    *  - [[symbolRatio]] runs only on rows that reach the symbol rule.
+    */
+  private[graft] def cheapVerdict(text: String, cfg: Config): CheapVerdict = {
     val wc = wordCount(text)
-    if (wc < cfg.minWords) "too_short"
-    // code points, matching F.length (not UTF-16 units)
-    else if (wc > cfg.maxWords ||
-      text.codePointCount(0, text.length) > cfg.maxChars) "too_long"
-    else if (wc >= cfg.repMinWords && distinctRatio(text) < cfg.minDistinctRatio) "repetition"
-    else if (symbolRatio(text) > cfg.maxSymbolRatio) "symbol_ratio"
-    else if (isBoilerplate(text)) "boilerplate"
-    else null
+    if (wc == 0) return emptyVerdict
+    if (wc < cfg.minWords) return tooShortVerdict
+    val len = text.length
+    if (wc > cfg.maxWords || (len > cfg.maxChars && text.codePointCount(0, len) > cfg.maxChars))
+      return tooLongVerdict
+    val lower = text.toLowerCase(Locale.ROOT)
+    val reason =
+      if (wc >= cfg.repMinWords && distinctRatioOfLower(lower) < cfg.minDistinctRatio)
+        "repetition"
+      else if (symbolRatio(text) > cfg.maxSymbolRatio) "symbol_ratio"
+      else if (isBoilerplate(text, lower)) "boilerplate"
+      else null
+    CheapVerdict(reason, lower)
   }
+
+  /** First failing cheap rule on raw text (grammar/cyk/lang/ppl are
+    * decided by the pipeline with their computed inputs); null if all
+    * pass. The reason of [[cheapVerdict]].
+    */
+  def firstScalarFailure(text: String, cfg: Config = defaultConfig): String =
+    cheapVerdict(text, cfg).reason
 
   // ---- Column forms (built-ins only; oracle-checkable in DuckDB) ----
 

@@ -80,7 +80,6 @@ object Scrubber extends Serializable {
 
   final case class ScrubResult(scrubbed: String, hits: Map[String, Int])
 
-  /** Pure per-row scrub. Null-safe (null → empty result). */
   /** True when the \s+→" " + trim pass would change the string —
     * already-normalized text (the common case) skips the regex pass.
     */
@@ -101,6 +100,7 @@ object Scrubber extends Serializable {
     false
   }
 
+  /** Pure per-row scrub. Null-safe (null → empty result). */
   def scrub(text: String): ScrubResult = {
     if (text == null || text.isEmpty) return ScrubResult("", Map.empty)
     // whitespace normalize first (web_scraper.py:73-74)
@@ -192,10 +192,6 @@ object Scrubber extends Serializable {
     wsP.matcher(t).replaceAll(" ").trim
   }
 
-  /** The same reference-subset scrub as ANSI SQL over a column name, for
-    * DuckDB (regexp_replace needs the 'g' flag there; Spark replaces all
-    * matches by default).
-    */
   /** FULL scrub bank as ANSI SQL (DuckDB/RE2-safe: no pattern in
     * `patternSpecs` uses lookaround or backreferences) — the same
     * fixed-order ws-normalize → url → email → phone → key → slur →
@@ -215,6 +211,10 @@ object Scrubber extends Serializable {
     s"trim(regexp_replace($t, '\\s+', ' ', 'g'))"
   }
 
+  /** The same reference-subset scrub as ANSI SQL over a column name, for
+    * DuckDB (regexp_replace needs the 'g' flag there; Spark replaces all
+    * matches by default).
+    */
   def scrubSqlReference(col: String): String =
     s"trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
       s"regexp_replace(regexp_replace(trim(regexp_replace($col, '\\s+', ' ', 'g'))," +

@@ -60,18 +60,11 @@ object StreamingDedup {
       numHashes: Int = 64,
       bands: Int = 16
   ): Dataset[BucketAssign] = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
     require(delayMs > 0)
     import spark.implicits._
-    val rows = numHashes / bands
-    // same single-evaluation shape as the batch minhashClusters: one
-    // UDF from text to band hashes, empty for token-less rows
-    val bandU = F.udf { (t: String) =>
-      val sh = Dedup.shingles(t, shingleSize)
-      if (sh.isEmpty) Seq.empty[(Int, Long)]
-      else Dedup.bandHashes(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        Dedup.minhashSignature(sh, numHashes)), bands, rows)
-    }
+    // the batch minhashClusters' single-evaluation shape: one UDF from
+    // text to band hashes, empty for token-less rows
+    val bandU = Dedup.minhashBandUdf[String](numHashes, bands)(Dedup.shingles(_, shingleSize))
     // fail fast on a non-integral id column (ADVICE r5): a silent
     // cast("long") of e.g. a string id yields nulls that only surface
     // later as a cryptic "null in non-nullable field" encoder error

@@ -12,8 +12,9 @@ import graft.synth.Transcripts
 /** Each fast path of the fused curate kernel against the plain form it
   * replaced ([[KernelReference]]): the boilerplate guard, the hand
   * split of the repetition rule, the langid iterator (predict and
-  * training), the grammar guards and the whole `CurateCore.process`.
-  * Doubles are compared bit for bit.
+  * training), the grammar guards and the whole `CurateCore.process`;
+  * and `QualityRules.firstScalarFailure` against the kernel's cheap
+  * verdict. Doubles are compared bit for bit.
   */
 class KernelEquivalenceSpec extends AnyFunSuite {
 
@@ -145,6 +146,24 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     inputs.foreach { case (name, texts) =>
       assertSame(s"process on $name", texts)(core.process,
         KernelReference.process(models.langId, models.lm, cfg, _))(sameResult)
+    }
+  }
+
+  test("firstScalarFailure == the kernel's cheap verdict, under the default and cheap configs") {
+    val cheapReasons = QualityRules.ruleOrder.take(6).toSet
+    assert(cheapReasons == Set("empty", "too_short", "too_long", "repetition", "symbol_ratio",
+      "boilerplate"))
+    // whitespace beyond `trim`'s ≤ U+0020, and control chars inside it
+    val edge = Seq("\u2003\u2003", "\u3000", "\u0001", " \u0001 ")
+    Seq(QualityRules.defaultConfig, QualityRules.cheapConfig).foreach { c =>
+      val kernel = new CurateCore(models.langId, models.lm, c)
+      def cheapVerdict(t: String) =
+        Option(kernel.process(t).drop_reason).filter(cheapReasons).orNull
+      assert(edge.map(cheapVerdict) == Seq("empty", "empty", "too_short", "too_short"))
+      (inputs :+ ("edge" -> edge)).foreach { case (name, texts) =>
+        assertSame(s"firstScalarFailure on $name", texts)(QualityRules.firstScalarFailure(_, c),
+          cheapVerdict)()
+      }
     }
   }
 

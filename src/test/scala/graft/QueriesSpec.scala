@@ -41,8 +41,10 @@ class QueriesSpec extends SparkTestBase {
 
   test("curate_cheap keep/drop agrees with the independent plain-Scala rule oracle") {
     // the DuckDB compare is driver-side; this pins the same decision
-    // against QualityRules.firstScalarFailure (no Spark, no SQL)
+    // against the test-scope KernelReference chain (no Spark, no SQL,
+    // not the kernel's QualityRules.cheapVerdict)
     val cfg = graft.rules.QualityRules.cheapConfig
+    val models = graft.pipeline.Curate.defaultModels
     val rows = SparkEntry.queries("curate_cheap")(spark, dir)
       .collect()
     assert(rows.length > 0)
@@ -61,7 +63,8 @@ class QueriesSpec extends SparkTestBase {
           else if (docId % 13 == 6) (1 to 60).map(j => (j * 101).toString).mkString(" ")
           else text
         val planted = if (docId % 5 == 0) base + " contact bob@example.com or https://ex.co/a now !!" else base
-        val reason = Option(graft.rules.QualityRules.firstScalarFailure(planted, cfg)).getOrElse("none")
+        val reason = Option(KernelReference.process(models.langId, models.lm, cfg, planted)
+          .drop_reason).getOrElse("none")
         (src, i + 1) -> reason
       }
     }.toMap

@@ -232,6 +232,11 @@ class ResumeSpec extends SparkTestBase {
     val stray = m.copy(droppedByRule = Map("ppl" -> 1L))
     assert(intercept[IllegalArgumentException](stray.checked(5)).getMessage.contains("ruleOrder"))
     assert(Resume.Manifest.parse(m.toJson) == m)
+    assert(m.toJson.startsWith("""{"part_id": 0, "input": "in/part_id=0", "turns_seen": 5, """))
+    // control chars, a quote and a backslash in the lineage path
+    val odd = m.copy(input = "in\tdir/\u0001x/\"q\"\\part_id=0")
+    assert(odd.toJson.contains("in\\tdir/\\u0001x/\\\"q\\\"\\\\part_id=0"))
+    assert(Resume.Manifest.parse(odd.toJson) == odd)
   }
 
   test("a failed partition at concurrency 2 stops the run: nothing commits after it throws") {
