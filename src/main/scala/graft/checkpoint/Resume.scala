@@ -1,7 +1,6 @@
 package graft.checkpoint
 
 import java.nio.file.{Path, Paths}
-import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -23,36 +22,45 @@ import graft.tableio.TableIO
   * correction_stats, smart_corrector.py:90-96,252-260).
   *
   * Scale notes: the loop is over PARTITIONS (thousands at 10^12 turns),
-  * each processed with full cluster parallelism. A partition runs two
-  * Spark jobs: the salted shuffle's map stage and the write (its input
-  * schema comes from one parquet footer on the driver,
-  * `TableIO.readPartition`). The manifest metrics are observed on the
-  * write job itself (`Curate.metricAggs`, collected in its result
-  * stage), never read back; the write is validated on the driver
-  * against the committed parquet footers' row counts. By default two
-  * partitions are in flight, so one partition's driver-side planning,
-  * commit, footer check and manifest write overlap the other's jobs.
+  * taken in waves of `concurrency` partitions, each wave one Spark write
+  * with full cluster parallelism. A wave runs two Spark jobs: the salted
+  * shuffle's map stage and the write (its input schema comes from one
+  * parquet footer on the driver, `TableIO.readPartitionsByFooter`). The
+  * kernel runs after the shuffle, so a hot conversation's turns are
+  * curated by every write task its salt reaches, not by the one map task
+  * that reads its bucket. The manifest metrics are observed on the write
+  * job itself (`Curate.partMetrics`, one aggregate keyed by `part_id`,
+  * collected in its result stage), never read back; each partition is
+  * validated on the driver against its staged parquet footers' row
+  * counts before any partition of the wave moves into place.
   * `maxPartitions` lets tests simulate a kill after k partitions.
   */
 object Resume {
 
   final case class RunResult(processed: Seq[Int], skipped: Seq[Int])
 
-  /** Partitions `run` keeps in flight unless told otherwise. */
+  /** Partitions `run` writes per wave unless told otherwise. */
   val defaultConcurrency = 2
 
   /** Files `run` writes per committed partition unless told otherwise. */
   val defaultWritePartitions = 8
 
-  /** @param concurrency number of partitions in flight at once (at
-    *   least 1). Spark's scheduler is thread-safe: each worker thread
-    *   submits its partition's jobs independently, keeping the cluster
-    *   busy while another partition is in its (cheap, driver-side)
-    *   commit step. The worker threads inherit the caller's job group.
-    *   Each partition still commits atomically and independently, and
-    *   the output does not depend on the concurrency. On the first
-    *   failure the partitions not yet started are cancelled, the
-    *   in-flight ones finish, and then the failure is rethrown.
+  /** Parquet writer options of a curated commit: no dictionary for the
+    * free-text columns, whose values are nearly all distinct (parquet-mr
+    * would hash each into a dictionary, then fall back to plain).
+    */
+  private val writeOptions = Map(
+    "parquet.enable.dictionary#text" -> "false",
+    "parquet.enable.dictionary#scrubbed_text" -> "false")
+
+  /** @param concurrency partitions per wave (at least 1): the todo
+    *   partitions are curated and committed `concurrency` at a time, one
+    *   Spark write per wave, on the caller's thread. Each partition
+    *   still commits atomically with its own manifest, and the output
+    *   does not depend on the concurrency. A failure fails its whole
+    *   wave: nothing in that wave or after it commits.
+    *   `writePartitions` tasks write a wave and run its kernel, so it
+    *   must grow with the data, as the file size it sets does.
     */
   def run(
       spark: SparkSession,
@@ -68,57 +76,42 @@ object Resume {
     val inputParts = listInputPartitions(inputBase)
     val done = TableIO.donePartitions(outputBase)
     val todo = inputParts.filterNot(done.contains).sorted.take(maxPartitions)
-    val processed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     if (todo.isEmpty) return RunResult(Nil, done.toSeq.sorted)
-    // one broadcast of the kernel for every partition of this run
+    // one broadcast of the kernel for every wave of this run
     val core = spark.sparkContext.broadcast(new CurateCore(models.langId, models.lm, cfg))
-
-    def processOne(p: Int): Unit = {
-      commitCurated(TableIO.readPartition(spark, inputBase, p), core, outputBase, p,
-        s"$inputBase/${TableIO.PART_COL}=$p", writePartitions)
-      processed.add(p)
-    }
-
-    val pool = Executors.newFixedThreadPool(math.max(1, math.min(concurrency, todo.size)))
-    val finished = new ExecutorCompletionService[Unit](pool)
-    val futures = todo.map(p => finished.submit(() => processOne(p)))
-    try todo.foreach(_ => finished.take().get())
-    catch {
-      case t: Throwable =>
-        // the first failure: no queued partition may start (and commit)
-        // after run has thrown
-        futures.foreach(_.cancel(false))
-        throw (t match { case e: ExecutionException => e.getCause; case _ => t })
-    } finally {
-      pool.shutdown() // in-flight partitions finish before run returns
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      core.destroy()
-    }
-    RunResult(processed.asScala.toSeq.sorted, done.toSeq.sorted)
+    try todo.grouped(concurrency).foreach { wave =>
+      commitCurated(TableIO.readPartitionsByFooter(spark, inputBase, wave), core, outputBase,
+        wave.map(p => p -> s"$inputBase/${TableIO.PART_COL}=$p"), writePartitions)
+    } finally core.destroy()
+    RunResult(todo, done.toSeq.sorted)
   }
 
-  /** Curate `turns` and commit them as partition `partId` of
-    * `outputBase` in `writePartitions` files, then its checked manifest
-    * with lineage `input`: the one commit of curated turns, per input
-    * partition in `run` and per micro-batch in `StreamingCurate`.
+  /** Curate `turns` (rows carrying `part_id`) and commit partitions
+    * `inputs` of `outputBase` — each in `writePartitions` files, then its
+    * checked manifest with the lineage paired with it — off one Spark
+    * write: the one commit of curated turns, per wave in `run` and per
+    * micro-batch in `StreamingCurate`. The kernel runs after the salted
+    * shuffle, and the counts are observed after it, in the write's
+    * result stage, where a retried task's update still counts once.
     */
   private[graft] def commitCurated(
       turns: DataFrame,
       core: Broadcast[CurateCore],
       outputBase: String,
-      partId: Int,
-      input: String,
+      inputs: Seq[(Int, String)],
       writePartitions: Int
   ): Unit = {
-    // observed after the shuffle, in the write's result stage, where a
-    // retried task's update still counts once
     val obs = Observation()
-    val ordered = Curate.saltedForWrite(Curate.curateWith(turns, core), writePartitions)
-      .observe(obs, Curate.metricAggs.head, Curate.metricAggs.tail: _*)
-    val dir = TableIO.commitPartition(ordered, outputBase, partId)
-    val m = Manifest.observed(partId, input, obs.get)
-      .checked(footerRowCount(dir, turns.sparkSession.sparkContext.hadoopConfiguration))
-    TableIO.writeManifest(outputBase, partId, m.toJson)
+    val curated = Curate.curateWith(Curate.saltedForWrite(turns, writePartitions), core)
+      .observe(obs, Curate.partMetrics)
+    val conf = turns.sparkSession.sparkContext.hadoopConfiguration
+    val lineage = inputs.toMap
+    lazy val counts = obs.get("part_metrics").asInstanceOf[scala.collection.Map[Int, Seq[Long]]]
+    TableIO.commitStaged(curated, outputBase, inputs.map(_._1), writeOptions) { (p, staged) =>
+      val m = Manifest.observed(p, lineage(p),
+        counts.get(p).fold(Map.empty[String, Long])(c => Curate.metricNames.zip(c).toMap))
+      m.checked(footerRowCount(staged, conf)).toJson
+    }
   }
 
   def listInputPartitions(inputBase: String): Seq[Int] =
@@ -127,7 +120,7 @@ object Resume {
         s.stripPrefix(s"${TableIO.PART_COL}=").toInt
       }
 
-  /** Rows in a committed partition, summed from its parquet footers on
+  /** Rows in a partition directory, summed from its parquet footers on
     * the driver (no Spark job).
     */
   private def footerRowCount(dir: Path, conf: Configuration): Long =
@@ -195,10 +188,12 @@ object Resume {
         j.get("turns_dropped").asLong, counts("dropped_by_rule"), counts("scrub_hit_counts"))
     }
 
-    /** From the values `Curate.metricAggs` observed, keyed by alias. */
-    def observed(partId: Int, input: String, v: Map[String, Any]): Manifest = {
-      // a sum over no rows is null: an empty partition counts 0
-      def n(k: String): Long = Option(v(k)).fold(0L)(_.asInstanceOf[Long])
+    /** From one partition's observed counts, keyed by
+      * `Curate.metricNames`; a partition with no rows has none and
+      * counts 0.
+      */
+    def observed(partId: Int, input: String, v: Map[String, Long]): Manifest = {
+      def n(k: String): Long = v.getOrElse(k, 0L)
       def counts(keys: Seq[String], col: String => String) =
         keys.map(k => k -> n(col(k))).filter(_._2 > 0).toMap
       Manifest(partId, input, n("turns_seen"), n("turns_kept"), n("turns_dropped"),

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.Locale
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.GraftBridge
@@ -31,10 +33,15 @@ object TextMetricsUtil {
     * built-in chain
     * `size(array_distinct(array_remove(split(lower(x), "\\s+"), ""))) /
     *  size(array_remove(split(lower(x), "\\s+"), ""))`
-    * on every token-ful input (same lower() = UTF8String.toLowerCase,
-    * same Java-regex ASCII \s token boundaries), single-pass with no
-    * array allocation ([[QualityRules.distinctRatioOfLower]] on the
-    * `UTF8String.toLowerCase` copy). DELIBERATE delta on token-less
+    * on every token-ful input (same Java-regex ASCII \s token
+    * boundaries) while the JVM's default locale lowercases as
+    * `Locale.ROOT` does: the chain's `lower()` is
+    * `UTF8String.toLowerCase`, which lowercases non-ASCII text under the
+    * default locale, and this lowercases under `Locale.ROOT` whatever
+    * the default, as the kernel's repetition rule and DuckDB's `lower`
+    * do. Single-pass with no array allocation
+    * ([[QualityRules.distinctRatioOfLower]] on the lowercased copy).
+    * DELIBERATE delta on token-less
     * input (only [[QualityRules.isRegexSpace]] chars): the chain
     * divides by zero (ANSI error / non-ANSI NULL); this returns NaN —
     * unreachable in the pipeline (repetition rule gates on
@@ -42,7 +49,7 @@ object TextMetricsUtil {
     */
   def distinctRatio(s: UTF8String): Double = {
     if (s == null) return Double.NaN
-    val lower = s.toLowerCase.toString
+    val lower = s.toString.toLowerCase(Locale.ROOT)
     if (lower.forall(QualityRules.isRegexSpace)) Double.NaN
     else QualityRules.distinctRatioOfLower(lower)
   }

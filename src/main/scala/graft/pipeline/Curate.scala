@@ -1,23 +1,26 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge, SparkSession, functions => F}
 
+import graft.functions.PartMetricsAgg
 import graft.langid.{LangId, LangIdModel}
 import graft.lm.NGramLM
 import graft.model.Turn
 import graft.rules.QualityRules
 import graft.scrub.Scrubber
 import graft.synth.Transcripts
+import graft.tableio.TableIO
 
 /** The curation DAG (SURVEY.md §3 "Spark rebuild of this lifecycle"):
   *
   *   transcripts → langid → cheap quality rules → (gated) grammar rules
   *   → (gated) perplexity → keep/drop decision → scrub → curated
   *
-  * One lazily-built DataFrame plan, map-only (NO shuffle on the hot
-  * path — the per-turn pipeline is embarrassingly parallel; the
-  * metrics are one global aggregate, or observed on the write job).
+  * One lazily-built DataFrame plan, map-only (the per-turn pipeline is
+  * embarrassingly parallel; the metrics are one global aggregate, or
+  * observed on the write job). `Resume` runs it after the one shuffle
+  * of its write, [[saltedForWrite]].
   *
   * Expensive-operator gating is STRUCTURAL, mirroring the reference's
   * "only error chunks reach the LLM" short-circuit
@@ -63,22 +66,24 @@ object Curate {
     curateWith(turns, spark.sparkContext.broadcast(new CurateCore(models.langId, models.lm, cfg)))
 
   /** [[curateDf]] with the kernel already broadcast: a caller that
-    * curates many DataFrames with one kernel (`Resume.run` per partition,
-    * `StreamingCurate` per micro-batch) ships it once and destroys the
-    * broadcast when done.
+    * curates many DataFrames with one kernel (`Resume.run` per wave of
+    * partitions, `StreamingCurate` per micro-batch) ships it once and
+    * destroys the broadcast when done. A `part_id` column of `turns` is
+    * kept, after the curated columns.
     */
   private[graft] def curateWith(turns: DataFrame, core: Broadcast[CurateCore]): DataFrame = {
     val coreU = F.udf((t: String) => core.value.process(t))
+    val partCol = turns.columns.filter(_ == TableIO.PART_COL).map(F.col).toSeq
     turns
       .withColumn("__c", coreU(F.col("text")))
-      .select(
+      .select(Seq(
         F.col("conv_id"), F.col("turn_idx"), F.col("role"), F.col("text"),
         F.col("tool"), F.col("ts"),
         F.col("__c.lang").as("lang"), F.col("__c.lang_conf").as("lang_conf"),
         F.col("__c.ppl").as("ppl"), F.col("__c.rule_hits").as("rule_hits"),
         F.col("__c.keep").as("keep"), F.col("__c.drop_reason").as("drop_reason"),
         F.col("__c.scrubbed_text").as("scrubbed_text"),
-        F.col("__c.scrub_hits").as("scrub_hits"))
+        F.col("__c.scrub_hits").as("scrub_hits")) ++ partCol: _*)
   }
 
   def curate(
@@ -101,8 +106,8 @@ object Curate {
 
   /** The per-run metrics as ONE aggregate list: turn count, kept and
     * dropped sums, one count per drop reason and one hit sum per scrub
-    * pattern. [[metrics]] aggregates it; `Resume` observes it on the
-    * partition's write job.
+    * pattern, named [[metricNames]]. [[metrics]] aggregates it;
+    * [[partMetrics]] gives the same counts per `part_id`.
     */
   val metricAggs: Seq[Column] = Seq(
     F.count(F.lit(1)).as("turns_seen"),
@@ -113,6 +118,21 @@ object Curate {
     metricScrubs.map(k =>
       F.coalesce(F.sum(F.col("scrub_hits").getItem(k).cast("long")), F.lit(0L))
         .as(scrubCount(k)))
+
+  /** The names of [[metricAggs]]'s columns, in order. */
+  val metricNames: Seq[String] = Seq("turns_seen", "turns_kept", "turns_dropped") ++
+    metricRules.map(ruleCount) ++ metricScrubs.map(scrubCount)
+
+  /** [[metricAggs]]'s counts for every `part_id` of a curated frame as
+    * ONE aggregate, named `part_metrics`: a map from each partition id
+    * present to its counts in [[metricNames]] order ([[PartMetricsAgg]]).
+    * `Resume.commitCurated` observes it on a wave's write job.
+    */
+  val partMetrics: Column = GraftBridge.column(PartMetricsAgg(
+      GraftBridge.expression(F.col(TableIO.PART_COL)), GraftBridge.expression(F.col("keep")),
+      GraftBridge.expression(F.col("drop_reason")), GraftBridge.expression(F.col("scrub_hits")),
+      metricRules, metricScrubs).toAggregateExpression())
+    .as("part_metrics")
 
   /** Per-run metrics — rebuild of the reference's summary aggregates
     * (smart_corrector.py:229-260, SURVEY.md §2.9 A2): one aggregate of
@@ -192,10 +212,15 @@ object Curate {
     * a hot conv_id over `salt` buckets while keeping (conv_id,
     * turn_idx) runs sorted within each output file — each file holds the
     * same rows in the same order run-to-run (the parquet bytes may still
-    * differ: see `TableIO`'s commit-protocol note).
+    * differ: see `TableIO`'s commit-protocol note). A frame carrying
+    * `part_id` (the partitions of a `Resume` wave) is sorted by it
+    * first, the order a partitionBy(part_id) write needs; the salt does
+    * not read it, so each partition's rows land in the same tasks, in
+    * the same order, as when the partition is written alone.
     */
   def saltedForWrite(df: DataFrame, numPartitions: Int, salt: Int = 16): DataFrame =
     df.repartition(numPartitions, F.col("conv_id"),
         F.pmod(F.hash(F.col("turn_idx")), F.lit(salt)))
-      .sortWithinPartitions("conv_id", "turn_idx")
+      .sortWithinPartitions(
+        (df.columns.filter(_ == TableIO.PART_COL).toSeq ++ Seq("conv_id", "turn_idx")).map(F.col): _*)
 }

@@ -109,7 +109,8 @@ object StreamingCurate {
 
   /** Production shape: each invocation curates only the files that
     * arrived since the last one and commits micro-batch `id` through
-    * `Resume.commitCurated` as `part_id=<id>` of `outDir`, manifest
+    * `Resume.commitCurated`, as a one-partition wave, as `part_id=<id>`
+    * of `outDir`, manifest
     * lineage `<inputDir>#batch=<id>`. A batch whose manifest exists is
     * skipped, as `Resume.run` skips a done partition, so a batch Spark
     * replays after a kill is committed once.
@@ -127,8 +128,8 @@ object StreamingCurate {
     def commitBatch(batch: DataFrame, batchId: Long): Unit = {
       val p = Math.toIntExact(batchId)
       if (!Files.exists(TableIO.manifestPath(outDir, p)))
-        Resume.commitCurated(batch, core, outDir, p, s"$inputDir#batch=$batchId",
-          Resume.defaultWritePartitions)
+        Resume.commitCurated(batch.withColumn(TableIO.PART_COL, F.lit(p)), core, outDir,
+          Seq(p -> s"$inputDir#batch=$batchId"), Resume.defaultWritePartitions)
     }
     try spark.readStream.schema(turnSchema).parquet(inputDir)
       .writeStream

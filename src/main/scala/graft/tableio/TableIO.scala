@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Iceberg-shaped table seam (SURVEY.md §1.2): Hive-style partitioned
   * Parquet with the Iceberg semantics the engine needs — partition
@@ -33,9 +34,10 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
   * partition has the same rows, in the same files and order, and the
   * same manifest, but not the same bytes, because parquet-mr writes each
   * column chunk's `encodings` list in hash-set order.
-  * [[commitPartitions]] runs the protocol for many partitions off one
-  * staged write; [[commitOrDrop]] runs it for one partition that a
-  * rewrite may have emptied.
+  * [[commitPartitions]] and [[commitStaged]] run the protocol for many
+  * partitions off one staged write, through one commit loop;
+  * [[commitOrDrop]] runs it for one partition that a rewrite may have
+  * emptied.
   */
 object TableIO {
 
@@ -70,34 +72,70 @@ object TableIO {
   }
 
   /** Commit every partition of `df` (rows carrying `part_id`) off ONE
-    * staged write: `df` lands partitionBy(part_id) under base/_staging,
-    * one aggregate over the staged rows gives each partition's stats
-    * row — its row count, then `stats` — and each staged partition is
-    * moved into place and its manifest, `manifest(partId, stats row)`,
-    * written last. The moves are metadata ops, so the job count does
-    * not grow with the number of partitions. The staged rows are read
-    * back from the `part_id=K` directories with `basePath` set to the
-    * staging directory: Spark ignores a path whose name starts with `_`
-    * (and says so in a warning) when it is the one path given.
+    * staged write: one aggregate over the staged rows gives each
+    * partition's stats row — its row count, then `stats` — and the
+    * commit loop [[commitStaged]] also runs moves each partition into
+    * place and writes its manifest, `manifest(partId, stats row)`, last. The staged rows
+    * are read back from the `part_id=K` directories with `basePath` set
+    * to the staging directory: Spark ignores a path whose name starts
+    * with `_` (and says so in a warning) when it is the one path given.
     */
   def commitPartitions(df: DataFrame, base: String, stats: Column*)(
       manifest: (Int, Row) => String): Unit = {
-    val staging = Paths.get(base, "_staging")
-    deleteRecursive(staging)
-    df.write.partitionBy(PART_COL).mode("overwrite").parquet(staging.toString)
+    val staging = stage(df, base, Map.empty)
     val staged = entryNames(staging).filter(_.startsWith(s"$PART_COL="))
       .map(staging.resolve(_).toString).sorted
-    df.sparkSession.read.option("basePath", staging.toString).parquet(staged: _*)
+    val manifests = df.sparkSession.read.option("basePath", staging.toString).parquet(staged: _*)
       .groupBy(PART_COL).agg(F.struct(F.count(F.lit(1)) +: stats: _*))
       .collect().sortBy(_.getInt(0))
-      .foreach { r =>
-        val p = r.getInt(0)
-        val target = partitionDir(base, p)
-        deleteRecursive(target)
-        Files.createDirectories(target.getParent)
-        Files.move(partitionDir(staging.toString, p), target, StandardCopyOption.ATOMIC_MOVE)
-        writeManifest(base, p, manifest(p, r.getStruct(1)))
-      }
+      .map(r => r.getInt(0) -> manifest(r.getInt(0), r.getStruct(1)))
+    moveIntoPlace(base, staging, manifests.toSeq)
+  }
+
+  /** Commit partitions `parts` of `df` (rows carrying `part_id`) off ONE
+    * staged write, with parquet writer `options`: each partition's
+    * manifest is `manifest(partId, its staged directory)`, built for
+    * every partition before the first move (so a manifest that throws
+    * commits nothing), then each partition is moved into place and its
+    * manifest written last, in `parts` order. A partition of `parts`
+    * that `df` holds no row of commits one schema-only parquet file, as
+    * a write of no rows does, so it still reads back.
+    */
+  def commitStaged(df: DataFrame, base: String, parts: Seq[Int], options: Map[String, String])(
+      manifest: (Int, Path) => String): Unit = {
+    val staging = stage(df, base, options)
+    val dataSchema = StructType(df.schema.filterNot(_.name == PART_COL))
+    parts.map(p => partitionDir(staging.toString, p)).filterNot(Files.isDirectory(_)).foreach { d =>
+      df.sparkSession.createDataFrame(java.util.List.of[Row](), dataSchema)
+        .write.options(options).parquet(d.toString)
+    }
+    moveIntoPlace(base, staging,
+      parts.map(p => p -> manifest(p, partitionDir(staging.toString, p))))
+  }
+
+  /** Write `df` partitionBy(part_id) under base/_staging (one Spark job)
+    * and return the staging directory.
+    */
+  private def stage(df: DataFrame, base: String, options: Map[String, String]): Path = {
+    val staging = Paths.get(base, "_staging")
+    deleteRecursive(staging)
+    df.write.options(options).partitionBy(PART_COL).mode("overwrite").parquet(staging.toString)
+    staging
+  }
+
+  /** The commit loop of every staged multi-partition commit: for each
+    * (partition, manifest) in order, move the staged partition into
+    * place, then write its manifest. The moves are metadata ops, so the
+    * job count does not grow with the number of partitions.
+    */
+  private def moveIntoPlace(base: String, staging: Path, manifests: Seq[(Int, String)]): Unit = {
+    manifests.foreach { case (p, json) =>
+      val target = partitionDir(base, p)
+      deleteRecursive(target)
+      Files.createDirectories(target.getParent)
+      Files.move(partitionDir(staging.toString, p), target, StandardCopyOption.ATOMIC_MOVE)
+      writeManifest(base, p, json)
+    }
     deleteRecursive(staging)
   }
 
@@ -177,23 +215,37 @@ object TableIO {
     spark.read.option("basePath", base)
       .parquet(parts.map(p => partitionDir(base, p).toString): _*)
 
-  /** One partition's rows, read with the schema of its first parquet
-    * file in name order. The footer is read and converted on the driver
-    * by the conversion Spark's parquet inference applies to each footer
-    * (`ParquetFileFormat.readSchemaFromFooter`: Spark's row metadata
-    * first, then `ParquetToSparkSchemaConverter` under the session's
-    * conf), so this is the schema `spark.read.parquet(dir)` infers with
-    * `mergeSchema` off, without the Spark job that inference runs.
+  /** One partition's rows, read as [[readPartitionsByFooter]] reads
+    * them, without the `part_id` column: the schema `spark.read.parquet(dir)`
+    * infers, without the Spark job that inference runs.
     */
-  def readPartition(spark: SparkSession, base: String, partId: Int): DataFrame = {
-    val dir = partitionDir(base, partId)
-    val first = new hfs.Path(parquetFiles(dir).headOption.getOrElse(
-      throw new IllegalArgumentException(s"no parquet file in partition directory $dir")).toUri)
+  def readPartition(spark: SparkSession, base: String, partId: Int): DataFrame =
+    readPartitionsByFooter(spark, base, Seq(partId)).drop(PART_COL)
+
+  /** The rows of partitions `parts` (non-empty, each holding a parquet
+    * file), `part_id` kept, read with the schema of the first parquet
+    * file in name order of `parts.head`. The footer is read and
+    * converted on the driver by the conversion Spark's parquet inference
+    * applies to each footer (`ParquetFileFormat.readSchemaFromFooter`:
+    * Spark's row metadata first, then `ParquetToSparkSchemaConverter`
+    * under the session's conf), so this is the schema
+    * `spark.read.parquet` infers with `mergeSchema` off when the
+    * partitions share one schema, without the Spark job that inference
+    * runs.
+    */
+  def readPartitionsByFooter(spark: SparkSession, base: String, parts: Seq[Int]): DataFrame = {
+    val firsts = parts.map { p =>
+      val dir = partitionDir(base, p)
+      parquetFiles(dir).headOption.getOrElse(
+        throw new IllegalArgumentException(s"no parquet file in partition directory $dir"))
+    }
+    val first = new hfs.Path(firsts.head.toUri)
     val reader = openFooter(first, spark.sparkContext.hadoopConfiguration)
     val footer = try reader.getFooter finally reader.close()
     val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    spark.read.schema(schema).parquet(dir.toString)
+    spark.read.schema(schema.add(PART_COL, IntegerType)).option("basePath", base)
+      .parquet(parts.map(p => partitionDir(base, p).toString): _*)
   }
 
   /** A reader of parquet file `file` with read options built from

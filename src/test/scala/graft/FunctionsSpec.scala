@@ -61,6 +61,18 @@ class FunctionsSpec extends SparkTestBase {
     assert(nan.forall(_.getDouble(0).isNaN))
   }
 
+  test("distinct_ratio lowercases without the default locale") {
+    import spark.implicits._
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      // under tr, "I".toLowerCase is a dotless ı, distinct from "i"
+      val r = Seq("I i é").toDF("t").select(TextMetrics.distinct_ratio(col("t"))).head().getDouble(0)
+      assert(math.abs(r - 2.0 / 3.0) < 1e-12, s"$r")
+      assert(r == graft.rules.QualityRules.distinctRatio("I i é"))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("SQL registration works (graft_word_count in spark.sql)") {
     TextMetrics.register(spark)
     df.createOrReplaceTempView("fdocs")

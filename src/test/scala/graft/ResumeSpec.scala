@@ -190,16 +190,113 @@ class ResumeSpec extends SparkTestBase {
     }
   }
 
-  test("two partitions at the default concurrency run at most four Spark jobs in the caller's group") {
+  test("a wave of two partitions runs exactly two Spark jobs in the caller's group") {
     val in = freshDir("in6")
     val out = freshDir("out6")
     try {
       TableIO.writeBucketedInput(Transcripts.dataset(spark, 20L).toDF(), in, nBuckets = 2)
       val (r, jobs) = jobsIn("resume-run")(Resume.run(spark, in, out))
       assert(r.processed == Seq(0, 1))
-      // the jobs run on the pool threads, so they count here only if the
-      // job group reached them; each partition's write is one of them
-      assert(jobs >= 2 && jobs <= 4, s"two partitions ran $jobs jobs in the group")
+      // one wave at the default concurrency: its shuffle map stage and
+      // its write, both on the caller's thread
+      assert(jobs == 2, s"two partitions ran $jobs jobs in the group")
+    } finally {
+      Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
+
+  test("a wave's write plan runs the kernel above the salted shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val in = freshDir("in8")
+    val out = freshDir("out8")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand"))
+          writes.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 20L).toDF(), in, nBuckets = 2)
+      spark.listenerManager.register(listener)
+      Resume.run(spark, in, out)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(writes.size == 1, s"${writes.size} writes")
+      val plan = writes.peek()
+      val kernel = Plans.find(plan) {
+        case p: ProjectExec => p.projectList.exists(_.exists(_.isInstanceOf[ScalaUDF]))
+        case _ => false
+      }
+      assert(kernel.isDefined, plan.toString)
+      val isShuffle: SparkPlan => Boolean = _.isInstanceOf[ShuffleExchangeLike]
+      assert(Plans.collect(plan) { case e if isShuffle(e) => e }.size == 1, plan.toString)
+      assert(Plans.find(kernel.get)(isShuffle).isDefined, s"kernel below the shuffle: $plan")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
+
+  test("an input partition of only a schema-only file commits an empty partition and a zero manifest") {
+    val in = freshDir("in9")
+    val alone = freshDir("out9a")
+    val paired = freshDir("out9b")
+    val scratch = freshDir("schema-only")
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 20L).toDF(), in, nBuckets = 2)
+      // bucket 1 keeps only a schema-only parquet file
+      val bucket1 = TableIO.partitionDir(in, 1)
+      val schemaOnly = Paths.get(scratch, "data")
+      spark.read.parquet(bucket1.toString).limit(0).write.parquet(schemaOnly.toString)
+      TableIO.deleteRecursive(bucket1)
+      Files.move(schemaOnly, bucket1)
+      val turns0 = spark.read.parquet(TableIO.partitionDir(in, 0).toString).count()
+      // in a wave with the non-empty bucket 0, and in a wave of its own
+      assert(Resume.run(spark, in, paired).processed == Seq(0, 1))
+      assert(Resume.run(spark, in, alone, concurrency = 1).processed == Seq(0, 1))
+      Seq(paired, alone).foreach { out =>
+        val m = Resume.Manifest.parse(TableIO.readManifest(out, 1).get)
+        assert(m == Resume.Manifest(1, s"$in/${TableIO.PART_COL}=1", 0, 0, 0, Map.empty, Map.empty))
+        val dir1 = TableIO.partitionDir(out, 1)
+        assert(TableIO.parquetFiles(dir1).size == 1)
+        assert(spark.read.parquet(dir1.toString).schema ==
+          spark.read.parquet(TableIO.partitionDir(out, 0).toString).schema)
+        val committed = TableIO.read(spark, out)
+        assert(committed.count() == turns0)
+        assert(committed.filter(committed("part_id") === 1).count() == 0)
+      }
+      assert(TableIO.readManifest(paired, 0) == TableIO.readManifest(alone, 0))
+    } finally {
+      Seq(in, alone, paired, scratch).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
+
+  test("a curated commit writes text and scrubbed_text without a parquet dictionary") {
+    val in = freshDir("in10")
+    val out = freshDir("out10")
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 20L).toDF(), in, nBuckets = 1)
+      Resume.run(spark, in, out)
+      val files = TableIO.parquetFiles(TableIO.partitionDir(out, 0))
+      assert(files.nonEmpty)
+      import scala.jdk.CollectionConverters._
+      files.foreach { f =>
+        val r = TableIO.openFooter(new org.apache.hadoop.fs.Path(f.toUri),
+          spark.sparkContext.hadoopConfiguration)
+        val chunks = try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+          finally r.close()
+        def dictionary(col: String) = chunks.filter(_.getPath.toDotString == col)
+          .map(_.hasDictionaryPage).distinct
+        assert(dictionary("text") == Seq(false), f.toString)
+        assert(dictionary("scrubbed_text") == Seq(false), f.toString)
+        assert(dictionary("role") == Seq(true), f.toString)
+      }
     } finally {
       Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
     }
