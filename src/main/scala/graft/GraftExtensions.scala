@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{FingerprintExpr, SymbolRatioExpr, WordCountExpr}
+import graft.functions.TextMetrics
 
 /** SparkSessionExtensions injector — makes the custom Catalyst
   * expressions available to ANY session created with
@@ -12,24 +13,11 @@ import graft.functions.{FingerprintExpr, SymbolRatioExpr, WordCountExpr}
   *
   * (or `.withExtensions(new GraftExtensions)`), including pure-SQL
   * users; the per-session `TextMetrics.register` path remains for
-  * programmatic use.
+  * programmatic use. Both install `TextMetrics.sqlFunctions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_word_count"),
-      new ExpressionInfo(classOf[WordCountExpr].getName, "graft_word_count"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordCountExpr(es.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_symbol_ratio"),
-      new ExpressionInfo(classOf[SymbolRatioExpr].getName, "graft_symbol_ratio"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SymbolRatioExpr(es.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[FingerprintExpr].getName, "graft_fingerprint"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FingerprintExpr(es.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    TextMetrics.sqlFunctions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
 }

@@ -25,7 +25,7 @@ import graft.tableio.TableIO
   * taken in waves of `concurrency` partitions, each wave one Spark write
   * with full cluster parallelism. A wave runs two Spark jobs: the salted
   * shuffle's map stage and the write (its input schema comes from one
-  * parquet footer on the driver, `TableIO.readPartitionsByFooter`). The
+  * parquet footer on the driver, `TableIO.readPartitions`). The
   * kernel runs after the shuffle, so a hot conversation's turns are
   * curated by every write task its salt reaches, not by the one map task
   * that reads its bucket. The manifest metrics are observed on the write
@@ -80,7 +80,7 @@ object Resume {
     // one broadcast of the kernel for every wave of this run
     val core = spark.sparkContext.broadcast(new CurateCore(models.langId, models.lm, cfg))
     try todo.grouped(concurrency).foreach { wave =>
-      commitCurated(TableIO.readPartitionsByFooter(spark, inputBase, wave), core, outputBase,
+      commitCurated(TableIO.readPartitions(spark, inputBase, wave), core, outputBase,
         wave.map(p => p -> s"$inputBase/${TableIO.PART_COL}=$p"), writePartitions)
     } finally core.destroy()
     RunResult(todo, done.toSeq.sorted)

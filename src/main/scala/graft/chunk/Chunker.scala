@@ -1,5 +1,7 @@
 package graft.chunk
 
+import java.util.Locale
+
 import scala.collection.mutable.ArrayBuffer
 
 import graft.util.PyStr.{pyLen, pySplit, pyStrip}
@@ -149,7 +151,7 @@ object Chunker extends Serializable {
   /** Word tokenize + lowercase (C5, cfg_generator.py:346). */
   def words(text: String): Array[String] = {
     if (text == null) return Array.empty
-    val m = java.util.regex.Pattern.compile("\\b\\w+\\b").matcher(text.toLowerCase)
+    val m = java.util.regex.Pattern.compile("\\b\\w+\\b").matcher(text.toLowerCase(Locale.ROOT))
     val out = new ArrayBuffer[String]()
     while (m.find()) out += m.group()
     out.toArray

@@ -1,5 +1,7 @@
 package graft.dedup
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 
@@ -36,7 +38,7 @@ object Dedup extends Serializable {
   /** Unicode word tokens, lowercased. */
   def tokens(text: String): Array[String] = {
     if (text == null) return Array.empty
-    text.toLowerCase.split("[^\\p{L}\\p{N}_]+").filter(_.nonEmpty)
+    text.toLowerCase(Locale.ROOT).split("[^\\p{L}\\p{N}_]+").filter(_.nonEmpty)
   }
 
   /** 64-bit word hash (FNV-1a over chars, then mixed). String.hashCode

@@ -123,16 +123,20 @@ object TextMetrics {
   def fingerprint(c: Column): Column = GraftBridge.column(FingerprintExpr(GraftBridge.expression(c)))
   def distinct_ratio(c: Column): Column = GraftBridge.column(DistinctRatioExpr(GraftBridge.expression(c)))
 
+  /** Every SQL function, (name, expression class, builder): the one
+    * list that [[register]] and [[graft.GraftExtensions]] both install.
+    */
+  val sqlFunctions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_word_count", classOf[WordCountExpr], es => WordCountExpr(es.head)),
+    ("graft_symbol_ratio", classOf[SymbolRatioExpr], es => SymbolRatioExpr(es.head)),
+    ("graft_fingerprint", classOf[FingerprintExpr], es => FingerprintExpr(es.head)),
+    ("graft_distinct_ratio", classOf[DistinctRatioExpr], es => DistinctRatioExpr(es.head)))
+
   /** Register as SQL functions on a session (spark.sql("... graft_word_count(text) ...")). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_word_count",
-      es => WordCountExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_symbol_ratio",
-      es => SymbolRatioExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_fingerprint",
-      es => FingerprintExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_distinct_ratio",
-      es => DistinctRatioExpr(es.head), "scala_udf")
+    sqlFunctions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft.grammar
 
+import java.util.Locale
+
 /** CYK sentence-validity parser — rebuild of the reference's
   * `AdvancedCFGSystem.parse_sentence_cyk` (cfg_generator.py:423-500)
   * over its base lexicon (cfg_generator.py:138-193) and base CNF
@@ -141,7 +143,7 @@ object Cyk extends Serializable {
 
   /** Python `word.lower().strip('.,!?";')` (cfg_generator.py:436). */
   def cleanWord(w: String): String = {
-    val lower = w.toLowerCase
+    val lower = w.toLowerCase(Locale.ROOT)
     val strip = ".,!?\";"
     var s = 0
     var e = lower.length

@@ -36,7 +36,8 @@ import graft.tableio.TableIO
   * partitionBy job (job count independent of cell count), and
   * `deleteIdsDf` anti-joins ids only in cells whose manifest id range
   * and id bloom can contain them (the range covers the common
-  * monotonic-id case, the bloom non-contiguous id sets).
+  * monotonic-id case, the bloom non-contiguous id sets), rewriting them
+  * in one staged write too.
   */
 final class IvfIndex private[knn] (
     spark: SparkSession,
@@ -90,7 +91,10 @@ final class IvfIndex private[knn] (
     * IDS come back to the driver (≤ nCells ints, never ids). A
     * scattered delete set whose hull covers the whole index thus still
     * rewrites only the cells that can contain a target. A manifest
-    * without range or bloom cannot prune: its cell is rewritten.
+    * without range or bloom cannot prune: its cell is rewritten. The
+    * cells to rewrite are read as one frame, anti-joined on the ids and
+    * committed off ONE staged write ([[TableIO.commitPartitions]]; a
+    * cell left empty is dropped), whatever their number.
     */
   def deleteIdsDf(ids: DataFrame): Unit = {
     val idsOnly = ids.toDF(idCol).cache()
@@ -131,11 +135,11 @@ final class IvfIndex private[knn] (
             .distinct()
             .collect().map(_.getInt(0)).toSet
         }
-      (noBloom ++ bloomHits).toSeq.sorted.foreach { cell =>
-        val kept = TableIO.readPartition(spark, base, cell)
-          .join(idsOnly, Seq(idCol), "left_anti")
-        TableIO.commitOrDrop(kept, base, cell, cellStats: _*)(cellManifest)
-      }
+      val cells = (noBloom ++ bloomHits).toSeq.sorted
+      if (cells.nonEmpty)
+        TableIO.commitPartitions(
+          TableIO.readPartitions(spark, base, cells).join(idsOnly, Seq(idCol), "left_anti"),
+          base, cells, cellStats: _*)(cellManifest)
     } finally idsOnly.unpersist()
   }
 
@@ -239,7 +243,8 @@ object IvfIndex {
     TableIO.deleteRecursive(Paths.get(base))
     val centroids = Similarity.kmeansCentroids(df, idCol, embCol, nCells)
     val idx = new IvfIndex(spark, base, idCol, embCol, nAssign, centroids)
-    TableIO.commitPartitions(idx.withCells(df), base, idx.cellStats: _*)(idx.cellManifest)
+    TableIO.commitPartitions(idx.withCells(df), base, 0 until idx.nCells, idx.cellStats: _*)(
+      idx.cellManifest)
     writeMeta(base, idCol, embCol, nAssign, centroids)
     idx
   }

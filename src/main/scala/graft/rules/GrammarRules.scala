@@ -316,7 +316,7 @@ object GrammarRules extends Serializable {
         while (i >= 0 && isWordChar(text.charAt(i))) i -= 1
         val prevStart = i + 1
         val prevWord = text.substring(prevStart, prevEnd)
-        val lower = prevWord.toLowerCase
+        val lower = prevWord.toLowerCase(Locale.ROOT)
         val tags = Cyk.lexicon.getOrElse(lower, Set(Cyk.guessPosFallback(lower)))
         if (tags.contains("N") && !tags.contains("AUX") && !tags.contains("PRP") &&
             !tags.contains("DET")) {

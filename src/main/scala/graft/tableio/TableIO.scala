@@ -34,10 +34,16 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * partition has the same rows, in the same files and order, and the
   * same manifest, but not the same bytes, because parquet-mr writes each
   * column chunk's `encodings` list in hash-set order.
-  * [[commitPartitions]] and [[commitStaged]] run the protocol for many
-  * partitions off one staged write, through one commit loop;
-  * [[commitOrDrop]] runs it for one partition that a rewrite may have
-  * emptied.
+  *
+  * Every commit stages all of its partitions in ONE write. Table
+  * mutations (adds, deletes, index builds) go through
+  * [[commitPartitions]]: one aggregate over the staged rows read back
+  * gives each partition's manifest, and a partition the write left
+  * empty is dropped, its manifest first (a crash then leaves an
+  * unlisted directory, which reads ignore and the next commit of that
+  * partition replaces). Curated turns go through [[commitStaged]], whose
+  * manifests come from the caller. Every read is [[readPartitions]],
+  * with the schema of one parquet footer and no inference job.
   */
 object TableIO {
 
@@ -56,40 +62,37 @@ object TableIO {
       }
       .toSet
 
-  /** Write one partition's rows atomically; returns the committed dir.
-    * `df` must already be in the desired row order (caller applies
-    * Curate.saltedForWrite).
+  /** Replace partitions `parts` with the rows of `df` (rows carrying
+    * `part_id`, each of a partition in `parts`) off ONE staged write:
+    * the staged rows are read back with `df`'s schema (no inference
+    * job) and one aggregate gives each partition's stats row — its row
+    * count, then `stats` — and the commit loop [[moveIntoPlace]] moves
+    * each partition into place and writes its manifest,
+    * `manifest(partId, stats row)`, last. A partition of `parts` that
+    * `df` holds no row of is dropped: its manifest first, then its
+    * directory. The staged rows are read back with `basePath` set to
+    * the staging directory: Spark ignores a path whose name starts with
+    * `_` (and says so in a warning) when it is the one path given.
     */
-  def commitPartition(df: DataFrame, base: String, partId: Int): Path = {
-    val staging = Paths.get(base, "_staging", s"$PART_COL=$partId")
-    val target = partitionDir(base, partId)
-    deleteRecursive(staging)
-    df.write.mode("overwrite").parquet(staging.toString)
-    deleteRecursive(target)
-    Files.createDirectories(target.getParent)
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    target
-  }
-
-  /** Commit every partition of `df` (rows carrying `part_id`) off ONE
-    * staged write: one aggregate over the staged rows gives each
-    * partition's stats row — its row count, then `stats` — and the
-    * commit loop [[commitStaged]] also runs moves each partition into
-    * place and writes its manifest, `manifest(partId, stats row)`, last. The staged rows
-    * are read back from the `part_id=K` directories with `basePath` set
-    * to the staging directory: Spark ignores a path whose name starts
-    * with `_` (and says so in a warning) when it is the one path given.
-    */
-  def commitPartitions(df: DataFrame, base: String, stats: Column*)(
+  def commitPartitions(df: DataFrame, base: String, parts: Seq[Int], stats: Column*)(
       manifest: (Int, Row) => String): Unit = {
     val staging = stage(df, base, Map.empty)
-    val staged = entryNames(staging).filter(_.startsWith(s"$PART_COL="))
-      .map(staging.resolve(_).toString).sorted
-    val manifests = df.sparkSession.read.option("basePath", staging.toString).parquet(staged: _*)
-      .groupBy(PART_COL).agg(F.struct(F.count(F.lit(1)) +: stats: _*))
-      .collect().sortBy(_.getInt(0))
-      .map(r => r.getInt(0) -> manifest(r.getInt(0), r.getStruct(1)))
-    moveIntoPlace(base, staging, manifests.toSeq)
+    val staged = entryNames(staging).collect {
+      case s if s.startsWith(s"$PART_COL=") => s.stripPrefix(s"$PART_COL=").toInt
+    }.sorted
+    require(staged.forall(parts.contains), s"staged partitions $staged outside $parts")
+    val manifests =
+      if (staged.isEmpty) Seq.empty
+      else df.sparkSession.read.schema(df.schema).option("basePath", staging.toString)
+        .parquet(staged.map(p => partitionDir(staging.toString, p).toString): _*)
+        .groupBy(PART_COL).agg(F.struct(F.count(F.lit(1)) +: stats: _*))
+        .collect().sortBy(_.getInt(0)).toSeq
+        .map(r => r.getInt(0) -> manifest(r.getInt(0), r.getStruct(1)))
+    parts.filterNot(staged.contains).foreach { p =>
+      Files.deleteIfExists(manifestPath(base, p))
+      deleteRecursive(partitionDir(base, p))
+    }
+    moveIntoPlace(base, staging, manifests)
   }
 
   /** Commit partitions `parts` of `df` (rows carrying `part_id`) off ONE
@@ -158,28 +161,7 @@ object TableIO {
         val old = readPartitions(batch.sparkSession, base, existing)
         old.unionByName(batch.join(old.select(PART_COL, key), Seq(PART_COL, key), "left_anti"))
       }
-    commitPartitions(merged, base, stats: _*)(manifest)
-  }
-
-  /** Commit one partition's rows and then its manifest,
-    * `manifest(partId, stats row)` with the row count first; a `df`
-    * with no rows instead drops the partition's directory and manifest
-    * (an empty parquet directory would break schema inference on later
-    * reads).
-    */
-  def commitOrDrop(df: DataFrame, base: String, partId: Int, stats: Column*)(
-      manifest: (Int, Row) => String): Unit = {
-    val rows = df.cache()
-    try {
-      val st = rows.agg(F.count(F.lit(1)), stats: _*).head()
-      if (st.getLong(0) == 0) {
-        deleteRecursive(partitionDir(base, partId))
-        Files.deleteIfExists(manifestPath(base, partId))
-      } else {
-        commitPartition(rows, base, partId)
-        writeManifest(base, partId, manifest(partId, st))
-      }
-    } finally rows.unpersist()
+    commitPartitions(merged, base, parts.toSeq, stats: _*)(manifest)
   }
 
   /** Append the manifest entry LAST — this is the commit point. */
@@ -201,7 +183,8 @@ object TableIO {
 
   /** Read the committed table (all partitions or a pruned subset —
     * `basePath` keeps the partition column in the schema, and a
-    * partition filter prunes directories, never touching other files).
+    * partition filter prunes directories, never touching other files),
+    * by [[readPartitions]], so no Spark job runs.
     */
   def read(spark: SparkSession, base: String): DataFrame = {
     val parts = donePartitions(base).toSeq.sorted
@@ -209,18 +192,6 @@ object TableIO {
       s"no committed partitions under $base (manifest empty — run the job first)")
     readPartitions(spark, base, parts)
   }
-
-  /** The rows of partitions `parts` (non-empty), `part_id` kept. */
-  def readPartitions(spark: SparkSession, base: String, parts: Seq[Int]): DataFrame =
-    spark.read.option("basePath", base)
-      .parquet(parts.map(p => partitionDir(base, p).toString): _*)
-
-  /** One partition's rows, read as [[readPartitionsByFooter]] reads
-    * them, without the `part_id` column: the schema `spark.read.parquet(dir)`
-    * infers, without the Spark job that inference runs.
-    */
-  def readPartition(spark: SparkSession, base: String, partId: Int): DataFrame =
-    readPartitionsByFooter(spark, base, Seq(partId)).drop(PART_COL)
 
   /** The rows of partitions `parts` (non-empty, each holding a parquet
     * file), `part_id` kept, read with the schema of the first parquet
@@ -233,7 +204,7 @@ object TableIO {
     * partitions share one schema, without the Spark job that inference
     * runs.
     */
-  def readPartitionsByFooter(spark: SparkSession, base: String, parts: Seq[Int]): DataFrame = {
+  def readPartitions(spark: SparkSession, base: String, parts: Seq[Int]): DataFrame = {
     val firsts = parts.map { p =>
       val dir = partitionDir(base, p)
       parquetFiles(dir).headOption.getOrElse(

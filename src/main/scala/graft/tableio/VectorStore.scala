@@ -12,12 +12,12 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => 
   *
   * Storage is the TableIO seam: rows hash-bucketed on `id` into
   * Hive-style partitions, every mutation a COPY-ON-WRITE rewrite of
-  * ONLY the affected partitions with TableIO's atomic
-  * staging→move→manifest commit protocol (the Iceberg
-  * overwrite-by-partition analog). A delete whose filter matches
-  * nothing rewrites nothing; a delete touching 3 of 10^5 partitions
-  * rewrites 3 directories — that is the semantics that survives a
-  * 10^12-row store.
+  * ONLY the affected partitions, all of them off one staged write
+  * ([[TableIO.commitPartitions]], atomic staging→move→manifest per
+  * partition — the Iceberg overwrite-by-partition analog). A delete
+  * whose filter matches nothing rewrites nothing; a delete touching 3
+  * of 10^5 partitions rewrites 3 directories in one write — that is the
+  * semantics that survives a 10^12-row store.
   *
   * Rows may have any schema with a string `id` column (the reference
   * stores chunk text + embedding + metadata; the store doesn't care).
@@ -96,30 +96,31 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
 
   /** Delete rows matching `cond`; returns the deleted count. Only
     * partitions that actually contain a match are rewritten
-    * (data_manager.py:321-345 delete-by-where).
+    * (data_manager.py:321-345 delete-by-where), all of them off one
+    * staged write ([[TableIO.commitPartitions]]), so the job count does
+    * not grow with the number of partitions touched; a partition left
+    * empty is dropped. A write that fails commits none of them.
     */
   def deleteWhere(cond: Column): Long = {
     if (isEmpty) return 0L
     val full = TableIO.read(spark, base)
-    val affected = full.filter(cond).groupBy(TableIO.PART_COL)
+    // SQL three-valued logic: NOT(NULL) is NULL, so a bare !cond would
+    // silently drop rows where cond evaluates to NULL (e.g. a failed
+    // cast) without counting them — only TRUE deletes
+    val hit = F.coalesce(cond, F.lit(false))
+    val affected = full.filter(hit).groupBy(TableIO.PART_COL)
       .agg(F.count(F.lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq
+    if (affected.isEmpty) return 0L
+    val parts = affected.map(_._1)
     // attached-IVF update FIRST, against the pre-delete snapshot (the
     // condition may reference metadata columns the index doesn't hold,
     // so the ids are resolved here and anti-joined per cell — fully
     // distributed). Crash between index and store rewrite converges:
     // the redo resolves the same ids, the index anti-join is a no-op.
-    if (affected.nonEmpty)
-      ivf.foreach(_.deleteIdsDf(
-        full.filter(F.coalesce(cond, F.lit(false))).select("id")))
-    affected.foreach { case (p, _) =>
-      // SQL three-valued logic: NOT(NULL) is NULL, so a bare !cond
-      // would silently drop rows where cond evaluates to NULL (e.g. a
-      // failed cast) without counting them — only TRUE deletes
-      val keep = TableIO.readPartition(spark, base, p)
-        .filter(!F.coalesce(cond, F.lit(false)))
-      TableIO.commitOrDrop(keep, base, p)(manifest)
-    }
+    ivf.foreach(_.deleteIdsDf(full.filter(hit).select("id")))
+    TableIO.commitPartitions(TableIO.readPartitions(spark, base, parts).filter(!hit),
+      base, parts)(manifest)
     affected.map(_._2).sum
   }
 

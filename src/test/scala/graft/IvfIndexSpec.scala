@@ -167,7 +167,7 @@ class IvfIndexSpec extends SparkTestBase with FixtureDirs {
     val idx = IvfIndex.build(spark, data, "id", "emb", base, nCells = 4)
     // pick victim ids from ONE cell; every other cell's range excludes them
     val cells = TableIO.donePartitions(base).toSeq.sorted
-    def cellIds(c: Int) = TableIO.readPartition(spark, base, c)
+    def cellIds(c: Int) = TableIO.readPartitions(spark, base, Seq(c))
       .select("id").collect().map(_.getLong(0)).toSet
     val byCell = cells.map(c => c -> cellIds(c)).toMap
     // ids contiguous within exactly one cell's [min,max] whose hull lies
@@ -206,7 +206,7 @@ class IvfIndexSpec extends SparkTestBase with FixtureDirs {
     val data = corpus(160)
     val idx = IvfIndex.build(spark, data, "id", "emb", base, nCells = 4)
     val cells = TableIO.donePartitions(base).toSeq.sorted
-    def cellIds(c: Int) = TableIO.readPartition(spark, base, c)
+    def cellIds(c: Int) = TableIO.readPartitions(spark, base, Seq(c))
       .select("id").collect().map(_.getLong(0)).toSet
     val byCell = cells.map(c => c -> cellIds(c)).toMap
     val victimCell = byCell.maxBy { case (_, ids) => ids.size }._1
@@ -252,7 +252,7 @@ class IvfIndexSpec extends SparkTestBase with FixtureDirs {
     val cells = TableIO.donePartitions(base).toSeq.sorted
     assert(cells.size >= 4) // the 4-anchor corpus may leave some of the 8 cells empty
     // one victim from one cell, range-covered by every other cell
-    val byCell = cells.map(c => c -> TableIO.readPartition(spark, base, c)
+    val byCell = cells.map(c => c -> TableIO.readPartitions(spark, base, Seq(c))
       .select("id").collect().map(_.getLong(0)).toSet).toMap
     val victimCell = byCell.maxBy(_._2.size)._1
     val victim = byCell(victimCell).find(v =>
@@ -275,9 +275,9 @@ class IvfIndexSpec extends SparkTestBase with FixtureDirs {
         if (now == last) stable += 1 else { stable = 0; last = now }
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-    // cache fill + hull agg + ONE bloom-hit pass + the single hit
-    // cell's rewrite (read/listing + stats agg + staged write +
-    // manifest) ≈ 11 — CONSTANT in cell count; the pre-bloom shape
+    // cache fill + hull agg + ONE bloom-hit pass + the hit cells' one
+    // staged rewrite (staged write + stats agg of the read-back) = 9 —
+    // CONSTANT in cell count; the pre-bloom shape
     // rewrote EVERY range-overlapping cell at ~4 jobs each (≥ 24 at
     // the ≥ 6 cells this fixture builds)
     assert(jobs.get() <= 12, s"deleteIdsDf ran ${jobs.get()} jobs for a 1-cell delete")
@@ -338,7 +338,7 @@ class IvfIndexSpec extends SparkTestBase with FixtureDirs {
     assert(cells.size >= 2)
     // manifests with the row count only: nothing can prune these cells
     cells.foreach { c =>
-      val rows = TableIO.readPartition(spark, base, c).count()
+      val rows = TableIO.readPartitions(spark, base, Seq(c)).count()
       TableIO.writeManifest(base, c, s"""{"part_id":$c,"rows":$rows}""")
     }
     def files(c: Int) = java.nio.file.Files.list(TableIO.partitionDir(base, c))
@@ -352,5 +352,40 @@ class IvfIndexSpec extends SparkTestBase with FixtureDirs {
     }
     val survivors = TableIO.read(spark, base).select("id").collect().map(_.getLong(0)).toSet
     assert(survivors == (0L until 80L).toSet - 5L)
+  }
+
+  test("a deleteIdsDf rewriting every cell runs one staged write and drops the cell it empties") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val base = fresh("delwrites")
+    val idx = IvfIndex.build(spark, corpus(80), "id", "emb", base, nCells = 4)
+    val cells = TableIO.donePartitions(base).toSeq.sorted
+    assert(cells.size >= 3)
+    val byCell = cells.map(c => c -> TableIO.readPartitions(spark, base, Seq(c))
+      .select("id").collect().map(_.getLong(0)).toSet).toMap
+    // every id of the first cell, one id of each other cell
+    val victims = byCell(cells.head) ++ cells.tail.map(byCell(_).min)
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand"))
+          writes.incrementAndGet()
+        else if (funcName == "count") marker.countDown()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      idx.deleteIdsDf(victims.toSeq.toDF("id"))
+      // the listener bus delivers in order: once this count is seen,
+      // every execution of the delete has been
+      spark.range(1).count()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.get() == 1, s"${writes.get()} writes")
+    assert(TableIO.donePartitions(base) == cells.tail.toSet)
+    assert(!java.nio.file.Files.exists(TableIO.partitionDir(base, cells.head)))
+    val survivors = TableIO.read(spark, base).select("id").collect().map(_.getLong(0)).toSet
+    assert(survivors == (0L until 80L).toSet -- victims)
   }
 }

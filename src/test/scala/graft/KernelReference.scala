@@ -1,5 +1,6 @@
 package graft
 
+import java.util.Locale
 import java.util.regex.Pattern
 
 import scala.collection.mutable.ArrayBuffer
@@ -154,7 +155,7 @@ object KernelReference {
         val prevEnd = i + 1
         while (i >= 0 && isWordChar(text.charAt(i))) i -= 1
         val prevWord = text.substring(i + 1, prevEnd)
-        val lower = prevWord.toLowerCase
+        val lower = prevWord.toLowerCase(Locale.ROOT)
         val tags = Cyk.lexicon.getOrElse(lower, Set(Cyk.guessPosFallback(lower)))
         if (tags.contains("N") && !tags.contains("AUX") && !tags.contains("PRP") &&
             !tags.contains("DET"))

@@ -45,4 +45,20 @@ class TableIOJsonSpec extends SparkTestBase {
     assert(s2.sql("SELECT graft_fingerprint(t) AS fp FROM x").head().getLong(0) ==
       graft.textstats.TextStats.fingerprint("a b c"))
   }
+
+  test("GraftExtensions alone makes all four SQL functions resolve in a new session") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.TextMetrics
+    assert(!spark.newSession().catalog.functionExists("graft_word_count"),
+      "a new session starts without the graft functions")
+    val s2 = org.apache.spark.sql.ExtensionsBridge.sessionWith(spark, new GraftExtensions)
+    import s2.implicits._
+    val x = Seq("a b a !?", "I i é").toDF("t")
+    x.createOrReplaceTempView("x")
+    val sql = s2.sql("SELECT t, graft_word_count(t), graft_symbol_ratio(t), " +
+      "graft_fingerprint(t), graft_distinct_ratio(t) FROM x ORDER BY t")
+    val api = x.select(col("t"), TextMetrics.word_count(col("t")), TextMetrics.symbol_ratio(col("t")),
+      TextMetrics.fingerprint(col("t")), TextMetrics.distinct_ratio(col("t"))).orderBy(col("t"))
+    assert(sql.collect().map(_.toSeq).toSeq == api.collect().map(_.toSeq).toSeq)
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.functions._
 
 import graft.tableio.{TableIO, VectorStore}
@@ -95,8 +97,14 @@ class VectorStoreSpec extends SparkTestBase with FixtureDirs {
     val full = TableIO.read(spark, base)
     val victim = full.filter(col("id") === "doc-5")
       .select(TableIO.PART_COL).head().getInt(0)
-    val keep = TableIO.readPartition(spark, base, victim).filter(col("id") =!= "doc-5")
-    TableIO.commitPartition(keep, base, victim) // moved into place...
+    val keep = TableIO.readPartitions(spark, base, Seq(victim)).drop(TableIO.PART_COL)
+      .filter(col("id") =!= "doc-5")
+    val staged = Paths.get(base, "_staging", "crash")
+    keep.write.parquet(staged.toString)
+    TableIO.deleteRecursive(TableIO.partitionDir(base, victim))
+    // moved into place...
+    Files.move(staged, TableIO.partitionDir(base, victim), StandardCopyOption.ATOMIC_MOVE)
+    TableIO.deleteRecursive(staged.getParent)
     // ...crash here: manifest not rewritten. Partition is still listed
     // (old manifest), directory has the post-delete data → no dup, no
     // phantom row
@@ -107,12 +115,40 @@ class VectorStoreSpec extends SparkTestBase with FixtureDirs {
     assert(vs.count() == 15)
   }
 
+  test("a partition dropped down to its directory (manifest gone first) reads as dropped; delete re-run and a later add converge") {
+    val (vs, base) = freshStore("orphan")
+    vs.add(rows(0 until 16, "web"))
+    val byBucket = TableIO.read(spark, base).select(col("id"), col(TableIO.PART_COL))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toSeq
+    val bucket = byBucket.head._2
+    val gone = byBucket.collect { case (id, b) if b == bucket => id }.toSet
+    // the crash inside a delete that empties `bucket`: the drop removed
+    // the manifest, and the directory still holds the deleted rows
+    Files.delete(TableIO.manifestPath(base, bucket))
+    assert(Files.isDirectory(TableIO.partitionDir(base, bucket)))
+    def ids = vs.read().select("id").collect().map(_.getString(0)).toSet
+    val expected = (0 until 16).map(i => s"doc-$i").toSet -- gone
+    assert(ids == expected)
+    // re-running the delete finds nothing left to delete
+    assert(vs.deleteByIds(gone.toSeq) == 0L)
+    assert(ids == expected)
+    // an add into that bucket replaces the orphan directory
+    val into = rows(16 until 200, "pdf")
+      .filter(pmod(xxhash64(col("id")), lit(4)).cast("int") === bucket)
+      .select("id").collect().map(_.getString(0)).take(3).toSet
+    assert(into.nonEmpty)
+    vs.add(rows(16 until 200, "pdf").filter(col("id").isin(into.toSeq: _*)))
+    assert(ids == expected ++ into)
+    assert(TableIO.readPartitions(spark, base, Seq(bucket)).select("id")
+      .collect().map(_.getString(0)).toSet == into)
+  }
+
   test("add resume is idempotent: re-applying a batch that already landed merges zero new rows (ADVICE r2)") {
     val (vs, _) = freshStore("addresume")
     vs.add(rows(0 until 10, "web"))
     vs.add(rows(10 until 14, "pdf"))
-    // the crash window: commitPartition moved the merged data into
-    // place but writeManifest never ran → the job reruns the SAME add.
+    // the crash window: the commit moved the merged data into place
+    // but writeManifest never ran → the job reruns the SAME add.
     // With the id anti-join the redo unions zero new rows instead of
     // duplicating the batch.
     vs.add(rows(10 until 14, "pdf"))
@@ -153,8 +189,8 @@ class VectorStoreSpec extends SparkTestBase with FixtureDirs {
   /** Spark jobs `body` starts, counted in a job group of its own. */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val group = s"vstore-add-${System.nanoTime()}"
-    sc.setJobGroup(group, "VectorStore.add")
+    val group = s"vstore-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "VectorStore mutation")
     try body finally sc.clearJobGroup()
     sc.statusTracker.getJobIdsForGroup(group).length
   }
@@ -177,5 +213,26 @@ class VectorStoreSpec extends SparkTestBase with FixtureDirs {
     val jobs16 = jobsOf(vs.add(batch(intoAll)))
     assert(jobs16 <= jobs2, s"16-bucket add ran $jobs16 jobs, 2-bucket add $jobs2")
     assert(vs.count() == 200 + intoTwo.size + intoAll.size)
+  }
+
+  test("a delete touching all 16 buckets runs no more Spark jobs than one touching 2") {
+    val (vs, base) = freshStore("deletejobs", nBuckets = 16)
+    vs.add(rows(0 until 200, "web"))
+    assert(TableIO.donePartitions(base).size == 16)
+    val bucketed = TableIO.read(spark, base).select(col("id"), col(TableIO.PART_COL))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toSeq
+    val byBucket = bucketed.groupBy(_._2).map { case (b, rs) => b -> rs.map(_._1).sorted }
+    val two = byBucket.keys.toSeq.sorted.take(2).toSet
+    val fromTwo = two.flatMap(byBucket(_).take(2))
+    val fromAll = byBucket.values.map(_.last).toSet
+    def buckets(ids: Set[String]) = bucketed.filter(r => ids(r._1)).map(_._2).toSet
+    assert(buckets(fromTwo) == two && buckets(fromAll).size == 16)
+    var deleted2, deleted16 = 0L
+    val jobs2 = jobsOf { deleted2 = vs.deleteByIds(fromTwo.toSeq) }
+    val jobs16 = jobsOf { deleted16 = vs.deleteByIds(fromAll.toSeq) }
+    assert(jobs16 <= jobs2, s"16-bucket delete ran $jobs16 jobs, 2-bucket delete $jobs2")
+    assert(deleted2 == fromTwo.size && deleted16 == 16)
+    assert(vs.read().select("id").collect().map(_.getString(0)).toSet ==
+      bucketed.map(_._1).toSet -- fromTwo -- fromAll)
   }
 }
