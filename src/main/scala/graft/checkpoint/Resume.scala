@@ -109,7 +109,7 @@ object Resume {
     lazy val counts = obs.get("part_metrics").asInstanceOf[scala.collection.Map[Int, Seq[Long]]]
     TableIO.commitStaged(curated, outputBase, inputs.map(_._1), writeOptions) { (p, staged) =>
       val m = Manifest.observed(p, lineage(p),
-        counts.get(p).fold(Map.empty[String, Long])(c => Curate.metricNames.zip(c).toMap))
+        counts.getOrElse(p, Seq.fill(Curate.metricWidth)(0L)))
       m.checked(footerRowCount(staged, conf)).toJson
     }
   }
@@ -188,17 +188,14 @@ object Resume {
         j.get("turns_dropped").asLong, counts("dropped_by_rule"), counts("scrub_hit_counts"))
     }
 
-    /** From one partition's observed counts, keyed by
-      * `Curate.metricNames`; a partition with no rows has none and
-      * counts 0.
+    /** From one partition's observed `Curate.partMetrics` counts, by
+      * position (`Curate.metricSlots`).
       */
-    def observed(partId: Int, input: String, v: Map[String, Long]): Manifest = {
-      def n(k: String): Long = v.getOrElse(k, 0L)
-      def counts(keys: Seq[String], col: String => String) =
-        keys.map(k => k -> n(col(k))).filter(_._2 > 0).toMap
-      Manifest(partId, input, n("turns_seen"), n("turns_kept"), n("turns_dropped"),
-        counts(Curate.metricRules, Curate.ruleCount),
-        counts(Curate.metricScrubs, Curate.scrubCount))
+    def observed(partId: Int, input: String, counts: Seq[Long]): Manifest = {
+      val (Seq(seen, kept, dropped), rules, scrubs) = Curate.metricSlots(counts)
+      def nonZero(keys: Seq[String], n: Seq[Long]) = keys.zip(n).filter(_._2 > 0).toMap
+      Manifest(partId, input, seen, kept, dropped,
+        nonZero(Curate.metricRules, rules), nonZero(Curate.metricScrubs, scrubs))
     }
   }
 

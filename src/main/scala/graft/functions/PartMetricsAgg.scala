@@ -14,10 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Per-partition curate counts as ONE aggregate keyed by `partId`: for
   * each partition id in the input, the turn count, the kept and dropped
   * counts, one count per drop reason of `rules` and one hit sum per
-  * scrub pattern of `scrubs`, in that order. Each count is the one the
-  * matching `Curate.metricAggs` column gives over that partition's rows
-  * alone: a null `keep` counts as dropped, a drop reason outside `rules`
-  * and a scrub key outside `scrubs` count nowhere.
+  * scrub pattern of `scrubs`, in that order. A null `keep` counts as
+  * dropped; a drop reason outside `rules` and a scrub key outside
+  * `scrubs` count nowhere. It is the one counter of curated turns
+  * (`Curate.partMetrics`): the manifests and `Curate.metrics` both read
+  * its counts by position.
   *
   * The children are evaluated interpreted and the buffer is a plain map
   * of count arrays, so an observation of it (`Dataset.observe`) adds no

@@ -322,10 +322,6 @@ object IvfIndex {
     val sb = new StringBuilder
     sb ++= s"idCol=$idCol\nembCol=$embCol\nnAssign=$nAssign\n"
     centroids.foreach { c => sb ++= c.map(_.toString).mkString(",") ++= "\n" }
-    val p = metaPath(base)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, sb.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    TableIO.writeAtomic(metaPath(base), sb.toString)
   }
 }

@@ -1,12 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession, functions => F}
 
 import graft.functions.PartMetricsAgg
 import graft.langid.{LangId, LangIdModel}
 import graft.lm.NGramLM
-import graft.model.Turn
 import graft.rules.QualityRules
 import graft.scrub.Scrubber
 import graft.synth.Transcripts
@@ -86,47 +85,18 @@ object Curate {
         F.col("__c.scrub_hits").as("scrub_hits")) ++ partCol: _*)
   }
 
-  def curate(
-      spark: SparkSession,
-      turns: Dataset[Turn],
-      cfg: QualityRules.Config = QualityRules.defaultConfig,
-      models: Models = defaultModels
-  ): Dataset[graft.model.CuratedTurn] = {
-    import spark.implicits._
-    curateDf(spark, turns.toDF(), cfg, models).as[graft.model.CuratedTurn]
-  }
-
   /** Drop-reason and scrub-pattern vocabularies the metrics count, in
     * manifest key order.
     */
   val metricRules: Seq[String] = QualityRules.ruleOrder.sorted
   val metricScrubs: Seq[String] = Scrubber.patternSpecs.map(_._1).sorted
-  def ruleCount(rule: String): String = s"dropped_$rule"
-  def scrubCount(pattern: String): String = s"scrub_$pattern"
 
-  /** The per-run metrics as ONE aggregate list: turn count, kept and
-    * dropped sums, one count per drop reason and one hit sum per scrub
-    * pattern, named [[metricNames]]. [[metrics]] aggregates it;
-    * [[partMetrics]] gives the same counts per `part_id`.
-    */
-  val metricAggs: Seq[Column] = Seq(
-    F.count(F.lit(1)).as("turns_seen"),
-    F.sum(F.when(F.col("keep"), 1L).otherwise(0L)).as("turns_kept"),
-    F.sum(F.when(F.col("keep"), 0L).otherwise(1L)).as("turns_dropped")) ++
-    metricRules.map(r =>
-      F.count(F.when(F.col("drop_reason") === r, 1)).as(ruleCount(r))) ++
-    metricScrubs.map(k =>
-      F.coalesce(F.sum(F.col("scrub_hits").getItem(k).cast("long")), F.lit(0L))
-        .as(scrubCount(k)))
-
-  /** The names of [[metricAggs]]'s columns, in order. */
-  val metricNames: Seq[String] = Seq("turns_seen", "turns_kept", "turns_dropped") ++
-    metricRules.map(ruleCount) ++ metricScrubs.map(scrubCount)
-
-  /** [[metricAggs]]'s counts for every `part_id` of a curated frame as
-    * ONE aggregate, named `part_metrics`: a map from each partition id
-    * present to its counts in [[metricNames]] order ([[PartMetricsAgg]]).
-    * `Resume.commitCurated` observes it on a wave's write job.
+  /** The counts of every `part_id` of a curated frame as ONE aggregate,
+    * named `part_metrics` ([[PartMetricsAgg]]): a map from each partition
+    * id present to its [[metricWidth]] counts, laid out as
+    * [[metricSlots]] splits them. It is the one counter of curated turns:
+    * `Resume.commitCurated` observes it on a wave's write job for the
+    * manifests, and [[metrics]] aggregates it.
     */
   val partMetrics: Column = GraftBridge.column(PartMetricsAgg(
       GraftBridge.expression(F.col(TableIO.PART_COL)), GraftBridge.expression(F.col("keep")),
@@ -134,25 +104,38 @@ object Curate {
       metricRules, metricScrubs).toAggregateExpression())
     .as("part_metrics")
 
+  /** One partition's [[partMetrics]] counts, split by slot: the totals
+    * (turns seen, kept, dropped), then one drop count per [[metricRules]]
+    * entry, then one hit sum per [[metricScrubs]] entry.
+    */
+  private[graft] val metricWidth: Int = 3 + metricRules.length + metricScrubs.length
+  private[graft] def metricSlots[A](counts: Seq[A]): (Seq[A], Seq[A], Seq[A]) =
+    (counts.take(3), counts.slice(3, 3 + metricRules.length), counts.drop(3 + metricRules.length))
+
   /** Per-run metrics — rebuild of the reference's summary aggregates
-    * (smart_corrector.py:229-260, SURVEY.md §2.9 A2): one aggregate of
-    * [[metricAggs]], its counts folded into sorted-key maps without
-    * zero entries. Fails when the per-rule counts do not sum to
+    * (smart_corrector.py:229-260, SURVEY.md §2.9 A2): [[partMetrics]]
+    * over every row of `curated` as partition `partId` (zeros when it
+    * has none), its counts folded into sorted-key maps without zero
+    * entries. Fails when the per-rule counts do not sum to
     * `turns_dropped`, i.e. on a drop reason outside
     * `QualityRules.ruleOrder`.
     */
   def metrics(curated: DataFrame, partId: Int = 0): DataFrame = {
-    def countMap(keys: Seq[String], col: String => String) =
-      F.map_filter(F.map(keys.flatMap(k => Seq(F.lit(k), F.col(col(k)))): _*), (_, v) => v > 0)
-    val ruleSum = metricRules.map(r => F.col(ruleCount(r))).reduce(_ + _)
-    curated.agg(metricAggs.head, metricAggs.tail: _*)
-      .filter(F.when(ruleSum === F.col("turns_dropped"), F.lit(true))
+    val (Seq(seen, kept, dropped), rules, scrubs) =
+      metricSlots((0 until metricWidth).map(i => F.col("c").getItem(i)))
+    def countMap(keys: Seq[String], counts: Seq[Column]) =
+      F.map_filter(F.map(keys.zip(counts).flatMap { case (k, n) => Seq(F.lit(k), n) }: _*),
+        (_, v) => v > 0)
+    curated.withColumn(TableIO.PART_COL, F.lit(partId)).agg(partMetrics)
+      .select(F.coalesce(F.element_at(F.col("part_metrics"), F.lit(partId)),
+        F.array(Seq.fill(metricWidth)(F.lit(0L)): _*)).as("c"))
+      .filter(F.when(rules.reduce(_ + _) === dropped, F.lit(true))
         .otherwise(F.raise_error(F.lit("Curate.metrics: per-rule drop counts do not " +
           "sum to turns_dropped (a drop_reason outside QualityRules.ruleOrder)"))))
-      .select(F.lit(partId).as("part_id"), F.col("turns_seen"), F.col("turns_kept"),
-        F.col("turns_dropped"),
-        countMap(metricRules, ruleCount).as("dropped_by_rule"),
-        countMap(metricScrubs, scrubCount).as("scrub_hit_counts"))
+      .select(F.lit(partId).as("part_id"), seen.as("turns_seen"), kept.as("turns_kept"),
+        dropped.as("turns_dropped"),
+        countMap(metricRules, rules).as("dropped_by_rule"),
+        countMap(metricScrubs, scrubs).as("scrub_hit_counts"))
   }
 
   /** Two-phase ordered per-conversation reassembly (SURVEY.md §2.7 R3

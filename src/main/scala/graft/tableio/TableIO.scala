@@ -165,11 +165,17 @@ object TableIO {
   }
 
   /** Append the manifest entry LAST — this is the commit point. */
-  def writeManifest(base: String, partId: Int, json: String): Unit = {
-    val p = manifestPath(base, partId)
+  def writeManifest(base: String, partId: Int, json: String): Unit =
+    writeAtomic(manifestPath(base, partId), json)
+
+  /** Write a small UTF-8 file all at once: to a `.tmp` sibling first,
+    * then renamed over `p` in one atomic move, so a reader sees the old
+    * file or the new one, never a part.
+    */
+  private[graft] def writeAtomic(p: Path, text: String): Unit = {
     Files.createDirectories(p.getParent)
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8),
+    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)

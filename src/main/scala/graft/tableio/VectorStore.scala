@@ -3,6 +3,7 @@ package graft.tableio
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
 
 /** Vector-store mutations (SURVEY.md §2.1 S7/S8) — rebuild of the
@@ -144,9 +145,11 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
     val p = Paths.get(path)
     if (p.getParent != null) Files.createDirectories(p.getParent)
     val total = count()
+    // Jackson escapes `"`, `\` and every control char of the name
+    val name = new ObjectMapper().writeValueAsString(collectionName)
     val w = Files.newBufferedWriter(p, StandardCharsets.UTF_8)
     try {
-      w.write(s"""{"collection_name": "$collectionName", "total_documents": $total, "documents": [""")
+      w.write(s"""{"collection_name": $name, "total_documents": $total, "documents": [""")
       w.write("\n")
       if (total > 0) {
         val it = read().toJSON.toLocalIterator()

@@ -140,6 +140,7 @@ class ResumeSpec extends SparkTestBase {
         val m = Resume.Manifest.parse(json)
         assert(m.toJson == json, "manifest codec must round-trip the file bytes")
         // oracle 1: the read-back aggregate over the committed files
+        // (Curate.metrics aggregates the same counter, Curate.partMetrics)
         val committed = spark.read.parquet(TableIO.partitionDir(out, p).toString)
         val r = Curate.metrics(committed, p).head()
         def counts(c: String) = r.getMap[String, Long](r.fieldIndex(c)).toMap
@@ -151,6 +152,7 @@ class ResumeSpec extends SparkTestBase {
         val rows = committed.select("keep", "drop_reason", "scrub_hits").collect()
         assert(m.turnsSeen == rows.length)
         assert(m.turnsKept == rows.count(_.getBoolean(0)))
+        assert(m.turnsDropped == rows.count(!_.getBoolean(0)))
         assert(m.droppedByRule == rows.filter(!_.isNullAt(1))
           .groupBy(_.getString(1)).map { case (k, v) => k -> v.length.toLong })
         assert(m.scrubHitCounts == rows.flatMap(_.getMap[String, Int](2).toSeq)
@@ -306,18 +308,34 @@ class ResumeSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val rows = Seq(
-      (true, null: String, Map("url" -> 1)),
-      (false, "too_short", Map.empty[String, Int]),
-      (false, "not_a_rule", Map("email" -> 2))).toDF("keep", "drop_reason", "scrub_hits")
+      (Some(true), null: String, Map("url" -> 1)),
+      (Some(false), "too_short", Map.empty[String, Int]),
+      (None, "ppl", Map.empty[String, Int]), // a NULL keep counts as dropped
+      (Some(false), "not_a_rule", Map("email" -> 2))).toDF("keep", "drop_reason", "scrub_hits")
     assert(!QualityRules.ruleOrder.contains("not_a_rule"))
     val e = intercept[Exception](Curate.metrics(rows).collect())
     assert(e.getMessage.contains("ruleOrder"), e.getMessage)
     // without the stray reason the same rows aggregate
     val ok = Curate.metrics(rows.filter($"drop_reason".isNull || $"drop_reason" =!= "not_a_rule"))
       .head()
-    assert(ok.getAs[Long]("turns_dropped") == 1L)
-    assert(ok.getMap[String, Long](ok.fieldIndex("dropped_by_rule")).toMap == Map("too_short" -> 1L))
+    assert(ok.getAs[Long]("turns_kept") == 1L)
+    assert(ok.getAs[Long]("turns_dropped") == 2L)
+    assert(ok.getMap[String, Long](ok.fieldIndex("dropped_by_rule")).toMap ==
+      Map("too_short" -> 1L, "ppl" -> 1L))
     assert(ok.getMap[String, Long](ok.fieldIndex("scrub_hit_counts")).toMap == Map("url" -> 1L))
+  }
+
+  test("Curate.metrics over an empty curated frame is one row of zeros with empty maps") {
+    val s = spark
+    import s.implicits._
+    val rows = Curate.metrics(s.emptyDataset[graft.model.CuratedTurn].toDF(), 3).collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.getAs[Int]("part_id") == 3)
+    assert(Seq("turns_seen", "turns_kept", "turns_dropped").map(r.getAs[Long](_)) ==
+      Seq(0L, 0L, 0L))
+    assert(r.getMap[String, Long](r.fieldIndex("dropped_by_rule")).isEmpty)
+    assert(r.getMap[String, Long](r.fieldIndex("scrub_hit_counts")).isEmpty)
   }
 
   test("a manifest fails its check on a footer row mismatch or uncounted drops") {

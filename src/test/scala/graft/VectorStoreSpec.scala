@@ -186,6 +186,18 @@ class VectorStoreSpec extends SparkTestBase with FixtureDirs {
     assert(vs.count() == 0L)
   }
 
+  test("exportJson escapes a collection name with a quote, a backslash and a newline") {
+    val (vs, _) = freshStore("oddname")
+    vs.add(rows(0 until 3, "web"))
+    val name = "q\"u\\o\n"
+    val out = vs.exportJson(fixtureDir("/tmp/graft-vstore-export") + "/odd.json", name)
+    val j = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readAllBytes(Paths.get(out)))
+    assert(j.get("collection_name").asText == name)
+    assert(j.get("total_documents").asLong == 3L)
+    assert(j.get("documents").size == 3)
+  }
+
   /** Spark jobs `body` starts, counted in a job group of its own. */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
