@@ -10,7 +10,7 @@ import graft.tableio.TableIO
   *   spark-submit --class graft.CurateJob <jar> \
   *     --input <transcripts table dir (Hive-bucketed by part_id)> \
   *     --output <curated table dir> \
-  *     [--concurrency 2] [--write-partitions 64] [--max-partitions N]
+  *     [--write-partitions 64] [--max-partitions N]
   *
   * Resumable by construction: re-running the same command after a
   * kill processes only partitions missing from the output manifest
@@ -22,8 +22,11 @@ import graft.tableio.TableIO
   * Exit summary (one JSON line) reports per-run lineage totals.
   */
 object CurateJob {
-  private val flags = Seq("--input", "--output", "--concurrency", "--write-partitions",
-    "--max-partitions")
+  private val flags = Seq("--input", "--output", "--write-partitions", "--max-partitions")
+
+  /** Local core count: SPARK_GRAFT_CPUS, else this host's processors. */
+  private[graft] def localCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
   /** `--key value` pairs, by key without the dashes; an unknown key or a
     * key with no value fails, naming it.
@@ -42,34 +45,28 @@ object CurateJob {
       sys.error("--input <dir> required (Hive-bucketed transcripts; " +
         "use TableIO.writeBucketedInput or an Iceberg bucket(N, conv_id) spec)"))
     val output = opts.getOrElse("output", sys.error("--output <dir> required"))
-    val concurrency = opts.get("concurrency").fold(Resume.defaultConcurrency)(_.toInt)
-    // local core count: SPARK_GRAFT_CPUS, else this host's processors
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val writeParts = opts.getOrElse("write-partitions", cpus).toInt
+    val writeParts = opts.get("write-partitions").fold(localCpus)(_.toInt)
     val maxParts = opts.getOrElse("max-partitions", Int.MaxValue.toString).toInt
 
     // under spark-submit the master/executor topology comes from the
     // submit conf (the N vs 4N executor axis); standalone runs fall
-    // back to local[cpus]
+    // back to local[localCpus]
     val base = SparkSession.builder().appName("graft-curate")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
     val spark = (if (sys.props.contains("spark.master")) base
-                 else base.master(s"local[$cpus]"))
+                 else base.master(s"local[$localCpus]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()
     val result = Resume.run(spark, input, output,
-      writePartitions = writeParts, maxPartitions = maxParts,
-      concurrency = concurrency)
+      writePartitions = writeParts, maxPartitions = maxParts)
     val sec = (System.nanoTime() - t0) / 1e9
 
     // roll up manifests for the exit summary
-    val manifests = TableIO.donePartitions(output).toSeq.sorted
-      .flatMap(p => TableIO.readManifest(output, p))
-    val totalSeen = manifests.map(m => Resume.Manifest.parse(m).turnsSeen).sum
+    val totalSeen = TableIO.donePartitions(output).toSeq
+      .flatMap(TableIO.readManifest(output, _)).map(Resume.Manifest.parse(_).turnsSeen).sum
     println(
       s"""{"job":"graft-curate","processed_partitions":${result.processed.size},""" +
         s""""skipped_partitions":${result.skipped.size},"total_turns_committed":$totalSeen,""" +

@@ -15,7 +15,7 @@ object PrepInput {
     val nConvs = if (args.length > 1) args(1).toLong else 1000L
     val buckets = if (args.length > 2) args(2).toInt else 16
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
+      .master(s"local[${CurateJob.localCpus}]")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,6 +1,6 @@
 package graft.checkpoint
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -22,25 +22,15 @@ import graft.tableio.TableIO
   * correction_stats, smart_corrector.py:90-96,252-260).
   *
   * Scale notes: the loop is over PARTITIONS (thousands at 10^12 turns),
-  * taken in waves of `concurrency` partitions, each wave one Spark write
-  * with full cluster parallelism. A wave runs two Spark jobs: the salted
-  * shuffle's map stage and the write (its input schema comes from one
-  * parquet footer on the driver, `TableIO.readPartitions`). The
-  * kernel runs after the shuffle, so a hot conversation's turns are
-  * curated by every write task its salt reaches, not by the one map task
-  * that reads its bucket. The manifest metrics are observed on the write
-  * job itself (`Curate.partMetrics`, one aggregate keyed by `part_id`,
-  * collected in its result stage), never read back; each partition is
-  * validated on the driver against its staged parquet footers' row
-  * counts before any partition of the wave moves into place.
+  * taken in waves sized by their input bytes (`run`), each wave one Spark
+  * write of two jobs with full cluster parallelism (`commitCurated`).
+  * Each partition is validated on the driver against its staged parquet
+  * footers' row counts before any partition of the wave moves into place.
   * `maxPartitions` lets tests simulate a kill after k partitions.
   */
 object Resume {
 
   final case class RunResult(processed: Seq[Int], skipped: Seq[Int])
-
-  /** Partitions `run` writes per wave unless told otherwise. */
-  val defaultConcurrency = 2
 
   /** Files `run` writes per committed partition unless told otherwise. */
   val defaultWritePartitions = 8
@@ -53,14 +43,14 @@ object Resume {
     "parquet.enable.dictionary#text" -> "false",
     "parquet.enable.dictionary#scrubbed_text" -> "false")
 
-  /** @param concurrency partitions per wave (at least 1): the todo
-    *   partitions are curated and committed `concurrency` at a time, one
-    *   Spark write per wave, on the caller's thread. Each partition
-    *   still commits atomically with its own manifest, and the output
-    *   does not depend on the concurrency. A failure fails its whole
-    *   wave: nothing in that wave or after it commits.
-    *   `writePartitions` tasks write a wave and run its kernel, so it
-    *   must grow with the data, as the file size it sets does.
+  /** Curate and commit the input partitions not yet done, in order, in
+    * waves of one Spark write each on the caller's thread. A wave takes
+    * partitions while their parquet bytes sum to at most `writePartitions`
+    * × `spark.sql.files.maxPartitionBytes`, about one scan split per write
+    * task, and holds at least one. The output does not depend on the
+    * waves. A failure fails its whole wave: nothing in it or after it
+    * commits. `writePartitions` sets the file size and the kernel's task
+    * count, so it must grow with the data.
     */
   def run(
       spark: SparkSession,
@@ -69,30 +59,39 @@ object Resume {
       cfg: QualityRules.Config = QualityRules.defaultConfig,
       models: Curate.Models = Curate.defaultModels,
       writePartitions: Int = defaultWritePartitions,
-      maxPartitions: Int = Int.MaxValue,
-      concurrency: Int = defaultConcurrency
+      maxPartitions: Int = Int.MaxValue
   ): RunResult = {
-    require(concurrency >= 1, s"concurrency must be at least 1, got $concurrency")
-    val inputParts = listInputPartitions(inputBase)
     val done = TableIO.donePartitions(outputBase)
-    val todo = inputParts.filterNot(done.contains).sorted.take(maxPartitions)
+    val todo = listInputPartitions(inputBase).filterNot(done.contains).sorted.take(maxPartitions)
     if (todo.isEmpty) return RunResult(Nil, done.toSeq.sorted)
+    val sized = todo.map(p =>
+      p -> TableIO.parquetFiles(TableIO.partitionDir(inputBase, p)).map(Files.size).sum)
+    val budget = writePartitions * spark.sessionState.conf.filesMaxPartitionBytes
     // one broadcast of the kernel for every wave of this run
     val core = spark.sparkContext.broadcast(new CurateCore(models.langId, models.lm, cfg))
-    try todo.grouped(concurrency).foreach { wave =>
+    try waves(sized, budget).foreach { wave =>
       commitCurated(TableIO.readPartitions(spark, inputBase, wave), core, outputBase,
         wave.map(p => p -> s"$inputBase/${TableIO.PART_COL}=$p"), writePartitions)
     } finally core.destroy()
     RunResult(todo, done.toSeq.sorted)
   }
 
+  /** Runs of consecutive `parts` (id, bytes) of at most `budget` bytes, or of one part. */
+  private[graft] def waves(parts: Seq[(Int, Long)], budget: Long): Seq[Seq[Int]] =
+    parts.foldLeft(List.empty[(List[Int], Long)]) {
+      case ((wave, bytes) :: rest, (p, b)) if bytes + b <= budget => (p :: wave, bytes + b) :: rest
+      case (acc, (p, b)) => (List(p), b) :: acc
+    }.reverse.map(_._1.reverse)
+
   /** Curate `turns` (rows carrying `part_id`) and commit partitions
     * `inputs` of `outputBase` — each in `writePartitions` files, then its
     * checked manifest with the lineage paired with it — off one Spark
-    * write: the one commit of curated turns, per wave in `run` and per
-    * micro-batch in `StreamingCurate`. The kernel runs after the salted
-    * shuffle, and the counts are observed after it, in the write's
-    * result stage, where a retried task's update still counts once.
+    * write of two jobs, the salted shuffle's map stage and the write: the
+    * one commit of curated turns, per wave in `run` and per micro-batch in
+    * `StreamingCurate`. The kernel runs after the shuffle, so a hot
+    * conversation is curated by every write task its salt reaches, and
+    * the counts are observed after it, in the write's result stage, where
+    * a retried task's update still counts once.
     */
   private[graft] def commitCurated(
       turns: DataFrame,

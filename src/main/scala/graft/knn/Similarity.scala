@@ -123,12 +123,17 @@ object Similarity extends Serializable {
       nBits: Int,
       nBands: Int
   ): DataFrame = {
-    require(nBits % nBands == 0, "nBands must divide nBits")
-    val bits = nBits / nBands
+    val bits = bandBits(nBits, nBands)
     val sigU = F.udf((v: Array[Float]) => hyperplaneSig(v, nBits))
     df.select(F.col(idCol).as(idAlias), sigU(F.col(embCol)).as("__sig"))
       .select(F.col(idAlias), explodeBitBands(F.col("__sig"), nBands, bits).as("b"))
       .select(F.col(idAlias), F.col("b.band"), F.col("b.bh"))
+  }
+
+  /** Bits per band: the one check that `nBands` divides `nBits`. */
+  private[graft] def bandBits(nBits: Int, nBands: Int): Int = {
+    require(nBits % nBands == 0, s"nBands $nBands must divide nBits $nBits")
+    nBits / nBands
   }
 
   /** Band `b` of a bit-banded Long signature column: its bits
@@ -254,13 +259,11 @@ object Similarity extends Serializable {
       nBits: Int = 16,
       nBands: Int = 4
   ): DataFrame = {
-    val bits = nBits / nBands
+    val bits = bandBits(nBits, nBands)
     val qSig = hyperplaneSig(query, nBits)
-    val qBands = (0 until nBands)
-      .map(b => (b, (qSig >>> (b * bits)) & ((1L << bits) - 1)))
     val sigU = F.udf((v: Array[Float]) => hyperplaneSig(v, nBits))
-    val matchesBand = qBands
-      .map { case (b, bh) => bitBand(F.col("__sig"), b, bits) === F.lit(bh) }
+    val matchesBand = (0 until nBands)
+      .map(b => bitBand(F.col("__sig"), b, bits) === F.lit((qSig >>> (b * bits)) & ((1L << bits) - 1)))
       .reduce(_ || _)
     val cosU = F.udf((a: Array[Float]) => cosine(a, query))
     df.withColumn("__sig", sigU(F.col(embCol)))

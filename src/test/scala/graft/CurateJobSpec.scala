@@ -11,7 +11,9 @@ class CurateJobSpec extends AnyFunSuite {
     def failure(args: String*) = intercept[IllegalArgumentException](CurateJob.parseFlags(args)).getMessage
     assert(failure("--input", "in", "--max-partition", "2").contains("unknown flag --max-partition"))
     assert(failure("input", "in").contains("unknown flag input"))
-    assert(failure("--input", "in", "--concurrency").contains("flag --concurrency has no value"))
+    assert(failure("--input", "in", "--max-partitions").contains("flag --max-partitions has no value"))
+    // waves are sized by input bytes: there is no partitions-per-wave flag
+    assert(failure("--concurrency", "2").contains("unknown flag --concurrency"))
     assert(failure("--input", "--output", "out").contains("flag --input has no value"))
   }
 }

@@ -497,6 +497,16 @@ class DedupSimilaritySpec extends SparkTestBase with FixtureDirs {
     assert(lsh.contains(1L)) // near vector shares buckets with base
   }
 
+  test("topKLsh and topKBatchLsh reject nBands that do not divide nBits") {
+    import spark.implicits._
+    val df = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("id", "emb")
+    val e = intercept[IllegalArgumentException](
+      Similarity.topKLsh(df, "id", "emb", Array(1f, 0f), nBits = 16, nBands = 3))
+    assert(e.getMessage.contains("nBands 3 must divide nBits 16"), e.getMessage)
+    intercept[IllegalArgumentException](
+      Similarity.topKBatchLsh(df, "id", "emb", df, "id", "emb", nBits = 16, nBands = 3))
+  }
+
   /** Builds an [[IvfIndex]] over `df` in a temp dir, hands it to `f`
     * and deletes the dir afterwards.
     */

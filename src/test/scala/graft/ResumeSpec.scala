@@ -44,6 +44,19 @@ class ResumeSpec extends SparkTestBase {
     }.toMap
   }
 
+  /** `body` under a `spark.sql.files.maxPartitionBytes` low enough that
+    * `Resume.run`, at its default `writePartitions`, puts every partition
+    * of `in` in a wave of its own: the wave budget is below the bytes of
+    * any two of them.
+    */
+  private def oneWaveEach[A](in: String)(body: => A): A = {
+    val bytes = Resume.listInputPartitions(in)
+      .map(p => TableIO.parquetFiles(TableIO.partitionDir(in, p)).map(Files.size).sum)
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, math.max(1L, (bytes.sorted.take(2).sum - 1) / Resume.defaultWritePartitions))
+    try body finally spark.conf.unset(key)
+  }
+
   test("kill after k partitions → resume completes without recompute; output byte-identical") {
     val in = freshDir("in")
     val outA = freshDir("outA")
@@ -107,12 +120,14 @@ class ResumeSpec extends SparkTestBase {
       val victim = TableIO.donePartitions(out).max
       Files.delete(TableIO.manifestPath(out, victim))
       assert(TableIO.donePartitions(out).size == 1)
-      val r = Resume.run(spark, in, out, concurrency = 3)
+      val r = Resume.run(spark, in, out) // one wave of the two left
       assert(r.processed.contains(victim))
       assert(TableIO.donePartitions(out).size == 3)
       val ref = freshDir("out2ref")
       try {
-        Resume.run(spark, in, ref, concurrency = 1) // concurrent == sequential output
+        // a wave per partition == one wave of the two left
+        val (_, jobs) = jobsIn("one-wave-each")(oneWaveEach(in)(Resume.run(spark, in, ref)))
+        assert(jobs == 6, s"three partitions in their own waves ran $jobs jobs")
         val files = committedFiles(out)
         assert(files.nonEmpty && files.values.forall(_.nonEmpty))
         val refFiles = committedFiles(ref)
@@ -132,7 +147,7 @@ class ResumeSpec extends SparkTestBase {
     val out = freshDir("out3")
     try {
       TableIO.writeBucketedInput(Transcripts.dataset(spark, 60L).toDF(), in, nBuckets = 3)
-      Resume.run(spark, in, out, concurrency = 2)
+      Resume.run(spark, in, out)
       val parts = TableIO.donePartitions(out).toSeq.sorted
       assert(parts == Seq(0, 1, 2))
       val manifests = parts.map { p =>
@@ -199,12 +214,37 @@ class ResumeSpec extends SparkTestBase {
       TableIO.writeBucketedInput(Transcripts.dataset(spark, 20L).toDF(), in, nBuckets = 2)
       val (r, jobs) = jobsIn("resume-run")(Resume.run(spark, in, out))
       assert(r.processed == Seq(0, 1))
-      // one wave at the default concurrency: its shuffle map stage and
-      // its write, both on the caller's thread
+      // one wave, as their bytes are far below the wave budget: its
+      // shuffle map stage and its write, both on the caller's thread
       assert(jobs == 2, s"two partitions ran $jobs jobs in the group")
     } finally {
       Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
     }
+  }
+
+  test("64 small partitions commit in one wave: two Spark jobs and a file listing") {
+    val in = freshDir("in11")
+    val out = freshDir("out11")
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 200L).toDF(), in, nBuckets = 64)
+      val parts = Resume.listInputPartitions(in).sorted
+      // a read of more directories than this lists them in a Spark job
+      val listing = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+      assert(parts.size > listing)
+      val (r, jobs) = jobsIn("resume-64")(Resume.run(spark, in, out))
+      assert(r.processed == parts)
+      assert(jobs == 3, s"${parts.size} partitions ran $jobs jobs, not one wave's 2 + 1 listing")
+    } finally {
+      Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
+
+  test("waves: consecutive partitions within the byte budget, at least one each") {
+    val parts = Seq(0 -> 5L, 1 -> 5L, 2 -> 1L, 3 -> 20L, 4 -> 3L, 5 -> 7L)
+    assert(Resume.waves(parts, 10) == Seq(Seq(0, 1), Seq(2), Seq(3), Seq(4, 5)))
+    assert(Resume.waves(parts, 0) == parts.map(p => Seq(p._1)))
+    assert(Resume.waves(parts, Long.MaxValue / 2) == Seq(parts.map(_._1)))
+    assert(Resume.waves(Nil, 10).isEmpty)
   }
 
   test("a wave's write plan runs the kernel above the salted shuffle") {
@@ -218,9 +258,13 @@ class ResumeSpec extends SparkTestBase {
     val out = freshDir("out8")
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      // only writes into `out`: the listener bus may still deliver the
+      // input table's write after the listener is registered
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains("InsertIntoHadoopFsRelationCommand") && plan.contains(out))
           writes.add(qe.executedPlan)
+      }
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     try {
@@ -261,7 +305,7 @@ class ResumeSpec extends SparkTestBase {
       val turns0 = spark.read.parquet(TableIO.partitionDir(in, 0).toString).count()
       // in a wave with the non-empty bucket 0, and in a wave of its own
       assert(Resume.run(spark, in, paired).processed == Seq(0, 1))
-      assert(Resume.run(spark, in, alone, concurrency = 1).processed == Seq(0, 1))
+      assert(oneWaveEach(in)(Resume.run(spark, in, alone)).processed == Seq(0, 1))
       Seq(paired, alone).foreach { out =>
         val m = Resume.Manifest.parse(TableIO.readManifest(out, 1).get)
         assert(m == Resume.Manifest(1, s"$in/${TableIO.PART_COL}=1", 0, 0, 0, Map.empty, Map.empty))
@@ -354,18 +398,18 @@ class ResumeSpec extends SparkTestBase {
     assert(Resume.Manifest.parse(odd.toJson) == odd)
   }
 
-  test("a failed partition at concurrency 2 stops the run: nothing commits after it throws") {
+  test("a failed wave stops the run: nothing commits after it throws") {
     val in = freshDir("in5")
     val out = freshDir("out5")
     try {
       TableIO.writeBucketedInput(Transcripts.dataset(spark, 40L).toDF(), in, nBuckets = 4)
-      // bucket 0, the first to run, holds a corrupt parquet file
+      // bucket 0, the first wave of four, holds a corrupt parquet file
       import scala.jdk.CollectionConverters._
       val victim = Files.list(TableIO.partitionDir(in, 0)).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString).head
       val original = Files.readAllBytes(victim)
       Files.write(victim, "not a parquet file".getBytes("US-ASCII"))
-      intercept[Exception](Resume.run(spark, in, out, concurrency = 2))
+      intercept[Exception](oneWaveEach(in)(Resume.run(spark, in, out)))
       val committed = TableIO.donePartitions(out)
       assert(!committed.contains(0))
       // wait until no Spark job has run for 2 s: a partition still
@@ -380,7 +424,7 @@ class ResumeSpec extends SparkTestBase {
       assert(TableIO.donePartitions(out) == committed, "partitions committed after run threw")
       // repaired, the resume redoes exactly the partitions with no manifest
       Files.write(victim, original)
-      val r = Resume.run(spark, in, out, concurrency = 2)
+      val r = oneWaveEach(in)(Resume.run(spark, in, out))
       assert(r.skipped.toSet == committed)
       assert(r.processed.toSet == (0 until 4).toSet -- committed)
       assert(TableIO.donePartitions(out) == (0 until 4).toSet)
