@@ -26,7 +26,15 @@ object CurateJob {
 
   /** Local core count: SPARK_GRAFT_CPUS, else this host's processors. */
   private[graft] def localCpus: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(
+      intValue("SPARK_GRAFT_CPUS", _))
+
+  /** `value` of the flag or env var `name` as an Int; a non-integer
+    * fails, naming it.
+    */
+  private[graft] def intValue(name: String, value: String): Int =
+    value.toIntOption.getOrElse(
+      throw new IllegalArgumentException(s"$name must be an integer, got '$value'"))
 
   /** `--key value` pairs, by key without the dashes; an unknown key or a
     * key with no value fails, naming it.
@@ -45,8 +53,8 @@ object CurateJob {
       sys.error("--input <dir> required (Hive-bucketed transcripts; " +
         "use TableIO.writeBucketedInput or an Iceberg bucket(N, conv_id) spec)"))
     val output = opts.getOrElse("output", sys.error("--output <dir> required"))
-    val writeParts = opts.get("write-partitions").fold(localCpus)(_.toInt)
-    val maxParts = opts.getOrElse("max-partitions", Int.MaxValue.toString).toInt
+    val writeParts = opts.get("write-partitions").fold(localCpus)(intValue("--write-partitions", _))
+    val maxParts = opts.get("max-partitions").fold(Int.MaxValue)(intValue("--max-partitions", _))
 
     // under spark-submit the master/executor topology comes from the
     // submit conf (the N vs 4N executor axis); standalone runs fall

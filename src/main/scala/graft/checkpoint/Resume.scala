@@ -50,7 +50,8 @@ object Resume {
     * task, and holds at least one. The output does not depend on the
     * waves. A failure fails its whole wave: nothing in it or after it
     * commits. `writePartitions` sets the file size and the kernel's task
-    * count, so it must grow with the data.
+    * count, so it must grow with the data; it must be at least 1, and
+    * `maxPartitions` at least 0.
     */
   def run(
       spark: SparkSession,
@@ -61,6 +62,8 @@ object Resume {
       writePartitions: Int = defaultWritePartitions,
       maxPartitions: Int = Int.MaxValue
   ): RunResult = {
+    require(writePartitions >= 1, s"writePartitions must be at least 1, got $writePartitions")
+    require(maxPartitions >= 0, s"maxPartitions must be at least 0, got $maxPartitions")
     val done = TableIO.donePartitions(outputBase)
     val todo = listInputPartitions(inputBase).filterNot(done.contains).sorted.take(maxPartitions)
     if (todo.isEmpty) return RunResult(Nil, done.toSeq.sorted)

@@ -61,10 +61,7 @@ case class BloomAgg(
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(NUM_WORDS)(bb.getLong())
-  }
+  override def deserialize(bytes: Array[Byte]): Array[Long] = wordsOf(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -123,21 +120,27 @@ object BloomAgg {
     graft.util.Hash.mix(h)
   }
 
-  private def setBit(words: Array[Long], bit: Int): Unit =
-    words(bit >>> 6) |= 1L << (bit & 63)
-
-  private def getBit(words: Array[Long], bit: Int): Boolean =
-    (words(bit >>> 6) & (1L << (bit & 63))) != 0
-
-  /** Double hashing: bit_i = (h1 + i·h2) mod m (Kirsch–Mitzenmacher). */
-  private def addHash(words: Array[Long], h: Long): Unit = {
-    val h1 = h
+  /** True iff `p` holds for every bit of hash `h`, in order, stopping
+    * at the first miss. Double hashing: bit_i = (h + i·h2) mod m with
+    * h2 = mix(h ^ φ) | 1 (Kirsch–Mitzenmacher).
+    */
+  private def forallBits(h: Long)(p: Int => Boolean): Boolean = {
     val h2 = graft.util.Hash.mix(h ^ 0x9e3779b97f4a7c15L) | 1L
     var i = 0
     while (i < NUM_HASHES) {
-      setBit(words, java.lang.Math.floorMod(h1 + i * h2, NUM_BITS.toLong).toInt)
+      if (!p(java.lang.Math.floorMod(h + i * h2, NUM_BITS.toLong).toInt)) return false
       i += 1
     }
+    true
+  }
+
+  private def addHash(words: Array[Long], h: Long): Unit =
+    forallBits(h) { bit => words(bit >>> 6) |= 1L << (bit & 63); true }
+
+  /** The filter's words in the byte order `serialize` writes them. */
+  private def wordsOf(bytes: Array[Byte]): Array[Long] = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    Array.fill(NUM_WORDS)(bb.getLong())
   }
 
   /** Decode serialized filter bytes to the word array ONCE; None for
@@ -147,26 +150,13 @@ object BloomAgg {
     * via [[mightContainWords]] in any loop.
     */
   def decode(bytes: Array[Byte]): Option[Array[Long]] =
-    if (bytes == null || bytes.length != 8 * NUM_WORDS) None
-    else {
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      Some(Array.fill(NUM_WORDS)(bb.getLong()))
-    }
+    Option.when(bytes != null && bytes.length == 8 * NUM_WORDS)(wordsOf(bytes))
 
-  /** Membership test against a pre-decoded word array (allocation-free).
+  /** Membership test against a pre-decoded word array (no array copy).
     * False ⇒ the id is DEFINITELY absent; true ⇒ maybe present.
     */
-  def mightContainWords(words: Array[Long], canonical: String): Boolean = {
-    val h1 = hashOf(canonical)
-    val h2 = graft.util.Hash.mix(h1 ^ 0x9e3779b97f4a7c15L) | 1L
-    var i = 0
-    while (i < NUM_HASHES) {
-      if (!getBit(words, java.lang.Math.floorMod(h1 + i * h2, NUM_BITS.toLong).toInt))
-        return false
-      i += 1
-    }
-    true
-  }
+  def mightContainWords(words: Array[Long], canonical: String): Boolean =
+    forallBits(hashOf(canonical))(bit => (words(bit >>> 6) & (1L << (bit & 63))) != 0)
 
   /** Membership test against serialized filter bytes. False ⇒ the id
     * is DEFINITELY absent; true ⇒ maybe present. One-shot convenience —

@@ -54,11 +54,9 @@ object Bm25 {
     * always counted rows): `docs` carries ONE ROW PER DOCUMENT. The
     * per-row `array_contains` sum equals the old distinct-by-id df
     * exactly under that contract; a frame with duplicate ids must be
-    * deduplicated upstream (idCol is retained in the signature for the
-    * call-site contract, not consumed here).
+    * deduplicated upstream.
     */
-  def stats(docs: DataFrame, idCol: String, textCol: String,
-      query: String): Stats = {
+  def stats(docs: DataFrame, textCol: String, query: String): Stats = {
     val terms = Dedup.tokens(query).distinct
     val tokU = F.udf((t: String) => Dedup.tokens(t))
     val base = docs.select(tokU(F.col(textCol)).as("ws"))
@@ -102,7 +100,7 @@ object Bm25 {
   /** Pass 2 + top-k. Output (id, score), score DESC, id ASC tie-break. */
   def topK(docs: DataFrame, idCol: String, textCol: String, query: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val st = stats(docs, idCol, textCol, query)
+    val st = stats(docs, textCol, query)
     val scoreU = F.udf((t: String) => score(st, t, k1, b))
     docs.select(F.col(idCol).as("id"), scoreU(F.col(textCol)).as("score"))
       .filter(F.col("score") > 0.0)

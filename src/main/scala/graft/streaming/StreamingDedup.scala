@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.dedup.Dedup
+import graft.tableio.TableIO
 
 /** Streaming twin of the MinHash+LSH near-dup family (Dedup.scala):
   * the batch `minhashClusters` bucket-min, re-expressed as watermarked
@@ -25,10 +26,13 @@ import graft.dedup.Dedup
   *    representative in this bucket". A row is a near-dup CANDIDATE
   *    iff any of its bands maps to a foreign representative —
   *    [[repAssignments]] is that per-id fold (min over bands), run
-  *    per micro-batch via foreachBatch or over the collected sink
-  *    (chaining a second stateful aggregate behind
+  *    over the committed table, `TableIO.read`, or one batch's
+  *    partition of it (chaining a second stateful aggregate behind
   *    flatMapGroupsWithState in one append query is where Spark's
-  *    multi-stateful support is still restrictive).
+  *    multi-stateful support is still restrictive);
+  *  - [[runAvailableNowToParquet]] commits each micro-batch's rows
+  *    through `TableIO`, as `part_id=<batch id>` with a row-count
+  *    manifest, the commit `StreamingCurate` makes for curated turns.
   *
   * Prefix semantics: with everything in one micro-batch the per-id
   * assignment equals the batch bucket-min pass; across batches a
@@ -115,32 +119,29 @@ object StreamingDedup {
   }
 
   /** Per-id representative: min over the id's bucket representatives —
-    * the batch `minhashClusters` fold. Run per micro-batch
-    * (foreachBatch) or over the accumulated sink; ids with rep_id <
-    * id are near-dup candidates of their representative.
+    * the batch `minhashClusters` fold. Run over one micro-batch's
+    * partition or the whole committed table; ids with rep_id < id are
+    * near-dup candidates of their representative.
     */
   def repAssignments(buckets: DataFrame): DataFrame =
     buckets.groupBy("id")
       .agg(F.min("rep_id").as("rep_id"))
 
-  /** Production shape: continuous near-dup candidate feed to parquet
-    * with recoverable state (the checkpoint carries both file offsets
-    * AND the bucket-min state, so re-invocation dedups new files
-    * against everything inside the horizon).
+  /** Production shape: continuous near-dup candidate feed with
+    * recoverable state (the checkpoint carries both file offsets AND the
+    * bucket-min state, so re-invocation dedups new files against
+    * everything inside the horizon). Micro-batch `id` commits its
+    * assignments as `part_id=<id>` of `outDir` with a row-count manifest
+    * by [[MicroBatch.commitAvailableNow]], which skips a batch whose
+    * manifest exists; a batch of no rows commits nothing.
     */
   def runAvailableNowToParquet(
       spark: SparkSession,
       assigns: Dataset[BucketAssign],
       outDir: String,
       checkpointDir: String
-  ): Unit = {
-    val q = assigns.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    MicroBatch.commitAvailableNow(assigns.toDF(), outDir, checkpointDir) { (batch, p) =>
+      TableIO.commitPartitions(batch, outDir, Seq(p))(TableIO.rowCountManifest)
+    }
 }

@@ -36,14 +36,15 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * column chunk's `encodings` list in hash-set order.
   *
   * Every commit stages all of its partitions in ONE write. Table
-  * mutations (adds, deletes, index builds) go through
-  * [[commitPartitions]]: one aggregate over the staged rows read back
-  * gives each partition's manifest, and a partition the write left
-  * empty is dropped, its manifest first (a crash then leaves an
-  * unlisted directory, which reads ignore and the next commit of that
-  * partition replaces). Curated turns go through [[commitStaged]], whose
-  * manifests come from the caller. Every read is [[readPartitions]],
-  * with the schema of one parquet footer and no inference job.
+  * mutations (adds, deletes, index builds) and streamed MinHash bucket
+  * assignments go through [[commitPartitions]]: one aggregate over
+  * the staged rows read back gives each partition's manifest, and a
+  * partition the write left empty is dropped, its manifest first (a
+  * crash then leaves an unlisted directory, which reads ignore and the
+  * next commit of that partition replaces). Curated turns go through
+  * [[commitStaged]], whose manifests come from the caller. Every read
+  * is [[readPartitions]], with the schema of one parquet footer and no
+  * inference job.
   */
 object TableIO {
 
@@ -163,6 +164,12 @@ object TableIO {
       }
     commitPartitions(merged, base, parts.toSeq, stats: _*)(manifest)
   }
+
+  /** The manifest of a table whose partitions record only their row
+    * count: a [[commitPartitions]] `manifest` over no extra stats.
+    */
+  private[graft] def rowCountManifest(partId: Int, stats: Row): String =
+    s"""{"part_id":$partId,"rows":${stats.getLong(0)}}"""
 
   /** Append the manifest entry LAST — this is the commit point. */
   def writeManifest(base: String, partId: Int, json: String): Unit =

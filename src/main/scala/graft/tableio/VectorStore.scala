@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 
 /** Vector-store mutations (SURVEY.md §2.1 S7/S8) — rebuild of the
   * reference's ChromaDB collection lifecycle (data_manager.py):
@@ -91,7 +91,7 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
         idx.add(if (isEmpty) rows
           else rows.join(TableIO.read(spark, base).select("id"), Seq("id"), "left_anti"))
       }
-      TableIO.appendPartitions(batch, base, "id")(manifest)
+      TableIO.appendPartitions(batch, base, "id")(TableIO.rowCountManifest)
     } finally batch.unpersist()
   }
 
@@ -121,7 +121,7 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
     // the redo resolves the same ids, the index anti-join is a no-op.
     ivf.foreach(_.deleteIdsDf(full.filter(hit).select("id")))
     TableIO.commitPartitions(TableIO.readPartitions(spark, base, parts).filter(!hit),
-      base, parts)(manifest)
+      base, parts)(TableIO.rowCountManifest)
     affected.map(_._2).sum
   }
 
@@ -168,7 +168,4 @@ final class VectorStore(spark: SparkSession, base: String, nBuckets: Int = 16) {
   /** Distributed export: one JSON-lines directory, no driver collect. */
   def exportDistributed(path: String): Unit =
     read().write.mode("overwrite").json(path)
-
-  private def manifest(partId: Int, stats: Row): String =
-    s"""{"part_id":$partId,"rows":${stats.getLong(0)}}"""
 }

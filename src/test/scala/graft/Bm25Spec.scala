@@ -75,7 +75,7 @@ class Bm25Spec extends SparkTestBase {
     // repeat "data"; doc 6 is empty)
     val group = s"bm25-stats-${System.nanoTime()}"
     spark.sparkContext.setJobGroup(group, "bm25 stats fold")
-    val st = Bm25.stats(corpus.toDF("doc_id", "text"), "doc_id", "text",
+    val st = Bm25.stats(corpus.toDF("doc_id", "text"), "text",
       "data model quality zzzabsent")
     spark.sparkContext.clearJobGroup()
     // ONE action = at most 2 AQE stage-jobs (partial + final of the

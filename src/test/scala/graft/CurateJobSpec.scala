@@ -16,4 +16,15 @@ class CurateJobSpec extends AnyFunSuite {
     assert(failure("--concurrency", "2").contains("unknown flag --concurrency"))
     assert(failure("--input", "--output", "out").contains("flag --input has no value"))
   }
+
+  test("CurateJob integer values: a non-integer names its flag or env var") {
+    assert(CurateJob.intValue("--write-partitions", "16") == 16)
+    def failure(args: String*) = intercept[IllegalArgumentException](CurateJob.main(args.toArray)).getMessage
+    assert(failure("--input", "in", "--output", "out", "--write-partitions", "eight") ==
+      "--write-partitions must be an integer, got 'eight'")
+    assert(failure("--input", "in", "--output", "out", "--max-partitions", "1.5") ==
+      "--max-partitions must be an integer, got '1.5'")
+    assert(intercept[IllegalArgumentException](CurateJob.intValue("SPARK_GRAFT_CPUS", ""))
+      .getMessage == "SPARK_GRAFT_CPUS must be an integer, got ''")
+  }
 }

@@ -432,4 +432,20 @@ class ResumeSpec extends SparkTestBase {
       Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
     }
   }
+
+  test("Resume.run rejects maxPartitions < 0 and writePartitions < 1, naming the parameter") {
+    val in = freshDir("in6")
+    val out = freshDir("out6")
+    try {
+      TableIO.writeBucketedInput(Transcripts.dataset(spark, 4L).toDF(), in, nBuckets = 2)
+      def failure(run: => Resume.RunResult) = intercept[IllegalArgumentException](run).getMessage
+      assert(failure(Resume.run(spark, in, out, maxPartitions = -1))
+        .contains("maxPartitions must be at least 0, got -1"))
+      assert(failure(Resume.run(spark, in, out, writePartitions = 0))
+        .contains("writePartitions must be at least 1, got 0"))
+      assert(TableIO.donePartitions(out).isEmpty)
+    } finally {
+      Seq(in, out).foreach(d => TableIO.deleteRecursive(Paths.get(d)))
+    }
+  }
 }

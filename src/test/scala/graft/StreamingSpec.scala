@@ -136,83 +136,4 @@ class StreamingSpec extends SparkTestBase with FixtureDirs {
     assert(Files.readAllBytes(TableIO.manifestPath(out, 1)).sameElements(manifest))
     assert(TableIO.donePartitions(out) == Set(0, 1))
   }
-
-  test("windowed metrics under watermark produce per-window outcome counts") {
-    val in = fixtureDir("/tmp/graft-stream-win")
-    val ckpt = fixtureDir("/tmp/graft-stream-winck")
-    Transcripts.dataset(spark, 10L).toDF().write.mode("overwrite").parquet(in)
-    val q = StreamingCurate.windowedMetrics(
-        StreamingCurate.curateStream(spark, in))
-      .writeStream.format("memory").queryName("win_out")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // append-mode emits only watermark-closed windows; correctness of
-    // the aggregation itself is covered by running complete-mode below
-    val q2 = StreamingCurate.windowedMetrics(
-        StreamingCurate.curateStream(spark, in))
-      .writeStream.format("memory").queryName("win_out_complete")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination()
-    val rows = spark.table("win_out_complete").collect()
-    assert(rows.nonEmpty)
-    val outcomes = rows.map(_.getAs[String]("outcome")).toSet
-    assert(outcomes.contains("kept"))
-  }
-
-  test("streaming exact dedup within watermark drops replayed duplicate turns") {
-    val in = fixtureDir("/tmp/graft-stream-dedup")
-    val ckpt = fixtureDir("/tmp/graft-stream-dedupck")
-    val base = Transcripts.dataset(spark, 6L).toDF()
-    // replay: the same turns written twice (duplicate feed), plus the
-    // originals — streaming dedup must emit each distinct text once
-    base.write.mode("overwrite").parquet(in)
-    base.limit(40).write.mode("append").parquet(in)
-    val stream = spark.readStream
-      .schema(StreamingCurate.turnSchema).parquet(in)
-    val q = StreamingCurate.dedupStream(stream)
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val got = spark.table("dedup_out")
-    val distinctTexts = spark.read.parquet(in)
-      .select("text").distinct().count()
-    assert(got.count() == distinctTexts,
-      s"expected $distinctTexts unique-text turns, got ${got.count()}")
-    assert(got.select("text").distinct().count() == distinctTexts)
-  }
-
-  test("per-conversation running state via mapGroupsWithState") {
-    import spark.implicits._
-    val in = fixtureDir("/tmp/graft-stream-state")
-    val ckpt = fixtureDir("/tmp/graft-stream-stateck")
-    Transcripts.dataset(spark, 8L).toDF().write.mode("overwrite").parquet(in)
-    val curated = StreamingCurate.curateStream(spark, in)
-      .as[graft.model.CuratedTurn]
-    val q = StreamingCurate.conversationState(spark, curated)
-      .writeStream.format("memory").queryName("conv_state")
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val state = spark.table("conv_state").as[StreamingCurate.ConvUpdate]
-      .collect().map(u => u.conv_id -> u).toMap
-    val expected = Curate.curateDf(spark, spark.read.parquet(in))
-      .groupBy("conv_id")
-      .agg(F.count(F.lit(1)).as("n"), F.sum(F.when(F.col("keep"), 1L).otherwise(0L)).as("kept"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(state.keySet == expected.keySet)
-    expected.foreach { case (c, (n, kept)) =>
-      assert(state(c).turns == n, s"conv $c turns")
-      assert(state(c).kept == kept, s"conv $c kept")
-    }
-  }
 }
