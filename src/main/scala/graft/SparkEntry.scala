@@ -88,9 +88,9 @@ object SparkEntry {
   private val docTurnsSql =
     "source AS conv_id, row_number() OVER (PARTITION BY source ORDER BY doc_id) AS turn_idx"
 
-  /** [[docTurns]] in the transcript schema Curate.curateDf reads. */
-  private def transcriptTurns(s: SparkSession, dir: String, text: Column): DataFrame =
-    docTurns(s, dir, F.lit("user").as("role"), text.as("text"),
+  /** `turns(conv_id, turn_idx, text)` in Curate.curateDf's schema. */
+  private def transcriptTurns(turns: DataFrame): DataFrame =
+    turns.select(F.col("conv_id"), F.col("turn_idx"), F.lit("user").as("role"), F.col("text"),
       F.lit("").as("tool"), F.lit(null).cast("timestamp").as("ts"))
 
   /** Synth transcript scale per test tier (driver sf dirs). */
@@ -194,6 +194,19 @@ object SparkEntry {
   // maxRuleHits = 3 gate): "he are" (same-span BASIC_SUBJ_VERB +
   // BASIC_001 collapse to one) and "they is"
   private val plantedErrors2 = " he are happy and they is here."
+  // whitespace edge rows planted whole into q7_scrub's and curate_cheap's
+  // inputs: the scrub collapses and trims only the chars of Java regex
+  // `\s`, and keeps every other control char
+  private[graft] val plantedWs =
+    Seq("\u0001abc", "\u0001a  b", "\u001cab", "a\u000bb", " \u000b a \t b \u000b", "a \u001f")
+
+  /** [[plantedWs]] as rows (i, text), i = 1, 2, …: in Spark, and as DuckDB VALUES. */
+  private def plantedWsRows(s: SparkSession): DataFrame =
+    s.createDataFrame(plantedWs.indices.map(i => (i + 1, plantedWs(i)))).toDF("i", "text")
+  private val plantedWsSql = plantedWs.indices.map { i =>
+    plantedWs(i).map(c => if (c < ' ') s"' || chr(${c.toInt}) || '" else c.toString)
+      .mkString(s"(${i + 1}, '", "", "')")
+  }.mkString("(VALUES ", ", ", ") ws(i, text)")
 
   /** In-distribution English text (clean training-corpus sentences
     * joined to 67 words) for the planted KEEP row of the product-config
@@ -222,6 +235,7 @@ object SparkEntry {
     *   doc_id % 13 == 6 → 60 digit-only words: zero letter-grams →
     *                      langid "und" → 'lang' drop, model-independent
     *   doc_id % 5  == 0 → PII tail appended (url + email + "!!")
+    * plus the [[plantedWs]] rows as conversation "ws" (all 'too_short').
     */
   private def cheapCurated(s: SparkSession, dir: String, cfg: QualityRules.Config): DataFrame = {
     val d = F.col("doc_id")
@@ -242,7 +256,8 @@ object SparkEntry {
       .when(d % 13 === 6, numText)
       .otherwise(F.col("text"))
     val planted = F.when(d % 5 === 0, F.concat(base, F.lit(plantedPii))).otherwise(base)
-    Curate.curateDf(s, transcriptTurns(s, dir, planted), cfg)
+    val ws = plantedWsRows(s).select(F.lit("ws").as("conv_id"), F.col("i").as("turn_idx"), F.col("text"))
+    Curate.curateDf(s, transcriptTurns(docTurns(s, dir, planted.as("text")).unionByName(ws)), cfg)
   }
 
   /** Curate.curateDf with the GRAMMAR gate on (curate_grammar and its
@@ -266,7 +281,7 @@ object SparkEntry {
       .when(d % 5 === 2, F.lit("he are short."))
       .when(d % 5 === 3, F.concat(repText, F.lit(plantedErrors)))
       .otherwise(F.lit(plantedKeep))
-    Curate.curateDf(s, transcriptTurns(s, dir, text),
+    Curate.curateDf(s, transcriptTurns(docTurns(s, dir, text.as("text"))),
       QualityRules.cheapConfig.copy(grammarEnabled = true))
   }
 
@@ -284,7 +299,7 @@ object SparkEntry {
   private def cheapRuleCtes(src: String): String =
     "m AS (SELECT conv_id, turn_idx, text, " +
       "len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS wc, " +
-      s"list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS lw FROM $src), " +
+      s"list_filter(regexp_split_to_array(lower(text), '${QualityRules.regexSpaceClass}+'), x -> x <> '') AS lw FROM $src), " +
     "r AS (SELECT conv_id, turn_idx, text, wc, " +
       "CASE WHEN len(lw) = 0 THEN 1.0 ELSE len(list_distinct(lw)) * 1.0 / len(lw) END AS dr, " +
       "CASE WHEN length(text) = 0 THEN 0.0 ELSE length(regexp_replace(text, '[\\p{L}\\p{N}\\s]', '', 'g')) * 1.0 / length(text) END AS sr FROM m), " +
@@ -308,7 +323,8 @@ object SparkEntry {
       "WHEN doc_id % 13 = 6 THEN array_to_string(list_transform(range(1, 61), i -> (i * 101)::VARCHAR), ' ') " +
       "ELSE text END AS base FROM documents), " +
     s"p2 AS (SELECT source, doc_id, CASE WHEN doc_id % 5 = 0 THEN base || '$plantedPii' ELSE base END AS text FROM p), " +
-    s"t AS (SELECT $docTurnsSql, text FROM p2), ${cheapRuleCtes("t")}"
+    s"t AS (SELECT $docTurnsSql, text FROM p2 UNION ALL SELECT 'ws', i, text FROM $plantedWsSql), " +
+      cheapRuleCtes("t")
 
   /** The composed real-model decision inputs: cheap chain → langid
     * argmax/softmax → stupid-backoff ppl, joined per turn in `fin`.
@@ -366,7 +382,7 @@ object SparkEntry {
   private def metricsFrom(src: String): String = {
     val specs = Scrubber.patternSpecs
     val sb = new StringBuilder(
-      s"s0 AS (SELECT drop_reason, trim(regexp_replace(text, '\\s+', ' ', 'g')) AS t0 FROM $src)")
+      s"s0 AS (SELECT drop_reason, trim(regexp_replace(text, '${QualityRules.regexSpaceClass}+', ' ', 'g')) AS t0 FROM $src)")
     specs.indices.foreach { i =>
       val (name, pat) = specs(i)
       val carried = ("drop_reason" +: specs.take(i).map(s => s"n_${s._1}")).mkString(", ")
@@ -597,12 +613,13 @@ object SparkEntry {
       oracle("SELECT md5(text) AS content_hash, min(doc_id) AS doc_id, count(*) AS n " +
         "FROM documents GROUP BY 1 ORDER BY 2")),
     Declared("q7_scrub", (s, dir) =>
-      tbl(s, dir, "documents")
-        .select(F.col("doc_id"),
-          Scrubber.scrubColReference(F.col("text")).as("scrubbed"))
+      // the plantedWs rows ride along as doc_id -1, -2, …
+      tbl(s, dir, "documents").select(F.col("doc_id"), F.col("text"))
+        .unionByName(plantedWsRows(s).select((-F.col("i")).cast("long").as("doc_id"), F.col("text")))
+        .select(F.col("doc_id"), Scrubber.scrubColReference(F.col("text")).as("scrubbed"))
         .orderBy("doc_id"),
-      oracle(s"SELECT doc_id, ${Scrubber.scrubSqlReference("text")} AS scrubbed " +
-        "FROM documents ORDER BY doc_id")),
+      oracle(s"SELECT doc_id, ${Scrubber.scrubSqlReference("text")} AS scrubbed FROM " +
+        s"(SELECT doc_id, text FROM documents UNION ALL SELECT -i, text FROM $plantedWsSql) ORDER BY doc_id")),
     Declared("q8_rule_match_counts", (s, dir) =>
       tbl(s, dir, "documents")
         .select(F.col("doc_id"),

@@ -138,9 +138,8 @@ object QualityRules extends Serializable {
     Array("cookie", "privacy", "terms", "subscribe", "follow", "share")
 
   /** [[distinctRatio]] given `lower`, the text lowercased: its tokens
-    * are the non-empty runs between the chars of Java regex `\s`,
-    * `[ \t\n\x0B\f\r]` (not `Character.isWhitespace`, which also
-    * takes U+001C–U+001F and the Unicode spaces), split by hand.
+    * are the non-empty runs between [[isRegexSpace]] chars (not
+    * `Character.isWhitespace`'s), split by hand.
     */
   private[graft] def distinctRatioOfLower(lower: String): Double = {
     // sized for the usual ≥ 3 chars per token, so it rarely rehashes
@@ -157,9 +156,12 @@ object QualityRules extends Serializable {
     if (n == 0) 1.0 else set.size.toDouble / n
   }
 
-  /** A char of Java regex `\s` (no UNICODE_CHARACTER_CLASS). */
+  /** A char of Java regex `\s`, `[ \t\n\x0B\f\r]`: the scrub's whitespace rule. */
   @inline private[graft] def isRegexSpace(c: Char): Boolean =
     c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** [[isRegexSpace]] as a regex class for Spark and DuckDB (RE2's `\s` lacks `\x0B`). */
+  val regexSpaceClass = "[ \\t\\n\\x0B\\f\\r]"
 
   /** Deterministic rule evaluation order — drop_reason vocabulary. */
   val ruleOrder: Seq[String] = Seq(

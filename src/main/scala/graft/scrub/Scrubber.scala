@@ -1,8 +1,11 @@
 package graft.scrub
 
-import java.util.regex.Pattern
+import java.util.Locale
+import java.util.regex.{MatchResult, Pattern}
 
 import org.apache.spark.sql.{Column, functions => F}
+
+import graft.rules.QualityRules.{isRegexSpace, regexSpaceClass}
 
 /** PII / toxicity scrubber (SURVEY.md §2.7 R1).
   *
@@ -20,6 +23,11 @@ import org.apache.spark.sql.{Column, functions => F}
   * (Java `Matcher.replaceAll` = Python `re.sub` semantics for these
   * patterns), hit counts taken on the text as it stands when that
   * pattern runs. The whole scrub is idempotent (property-tested).
+  *
+  * Whitespace is Java regex `\s`, `[ \t\n\x0B\f\r]`, defined once in
+  * `QualityRules` (`isRegexSpace`, `regexSpaceClass`): each normalize
+  * collapses every run to one space and drops a leading or trailing one.
+  * Every other char, control chars and Unicode spaces included, is text.
   *
   * All patterns are compiled once per JVM (object init) and shipped to
   * executors via closure — the reference recompiles per call
@@ -59,74 +67,55 @@ object Scrubber extends Serializable {
   private def guard(name: String, t: String): Boolean = name match {
     case "url"   => t.contains("http")
     case "email" => t.indexOf('@') >= 0
-    case "phone" =>
-      var i = 0; var d = false
-      while (!d && i < t.length) { d = Character.isDigit(t.charAt(i)); i += 1 }
-      d
+    case "phone" => t.exists(c => Character.isDigit(c))
     case "key" =>
       (t.contains("sk") || t.contains("pk") || t.contains("api") ||
         t.contains("key") || t.contains("ghp") || t.contains("xox")) &&
         (t.indexOf('-') >= 0 || t.indexOf('_') >= 0)
-    case "slur" =>
-      val lower = t.toLowerCase
-      defaultDenylist.exists(lower.contains)
+    case "slur"  => defaultDenylist.exists(t.toLowerCase(Locale.ROOT).contains)
     case _ => true
   }
 
-  private val wsP     = Pattern.compile("\\s+")
   private val dots3P  = Pattern.compile("[.]{3,}") // web_scraper.py:96
   private val bangsP  = Pattern.compile("[!]{2,}") // web_scraper.py:97
   private val qmarksP = Pattern.compile("[?]{2,}") // web_scraper.py:98
 
   final case class ScrubResult(scrubbed: String, hits: Map[String, Int])
 
-  /** True when the \s+→" " + trim pass would change the string —
-    * already-normalized text (the common case) skips the regex pass.
+  /** `t` with each whitespace run collapsed to one space and a leading
+    * or trailing one dropped, by hand; `t` itself when that changes
+    * nothing (the common case: one scan, no copy).
     */
-  private def needsWsNormalize(t: String): Boolean = {
-    if (t.isEmpty) return false
-    if (Character.isWhitespace(t.charAt(0)) ||
-      Character.isWhitespace(t.charAt(t.length - 1))) return true
-    var i = 0
-    var prevSpace = false
-    while (i < t.length) {
+  private def normalizeWs(t: String): String = {
+    val n = t.length
+    var i = 0 // up to the first whitespace char the normalize changes
+    while (i < n && !(isRegexSpace(t.charAt(i)) &&
+        (i == 0 || i == n - 1 || t.charAt(i) != ' ' || isRegexSpace(t.charAt(i + 1))))) i += 1
+    if (i == n) return t
+    val sb = new java.lang.StringBuilder(n)
+    var gap = false
+    i = 0
+    while (i < n) {
       val c = t.charAt(i)
-      if (Character.isWhitespace(c)) {
-        if (prevSpace || c != ' ') return true
-        prevSpace = true
-      } else prevSpace = false
+      if (isRegexSpace(c)) gap = sb.length > 0
+      else { if (gap) sb.append(' '); gap = false; sb.append(c) }
       i += 1
     }
-    false
+    sb.toString
   }
 
   /** Pure per-row scrub. Null-safe (null → empty result). */
   def scrub(text: String): ScrubResult = {
     if (text == null || text.isEmpty) return ScrubResult("", Map.empty)
     // whitespace normalize first (web_scraper.py:73-74)
-    var t = if (needsWsNormalize(text)) wsP.matcher(text).replaceAll(" ").trim
-            else text
+    var t = normalizeWs(text)
     val hits = Map.newBuilder[String, Int]
-    var i = 0
-    while (i < compiled.length) {
-      val (name, p) = compiled(i)
+    compiled.foreach { case (name, p) =>
       if (guard(name, t)) {
-        // single pass: count while replacing (vs count-scan + replaceAll)
-        val m = p.matcher(t)
-        var n = 0
-        var sb: java.lang.StringBuilder = null
-        while (m.find()) {
-          if (n == 0) sb = new java.lang.StringBuilder(t.length)
-          n += 1
-          m.appendReplacement(sb, "")
-        }
-        if (n > 0) {
-          m.appendTail(sb)
-          hits += name -> n
-          t = sb.toString
-        }
+        var n = 0 // single pass: count while replacing
+        val out = p.matcher(t).replaceAll((_: MatchResult) => { n += 1; "" })
+        if (n > 0) { hits += name -> n; t = out }
       }
-      i += 1
     }
     // punctuation collapse (web_scraper.py:96-98), guarded: a run of
     // 3+ dots / 2+ bangs / 2+ qmarks implies these substrings
@@ -134,27 +123,49 @@ object Scrubber extends Serializable {
     if (t.contains("!!")) t = bangsP.matcher(t).replaceAll("!")
     if (t.contains("??")) t = qmarksP.matcher(t).replaceAll("?")
     // final cleanup (web_scraper.py:101)
-    if (needsWsNormalize(t)) t = wsP.matcher(t).replaceAll(" ").trim
-    ScrubResult(t, hits.result())
+    ScrubResult(normalizeWs(t), hits.result())
   }
 
-  /** Spark UDF: text → struct<scrubbed string, hits map<string,int>>. */
-  val scrubUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    F.udf((text: String) => scrub(text))
+  private val wsRun = s"$regexSpaceClass+"
+
+  /** The scrub over `patterns` as ordered regex steps folded from `t`:
+    * normalize, each pattern → "", the punctuation collapse, normalize.
+    * `replace(t, regex, replacement)` runs a step, and `trim` ends each
+    * normalize: after a collapse only a space can lead or trail, so the
+    * space-only trim of Spark and DuckDB is exact.
+    */
+  private def steps[T](t: T, patterns: Seq[String])(replace: (T, String, String) => T,
+      trim: T => T): T = {
+    def normalize(x: T) = trim(replace(x, wsRun, " "))
+    val cut = patterns.foldLeft(normalize(t))(replace(_, _, ""))
+    normalize(Seq(dots3P -> "...", bangsP -> "!", qmarksP -> "?")
+      .foldLeft(cut) { case (x, (p, r)) => replace(x, p.pattern, r) })
+  }
+
+  private val referencePatterns = Seq(URL_RE, EMAIL_RE)
 
   /** Column-only scrub of the REFERENCE subset (url+email+punct+ws) —
     * pure `regexp_replace` chain, codegen'd end to end and expressible
     * 1:1 in DuckDB SQL for the driver oracle. No hits map.
     */
-  def scrubColReference(c: Column): Column = {
-    var t = F.trim(F.regexp_replace(c, "\\s+", " "))
-    t = F.regexp_replace(t, URL_RE, "")
-    t = F.regexp_replace(t, EMAIL_RE, "")
-    t = F.regexp_replace(t, "[.]{3,}", "...")
-    t = F.regexp_replace(t, "[!]{2,}", "!")
-    t = F.regexp_replace(t, "[?]{2,}", "?")
-    F.trim(F.regexp_replace(t, "\\s+", " "))
-  }
+  def scrubColReference(c: Column): Column =
+    steps(c, referencePatterns)(F.regexp_replace(_, _, _), F.trim)
+
+  /** [[steps]] as DuckDB SQL over a column name (RE2-safe: no scrub
+    * pattern uses lookaround or backreferences; the 'g' flag replaces
+    * all matches, as Spark's regexp_replace does by default).
+    */
+  private def scrubSql(col: String, patterns: Seq[String]): String =
+    steps(col, patterns)((t, p, r) => s"regexp_replace($t, '$p', '$r', 'g')", t => s"trim($t)")
+
+  /** The FULL scrub bank as SQL, so the pipeline's actual
+    * `scrubbed_text` is oracle-checked (`curate_cheap`): [[scrub]]'s
+    * [[guard]]s only skip patterns that cannot match.
+    */
+  def scrubSqlFull(col: String): String = scrubSql(col, patternSpecs.map(_._2))
+
+  /** [[scrubColReference]] as SQL. */
+  def scrubSqlReference(col: String): String = scrubSql(col, referencePatterns)
 
   /** EXACT port of the reference's full `_clean_text`
     * (web_scraper.py:67-103) INCLUDING noise-pattern removal (the
@@ -173,12 +184,12 @@ object Scrubber extends Serializable {
     "Share\\s+this.*?(?=\\n|$)"
   ).map(p => Pattern.compile(p, Pattern.CASE_INSENSITIVE))
 
-  // compiled once like every other pattern in this object (r6: these
-  // two were recompiled on every call — ~2×100µs per row on the
-  // html_extract hot path, the exact per-call-compile cost this
-  // object's scaladoc calls out in the reference)
+  // compiled once, like every other pattern in this object
   private val urlP = Pattern.compile(URL_RE)
   private val emailP = Pattern.compile(EMAIL_RE)
+
+  // the reference's own normalize, pinned by scripts/reference_parity.py
+  private val wsP = Pattern.compile("\\s+")
 
   def cleanTextReference(text: String): String = {
     if (text == null || text.isEmpty) return ""
@@ -191,34 +202,4 @@ object Scrubber extends Serializable {
     t = qmarksP.matcher(t).replaceAll("?")
     wsP.matcher(t).replaceAll(" ").trim
   }
-
-  /** FULL scrub bank as ANSI SQL (DuckDB/RE2-safe: no pattern in
-    * `patternSpecs` uses lookaround or backreferences) — the same
-    * fixed-order ws-normalize → url → email → phone → key → slur →
-    * punctuation-collapse → ws-normalize sequence as [[scrub]], so the
-    * pipeline's actual `scrubbed_text` is driver-oracle-checkable
-    * (`curate_cheap`). The conservative [[guard]] prefilters only skip
-    * patterns that cannot match, so they don't change the result.
-    */
-  def scrubSqlFull(col: String): String = {
-    var t = s"trim(regexp_replace($col, '\\s+', ' ', 'g'))"
-    patternSpecs.foreach { case (_, p) =>
-      t = s"regexp_replace($t, '$p', '', 'g')"
-    }
-    t = s"regexp_replace($t, '[.]{3,}', '...', 'g')"
-    t = s"regexp_replace($t, '[!]{2,}', '!', 'g')"
-    t = s"regexp_replace($t, '[?]{2,}', '?', 'g')"
-    s"trim(regexp_replace($t, '\\s+', ' ', 'g'))"
-  }
-
-  /** The same reference-subset scrub as ANSI SQL over a column name, for
-    * DuckDB (regexp_replace needs the 'g' flag there; Spark replaces all
-    * matches by default).
-    */
-  def scrubSqlReference(col: String): String =
-    s"trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
-      s"regexp_replace(regexp_replace(trim(regexp_replace($col, '\\s+', ' ', 'g'))," +
-      s" 'https?://\\S+', '', 'g'), '\\S+@\\S+\\.\\S+', '', 'g')," +
-      s" '[.]{3,}', '...', 'g'), '[!]{2,}', '!', 'g'), '[?]{2,}', '?', 'g')," +
-      s" '\\s+', ' ', 'g'))"
 }

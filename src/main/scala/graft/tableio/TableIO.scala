@@ -152,7 +152,7 @@ object TableIO {
     */
   def appendPartitions(batch: DataFrame, base: String, key: String, stats: Column*)(
       manifest: (Int, Row) => String): Unit = {
-    val parts = batch.select(PART_COL).distinct().collect().map(_.getInt(0))
+    val parts = batch.select(PART_COL).distinct().collect().toSeq.map(_.getInt(0))
     if (parts.isEmpty) return
     val done = donePartitions(base)
     val existing = parts.filter(done.contains).sorted
@@ -162,7 +162,7 @@ object TableIO {
         val old = readPartitions(batch.sparkSession, base, existing)
         old.unionByName(batch.join(old.select(PART_COL, key), Seq(PART_COL, key), "left_anti"))
       }
-    commitPartitions(merged, base, parts.toSeq, stats: _*)(manifest)
+    commitPartitions(merged, base, parts, stats: _*)(manifest)
   }
 
   /** The manifest of a table whose partitions record only their row

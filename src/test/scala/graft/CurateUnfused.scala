@@ -30,7 +30,7 @@ object CurateUnfused {
     val hitsU = F.udf((t: String) =>
       GrammarRules.ruleHits(t, withContext = false).map(_.rule_id))
     val cykU = F.udf((t: String) => GrammarRules.cykInvalidCount(t, cfg.cykMaxWords))
-    val scrubU = Scrubber.scrubUdf
+    val scrubU = F.udf((t: String) => Scrubber.scrub(t))
 
     val text = F.col("text")
     // custom codegen expressions whose whitespace/symbol semantics are

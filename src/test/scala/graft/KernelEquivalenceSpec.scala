@@ -7,12 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.langid.LangId
 import graft.pipeline.{Curate, CurateCore, CurateResult}
 import graft.rules.{GrammarRules, QualityRules}
+import graft.scrub.Scrubber
 import graft.synth.Transcripts
 
 /** Each fast path of the fused curate kernel against the plain form it
   * replaced ([[KernelReference]]): the boilerplate guard, the hand
   * split of the repetition rule, the langid iterator (predict and
-  * training), the grammar guards and the whole `CurateCore.process`;
+  * training), the grammar guards, the scrub and the whole
+  * `CurateCore.process`;
   * and `QualityRules.firstScalarFailure` against the kernel's cheap
   * verdict. Doubles are compared bit for bit.
   */
@@ -139,6 +141,12 @@ class KernelEquivalenceSpec extends AnyFunSuite {
       assertSame(s"ruleHits without POS on $name", texts)(
         GrammarRules.ruleHits(_, includePos = false, withContext = false),
         KernelReference.ruleHits(_, includePos = false, withContext = false))()
+    }
+  }
+
+  test("Scrubber.scrub == the regex scrub, on the seed-7 corpus and the planted rows") {
+    (inputs :+ ("planted whitespace" -> SparkEntry.plantedWs)).foreach { case (name, texts) =>
+      assertSame(s"scrub on $name", texts)(Scrubber.scrub, KernelReference.scrub)()
     }
   }
 

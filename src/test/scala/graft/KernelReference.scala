@@ -18,7 +18,8 @@ import graft.scrub.Scrubber
   * keeps the column pipeline): the boilerplate regex alone, the regex
   * split of the repetition rule, the per-gram langid iterator, and the
   * grammar rules with every regex run on every text (no guard at all,
-  * which is stricter than the substring guards the old form had).
+  * which is stricter than the substring guards the old form had), and
+  * the scrub as regex passes with no guard and no hand scan.
   * KernelEquivalenceSpec asserts each fast path equal to its reference.
   */
 object KernelReference {
@@ -187,12 +188,38 @@ object KernelReference {
     unique.sortBy(_.start).toSeq
   }
 
+  // ---- scrub ----
+
+  private val wsRunP = Pattern.compile(QualityRules.regexSpaceClass + "+")
+
+  /** Each whitespace run → " ", then a leading and a trailing space cut. */
+  private def normalizeWs(t: String): String =
+    wsRunP.matcher(t).replaceAll(" ").stripPrefix(" ").stripSuffix(" ")
+
+  private val scrubPs = Scrubber.patternSpecs.map { case (n, p) => (n, Pattern.compile(p)) }
+
+  /** `Scrubber.scrub` with every pattern counted and replaced on every
+    * text: normalize, the patterns in order, the punctuation collapse,
+    * normalize.
+    */
+  def scrub(text: String): Scrubber.ScrubResult = {
+    if (text == null) return Scrubber.ScrubResult("", Map.empty)
+    var t = normalizeWs(text)
+    val hits = scrubPs.flatMap { case (name, p) =>
+      val n = p.matcher(t).results().count().toInt
+      t = p.matcher(t).replaceAll("")
+      if (n > 0) Some(name -> n) else None
+    }.toMap
+    t = t.replaceAll("[.]{3,}", "...").replaceAll("[!]{2,}", "!").replaceAll("[?]{2,}", "?")
+    Scrubber.ScrubResult(normalizeWs(t), hits)
+  }
+
   // ---- the whole kernel ----
 
   /** `CurateCore.process` built from the references above. */
   def process(langId: LangIdModel, lm: NGramLM, cfg: QualityRules.Config,
       text: String): CurateResult = {
-    val scrub = Scrubber.scrub(text)
+    val scrub = this.scrub(text)
     var reason: String = null
     if (text == null || text.forall(Character.isWhitespace)) reason = "empty"
     else {

@@ -8,6 +8,7 @@ import graft.chunk.Chunker
 import graft.dedup.Dedup
 import graft.grammar.Cyk
 import graft.rules.GrammarRules
+import graft.scrub.Scrubber
 
 /** The lowercasing text paths give under a Turkish default locale what
   * they give under `Locale.ROOT` (Python's `lower()` and DuckDB's
@@ -53,5 +54,11 @@ class LocaleIndependenceSpec extends AnyFunSuite {
 
   test("Chunker.words lowercases without the default locale") {
     assert(sameUnderTr(Chunker.words("THIS IS IT").toSeq) == Seq("this", "is", "it"))
+  }
+
+  test("the scrub's slur guard lowercases without the default locale") {
+    // under tr "FRAKKING" lowercases to "frakkıng", which no denylist word is in
+    val r = sameUnderTr(Scrubber.scrub("you FRAKKING bot"))
+    assert(r.scrubbed == "you bot" && r.hits == Map("slur" -> 1), r)
   }
 }

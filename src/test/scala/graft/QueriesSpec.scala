@@ -48,6 +48,8 @@ class QueriesSpec extends SparkTestBase {
     val rows = SparkEntry.queries("curate_cheap")(spark, dir)
       .collect()
     assert(rows.length > 0)
+    def reason(text: String) =
+      Option(KernelReference.process(models.langId, models.lm, cfg, text).drop_reason).getOrElse("none")
     // rebuild the planted text exactly as cheapTurns does, keyed the same way
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("source", "doc_id", "text").collect()
@@ -63,11 +65,9 @@ class QueriesSpec extends SparkTestBase {
           else if (docId % 13 == 6) (1 to 60).map(j => (j * 101).toString).mkString(" ")
           else text
         val planted = if (docId % 5 == 0) base + " contact bob@example.com or https://ex.co/a now !!" else base
-        val reason = Option(KernelReference.process(models.langId, models.lm, cfg, planted)
-          .drop_reason).getOrElse("none")
-        (src, i + 1) -> reason
+        (src, i + 1) -> reason(planted)
       }
-    }.toMap
+    }.toMap ++ SparkEntry.plantedWs.zipWithIndex.map { case (t, i) => ("ws", i + 1) -> reason(t) }
     rows.foreach { r =>
       val key = (r.getString(0), r.getInt(1))
       assert(expected(key) == r.getString(3),

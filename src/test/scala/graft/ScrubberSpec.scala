@@ -62,8 +62,14 @@ class ScrubberSpec extends AnyFunSuite {
     }
   }
 
+  test("whitespace is Java regex \\s alone: other control chars are text, at the ends too") {
+    assert(SparkEntry.plantedWs.map(Scrubber.scrub(_).scrubbed) ==
+      Seq("\u0001abc", "\u0001a b", "\u001cab", "a b", "a b", "a \u001f"))
+    assert(Scrubber.scrub("a\u2003 b").scrubbed == "a\u2003 b")
+  }
+
   test("property: scrub is idempotent (SURVEY.md §7.4 byte-identical contract)") {
-    samples(500).foreach { t =>
+    (samples(500) ++ SparkEntry.plantedWs).foreach { t =>
       val once = Scrubber.scrub(t).scrubbed
       assert(Scrubber.scrub(once).scrubbed == once, s"not idempotent on: '$t'")
     }
