@@ -52,11 +52,9 @@ object Bench {
     * their runs stay comparable with the headline bench).
     */
   def session(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.checkpoint.Resume
 import graft.tableio.TableIO
 
@@ -59,9 +57,7 @@ object CurateJob {
     // under spark-submit the master/executor topology comes from the
     // submit conf (the N vs 4N executor axis); standalone runs fall
     // back to local[localCpus]
-    val base = SparkSession.builder().appName("graft-curate")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val base = GraftSession.builder().appName("graft-curate")
     val spark = (if (sys.props.contains("spark.master")) base
                  else base.master(s"local[$localCpus]"))
       .getOrCreate()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.synth.Transcripts
 import graft.tableio.TableIO
 
@@ -14,9 +12,8 @@ object PrepInput {
     val out = args(0)
     val nConvs = if (args.length > 1) args(1).toLong else 1000L
     val buckets = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[${CurateJob.localCpus}]")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -654,9 +654,12 @@ object Dedup extends Serializable {
           F.least(F.col("a"), F.col("b")).as("v"))
         .distinct()
       val next = small.localCheckpoint()
+      // no limit(1): each new Local/GlobalLimitExec names its counter
+      // field from a JVM-wide sequence, so a limit's generated class is
+      // new on every round and every run, and is compiled again
       converged =
-        next.join(cur, Seq("u", "v"), "left_anti").limit(1).count() == 0L &&
-          cur.join(next, Seq("u", "v"), "left_anti").limit(1).count() == 0L
+        next.join(cur, Seq("u", "v"), "left_anti").count() == 0L &&
+          cur.join(next, Seq("u", "v"), "left_anti").count() == 0L
       cur.unpersist()
       cur = next
       iter += 1

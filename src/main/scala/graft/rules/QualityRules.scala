@@ -76,6 +76,13 @@ object QualityRules extends Serializable {
   val productConfig: Config = cheapConfig.copy(
     langIdEnabled = true, pplEnabled = true)
 
+  /** A char of Java regex `\s`, `[ \t\n\x0B\f\r]`: the scrub's whitespace rule. */
+  @inline private[graft] def isRegexSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** [[isRegexSpace]] as a regex class for Spark and DuckDB (RE2's `\s` lacks `\x0B`). */
+  val regexSpaceClass = "[ \\t\\n\\x0B\\f\\r]"
+
   /** Boilerplate noise patterns (web_scraper.py:78-83). Detection-only
     * in the rebuild — flag, don't mutate (SURVEY.md §2.2 P2). The
     * reference's `.*?(?=\n|$)` tails matter only for removal, not
@@ -85,8 +92,8 @@ object QualityRules extends Serializable {
     "(?i)(Cookie\\s+Policy|Privacy\\s+Policy|Terms\\s+of\\s+Service|" +
       "Subscribe\\s+to.*newsletter|Follow\\s+us\\s+on|Share\\s+this)"
   private val boilerplateP = Pattern.compile(boilerplateRegex)
-  /** RE2-compatible form for DuckDB oracle SQL (no inline (?i) group needed — RE2 supports it). */
-  val boilerplateRegexRe2: String = boilerplateRegex
+  /** The DuckDB (RE2) form: each `\s` spelled as [[regexSpaceClass]], as RE2's `\s` lacks `\x0B`. */
+  val boilerplateRegexRe2: String = boilerplateRegex.replace("\\s", regexSpaceClass)
 
   // ---- plain-Scala rule forms (UDF core + golden-oracle parity) ----
 
@@ -155,13 +162,6 @@ object QualityRules extends Serializable {
     }
     if (n == 0) 1.0 else set.size.toDouble / n
   }
-
-  /** A char of Java regex `\s`, `[ \t\n\x0B\f\r]`: the scrub's whitespace rule. */
-  @inline private[graft] def isRegexSpace(c: Char): Boolean =
-    c == ' ' || (c >= '\t' && c <= '\r')
-
-  /** [[isRegexSpace]] as a regex class for Spark and DuckDB (RE2's `\s` lacks `\x0B`). */
-  val regexSpaceClass = "[ \\t\\n\\x0B\\f\\r]"
 
   /** Deterministic rule evaluation order — drop_reason vocabulary. */
   val ruleOrder: Seq[String] = Seq(

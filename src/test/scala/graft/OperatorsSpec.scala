@@ -75,6 +75,17 @@ class QualityRulesSpec extends AnyFunSuite {
     assert(QualityRules.isBoilerplate("Follow us on the platform"))
     assert(!QualityRules.isBoilerplate("we discuss privacy concerns generally"))
   }
+
+  test("the boilerplate regex's DuckDB form spells \\s as the one space class, U+000B included") {
+    val re2 = QualityRules.boilerplateRegexRe2
+    assert(!re2.contains("\\s"), re2)
+    val p = java.util.regex.Pattern.compile(re2)
+    for (text <- Seq("terms of\u000Bservice", "Share\u000B\tthis", "cookie \u000B policy",
+        "follow us on", "privacy policy", "share this")) {
+      assert(p.matcher(text).find() == QualityRules.isBoilerplate(text), text)
+    }
+    assert(QualityRules.isBoilerplate("terms of\u000Bservice"))
+  }
 }
 
 class TextStatsSpec extends AnyFunSuite {
