@@ -1,4 +1,4 @@
-import duckdb, json, glob, sys, math
+import duckdb, json, glob, sys, math, time
 sf = sys.argv[1] if len(sys.argv)>1 else '/root/testdata/sf0.001'
 out = sys.argv[2] if len(sys.argv)>2 else '/tmp/vout'
 con = duckdb.connect()
@@ -12,9 +12,12 @@ def norm(v):
         return f'{v:.9g}'
     return str(v)
 failures = 0
+secs = {}  # DuckDB seconds per oracle
 for name, sql in sorted(oracle.items()):
     try:
+        t0 = time.perf_counter()
         odf = con.execute(sql).fetch_df()
+        secs[name] = time.perf_counter() - t0
         sdf = con.execute(f"SELECT * FROM '{out}/{name}/*.parquet'").fetch_df()
         ocols, scols = sorted(odf.columns), sorted(sdf.columns)
         if ocols != scols:
@@ -31,5 +34,7 @@ for name, sql in sorted(oracle.items()):
     except Exception as e:
         print(f"{name}: ERROR {e}"); failures += 1
 
-import sys
+print(f"oracle time: {sum(secs.values()):.1f} s over {len(secs)} oracles; slowest:")
+for name, t in sorted(secs.items(), key=lambda kv: -kv[1])[:5]:
+    print(f"  {name}: {t:.1f} s")
 sys.exit(1 if failures else 0)

@@ -870,7 +870,9 @@ object OracleSql {
       s"seeds AS (SELECT c0 AS f, ${toU("c1")} AS sd FROM (VALUES $seeds) v(c0, c1)), " +
       s"hx0 AS (SELECT id, f, xor(sh, sd) AS shx FROM shd CROSS JOIN seeds), " +
       s"${hxBlock._1}, " +
-      s"sigs AS (SELECT id, f, min(${toSigned("hv")}) AS sv FROM ${hxBlock._2} GROUP BY id, f), " +
+      // materialized: DuckDB inlines a CTE at each reference, and every
+      // reader of sigs would rerun the permutation stage
+      s"sigs AS MATERIALIZED (SELECT id, f, min(${toSigned("hv")}) AS sv FROM ${hxBlock._2} GROUP BY id, f), " +
       s"piv AS (SELECT id, f // $rows AS band, " +
       (0 until rows).map(r => s"max(CASE WHEN f % $rows = $r THEN sv END) AS s$r")
         .mkString(", ") +
@@ -973,19 +975,13 @@ object OracleSql {
     sb.toString
   }
 
-  /** Full SQL replication of the BMP/WAV feature extraction
-    * ([[graft.multimodal.Multimodal.MediaCodec.decode]] on its REAL
-    * payload paths) over a fixed media set whose exact container bytes
-    * ship as VALUES int lists: raw 24-bpp bottom-up BGR pixels and
-    * PCM16 LE samples are pure integer indexing, the FNV-1a 64
-    * content hash is the wordHashCtes fold over bytes, and the
-    * feature floats replay the engine's exact Float chain (REAL/REAL
-    * stays FLOAT in DuckDB, verified bit-equal to the float32 chain).
-    * Header fields (dims, data offset, rate, channels, bits, data
-    * length) are READ FROM THE BYTES, not assumed. Audio sum-of-
-    * squares addends are integers < 2^53 total, so unordered sum()
-    * is exact — no order forcing needed (unlike the log-prob folds).
+  /** A media row's bytes as one lowercase hex literal: two digits per
+    * UNSIGNED byte. A signed byte rendered negative would shift every
+    * header read and the FNV hash over them.
     */
+  private[graft] def hexLiteral(bytes: Array[Byte]): String =
+    java.util.HexFormat.of().formatHex(bytes)
+
   /** FNV-1a 64 over a byte-list expr, replicating
     * Multimodal.MediaCodec.hashBytes: the engine XORs the SIGNED byte
     * (sign-extended to 64 bits), so a byte v >= 0x80 contributes
@@ -997,28 +993,131 @@ object OracleSql {
       "ELSE CAST(x AS HUGEINT) END)), " +
       s"(h, c) -> (xor(h, c) * 1099511628211) % $P64)"
 
+  /** How a media row's bytes reach DuckDB, for all three multimodal
+    * oracles: each row ships as one [[hexLiteral]] in VALUES and is
+    * decoded to its 0..255 byte list in one linear pass over the
+    * literal's two-digit pairs (indexing the whole string per byte would
+    * cost O(bytes²) per row). CTE `media` exposes (mid, kind, bl,
+    * byte_len, hu), hu being the unsigned [[fnvBytes]] content hash; it
+    * is materialized, so its several readers decode and hash once.
+    */
+  private def mediaCtes(rows: Seq[(Long, String, Array[Byte])]): String = {
+    val vals = rows.map { case (id, kind, bytes) => s"($id, '$kind', '${hexLiteral(bytes)}')" }
+      .mkString(", ")
+    def digit(x: String) = s"(strpos('0123456789abcdef', $x) - 1)"
+    "msrc AS (SELECT c0 AS mid, c1 AS kind, list_transform(regexp_extract_all(c2, '..'), " +
+      s"x -> ${digit("x[1]")} * 16 + ${digit("x[2]")}) AS bl FROM (VALUES $vals) v(c0, c1, c2)), " +
+      s"media AS MATERIALIZED (SELECT mid, kind, bl, len(bl) AS byte_len, ${fnvBytes("bl")} AS hu FROM msrc)"
+  }
+
+  /** 0-based byte readers over `bl`, the byte list of [[mediaCtes]]
+    * (DuckDB lists are 1-based); `o` is any SQL integer expression.
+    */
+  private def u8(o: String, k: Int = 0): String = s"bl[$o + ${k + 1}]"
+  private def le16(o: String): String = s"(${u8(o)} + 256 * ${u8(o, 1)})"
+  private def le32(o: String): String = s"(${le16(o)} + 65536 * ${le16(s"$o + 2")})"
+  private def be16(o: String): String = s"(256 * ${u8(o)} + ${u8(o, 1)})"
+  private def be32(o: String): String = s"(65536 * ${be16(o)} + ${be16(s"$o + 2")})"
+  private def magic(o: Int, bytes: Int*): String =
+    bytes.zipWithIndex.map { case (v, k) => s"${u8(o.toString, k)} = $v" }.mkString(" AND ")
+
+  /** The multimodal METADATA rule over [[mediaCtes]]: dims are read
+    * FROM THE BYTES at each container's published offsets (PNG IHDR
+    * big-endian, BMP/GIF little-endian, WAV fmt/data; JPEG SOF0 sits at
+    * the fixed offset our baseline encoder emits — segment order SOI,
+    * APP0(16), DQT(67)x2 puts the marker at byte 158), AVI rows at the
+    * canonical writer's header offsets, and opaque video rows replay
+    * the hash-derived stub (mix-chained dims and duration) exactly. CTE
+    * `mdims` exposes (mid, kind, byte_len, hu, width, height,
+    * duration_ms).
+    */
+  private def mediaMetaCtes(rows: Seq[(Long, String, Array[Byte])]): String =
+    s"${mediaCtes(rows)}, " +
+      // format classification from magic bytes (synth images are real
+      // containers; fake-video bytes matching a magic AND a coherent
+      // header is out of the deterministic fixture's value space)
+      "mfmt AS (SELECT mid, kind, byte_len, bl, hu, CASE " +
+      s"WHEN kind = 'image' AND ${magic(0, 66, 77)} THEN 'bmp' " +
+      s"WHEN kind = 'image' AND ${magic(0, 137, 80)} THEN 'png' " +
+      s"WHEN kind = 'image' AND ${magic(0, 71, 73)} THEN 'gif' " +
+      s"WHEN kind = 'image' AND ${magic(0, 255, 216)} THEN 'jpeg' " +
+      "WHEN kind = 'audio' THEN 'wav' " +
+      s"WHEN kind = 'video' AND ${magic(0, 82, 73, 70, 70)} AND ${magic(8, 65, 86, 73)} THEN 'avi' " +
+      "ELSE 'stub' END AS fmt FROM media), " +
+      // stub dims/duration: w = 64 + (mix(h) & 0x3ff), h' = 64 +
+      // (mix(h+1) & 0x3ff), dur = 1000 + (mix(h+2) & 0xffff)
+      s"mst0 AS (SELECT mid, ${mixCols("sa", "hu", "m0")}, " +
+      s"${mixCols("sb", s"(hu + 1) % $P64", "m1")}, " +
+      s"${mixCols("sc", s"(hu + 2) % $P64", "m2")} FROM mfmt WHERE fmt = 'stub'), " +
+      "mstub AS (SELECT mid, CAST(64 + m0 % 1024 AS INTEGER) AS width, " +
+      "CAST(64 + m1 % 1024 AS INTEGER) AS height, " +
+      "CAST(1000 + m2 % 65536 AS BIGINT) AS duration_ms FROM mst0), " +
+      // AVI fields at the canonical writer's fixed offsets
+      // (AviCodec.aviMjpegBytes: usPerFrame @32, nFrames @48, width
+      // @64, height @68, all u32 LE)
+      "mdims AS (SELECT f.mid, f.kind, f.byte_len, f.hu, CASE f.fmt " +
+      s"WHEN 'bmp' THEN ${le32("18")} WHEN 'png' THEN ${be32("16")} " +
+      s"WHEN 'gif' THEN ${le16("6")} WHEN 'jpeg' THEN ${be16("165")} " +
+      s"WHEN 'avi' THEN ${le32("64")} " +
+      "WHEN 'wav' THEN 0 ELSE st.width END AS width, " +
+      s"CASE f.fmt WHEN 'bmp' THEN ${le32("22")} WHEN 'png' THEN ${be32("20")} " +
+      s"WHEN 'gif' THEN ${le16("8")} WHEN 'jpeg' THEN ${be16("163")} " +
+      s"WHEN 'avi' THEN ${le32("68")} " +
+      "WHEN 'wav' THEN 0 ELSE st.height END AS height, " +
+      s"CASE f.fmt WHEN 'wav' THEN least(${le32("40")}, f.byte_len - 44) * 1000 // " +
+      s"(${le32("24")} * ${le16("22")} * (${le16("34")} // 8)) " +
+      s"WHEN 'avi' THEN ${le32("32")} * ${le32("48")} // 1000 " +
+      "WHEN 'stub' THEN st.duration_ms ELSE 0 END AS duration_ms " +
+      "FROM mfmt f LEFT JOIN mstub st ON st.mid = f.mid)"
+
+  /** The multimodal_features columns of [[mediaMetaCtes]]' `mdims`. */
+  private val metaCols = s"mid AS media_id, kind, byte_len, ${toSigned("hu")} AS content_hash, " +
+    "CAST(width AS INTEGER) AS width, CAST(height AS INTEGER) AS height, " +
+    "CAST(duration_ms AS BIGINT) AS duration_ms"
+
+  /** Full SQL replication of the multimodal METADATA path
+    * (multimodal_features: byte_len, content_hash, width, height,
+    * duration_ms — the query projects no feature vector) over the
+    * synthMedia set: [[mediaMetaCtes]]. The one path not re-derivable
+    * in SQL is nothing: this query's outputs are all integer metadata.
+    */
+  def multimodalMetaSql(rows: Seq[(Long, String, Array[Byte])]): String =
+    s"WITH ${mediaMetaCtes(rows)} SELECT $metaCols FROM mdims ORDER BY media_id"
+
+  /** Frame sampling for the VIDEO rows of `rows`: the duration is
+    * [[multimodalMetaSql]]'s (AVI header or hash stub), and offsets are
+    * 0, 1000, ... &lt; duration — Multimodal.sampleFrames at its
+    * default 1000 ms.
+    */
+  def multimodalFramesSql(rows: Seq[(Long, String, Array[Byte])]): String =
+    s"WITH ${mediaMetaCtes(rows.filter(_._2 == "video"))} " +
+      "SELECT mid AS media_id, unnest(range(0, CAST(duration_ms AS BIGINT), 1000)) AS frame_offset_ms " +
+      "FROM mdims ORDER BY media_id, frame_offset_ms"
+
+  /** Full SQL replication of the BMP/WAV feature extraction
+    * ([[graft.multimodal.Multimodal.MediaCodec.decode]] on its REAL
+    * payload paths) over a fixed media set, with the metadata columns
+    * of [[multimodalMetaSql]]: raw 24-bpp bottom-up BGR pixels and
+    * PCM16 LE samples are pure integer indexing into the
+    * [[mediaCtes]] byte list, and the feature floats replay the
+    * engine's exact Float chain (REAL/REAL stays FLOAT in DuckDB,
+    * verified bit-equal to the float32 chain). Header fields (dims,
+    * data offset, data length) are READ FROM THE BYTES, not assumed.
+    * Audio sum-of-squares addends are integers < 2^53 total, so
+    * unordered sum() is exact — no order forcing needed (unlike the
+    * log-prob folds).
+    */
   def multimodalRawSql(rows: Seq[(Long, String, Array[Byte])]): String = {
-    val vals = rows.map { case (id, kind, bytes) =>
-      s"($id, '$kind', [${bytes.map(b => (b & 0xff).toString).mkString(",")}])"
-    }.mkString(", ")
-    val fnv = fnvBytes("b")
-    "WITH src AS (SELECT c0 AS mid, c1 AS kind, c2 AS b " +
-      s"FROM (VALUES $vals) v(c0, c1, c2)), " +
-      s"hsh AS (SELECT mid, len(b) AS byte_len, ${toSigned(fnv)} AS content_hash FROM src), " +
+    val px = "off + (h - 1 - p // w) * stride + 3 * (p % w)" // pixel p's BGR triple
+    s"WITH ${mediaMetaCtes(rows)}, " +
       // ---- BMP: header fields then pixel indexing (bottom-up BGR) ----
-      "bh AS (SELECT mid, b, b[19] + 256*b[20] + 65536*b[21] + 16777216*b[22] AS w, " +
-      "b[23] + 256*b[24] + 65536*b[25] + 16777216*b[26] AS h, " +
-      "b[11] + 256*b[12] + 65536*b[13] + 16777216*b[14] AS off, " +
-      "((b[19] + 256*b[20]) * 3 + 3) // 4 * 4 AS stride " +
-      "FROM src WHERE kind = 'image'), " +
-      "px AS (SELECT mid, w, h, unnest(range(0, w*h)) AS p, b, off, stride FROM bh), " +
-      "rgb AS (SELECT mid, w, h, " +
-      "b[off + (h - 1 - p // w) * stride + 3 * (p % w) + 3] AS r, " +
-      "b[off + (h - 1 - p // w) * stride + 3 * (p % w) + 2] AS g, " +
-      "b[off + (h - 1 - p // w) * stride + 3 * (p % w) + 1] AS bl FROM px), " +
-      "iagg AS (SELECT mid, w*h AS n, sum(r) AS sr, sum(g) AS sg, sum(bl) AS sb " +
+      s"bh AS (SELECT mid, bl, ${le32("18")} AS w, ${le32("22")} AS h, ${le32("10")} AS off, " +
+      s"(${le32("18")} * 3 + 3) // 4 * 4 AS stride FROM media WHERE kind = 'image'), " +
+      "bp AS (SELECT mid, w, h, unnest(range(0, w*h)) AS p, bl, off, stride FROM bh), " +
+      s"rgb AS (SELECT mid, w, h, ${u8(px, 2)} AS r, ${u8(px, 1)} AS g, ${u8(px)} AS b FROM bp), " +
+      "iagg AS (SELECT mid, w*h AS n, sum(r) AS sr, sum(g) AS sg, sum(b) AS sb " +
       "FROM rgb GROUP BY mid, w*h), " +
-      "ihist AS (SELECT mid, least(11, (r*299 + g*587 + bl*114) // 1000 * 12 // 256) AS bin, " +
+      "ihist AS (SELECT mid, least(11, (r*299 + g*587 + b*114) // 1000 * 12 // 256) AS bin, " +
       "count(*) AS c FROM rgb GROUP BY 1, 2), " +
       "ifeat AS (" +
       "SELECT mid, 0 AS j, CAST(sr AS REAL)/CAST(n AS REAL)/CAST(255 AS REAL) AS v FROM iagg " +
@@ -1029,16 +1128,11 @@ object OracleSql {
       "FROM iagg a CROSS JOIN (SELECT unnest(range(0, 12)) AS k) ks " +
       "LEFT JOIN ihist ih ON ih.mid = a.mid AND ih.bin = k " +
       "UNION ALL SELECT mid, 15, CAST(1 AS REAL) FROM iagg), " +
-      "imeta AS (SELECT mid, w AS width, h AS height, CAST(0 AS BIGINT) AS duration_ms FROM bh), " +
-      // ---- WAV: header fields then PCM16 LE sample indexing ----
-      "wh AS (SELECT mid, b, b[23] + 256*b[24] AS ch, " +
-      "b[25] + 256*b[26] + 65536*b[27] + 16777216*b[28] AS rate, " +
-      "b[35] + 256*b[36] AS bits, " +
-      "least(b[41] + 256*b[42] + 65536*b[43] + 16777216*b[44], len(b) - 44) AS dlen " +
-      "FROM src WHERE kind = 'audio'), " +
-      "wn AS (SELECT mid, b, ch, rate, bits, dlen, dlen // 2 AS n FROM wh), " +
-      "smi AS (SELECT mid, n, b, unnest(range(0, n)) AS i FROM wn), " +
-      "sm0 AS (SELECT mid, n, i, b[45 + 2*i] + 256 * b[46 + 2*i] AS uv FROM smi), " +
+      // ---- WAV: data length then PCM16 LE sample indexing ----
+      s"wn AS (SELECT mid, bl, least(${le32("40")}, byte_len - 44) // 2 AS n " +
+      "FROM media WHERE kind = 'audio'), " +
+      "smi AS (SELECT mid, n, bl, unnest(range(0, n)) AS i FROM wn), " +
+      s"sm0 AS (SELECT mid, n, i, ${le16("44 + 2 * i")} AS uv FROM smi), " +
       "sm AS (SELECT mid, n, i, CASE WHEN uv >= 32768 THEN uv - 65536 ELSE uv END AS s FROM sm0), " +
       "sml AS (SELECT mid, n, i, s, lag(s) OVER (PARTITION BY mid ORDER BY i) AS ps FROM sm), " +
       "wagg AS (SELECT mid, max(n) AS n, sum(s*s) AS sq, max(abs(s)) AS peak, " +
@@ -1055,119 +1149,9 @@ object OracleSql {
       "LEFT JOIN whist wth ON wth.mid = a.mid AND wth.bin = k " +
       "UNION ALL SELECT mid, 14, CAST(0 AS REAL) FROM wagg " +
       "UNION ALL SELECT mid, 15, CAST(1 AS REAL) FROM wagg), " +
-      "wmeta AS (SELECT mid, 0 AS width, 0 AS height, " +
-      "dlen * 1000 // (rate * ch * (bits // 8)) AS duration_ms FROM wn), " +
-      "meta AS (SELECT * FROM imeta UNION ALL SELECT * FROM wmeta), " +
       "feat AS (SELECT * FROM ifeat UNION ALL SELECT * FROM wfeat) " +
-      "SELECT s.mid AS media_id, s.kind, h.byte_len, h.content_hash, " +
-      "m.width, m.height, CAST(m.duration_ms AS BIGINT) AS duration_ms, " +
-      "f.j AS feat_idx, f.v AS feat_val " +
-      "FROM src s JOIN hsh h ON h.mid = s.mid JOIN meta m ON m.mid = s.mid " +
-      "JOIN feat f ON f.mid = s.mid ORDER BY media_id, feat_idx"
-  }
-
-  /** Full SQL replication of the multimodal METADATA path
-    * (multimodal_features: byte_len, content_hash, width, height,
-    * duration_ms — the query projects no feature vector) over the
-    * synthMedia set, whose exact bytes ship as hex VALUES: dims are
-    * read FROM THE BYTES at each container's published offsets (PNG
-    * IHDR big-endian, BMP/GIF little-endian, WAV fmt/data; JPEG SOF0
-    * sits at the fixed offset our baseline encoder emits — segment
-    * order SOI, APP0(16), DQT(67)x2 puts the marker at byte 158), and
-    * video rows replay the hash-derived stub (mix-chained dims and
-    * duration) exactly. The one path not re-derivable in SQL is
-    * nothing: this query's outputs are all integer metadata.
-    */
-  def multimodalMetaSql(rows: Seq[(Long, String, Array[Byte])]): String = {
-    val vals = rows.map { case (id, kind, bytes) =>
-      val hex = bytes.map(b => f"${b & 0xff}%02x").mkString
-      s"($id, '$kind', '$hex')"
-    }.mkString(", ")
-    // hex → byte list (0..255 ints)
-    val toBytes = "list_transform(range(0, length(hx) // 2), i -> " +
-      "(strpos('0123456789abcdef', hx[2*i + 1]) - 1) * 16 + " +
-      "strpos('0123456789abcdef', hx[2*i + 2]) - 1)"
-    def b(o: String) = s"bl[$o + 1]" // 0-based byte accessor
-    val le16 = (o: Int) => s"(${b(o.toString)} + 256 * ${b((o + 1).toString)})"
-    val le32 = (o: Int) => s"(${b(o.toString)} + 256 * ${b((o + 1).toString)} + " +
-      s"65536 * ${b((o + 2).toString)} + 16777216 * ${b((o + 3).toString)})"
-    val be16 = (o: Int) => s"(256 * ${b(o.toString)} + ${b((o + 1).toString)})"
-    val be32 = (o: Int) => s"(16777216 * ${b(o.toString)} + 65536 * ${b((o + 1).toString)} + " +
-      s"256 * ${b((o + 2).toString)} + ${b((o + 3).toString)})"
-    s"WITH msrc AS (SELECT c0 AS mid, c1 AS kind, c2 AS hx FROM (VALUES $vals) v(c0, c1, c2)), " +
-      s"mbl AS (SELECT mid, kind, length(hx) // 2 AS byte_len, $toBytes AS bl FROM msrc), " +
-      s"mh AS (SELECT mid, kind, byte_len, bl, ${fnvBytes("bl")} AS hu FROM mbl), " +
-      // format classification from magic bytes (synth images are real
-      // containers; fake-video bytes matching a magic AND a coherent
-      // header is out of the deterministic fixture's value space)
-      "mfmt AS (SELECT mid, kind, byte_len, bl, hu, CASE " +
-      "WHEN kind = 'image' AND bl[1] = 66 AND bl[2] = 77 THEN 'bmp' " +
-      "WHEN kind = 'image' AND bl[1] = 137 AND bl[2] = 80 THEN 'png' " +
-      "WHEN kind = 'image' AND bl[1] = 71 AND bl[2] = 73 THEN 'gif' " +
-      "WHEN kind = 'image' AND bl[1] = 255 AND bl[2] = 216 THEN 'jpeg' " +
-      "WHEN kind = 'audio' THEN 'wav' " +
-      "WHEN kind = 'video' AND bl[1] = 82 AND bl[2] = 73 AND bl[3] = 70 " +
-      "AND bl[4] = 70 AND bl[9] = 65 AND bl[10] = 86 AND bl[11] = 73 THEN 'avi' " +
-      "ELSE 'stub' END AS fmt FROM mh), " +
-      // stub dims/duration: w = 64 + (mix(h) & 0x3ff), h' = 64 +
-      // (mix(h+1) & 0x3ff), dur = 1000 + (mix(h+2) & 0xffff)
-      s"mst0 AS (SELECT mid, ${mixCols("sa", "hu", "m0")}, " +
-      s"${mixCols("sb", s"(hu + 1) % $P64", "m1")}, " +
-      s"${mixCols("sc", s"(hu + 2) % $P64", "m2")} FROM mfmt WHERE fmt = 'stub'), " +
-      "mstub AS (SELECT mid, CAST(64 + m0 % 1024 AS INTEGER) AS width, " +
-      "CAST(64 + m1 % 1024 AS INTEGER) AS height, " +
-      "CAST(1000 + m2 % 65536 AS BIGINT) AS duration_ms FROM mst0), " +
-      // AVI fields at the canonical writer's fixed offsets
-      // (AviCodec.aviMjpegBytes: usPerFrame @32, nFrames @48, width
-      // @64, height @68, all u32 LE)
-      "mdims AS (SELECT f.mid, f.kind, f.byte_len, f.hu, CASE f.fmt " +
-      s"WHEN 'bmp' THEN ${le32(18)} WHEN 'png' THEN ${be32(16)} " +
-      s"WHEN 'gif' THEN ${le16(6)} WHEN 'jpeg' THEN ${be16(165)} " +
-      s"WHEN 'avi' THEN ${le32(64)} " +
-      "WHEN 'wav' THEN 0 ELSE st.width END AS width, " +
-      s"CASE f.fmt WHEN 'bmp' THEN ${le32(22)} WHEN 'png' THEN ${be32(20)} " +
-      s"WHEN 'gif' THEN ${le16(8)} WHEN 'jpeg' THEN ${be16(163)} " +
-      s"WHEN 'avi' THEN ${le32(68)} " +
-      "WHEN 'wav' THEN 0 ELSE st.height END AS height, " +
-      s"CASE f.fmt WHEN 'wav' THEN least(${le32(40)}, f.byte_len - 44) * 1000 // " +
-      s"(${le32(24)} * ${le16(22)} * (${le16(34)} // 8)) " +
-      s"WHEN 'avi' THEN ${le32(32)} * ${le32(48)} // 1000 " +
-      "WHEN 'stub' THEN st.duration_ms ELSE 0 END AS duration_ms " +
-      "FROM mfmt f LEFT JOIN mstub st ON st.mid = f.mid) " +
-      "SELECT mid AS media_id, kind, byte_len, " +
-      s"${toSigned("hu")} AS content_hash, " +
-      "CAST(width AS INTEGER) AS width, CAST(height AS INTEGER) AS height, " +
-      "CAST(duration_ms AS BIGINT) AS duration_ms FROM mdims ORDER BY media_id"
-  }
-
-  /** Frame sampling for the VIDEO rows of the same synth set: AVI rows
-    * derive duration from the REAL header (usPerFrame · nFrames /
-    * 1000 at the canonical writer offsets), opaque rows replay the
-    * hash-derived stub exactly as in [[multimodalMetaSql]]; offsets =
-    * 0, 1000, ... &lt; duration.
-    */
-  def multimodalFramesSql(videoRows: Seq[(Long, Array[Byte])], everyMs: Long = 1000L): String = {
-    val vals = videoRows.map { case (id, bytes) =>
-      s"($id, '${bytes.map(x => f"${x & 0xff}%02x").mkString}')"
-    }.mkString(", ")
-    val toBytes = "list_transform(range(0, length(hx) // 2), i -> " +
-      "(strpos('0123456789abcdef', hx[2*i + 1]) - 1) * 16 + " +
-      "strpos('0123456789abcdef', hx[2*i + 2]) - 1)"
-    def b(o: Int) = s"bl[${o + 1}]"
-    def le32(o: Int) = s"(${b(o)} + 256 * ${b(o + 1)} + " +
-      s"65536 * ${b(o + 2)} + 16777216 * ${b(o + 3)})"
-    s"WITH fsrc AS (SELECT c0 AS mid, c1 AS hx FROM (VALUES $vals) v(c0, c1)), " +
-      s"fbl AS (SELECT mid, $toBytes AS bl FROM fsrc), " +
-      s"fh AS (SELECT mid, bl, ${fnvBytes("bl")} AS hu, " +
-      "(bl[1] = 82 AND bl[2] = 73 AND bl[3] = 70 AND bl[4] = 70 " +
-      "AND bl[9] = 65 AND bl[10] = 86 AND bl[11] = 73) AS isavi FROM fbl), " +
-      s"fd0 AS (SELECT mid, ${mixCols("fa", s"(hu + 2) % $P64", "m2")} FROM fh WHERE NOT isavi), " +
-      "fds AS (SELECT mid, CAST(1000 + m2 % 65536 AS BIGINT) AS dur FROM fd0), " +
-      s"fda AS (SELECT mid, CAST(${le32(32)} * ${le32(48)} // 1000 AS BIGINT) AS dur " +
-      "FROM fh WHERE isavi), " +
-      "fd AS (SELECT * FROM fds UNION ALL SELECT * FROM fda) " +
-      s"SELECT mid AS media_id, unnest(range(0, dur, $everyMs)) AS frame_offset_ms " +
-      "FROM fd ORDER BY media_id, frame_offset_ms"
+      s"SELECT $metaCols, j AS feat_idx, v AS feat_val " +
+      "FROM mdims JOIN feat USING (mid) ORDER BY media_id, feat_idx"
   }
 
   /** Hyperplane signature CTEs over `embeddings` (dim 64): the seeded

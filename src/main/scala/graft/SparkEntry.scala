@@ -156,8 +156,8 @@ object SparkEntry {
 
   /** multimodal_features_raw input media — ONE definition consumed by
     * both the query and the oracle SQL (which embeds these exact bytes
-    * as VALUES) so they cannot drift. Dims/durations stay small so the
-    * SQL literal is bounded (~60 KB total).
+    * as hex VALUES) so they cannot drift. Dims/durations stay small so
+    * the SQL is bounded (≈173 KB).
     */
   private[graft] def rawMediaRows: Seq[Multimodal.MediaRow] =
     (0 until 24).map { i =>
@@ -173,6 +173,13 @@ object SparkEntry {
           "audio/wav", Map("src" -> s"raw-$i"))
       }
     }
+
+  /** The 128 synthMedia rows of multimodal_features and
+    * multimodal_frames at sf ≤ 0.01, as their oracles take them — ONE
+    * definition for both (the frames oracle keeps the video rows).
+    */
+  private[graft] def synthOracleMedia: Seq[(Long, String, Array[Byte])] =
+    (0 until 128).map(Multimodal.synthMediaRow(_)).map(r => (r.media_id, r.kind, r.media))
 
   /** cyk_parse input sentences — ONE definition consumed by both the
     * query and the oracle SQL (OracleSql.cykSql) so they cannot drift.
@@ -389,7 +396,10 @@ object SparkEntry {
       val tOut =
         if (i == specs.length - 1) ""
         else s", regexp_replace(t$i, '$pat', '', 'g') AS t${i + 1}"
-      sb ++= s", s${i + 1} AS (SELECT $carried, len(regexp_extract_all(t$i, '$pat')) AS n_$name$tOut FROM s$i)"
+      // the last stage feeds base, br and every sc branch: materialized,
+      // as DuckDB would otherwise rerun the whole chain per reference
+      val as = if (i == specs.length - 1) "AS MATERIALIZED" else "AS"
+      sb ++= s", s${i + 1} $as (SELECT $carried, len(regexp_extract_all(t$i, '$pat')) AS n_$name$tOut FROM s$i)"
     }
     val last = s"s${specs.length}"
     val hitBranches = specs.map { case (name, _) =>
@@ -1474,14 +1484,11 @@ object SparkEntry {
           "height", "duration_ms")
         .orderBy("media_id")
     },
-      // media METADATA path over the exact synthMedia bytes (hex
-      // VALUES): real header reads + the hash-derived video stub.
-      // NOTE: valid at the 128-row scale of sf ≤ 0.01 (the query
+      // media METADATA path over the exact synthMedia bytes (one hex
+      // literal per row): real header reads + the hash-derived video
+      // stub. NOTE: valid at the 128-row scale of sf ≤ 0.01 (the query
       // sizes up only at sf0.1, where no oracle compare runs).
-      oracle(OracleSql.multimodalMetaSql((0 until 128).map { i =>
-        val r = Multimodal.synthMediaRow(i.toLong)
-        (r.media_id, r.kind, r.media)
-      }))),
+      oracle(OracleSql.multimodalMetaSql(synthOracleMedia))),
     Declared("multimodal_features_raw", (s, dir) => {
       // BMP + WAV rows ONLY — the two formats whose payloads decode in
       // pure SQL (raw bottom-up 24-bpp BGR; PCM16 LE) — DuckDB-oracled
@@ -1505,9 +1512,7 @@ object SparkEntry {
       val feats = Multimodal.extractFeatures(s, Multimodal.synthMedia(s, 128)).toDF()
       Multimodal.sampleFrames(feats).orderBy("media_id", "frame_offset_ms")
     },
-      oracle(OracleSql.multimodalFramesSql(
-        (0 until 128).map(i => Multimodal.synthMediaRow(i.toLong))
-          .filter(_.kind == "video").map(r => (r.media_id, r.media))))),
+      oracle(OracleSql.multimodalFramesSql(synthOracleMedia))),
 
     // ---- dims / set ops (A7, J4) ----
     Declared("html_extract", (s, dir) => {
